@@ -17,10 +17,10 @@ import math
 import numpy as np
 import pytest
 
+from tests.fixtures import exact_repulsion
 from tsne_flink_spark.operators import farfield
 from tsne_flink_spark.operators.gradient import (
     _repulsive_barnes_hut,
-    _repulsive_exact,
 )
 
 
@@ -141,7 +141,7 @@ def test_summary_matches_bh_accuracy_class(spark, condition):
     Y = Y - Y.mean(axis=0)
     emb = _emb(spark, Y)
     theta = 0.5
-    exact_rep, exact_sumq = _collect_rep(_repulsive_exact(emb, 2))
+    exact_rep, exact_sumq = exact_repulsion(Y)
 
     full, used = _repulsive_barnes_hut(
         emb, theta, 2, bh_condition=condition, tree_build="distributed"
@@ -275,14 +275,20 @@ def test_auto_mode_selects_by_broadcast_budget(spark, monkeypatch):
     assert df_s.count() == df_f.count() == 8192
 
 
-def test_summary_mode_full_optimize_loop(spark):
+def test_summary_mode_full_optimize_loop(spark, monkeypatch):
     """Integration: the summary path must survive the real driver loop
     (materialize/localCheckpoint between iterations, a fresh pyramid
     broadcast per step) at a size where plan_summary does NOT fall back,
     and still produce a usable embedding (finite, centered, loss sink
-    populated)."""
+    populated) without ever collecting Y on the driver."""
     import numpy as np
 
+    from tsne_flink_spark.operators import gradient as G
+
+    def no_collect(*args, **kwargs):
+        raise AssertionError("Y collected on the driver")
+
+    monkeypatch.setattr(G, "collect_y", no_collect)
     from tsne_flink_spark.operators.affinities import (
         joint_distribution,
         pairwise_affinities,

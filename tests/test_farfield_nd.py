@@ -10,10 +10,10 @@ auto-mode selection, and degenerate-regime fallback equivalence.
 import numpy as np
 import pytest
 
+from tests.fixtures import exact_repulsion
 from tsne_flink_spark.operators import farfield
 from tsne_flink_spark.operators.gradient import (
     _repulsive_barnes_hut,
-    _repulsive_exact,
     _repulsive_summary_nd,
 )
 
@@ -159,7 +159,7 @@ def test_summary_nd_matches_bh_accuracy_class(spark, condition):
     Y = Y - Y.mean(axis=0)
     emb = _emb(spark, Y)
     theta = 0.5
-    exact_rep, exact_sumq = _collect_rep(_repulsive_exact(emb, 3))
+    exact_rep, exact_sumq = exact_repulsion(Y)
 
     full, used = _repulsive_barnes_hut(
         emb, theta, 3, bh_condition=condition, tree_build="distributed"

@@ -1,6 +1,7 @@
 """Gradient / update / centering / iteration golden tests —
 mirrors TsneHelpersTestSuite.scala:139-327."""
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -142,3 +143,199 @@ def test_tree_build_validation(spark):
     )
     with pytest.raises(ValueError, match="tree_build"):
         _repulsive_barnes_hut(emb, theta=0.5, n_components=2, tree_build="drivers")
+
+
+def test_row_without_p_keeps_zero_attraction(spark):
+    """An embedding id with no P row is kept, with zero attraction: its
+    gradient is the pure repulsion -rep/sumQ, and the loop keeps its row."""
+    from tsne_flink_spark.operators.gradient import _repulsive_barnes_hut
+
+    p = coo_from_rows(
+        spark, [r for r in DENSE_JOINT_PROBABILITIES if 3 not in (r[0], r[1])]
+    )
+    y = _embedding_df(spark, INITIAL_EMBEDDING)
+    grad, _ = gradient(p, y, theta=0.0, n_components=2)
+    dy = {r["id"]: np.array(r["dy"]) for r in grad.collect()}
+    assert sorted(dy) == sorted(i for i, _ in INITIAL_EMBEDDING)
+
+    rep, _ = _repulsive_barnes_hut(y, 1e-300, 2)
+    rows = {r["id"]: (np.array(r["rep"]), r["sumq"]) for r in rep.collect()}
+    sum_q = sum(s for _, s in rows.values())
+    assert np.allclose(dy[3], -rows[3][0] / sum_q, rtol=1e-12, atol=0)
+
+    ws = _working_set_df(spark, INITIAL_EMBEDDING)
+    out = iteration_computation(2, 0.5, ws, p, learning_rate=300, theta=0.0)
+    assert sorted(r["id"] for r in out.collect()) == sorted(dy)
+
+
+def _replay(y0, edges, metric, iterations, theta, condition, learning_rate,
+            momentum):
+    """NumPy replay of ``iteration_computation`` from y0: per step the
+    engine's QuadTree for repulsion, attraction over the P edges with q from
+    the kNN metric, the momentum/gain update, and centring after each
+    update.  Returns (y, {iteration: KL loss by the direct formula})."""
+    from tsne_flink_spark.operators.quadtree import build_quadtree
+
+    pi, pj, v = edges
+    y = y0.copy()
+    grad = np.zeros_like(y)
+    gains = np.ones_like(y)
+    losses = {}
+    for it in range(1, iterations + 1):
+        forces, sumq = build_quadtree(y).repulsive_forces(
+            y, theta, condition=condition
+        )
+        yi, yj = y[pi], y[pj]
+        if metric == "euclidean":
+            dist = np.sqrt(((yi - yj) ** 2).sum(axis=1))
+        else:
+            dist = 1.0 - (yi * yj).sum(axis=1) / (
+                np.linalg.norm(yi, axis=1) * np.linalg.norm(yj, axis=1)
+            )
+        q = 1.0 / (1.0 + dist)
+        attr = np.zeros_like(y)
+        np.add.at(attr, pi, (v * q)[:, None] * (yi - yj))
+        z = sumq.sum()
+        if it % 10 == 0:
+            losses[it] = float((v * np.log(v / (q / z))).sum())
+        dy = attr - forces / z
+        same = (dy > 0) == (grad > 0)
+        gains = np.maximum(np.where(same, gains * 0.8, gains + 0.2), 0.01)
+        grad = momentum * grad - learning_rate * gains * dy
+        y = y + grad
+        y = y - y.mean(axis=0)
+    return y, losses
+
+
+def _replay_case(spark):
+    """A random 2-D working set (3 partitions) and a k=6 P whose last id
+    has no P row: (y0, (pi, pj, v), p, ws)."""
+    rng = np.random.default_rng(42)
+    n, k = 120, 6
+    y0 = rng.normal(0.0, 1.0, (n, 2))
+    pi = np.repeat(np.arange(n - 1), k)  # the last id has no P row
+    pj = np.array([rng.choice(np.delete(np.arange(n), i), k, replace=False)
+                   for i in range(n - 1)]).ravel()
+    v = rng.uniform(0.1, 1.0, len(pi))
+    v /= v.sum()
+    p = coo_from_rows(
+        spark, [(int(a), int(b), float(c)) for a, b, c in zip(pi, pj, v)]
+    )
+    ws = spark.createDataFrame(
+        [(i, y0[i].tolist(), [0.0, 0.0], [1.0, 1.0]) for i in range(n)],
+        WORKING_SET,
+    ).repartition(3)
+    return y0, (pi, pj, v), p, ws
+
+
+def _fit_vs_replay(spark, metric, tree_build):
+    y0, edges, p, ws = _replay_case(spark)
+    sink = []
+    out = iteration_computation(
+        10, 0.5, ws, p, metric=metric, learning_rate=50.0, theta=0.5,
+        n_components=2, loss_sink=sink, bh_condition="scaled",
+        tree_build=tree_build,
+    )
+    got = {r["id"]: np.array(r["y"]) for r in out.collect()}
+    n = len(y0)
+    assert sorted(got) == list(range(n))
+    y_ref, losses = _replay(y0, edges, metric, 10, 0.5, "scaled", 50.0, 0.5)
+    y = np.array([got[i] for i in range(n)])
+    assert np.abs(y - y_ref).max() <= 1e-9 * np.abs(y_ref).max()
+    assert [it for it, _ in sink] == [10]
+    return sink[0][1], losses[10]
+
+
+@pytest.mark.parametrize("metric", ["euclidean", "cosine"])
+def test_fused_loop_matches_numpy_replay(spark, metric):
+    """Ten fused iterations (the 10th computes the loss) against the NumPy
+    replay: embedding within 1e-9, and the loss from the kernel's partials
+    (sum v*log(v/q) + sum v*log sumQ) within 1e-12 of the direct KL."""
+    loss, want = _fit_vs_replay(spark, metric, "auto")
+    assert loss == pytest.approx(want, rel=1e-12, abs=0)
+
+
+def test_executor_regimes_keep_y_off_driver(spark, monkeypatch):
+    """The executor-side build never collects Y on the driver: with the
+    collect disabled, a fit still matches the NumPy replay (neighbour
+    coordinates come from the P-edge gather, the mean from a bounds
+    aggregate).  The summary regime's guard is
+    tests/test_farfield.py::test_summary_mode_full_optimize_loop."""
+    from tsne_flink_spark.operators import gradient as G
+
+    def no_collect(*args, **kwargs):
+        raise AssertionError("Y collected on the driver")
+
+    monkeypatch.setattr(G, "collect_y", no_collect)
+    loss, want = _fit_vs_replay(spark, "cosine", "distributed")
+    assert loss == pytest.approx(want, rel=1e-12, abs=0)
+
+
+@pytest.mark.parametrize("d, metric", [(2, "cosine"), (3, "euclidean")])
+def test_gathered_attraction_matches_broadcast(spark, d, metric):
+    """The attraction gathered by a P-edge join (distributed build) equals
+    the broadcast-Y lookup (driver build): the same neighbours in the same
+    order, including a row without P and a P entry whose j is not a row."""
+    rng = np.random.default_rng(5)
+    n = 200
+    Y = rng.normal(0.0, 5.0, (n, d))
+    emb = spark.createDataFrame(
+        [(i, Y[i].tolist()) for i in range(n)], "id int, y array<double>"
+    )
+    edges = [
+        (i, int(j), float(rng.uniform(0.1, 1.0)))
+        for i in range(n - 1)
+        for j in rng.choice(np.delete(np.arange(n), i), 4, replace=False)
+    ]
+    edges.append((0, n + 7, 0.5))  # a neighbour that is not a row
+    p = coo_from_rows(spark, edges)
+    got = {}
+    for tree_build in ("driver", "distributed"):
+        grad, loss = gradient(
+            p, emb, metric=metric, theta=0.5, n_components=d,
+            compute_loss=True, bh_condition="scaled", tree_build=tree_build,
+        )
+        got[tree_build] = (
+            {r["id"]: np.array(r["dy"]) for r in grad.collect()},
+            loss.first()["loss"],
+        )
+    (want, want_loss), (dy, loss) = got["driver"], got["distributed"]
+    assert sorted(dy) == list(range(n))
+    for i in range(n):
+        assert np.allclose(dy[i], want[i], rtol=1e-12, atol=1e-15)
+    assert loss == pytest.approx(want_loss, rel=1e-12, abs=0)
+
+
+def test_loop_jobs_per_iteration(spark):
+    """Regression guard that host noise cannot move: the fused loop runs at
+    most 5 Spark jobs per iteration (counted from the job group of a fit at
+    2 vs 8 iterations, so per-fit set-up cancels)."""
+    from tsne_flink_spark.operators.affinities import (
+        joint_distribution,
+        pairwise_affinities,
+    )
+    from tsne_flink_spark.operators.knn import partition_knn
+    from tsne_flink_spark.operators.optimize import materialize, optimize
+
+    rng = np.random.default_rng(9)
+    n = 300
+    X = rng.normal(0, 1.0, (n, 8))
+    pts = spark.createDataFrame(
+        [(i, X[i].tolist()) for i in range(n)], "id int, features array<double>"
+    )
+    P = materialize(joint_distribution(pairwise_affinities(
+        partition_knn(pts, 10, "sqeuclidean"), 5.0)))
+    ws = materialize(init_working_set(pts.select("id"), 2, random_state=0))
+    sc = spark.sparkContext
+    jobs = {}
+    try:
+        for iterations in (2, 8):
+            group = f"jobs-per-iteration-{iterations}"
+            sc.setJobGroup(group, group)
+            optimize(P, ws, iterations=iterations, theta=0.5,
+                     bh_condition="scaled").collect()
+            jobs[iterations] = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    per_iteration = (jobs[8] - jobs[2]) / 6
+    assert per_iteration <= 5, jobs

@@ -52,11 +52,12 @@ def build_parser() -> argparse.ArgumentParser:
                    choices=["auto", "distributed", "driver", "summary"],
                    default="auto",
                    help="Barnes-Hut quadtree build: 'auto' (default) uses the "
-                        "full executor-built tree below a 64 MB broadcast "
+                        "driver-built full tree below a 64 MB broadcast "
                         "budget and the far-field summary above it; "
                         "'distributed' merges per-partition subtrees "
                         "executor-side (no per-iteration driver collect); "
-                        "'driver' is the legacy collect-and-build path; "
+                        "'driver' collects Y and builds the tree on the "
+                        "driver; "
                         "'summary' replaces the per-iteration O(N) tree "
                         "broadcast with a depth-capped far-field summary + "
                         "near-field shuffle (the 100-TB scale path; falls "

@@ -222,3 +222,44 @@ def numpy_metric(name: str, exact_order: bool = False):
         return table[name]
     except KeyError:
         raise ValueError(f"unknown metric {name!r}; expected one of {sorted(table)}")
+
+
+# Row-paired twins: distance between A[r] and B[r] for every row r,
+# (n,d) x (n,d) -> (n,), with the Column expressions' accumulation order
+# (bit-identical to ``metric_expr(name, a, b, dim=d)``).  Used by the fused
+# t-SNE kernel, which evaluates one distance per P edge.
+
+
+def np_sqeuclidean_rows(A: np.ndarray, B: np.ndarray) -> np.ndarray:
+    def term(k):
+        d = A[:, k] - B[:, k]
+        return d * d
+
+    return _np_chunked_fold(A.shape[1], term)
+
+
+def np_euclidean_rows(A: np.ndarray, B: np.ndarray) -> np.ndarray:
+    return np.sqrt(np_sqeuclidean_rows(A, B))
+
+
+def np_cosine_rows(A: np.ndarray, B: np.ndarray) -> np.ndarray:
+    def dot(X, Z):
+        return _np_chunked_fold(X.shape[1], lambda k: X[:, k] * Z[:, k])
+
+    return 1.0 - dot(A, B) / (np.sqrt(dot(A, A)) * np.sqrt(dot(B, B)))
+
+
+NUMPY_ROW_METRICS = {
+    "sqeuclidean": np_sqeuclidean_rows,
+    "euclidean": np_euclidean_rows,
+    "cosine": np_cosine_rows,
+}
+
+
+def numpy_row_metric(name: str):
+    try:
+        return NUMPY_ROW_METRICS[name]
+    except KeyError:
+        raise ValueError(
+            f"unknown metric {name!r}; expected one of {sorted(NUMPY_ROW_METRICS)}"
+        )

@@ -9,7 +9,9 @@ Reference: TsneHelpers.scala:198-218 (init), :341-368 (update),
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from typing import Callable
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -48,14 +50,28 @@ def update_embedding(
       y'     = y + grad'
 
     The sign test is the reference's ``(g > 0) == (pg > 0)`` (zero counts as
-    non-positive).  Implemented as zip_with chains — the join is the only
-    shuffle, keyed on id.
+    non-positive).  The step itself is :func:`update_step`, which the fused
+    optimizer loop runs directly on its pass output; here the gradient is
+    joined onto the working set by id first.
     """
-    g = gradient.select(F.col("id"), F.col("dy"))
-    joined = g.join(working_set, "id")
+    joined = gradient.select(F.col("id"), F.col("dy")).join(working_set, "id")
+    step = update_step(F.col("dy"), ["id"], min_gain, momentum, learning_rate)
+    return step(joined)
 
+
+def update_step(
+    dy: Column,
+    keep: list[str],
+    min_gain: float,
+    momentum: float,
+    learning_rate: float,
+) -> Callable[[DataFrame], DataFrame]:
+    """The update as a narrow projection, ``df -> keep + (y, grad, gains)``,
+    over rows that carry ``y``/``grad``/``gains`` and whatever ``dy``
+    reads.  The zip_with chains are built once and reused by every call:
+    each lambda costs several driver round trips to build."""
     same_sign = F.zip_with(
-        F.col("dy"),
+        F.col("__dy"),
         F.col("grad"),
         lambda c, p: ((c > F.lit(0.0)) == (p > F.lit(0.0))).cast("double"),
     )
@@ -67,11 +83,10 @@ def update_embedding(
             F.lit(float(min_gain)),
         ),
     )
-    with_gains = joined.withColumn("__new_gains", new_gains)
     # grad' = momentum*prev - lr*gain'*dy, built as two zips
     step = F.zip_with(
         F.col("__new_gains"),
-        F.col("dy"),
+        F.col("__dy"),
         lambda gain, c: F.lit(-float(learning_rate)) * gain * c,
     )
     new_grad = F.zip_with(
@@ -79,14 +94,24 @@ def update_embedding(
         step,
         lambda a, b: a + b,
     )
-    with_grad = with_gains.withColumn("__new_grad", new_grad)
     new_y = F.zip_with(F.col("__new_grad"), F.col("y"), lambda a, b: a + b)
-    return with_grad.select(
-        F.col("id"),
+    head = [*keep, "y", "grad", "gains", dy.alias("__dy")]
+    out = [
+        *keep,
         new_y.alias("y"),
         F.col("__new_grad").alias("grad"),
         F.col("__new_gains").alias("gains"),
-    )
+    ]
+
+    def apply(df: DataFrame) -> DataFrame:
+        return (
+            df.select(*head)
+            .withColumn("__new_gains", new_gains)
+            .withColumn("__new_grad", new_grad)
+            .select(*out)
+        )
+
+    return apply
 
 
 def _center(df: DataFrame, vec_col: str, n_components: int) -> DataFrame:

@@ -1,78 +1,134 @@
-"""t-SNE gradient: attractive forces from sparse P, repulsive forces exact or
-Barnes-Hut, combined as ``attr - rep/sumQ`` (no x4 factor — reference quirk
-Q3, TsneHelpers.scala:311-317, compensated by the default learning rate).
+"""t-SNE gradient as one fused pass: attraction from the P row each point
+carries, Barnes-Hut repulsion from a broadcast tree, combined as
+``attr - rep/sumQ`` (no x4 factor — reference quirk Q3,
+TsneHelpers.scala:311-317, compensated by the default learning rate).
 
 Reference: TsneHelpers.scala:221-318.
 
-Spark-first redesign (SURVEY §2.4): the reference broadcasts the FULL
-embedding into the attractive-force map every iteration
-(TsneHelpers.scala:307) — its scalability ceiling.  Here the attractive force
-is a pair of equi-joins on the COO P edges plus a per-point aggregation:
-O(N*k) rows shuffled, no O(N) per-task state.  Repulsive forces:
+Layout — the reference's own: each point keeps its P row (the R3 sparse-row
+layout) and the embedding is broadcast into the force map every iteration
+(PAPER.md §1.1, TsneHelpers.scala:307).  :func:`attach_p` puts P onto the
+working-set rows once, as ``js``/``vs`` arrays.  :func:`fused_pass` then
 
-- theta == 0: exact, pure-DataFrame — crossJoin + Column-expression math
-  (equals the quadtree degenerate case; used by the golden tests).
-- theta > 0: Barnes-Hut — tree built driver-side or distributed
-  (``tree_build``), broadcast, and forces evaluated in a vectorized
-  ``mapInPandas`` (the reference does the same tree broadcast,
-  TsneHelpers.scala:234-264); or ``tree_build="summary"`` — the 100-TB
-  scale path that replaces the O(N) per-iteration tree broadcast with a
-  depth-capped far-field summary + near-field shuffle (operators/farfield.py,
-  BASELINE.md B14).
+1. takes the centring mean and builds the repulsion source (below);
+2. runs ONE ``mapInArrow`` kernel that centres its own rows and computes,
+   per row, the repulsion, the attraction (q from the kNN metric's NumPy
+   twin), ``sumq`` and the KL partials.
+
+:func:`pass_totals` reduces a pass to sumQ and the loss in one job, and the
+update is a narrow projection with sumQ as a literal
+(``embedding.update_step``).
+
+Where the driver builds the tree, it holds Y anyway: the pass collects Y
+((8 + 8d) B/point: int64 id + d doubles), takes the mean, builds the tree
+and broadcasts (tree, ids, centred Y); the kernel looks neighbours up in
+that Y.  No join and no shuffle per iteration.  The executor-side regimes
+keep Y off the driver, as they exist to: a bounds aggregate gives the mean,
+and each row's neighbour coordinates are gathered by a join on the P edges
+(:func:`_gather_neighbours`) instead of broadcast.
+
+Repulsion sources (``tree_build``); d=2 uses QuadTree, other d NDTree:
+
+- theta == 0: the tree built on the driver and evaluated at theta 0, which
+  is exact (no cell is ever summarized); the root sits at the mean so no
+  point falls outside it.
+- ``"driver"``: tree built from the collected Y.  Auto while the tree fits
+  the 64 MB broadcast budget (~305k points at d=2, ~152k at d=3); Y then
+  costs at most ~7 MB.
+- ``"distributed"``: per-partition subtrees merged on the executors, Y off
+  the driver (explicit only; also the summary path's fallback).
+- ``"summary"``: the 100-TB path — a depth-capped far-field pyramid plus a
+  near-field cogroup (operators/farfield.py, BASELINE.md B14) instead of the
+  O(N) tree broadcast; its rows are joined onto the pass by id.  Auto above
+  the budget.
+- ``"stub"``: plan-only — an empty tree and no collect, so the whole pass
+  can be explained without running a job.
 """
 
 from __future__ import annotations
 
-import os
-from typing import Iterator
+from typing import Callable, Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
 
-from tsne_flink_spark.functions.metrics import metric_expr, sqeuclidean
+from tsne_flink_spark.functions.metrics import numpy_row_metric
+from tsne_flink_spark.operators.ndtree import (
+    NDTree,
+    build_ndtree,
+    build_ndtree_distributed,
+)
 from tsne_flink_spark.operators.quadtree import (
+    QuadTree,
     build_quadtree,
     build_quadtree_distributed,
 )
 
+_TREE_BUILDS = ("auto", "driver", "stub", "distributed", "summary")
 
-def _repulsive_exact(embedding: DataFrame, n_components: int) -> DataFrame:
-    """Exact repulsive forces: for each i, sum over j with y_j != y_i of
-    Q^2 * (y_i - y_j), and sum_q_i = sum of Q, where Q = 1/(1 + ||y_i-y_j||^2).
+# Per-row outputs of the fused kernel, appended to the input row.
+_KERNEL_FIELDS = [
+    StructField("attr", ArrayType(DoubleType())),
+    StructField("rep", ArrayType(DoubleType())),
+    StructField("sumq", DoubleType()),
+    StructField("kl", DoubleType()),  # sum_j v*log(v/q) over the row's P
+    StructField("pv", DoubleType()),  # sum_j v over the row's P
+]
 
-    Value-inequality (not id-inequality) matches the quadtree's handling of
-    coincident points (QuadTree.scala:128): a bit-equal point contributes 0.
-    The tree always uses squared Euclidean distance regardless of the kNN
-    metric (QuadTree.scala:133) — replicated.
-    """
-    a = embedding.select(F.col("id"), F.col("y").alias("__yi"))
-    b = embedding.select(F.col("y").alias("__yj"))
-    pairs = a.crossJoin(b).where(~(F.col("__yi") == F.col("__yj")))
-    q = F.lit(1.0) / (F.lit(1.0) + sqeuclidean(F.col("__yi"), F.col("__yj")))
-    terms = pairs.select(
-        "id",
-        q.alias("__q"),
-        *[
-            (F.col("__yi")[c] - F.col("__yj")[c]).alias(f"__d{c}")
-            for c in range(n_components)
-        ],
-    )
-    return terms.groupBy("id").agg(
-        F.array(
-            *[
-                F.sum(F.col("__q") * F.col("__q") * F.col(f"__d{c}"))
-                for c in range(n_components)
-            ]
-        ).alias("rep"),
-        F.sum("__q").alias("sumq"),
-    )
+# Auto-mode policy constants (BASELINE.md B14): the pickled full quadtree
+# measured 213 MB at N=1M, ~220 bytes/point with headroom; above a 64 MB
+# per-iteration broadcast budget the summary far-field path is selected.
+# Per-point tree bytes are dominated by the 2^d-wide child table: 55 * 2^d
+# reproduces both measured values (220 B/pt at d=2, B14; 440 B/pt at d=3,
+# N=1M, BASELINE.md B31).
+_AUTO_BROADCAST_BUDGET = 64 << 20  # => auto switches to summary at N ~ 305k
+# Below the budget auto builds the tree on the driver from the Y the fused
+# pass collects: at N=250k, d=2 (4-core host) that iteration took 4.7 s
+# against 12.6 s for the executor-side build with the P-edge gather it
+# needs to keep Y off the driver (10 neighbours per point, theta 0.5).
+
+# theta == 0 visits every leaf, so the frontier holds (queries x points)
+# pairs; the kernel evaluates in query chunks that keep it this small.
+_EXACT_EVAL_PAIRS = 1 << 22
+
+
+def _nd_tree_bytes_per_point(d: int) -> int:
+    return 55 << d
+
+
+def _auto_tree_build(n: int, d: int) -> str:
+    if n * _nd_tree_bytes_per_point(d) > _AUTO_BROADCAST_BUDGET:
+        return "summary"
+    return "driver"
+
+
+def resolve_tree_build(
+    tree_build: str, theta: float, d: int, count: Callable[[], int]
+) -> str:
+    """The concrete repulsion source of a pass: theta 0 is exact on a
+    driver-built tree, and "auto" decides by N (``count()``, called only
+    for "auto").  N is loop-invariant, so loops resolve once per call."""
+    if tree_build not in _TREE_BUILDS:
+        raise ValueError(
+            f"tree_build must be one of {', '.join(map(repr, _TREE_BUILDS))}; "
+            f"got {tree_build!r}"
+        )
+    if tree_build == "stub":
+        return tree_build
+    if theta == 0.0:
+        return "driver"
+    if tree_build == "auto":
+        return _auto_tree_build(count(), d)
+    return tree_build
 
 
 def _bounds_with_count(embedding: DataFrame):
-    """7-value bounds/mean/count aggregate — the only per-iteration driver
-    round-trip the summary and auto paths need."""
+    """7-value bounds/mean/count aggregate, for summary callers that pass no
+    bounds."""
     return embedding.agg(
         F.min(F.col("y")[0]).alias("x0"),
         F.max(F.col("y")[0]).alias("x1"),
@@ -104,7 +160,6 @@ def _repulsive_summary(
     degenerates to exact evaluation by design).
     """
     from tsne_flink_spark.operators import farfield
-    from tsne_flink_spark.operators.quadtree import build_quadtree
 
     spark = embedding.sparkSession
     b = bounds if bounds is not None else _bounds_with_count(embedding)
@@ -257,36 +312,11 @@ def _repulsive_summary(
     )
 
 
-# Auto-mode policy constants (BASELINE.md B14): the pickled full quadtree
-# measured 213 MB at N=1M, so ~220 bytes/point with headroom; above a 64 MB
-# per-iteration broadcast budget the summary far-field path is selected.
-# The d-dim NDTree's per-point bytes are dominated by the 2^d-wide child
-# table: 55 * 2^d reproduces both measured values (220 B/pt at d=2, B14;
-# 440 B/pt at d=3, N=1M, tools/probe_summary_nd.py round 7).
-_TREE_BYTES_PER_POINT = 220
-_AUTO_BROADCAST_BUDGET = 64 << 20  # => auto switches to summary at N ~ 305k
-# Below this N the auto policy builds the tree ON THE DRIVER from one
-# collect instead of the distributed build (r15, guide §2.4/§5): the
-# full-tree regime broadcasts the finished tree from the driver either
-# way, so at small N the distributed build's extra per-iteration jobs
-# (bounds aggregate + df.rdd pickle pass + depth-2 treeReduce = 3 driver
-# round-trips) buy nothing over one bounded collect (<= 64k rows * ~50 B
-# = ~3 MB, far under the 64 MB tree-broadcast budget that already caps
-# this regime).  Measured on the flagship (N=2k, 20 iterations, sf0.1):
-# 37.5 -> 28.9 s at equal host calibration.  Above this N the
-# construction cost itself matters and the executor-merged build keeps
-# the win (B14/B20).
-_AUTO_DRIVER_BUILD_MAX_N = 1 << 16
-
-
-def _nd_tree_bytes_per_point(d: int) -> int:
-    return 55 << d
-
-
 def _bounds_with_count_nd(embedding: DataFrame, d: int):
-    """d-dim bounds/mean/count aggregate (min_k / max_k / mean_k / n) — the
-    only per-iteration driver round-trip the d-dim summary path needs.
-    Row shape matches build_ndtree_distributed's ``bounds`` parameter."""
+    """d-dim bounds/mean/count aggregate (min_k / max_k / mean_k / n), for
+    the executor-side regimes of the fused pass and for summary callers that
+    pass no bounds.  Row shape matches build_ndtree_distributed's ``bounds``
+    parameter."""
     aggs = []
     for k in range(d):
         aggs += [
@@ -316,7 +346,6 @@ def _repulsive_summary_nd(
     coincident-point semantics); far field as guaranteed-accepted cell
     masses.  Returns None in regimes the full-tree path should handle."""
     from tsne_flink_spark.operators import farfield
-    from tsne_flink_spark.operators.ndtree import build_ndtree
 
     spark = embedding.sparkSession
     b = bounds if bounds is not None else _bounds_with_count_nd(embedding, d)
@@ -473,6 +502,327 @@ def _repulsive_summary_nd(
     )
 
 
+def attach_p(working_set: DataFrame, p_coo: DataFrame) -> DataFrame:
+    """The working-set rows with their P rows attached as ``js``/``vs``
+    arrays, sorted by j so the attraction sums in a layout-independent
+    order.  A row without P entries gets empty arrays — zero attraction —
+    and is kept; P entries whose i is not a row are dropped."""
+    p_rows = p_coo.groupBy(F.col("i").alias("__i")).agg(
+        F.sort_array(F.collect_list(F.struct("j", "v"))).alias("__p")
+    )
+    joined = working_set.join(
+        p_rows, working_set["id"] == p_rows["__i"], "left"
+    )
+    js = F.transform("__p", lambda e: e["j"])
+    vs = F.transform("__p", lambda e: e["v"])
+    return joined.select(
+        *[F.col(c) for c in working_set.columns],
+        F.coalesce(js, F.array().cast("array<int>")).alias("js"),
+        F.coalesce(vs, F.array().cast("array<double>")).alias("vs"),
+    )
+
+
+def collect_y(rows: DataFrame, d: int) -> tuple[np.ndarray, np.ndarray]:
+    """(ids, Y) of every row, ordered by id — one job."""
+    got = rows.select("id", "y").collect()
+    ids = np.array([r[0] for r in got], dtype=np.int64)
+    Y = np.array([r[1] for r in got], dtype=np.float64).reshape(len(got), d)
+    order = np.argsort(ids, kind="stable")
+    return ids[order], Y[order]
+
+
+def shifted_y(mean: np.ndarray) -> Column:
+    """``y - mean`` per component; bit-identical to the NumPy subtraction."""
+    return F.array(
+        *[F.col("y")[k] - F.lit(float(m)) for k, m in enumerate(mean)]
+    )
+
+
+def _bounds_dict(n: int, lo, hi, mean) -> dict:
+    """A bounds row in the shape of both ``_bounds_with_count`` (d=2 keys)
+    and ``_bounds_with_count_nd`` (min_k/max_k/mean_k)."""
+    b = {"n": n}
+    for k in range(len(lo)):
+        b[f"min_{k}"], b[f"max_{k}"], b[f"mean_{k}"] = lo[k], hi[k], mean[k]
+    if len(lo) == 2:
+        b.update(x0=lo[0], x1=hi[0], y0=lo[1], y1=hi[1], mx=mean[0], my=mean[1])
+    return b
+
+
+def _build_tree(Y: np.ndarray, fix_bounds_mean: bool):
+    build = build_quadtree if Y.shape[1] == 2 else build_ndtree
+    return build(Y, fix_bounds_mean=fix_bounds_mean)
+
+
+def _empty_tree(d: int):
+    return QuadTree(0.0, 0.0, 1.0) if d == 2 else NDTree(np.zeros(d), 1.0)
+
+
+def _executor_repulsion(
+    rows: DataFrame,
+    d: int,
+    centre: bool,
+    theta: float,
+    fix_bounds_mean: bool,
+    bh_condition: str,
+    tree_build: str,
+):
+    """The centring mean and repulsion source of the executor-side regimes,
+    with Y kept off the driver: one bounds aggregate, then ``(tree, None)``
+    from the distributed build or ``(None, rep)`` with materialized (id,
+    rep, sumq) rows from the summary path."""
+    b = _bounds_with_count_nd(rows, d)
+    if b is None or not b["n"]:
+        return np.zeros(d), _empty_tree(d), None
+    lo, hi, mn = (
+        np.array([float(b[f"{s}_{k}"]) for k in range(d)])
+        for s in ("min", "max", "mean")
+    )
+    mean = mn if centre else np.zeros(d)
+    # min/max commute with subtracting a constant (rounding is monotone)
+    bounds = _bounds_dict(int(b["n"]), lo - mean, hi - mean, mn - mean)
+    centred = rows.select("id", shifted_y(mean).alias("y"))
+    if tree_build == "summary":
+        if d == 2:
+            rep = _repulsive_summary(
+                centred, theta, fix_bounds_mean, bh_condition, bounds=bounds
+            )
+        else:
+            rep = _repulsive_summary_nd(
+                centred, theta, d, fix_bounds_mean, bh_condition, bounds=bounds
+            )
+        if rep is not None:
+            # the cogroup pipeline (near-field shuffle + per-block Python
+            # evaluation) must run once: the kernel reads rep and sumq from
+            # the same evaluation
+            from tsne_flink_spark.operators.optimize import materialize
+
+            return mean, None, materialize(rep)
+        # degenerate regime: full-tree fallback
+    if d == 2:
+        tree = build_quadtree_distributed(centred, fix_bounds_mean, bounds=bounds)
+    else:
+        tree = build_ndtree_distributed(centred, d, fix_bounds_mean, bounds=bounds)
+    return mean, tree, None
+
+
+def _gather_neighbours(rows: DataFrame) -> DataFrame:
+    """(id, __gv, __gy): each row's P values and its neighbours' y
+    (flattened), sorted by j as the row's ``js`` are — the attraction's
+    inputs without a Y broadcast.  Neighbours that are not rows are
+    dropped, as the broadcast lookup drops them."""
+    edges = rows.select(
+        F.col("id").alias("__i"), F.explode(F.arrays_zip("js", "vs")).alias("__e")
+    )
+    ys = rows.select(F.col("id").alias("__j"), F.col("y").alias("__yj"))
+    nbrs = (
+        edges.join(ys, F.col("__e.js") == F.col("__j"))
+        .groupBy("__i")
+        .agg(
+            F.sort_array(
+                F.collect_list(
+                    F.struct(
+                        F.col("__j").alias("j"),
+                        F.col("__e.vs").alias("v"),
+                        F.col("__yj").alias("y"),
+                    )
+                )
+            ).alias("__n")
+        )
+    )
+    return nbrs.select(
+        F.col("__i").alias("id"),
+        F.transform("__n", lambda e: e["v"]).alias("__gv"),
+        F.flatten(F.transform("__n", lambda e: e["y"])).alias("__gy"),
+    )
+
+
+def _eval_tree(tree, Q: np.ndarray, theta: float, condition: str, n: int):
+    if theta != 0.0:
+        return tree.repulsive_forces(Q, theta, condition=condition)
+    step = max(1, _EXACT_EVAL_PAIRS // max(n, 1))
+    parts = [
+        tree.repulsive_forces(Q[s:s + step], theta, condition=condition)
+        for s in range(0, len(Q), step)
+    ]
+    return np.concatenate([f for f, _ in parts]), np.concatenate([q for _, q in parts])
+
+
+def _values(col) -> np.ndarray:
+    """The flattened values of an Arrow list column."""
+    return col.flatten().to_numpy(zero_copy_only=False)
+
+
+def _row_sums(src: np.ndarray, weights: np.ndarray, m: int) -> np.ndarray:
+    """Per-row sums of edge weights (float64 even with no edges, where
+    bincount returns integers)."""
+    return np.bincount(src, weights=weights, minlength=m).astype(np.float64)
+
+
+def _list_column(rows: np.ndarray) -> pa.Array:
+    """(m, d) float64 rows as an Arrow list<double> column."""
+    m, d = rows.shape
+    offsets = pa.array(np.arange(0, m * d + 1, d, dtype=np.int32))
+    return pa.ListArray.from_arrays(offsets, pa.array(rows.ravel()))
+
+
+def _kernel(bc, d, mean, theta, condition, metric, exaggeration, want_loss,
+            has_rep, gathered, out_cols):
+    """The fused per-partition kernel (see the module docstring), on Arrow
+    batches: columns are read and written as flat buffers, and the
+    pass-through columns are handed back untouched.  Neighbours come from
+    the broadcast (ids, centred Y), or from the row's gathered
+    ``__gv``/``__gy`` when ``gathered``."""
+    row_metric = numpy_row_metric(metric)
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        tree, ids, Yc = bc.value
+        n = 0 if ids is None else len(ids)
+        for batch in batches:
+            m = batch.num_rows
+            if not m:
+                continue
+            y = _values(batch.column("y")).reshape(m, d) - mean
+            if has_rep:
+                rep = _values(batch.column("rep")).reshape(m, d)
+                sumq = batch.column("sumq").to_numpy(zero_copy_only=False)
+            else:
+                rep, sumq = _eval_tree(tree, y, theta, condition, n)
+
+            if gathered:
+                gv = batch.column("__gv")
+                lens = gv.value_lengths().to_numpy(zero_copy_only=False)
+                src = np.repeat(np.arange(m), lens)
+                v = _values(gv) * exaggeration
+                yj = _values(batch.column("__gy")).reshape(-1, d) - mean
+            else:
+                js_col = batch.column("js")
+                lens = js_col.value_lengths().to_numpy(zero_copy_only=False)
+                src = np.repeat(np.arange(m), lens)
+                js = _values(js_col).astype(np.int64)
+                v = _values(batch.column("vs")) * exaggeration
+                # neighbours missing from the rows contribute nothing
+                pos = np.minimum(np.searchsorted(ids, js), max(len(ids) - 1, 0))
+                found = ids[pos] == js if len(ids) else np.zeros(len(js), dtype=bool)
+                src, pos, v = src[found], pos[found], v[found]
+                yj = Yc[pos]
+            yi = y[src]
+            q = 1.0 / (1.0 + row_metric(yi, yj))
+            w = v * q
+            diff = yi - yj
+            attr = np.column_stack(
+                [_row_sums(src, w * diff[:, c], m) for c in range(d)]
+            )
+            if want_loss:
+                kl = _row_sums(src, v * np.log(v / q), m)
+                pv = _row_sums(src, v, m)
+            else:
+                kl = pv = np.zeros(m)
+
+            cols = {c: batch.column(c) for c in out_cols}
+            cols["y"] = _list_column(y)
+            cols.update(
+                attr=_list_column(attr), rep=_list_column(rep),
+                sumq=pa.array(sumq, pa.float64()), kl=pa.array(kl),
+                pv=pa.array(pv),
+            )
+            yield pa.RecordBatch.from_arrays(list(cols.values()), names=list(cols))
+
+    return run
+
+
+def fused_pass(
+    rows: DataFrame,
+    theta: float,
+    n_components: int,
+    metric: str = "sqeuclidean",
+    exaggeration: float = 1.0,
+    centre: bool = False,
+    want_loss: bool = False,
+    fix_bounds_mean: bool = False,
+    bh_condition: str = "reference",
+    tree_build: str = "auto",
+) -> tuple[DataFrame, bool]:
+    """One gradient evaluation over rows carrying (id, y, js, vs, ...).
+
+    Returns ``(kernel rows, used_summary)``: the input rows (``y`` centred
+    when ``centre``) plus attr, rep, sumq and the KL partials kl/pv, lazily
+    — callers materialize.  ``exaggeration`` scales every P value inside the
+    kernel, so early exaggeration shares the plain P layout; the loss
+    partials use the scaled P, as the reference does.  Attraction uses the
+    kNN ``metric`` (as the reference, TsneHelpers.scala:287-295), repulsion
+    always squared Euclidean (QuadTree.scala:133).
+
+    ``tree_build`` picks the repulsion source (module docstring); "auto"
+    counts the rows and decides by N (:func:`resolve_tree_build` — loops
+    resolve once and pass the result): the full tree costs ~55 * 2^d bytes
+    per point per iteration (213 MB measured at N=1M, d=2, B14), and above
+    ``_AUTO_BROADCAST_BUDGET`` the O(1)-broadcast far-field summary path is
+    selected.
+    """
+    d = n_components
+    tree_build = resolve_tree_build(tree_build, theta, d, rows.count)
+    rep = ids = Yc = None
+    gathered = tree_build in ("distributed", "summary")
+    if gathered:
+        mean, tree, rep = _executor_repulsion(
+            rows, d, centre, theta, fix_bounds_mean, bh_condition, tree_build
+        )
+        src = rows.join(_gather_neighbours(rows), "id", "left").select(
+            *rows.columns,
+            F.coalesce("__gv", F.array().cast("array<double>")).alias("__gv"),
+            F.coalesce("__gy", F.array().cast("array<double>")).alias("__gy"),
+        )
+        if rep is not None:
+            src = src.join(rep, "id", "left")
+    else:
+        if tree_build == "stub":
+            ids, Y = np.zeros(0, dtype=np.int64), np.zeros((0, d))
+            tree = _empty_tree(d)
+        else:
+            ids, Y = collect_y(rows, d)
+        mean = Y.mean(axis=0) if centre and len(Y) else np.zeros(d)
+        Yc = Y - mean
+        if tree_build == "driver":
+            tree = _build_tree(Yc, fix_bounds_mean or theta == 0.0)
+        src = rows
+    out_cols = [
+        c for c in src.columns if c not in ("rep", "sumq", "__gv", "__gy")
+    ]
+    schema = StructType(
+        [f for f in src.schema.fields if f.name in out_cols] + _KERNEL_FIELDS
+    )
+    bc = rows.sparkSession.sparkContext.broadcast((tree, ids, Yc))
+    kernel = _kernel(
+        bc, d, mean, theta, bh_condition, metric, exaggeration, want_loss,
+        rep is not None, gathered, out_cols,
+    )
+    return src.mapInArrow(kernel, schema=schema), rep is not None
+
+
+def pass_totals(kern: DataFrame) -> tuple[float, float]:
+    """(sumQ, loss) of a materialized pass.  One job: a single-partition
+    aggregate has no exchange, and it sums in a fixed order.  The loss is
+    the KL divergence sum v*log(v / (q/sumQ)) (TsneHelpers.scala:297-300),
+    built as sum v*log(v/q) + (sum v)*log(sumQ); it is 0 unless the pass
+    computed the partials (``want_loss``)."""
+    sum_q, kl, pv = kern.coalesce(1).agg(
+        F.sum("sumq"), F.sum("kl"), F.sum("pv")
+    ).first()
+    with np.errstate(divide="ignore", invalid="ignore"):
+        loss = float(kl + pv * np.log(sum_q)) if pv else 0.0
+    return sum_q, loss
+
+
+def dy(sum_q: Column) -> Column:
+    """The gradient ``attr - rep/sumQ`` of a pass's row."""
+    return F.zip_with(
+        "attr",
+        F.transform(F.col("rep"), lambda r: r / sum_q),
+        lambda a, r: a - r,
+    )
+
+
 def _repulsive_barnes_hut(
     embedding: DataFrame,
     theta: float,
@@ -480,195 +830,20 @@ def _repulsive_barnes_hut(
     fix_bounds_mean: bool = False,
     bh_condition: str = "reference",
     tree_build: str = "auto",
-    n_hint: int | None = None,
 ) -> tuple[DataFrame, bool]:
-    """Barnes-Hut repulsive forces.  Returns ``(rep, used_summary)`` —
-    callers materialize the heavy cogroup pipeline only when the summary
-    path actually ran.
-
-    ``tree_build="auto"`` (default) picks the path from the data: the
-    full-tree broadcast costs ~``_TREE_BYTES_PER_POINT * N`` bytes per
-    iteration (213 MB measured at N=1M, B14); when the estimate exceeds
-    ``_AUTO_BROADCAST_BUDGET`` the O(1)-broadcast far-field summary path is
-    selected, else the reference-parity full tree.  ``"distributed"`` builds
-    per-partition subtrees and merges them executor-side
-    (``build_quadtree_distributed``): the driver sees only a 6-value bounds
-    aggregate and the finished tree.  ``"driver"`` keeps the legacy
-    collect-and-build path (useful for small N and equivalence tests; the
-    reference broadcasts the full tree the same way,
-    TsneHelpers.scala:234-264).  ``"summary"`` forces the far-field summary
-    (falls back to full-tree in degenerate regimes).
-    """
-    if tree_build not in ("auto", "driver", "stub", "distributed", "summary"):
-        raise ValueError(
-            f"tree_build must be one of 'auto', 'driver', 'stub', "
-            f"'distributed', 'summary'; got {tree_build!r}"
-        )
-    if n_components != 2:
-        # the reference's BH path is a 2-D quadtree only (QuadTree.scala)
-        # even though its CLI accepts --nComponents; the d-dimensional
-        # NDTree closes that surface (beyond-reference, same semantics),
-        # with its own auto policy: the d-dim far-field summary replaces
-        # the O(N) NDTree broadcast above the budget.
-        return _repulsive_barnes_hut_nd(
-            embedding, theta, n_components, fix_bounds_mean, bh_condition,
-            tree_build, n_hint=n_hint,
-        )
-    bounds = None
-    if tree_build == "auto" and n_hint is not None:
-        # the caller told us N (the iteration loop counts the working set
-        # once — row count is loop-invariant); decide without the bounds
-        # aggregate.  A wrong hint only changes WHICH build path runs —
-        # every path builds from the actual rows — so correctness never
-        # depends on it.
-        tree_build = (
-            "summary"
-            if n_hint * _TREE_BYTES_PER_POINT > _AUTO_BROADCAST_BUDGET
-            else "driver"
-            if n_hint <= _AUTO_DRIVER_BUILD_MAX_N
-            else "distributed"
-        )
-    if tree_build in ("auto", "summary"):
-        bounds = _bounds_with_count(embedding)
-        if tree_build == "auto":
-            n = int(bounds["n"]) if bounds is not None and bounds["n"] is not None else 0
-            tree_build = (
-                "summary"
-                if n * _TREE_BYTES_PER_POINT > _AUTO_BROADCAST_BUDGET
-                else "driver"
-                if n <= _AUTO_DRIVER_BUILD_MAX_N
-                else "distributed"
-            )
-    if tree_build == "summary":
-        res = _repulsive_summary(
-            embedding, theta, fix_bounds_mean, bh_condition, bounds=bounds
-        )
-        if res is not None:
-            return res, True
-        tree_build = "distributed"  # degenerate regime: full-tree fallback
-    if tree_build == "driver":
-        rows = embedding.select("id", "y").collect()
-        Y = np.array([r["y"] for r in rows], dtype=np.float64)
-        tree = build_quadtree(Y, fix_bounds_mean=fix_bounds_mean)
-    elif tree_build == "stub":
-        # plan-only mode: broadcast an empty tree so the full physical plan
-        # (including the mapInPandas force stage) can be built and explained
-        # WITHOUT running any job — the reference's --executionPlan dumps the
-        # lazily assembled graph unexecuted (Tsne.scala:89-95)
-        from tsne_flink_spark.operators.quadtree import QuadTree
-
-        tree = QuadTree(0.0, 0.0, 1.0)
-    else:
-        tree = build_quadtree_distributed(
-            embedding, fix_bounds_mean=fix_bounds_mean, bounds=bounds
-        )
-    bc = embedding.sparkSession.sparkContext.broadcast(tree)
-
-    def eval_forces(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        t = bc.value
-        for pdf in it:
-            if not len(pdf):
-                continue
-            Q = np.array([np.asarray(v) for v in pdf["y"]], dtype=np.float64)
-            forces, sumq = t.repulsive_forces(Q, theta, condition=bh_condition)
-            yield pd.DataFrame(
-                {
-                    "id": pdf["id"].to_numpy(),
-                    "rep": list(forces),
-                    "sumq": sumq,
-                }
-            )
-
-    return (
-        embedding.mapInPandas(
-            eval_forces, schema="id int, rep array<double>, sumq double"
-        ),
-        False,
+    """Repulsion alone: the fused pass over (id, y) rows without P.
+    Returns ``((id, rep, sumq), used_summary)``."""
+    rows = embedding.select(
+        "id",
+        "y",
+        F.array().cast("array<int>").alias("js"),
+        F.array().cast("array<double>").alias("vs"),
     )
-
-
-def _repulsive_barnes_hut_nd(
-    embedding: DataFrame,
-    theta: float,
-    n_components: int,
-    fix_bounds_mean: bool,
-    bh_condition: str,
-    tree_build: str,
-    n_hint: int | None = None,
-) -> tuple[DataFrame, bool]:
-    """Barnes-Hut repulsion for n_components != 2 via the d-dimensional
-    NDTree (octree at d=3) — driver or executor-merged build + broadcast +
-    vectorized mapInPandas evaluation, mirroring the 2-D paths, including
-    the auto policy: above the broadcast budget the d-dim far-field summary
-    (``_repulsive_summary_nd``) replaces the O(N) NDTree broadcast."""
-    from tsne_flink_spark.operators.ndtree import (
-        NDTree,
-        build_ndtree,
-        build_ndtree_distributed,
+    kern, used = fused_pass(
+        rows, theta, n_components, fix_bounds_mean=fix_bounds_mean,
+        bh_condition=bh_condition, tree_build=tree_build,
     )
-
-    d = n_components
-    bounds = None
-    if tree_build == "auto" and n_hint is not None:
-        # see _repulsive_barnes_hut: loop-invariant N skips the bounds job
-        tree_build = (
-            "summary"
-            if n_hint * _nd_tree_bytes_per_point(d) > _AUTO_BROADCAST_BUDGET
-            else "driver"
-            if n_hint <= _AUTO_DRIVER_BUILD_MAX_N
-            else "distributed"
-        )
-    if tree_build in ("auto", "summary"):
-        bounds = _bounds_with_count_nd(embedding, d)
-        if tree_build == "auto":
-            n = (
-                int(bounds["n"])
-                if bounds is not None and bounds["n"] is not None
-                else 0
-            )
-            tree_build = (
-                "summary"
-                if n * _nd_tree_bytes_per_point(d) > _AUTO_BROADCAST_BUDGET
-                else "driver"
-                if n <= _AUTO_DRIVER_BUILD_MAX_N
-                else "distributed"
-            )
-    if tree_build == "summary":
-        res = _repulsive_summary_nd(
-            embedding, theta, d, fix_bounds_mean, bh_condition, bounds=bounds
-        )
-        if res is not None:
-            return res, True
-        tree_build = "distributed"  # degenerate regime: full-tree fallback
-    if tree_build == "driver":
-        rows = embedding.select("id", "y").collect()
-        Y = np.array([r["y"] for r in rows], dtype=np.float64).reshape(-1, d)
-        tree = build_ndtree(Y, fix_bounds_mean=fix_bounds_mean)
-    elif tree_build == "stub":
-        tree = NDTree(np.zeros(d), 1.0)
-    else:
-        tree = build_ndtree_distributed(
-            embedding, d, fix_bounds_mean=fix_bounds_mean, bounds=bounds
-        )
-    bc = embedding.sparkSession.sparkContext.broadcast(tree)
-
-    def eval_forces(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        t = bc.value
-        for pdf in it:
-            if not len(pdf):
-                continue
-            Q = np.array([np.asarray(v) for v in pdf["y"]], dtype=np.float64)
-            forces, sumq = t.repulsive_forces(Q, theta, condition=bh_condition)
-            yield pd.DataFrame(
-                {"id": pdf["id"].to_numpy(), "rep": list(forces), "sumq": sumq}
-            )
-
-    return (
-        embedding.mapInPandas(
-            eval_forces, schema="id int, rep array<double>, sumq double"
-        ),
-        False,
-    )
+    return kern.select("id", "rep", "sumq"), used
 
 
 def gradient(
@@ -681,101 +856,26 @@ def gradient(
     fix_bounds_mean: bool = False,
     bh_condition: str = "reference",
     tree_build: str = "auto",
-    n_hint: int | None = None,
 ) -> tuple[DataFrame, DataFrame | None]:
-    """One gradient evaluation.
+    """One gradient evaluation — the optimizer loop's fused pass.
 
-    Returns ``(grad, loss)``: grad is (id, dy ARRAY<DOUBLE>); loss is a 1-row
-    (loss DOUBLE) DataFrame when ``compute_loss`` (KL divergence
-    sum p*log(p / (q/sumQ)), TsneHelpers.scala:297-300) else None.
+    Returns ``(grad, loss)``: grad is (id, dy ARRAY<DOUBLE>), one row per
+    embedding row; loss is a 1-row (loss DOUBLE) DataFrame when
+    ``compute_loss`` (KL divergence, see :func:`pass_totals`) else None.
+    Runs the loop's pass (materialized kernel, sumQ); ``grad`` is a
+    projection over it.
     """
-    if theta == 0.0:
-        rep = _repulsive_exact(embedding, n_components)
-        if os.environ.get("TSNE_SPARK_PIN_REP") == "1":
-            from tsne_flink_spark.operators.optimize import materialize
+    from tsne_flink_spark.operators.optimize import materialize
 
-            rep = materialize(rep)
-    else:
-        rep, used_summary = _repulsive_barnes_hut(
-            embedding,
-            theta,
-            n_components,
-            fix_bounds_mean=fix_bounds_mean,
-            bh_condition=bh_condition,
-            tree_build=tree_build,
-            n_hint=n_hint,
-        )
-        if used_summary or os.environ.get("TSNE_SPARK_PIN_REP") == "1":
-            # rep feeds BOTH the sum_q aggregate and the grad join; without
-            # pinning it, the whole summary pipeline (near-field shuffle +
-            # per-block Python evaluation) runs twice per iteration, and the
-            # two evaluations could rebuild local trees from different
-            # shuffle row orders (last-bit rep/sumq inconsistency).  The
-            # full-tree paths (including the summary path's own degenerate-
-            # regime fallback) re-evaluate only a cheap broadcast-tree
-            # mapInPandas, so they keep the lazy form.
-            # TSNE_SPARK_PIN_REP=1 pins the full-tree rep too (A/B probe,
-            # tools/ab_rep_materialize.py).
-            from tsne_flink_spark.operators.optimize import materialize
-
-            rep = materialize(rep)
-
-    sum_q = rep.agg(F.sum("sumq").alias("__sum_q"))
-
-    # NOTE (r15, measured): broadcast-hinting the N-row join sides here
-    # (yi/yj/rep and the update join's dy) to skip AQE's shuffle-stage
-    # materialization was tried and REJECTED — alternating revision A/B
-    # read the hinted build 1.5-1.9x SLOWER warm (57-62 s vs 32-41 s at
-    # equal np calibration).  Every hinted side sits above a fresh
-    # Python-eval subtree, so each broadcast build serializes that
-    # subtree through a single driver collect per iteration; AQE's
-    # sub-jobs are cheaper than the forced driver round-trips (the same
-    # conclusion as round 1's "AQE off is 4x worse" probe).
-
-    # attractive forces: P edges joined with both endpoint embeddings
-    yi = embedding.select(F.col("id").alias("i"), F.col("y").alias("__yi"))
-    yj = embedding.select(F.col("id").alias("j"), F.col("y").alias("__yj"))
-    edges = (
-        p_coo.join(yi, "i")
-        .join(yj, "j")
-        .withColumn(
-            "__q",
-            F.lit(1.0)
-            / (F.lit(1.0) + metric_expr(metric, F.col("__yi"), F.col("__yj"))),
-        )
+    rows = attach_p(embedding.select("id", "y"), p_coo)
+    kern, _ = fused_pass(
+        rows, theta, n_components, metric, want_loss=compute_loss,
+        fix_bounds_mean=fix_bounds_mean, bh_condition=bh_condition,
+        tree_build=tree_build,
     )
-    attr = edges.groupBy("i").agg(
-        F.array(
-            *[
-                F.sum(F.col("v") * F.col("__q") * (F.col("__yi")[c] - F.col("__yj")[c]))
-                for c in range(n_components)
-            ]
-        ).alias("attr")
-    )
-
-    grad = (
-        attr.withColumnRenamed("i", "id")
-        .join(rep, "id")
-        .crossJoin(F.broadcast(sum_q))
-        .select(
-            "id",
-            F.zip_with(
-                "attr",
-                F.transform(F.col("rep"), lambda r: r / F.col("__sum_q")),
-                lambda a, r: a - r,
-            ).alias("dy"),
-        )
-    )
-
-    loss = None
-    if compute_loss:
-        loss = (
-            edges.crossJoin(F.broadcast(sum_q))
-            .agg(
-                F.sum(
-                    F.col("v")
-                    * F.log(F.col("v") / (F.col("__q") / F.col("__sum_q")))
-                ).alias("loss")
-            )
-        )
-    return grad, loss
+    kern = materialize(kern)
+    sum_q, loss = pass_totals(kern)
+    grad = kern.select("id", dy(F.lit(sum_q)).alias("dy"))
+    if not compute_loss:
+        return grad, None
+    return grad, embedding.sparkSession.createDataFrame([(loss,)], "loss double")

@@ -8,21 +8,51 @@ the role of the feedback edge.  Loss is a deterministic per-iteration
 aggregate, replacing the reference's MapAccumulator side-channel
 (MapAccumulator.java:27-77; accumulators double-count on task retry).
 
+One iteration shape for every ``tree_build`` (operators/gradient.py):
+
+1. the centring mean and the repulsion source: where the driver builds the
+   tree (auto below the summary regime, and theta 0) it collects Y,
+   centres it and broadcasts the tree with the ids and the centred Y; the
+   executor-side regimes ("distributed", "summary") keep Y off the driver
+   and take the mean from a bounds aggregate;
+2. one ``mapInArrow`` pass that centres its own rows and computes
+   repulsion, attraction (each row carries its P row, attached once per
+   call), ``sumq`` and the KL partials — materialized;
+3. one job for sumQ and the loss;
+4. the momentum/gain update as a narrow projection with sumQ as a literal,
+   left lazy: the next iteration's pass reads through it.
+
+With the driver-built tree that is three Spark jobs, no join and no
+shuffle.  The executor-side regimes add their tree build or cogroup and
+gather each row's neighbour coordinates by a join on the P edges instead
+of a Y broadcast.  Centring happens at the start of the next iteration,
+and once more when a call returns, so every returned working set is
+centred; the first iteration of a call evaluates the caller's working set
+as given, as the reference's gradient-update-centre order does.
+
 Three-phase schedule replicated exactly (quirk Q8, TsneHelpers.scala:403-427):
 first min(n, 20) iterations at initial momentum with exaggerated P, next
 min(n-20, 81) at final momentum with exaggerated P, remainder at final
-momentum with plain P.  The loss on exaggerated phases is computed against
-the exaggerated P, as the reference does.
+momentum with plain P.  Exaggeration is a scalar factor in the kernel, so
+all phases share one P layout.  The loss on exaggerated phases is computed
+against the exaggerated P, as the reference does.
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
-from tsne_flink_spark.operators.embedding import center_embedding, update_embedding
-from tsne_flink_spark.operators.gradient import gradient
+from tsne_flink_spark.operators.embedding import update_step
+from tsne_flink_spark.operators.gradient import (
+    attach_p,
+    dy,
+    fused_pass,
+    pass_totals,
+    resolve_tree_build,
+    shifted_y,
+)
 
 MIN_GAIN = 0.01
 LOSS_EVERY = 10
@@ -51,6 +81,60 @@ def materialize(df: DataFrame) -> DataFrame:
         return cp
 
 
+def _descend(
+    rows: DataFrame,
+    iterations: int,
+    momentum: float,
+    exaggeration: float,
+    centre_first: bool,
+    iter_offset: int,
+    loss_sink: list | None,
+    metric: str,
+    learning_rate: float,
+    theta: float,
+    n_components: int,
+    bh_condition: str,
+    tree_build: str,
+) -> DataFrame:
+    """``iterations`` fused steps over rows carrying their P rows; returns
+    the updated rows, not yet centred, as a projection over the last
+    materialized pass."""
+    update = update_step(
+        dy(F.col("__sum_q")), ["id", "js", "vs"], MIN_GAIN, momentum,
+        learning_rate,
+    )
+    for step in range(1, iterations + 1):
+        it = iter_offset + step
+        want_loss = loss_sink is not None and it % LOSS_EVERY == 0
+        kern, _ = fused_pass(
+            rows, theta, n_components, metric,
+            exaggeration=exaggeration,
+            centre=centre_first or step > 1,
+            want_loss=want_loss,
+            bh_condition=bh_condition,
+            tree_build=tree_build,
+        )
+        # materialize + truncate lineage and stats: the kernel runs once,
+        # and the next iteration reads cached partitions
+        kern = materialize(kern)
+        sum_q, loss = pass_totals(kern)
+        # the update stays a lazy projection over the materialized pass:
+        # the next iteration's pass reads through it
+        rows = update(kern.withColumn("__sum_q", F.lit(sum_q)))
+        if want_loss:
+            loss_sink.append((it, loss))
+    return rows
+
+
+def _centred(rows: DataFrame, n_components: int) -> DataFrame:
+    """(id, y, grad, gains) with y centred by its mean (one aggregate)."""
+    means = rows.agg(
+        *[F.avg(F.col("y")[k]) for k in range(n_components)]
+    ).first()
+    mean = np.array([0.0 if m is None else m for m in means])
+    return rows.select("id", shifted_y(mean).alias("y"), "grad", "gains")
+
+
 def iteration_computation(
     iterations: int,
     momentum: float,
@@ -66,43 +150,29 @@ def iteration_computation(
     tree_build: str = "auto",
     n_hint: int | None = None,
 ) -> DataFrame:
-    """Run ``iterations`` gradient-descent steps from ``working_set``.
+    """Run ``iterations`` gradient-descent steps from the (id, y, grad,
+    gains) ``working_set``; returns the same shape, centred.
 
     Mirrors TsneHelpers.iterationComputation (TsneHelpers.scala:371-394);
     the superstep number is 1-based, so global iteration = iter_offset + step.
     Appends (iteration, loss) tuples to ``loss_sink`` every 10th iteration.
+    ``p_coo`` is attached to the rows once per call.
 
-    ``n_hint``: the working-set row count, if the caller knows it.  Row
-    count is loop-invariant (update/center are row-preserving id joins),
-    so one count lets every iteration's Barnes-Hut auto dispatch skip its
-    per-iteration bounds/count aggregate (r15, guide §2.4).
+    ``n_hint`` is the row count, when the caller knows it: "auto" picks
+    the repulsion source by N, and counts the rows once without it.
     """
-    ws = working_set
-    for step in range(1, iterations + 1):
-        it = iter_offset + step
-        embedding = ws.select("id", "y")
-        want_loss = loss_sink is not None and it % LOSS_EVERY == 0
-        dy, loss = gradient(
-            p_coo,
-            embedding,
-            metric=metric,
-            theta=theta,
-            n_components=n_components,
-            compute_loss=want_loss,
-            bh_condition=bh_condition,
-            tree_build=tree_build,
-            n_hint=n_hint,
-        )
-        updated = update_embedding(
-            dy, ws, min_gain=MIN_GAIN, momentum=momentum, learning_rate=learning_rate
-        )
-        ws = center_embedding(updated, n_components=n_components)
-        # materialize + truncate lineage and stats; the returned DF is backed
-        # by cached partitions, so the next iteration starts from a flat scan
-        ws = materialize(ws)
-        if want_loss:
-            loss_sink.append((it, loss.head()["loss"]))
-    return ws
+    if iterations <= 0:
+        return working_set
+    rows = materialize(attach_p(working_set, p_coo))
+    tree_build = resolve_tree_build(
+        tree_build, theta, n_components,
+        lambda: rows.count() if n_hint is None else n_hint,
+    )
+    rows = _descend(
+        rows, iterations, momentum, 1.0, False, iter_offset, loss_sink,
+        metric, learning_rate, theta, n_components, bh_condition, tree_build,
+    )
+    return _centred(rows, n_components)
 
 
 def optimize(
@@ -121,48 +191,27 @@ def optimize(
     tree_build: str = "auto",
 ) -> DataFrame:
     """Full three-phase optimization; returns the final (id, y) embedding."""
+    if iterations <= 0:
+        return initial_working_set.select("id", "y")
     iter_init = min(iterations, 20)
     iter_exag = min(iterations - iter_init, 101 - 20)
     iter_plain = iterations - iter_exag - iter_init
 
-    exaggerated = p_coo.select(
-        "i", "j", (F.col("v") * F.lit(float(early_exaggeration))).alias("v")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    plain = p_coo.persist(StorageLevel.MEMORY_AND_DISK)
-
-    # one count for the whole loop: lets the BH auto dispatch skip its
-    # per-iteration bounds/count job (row count never changes mid-loop)
-    n_hint = int(initial_working_set.count()) if theta != 0.0 else None
-
-    # NOTE (r15, measured): a pagerank-style scale-adaptive LOOP shuffle
-    # width (cap spark.sql.shuffle.partitions to ceil(rows/64k) for the
-    # loop) was tried and REJECTED here.  Deterministic evidence: job/
-    # stage/task counts per flagship run are IDENTICAL with and without
-    # the cap (358/698/~5.5k) — AQE's partition coalescing already
-    # collapses the loop's tiny reducers, so the cap has no mechanism;
-    # and the interleaved A/B read the capped build 1.7-3x WORSE inside
-    # a contended-host window (a width-1 stage serializes into whatever
-    # stalls its one core, while the wide width rides out per-core
-    # stalls).  The per-iteration cost is the AQE sub-job floor, not
-    # task counts (see the broadcast-hint rejection below).
-
-    ws = iteration_computation(
-        iter_init, initial_momentum, initial_working_set, exaggerated,
-        metric, learning_rate, theta, n_components, 0, loss_sink,
-        bh_condition, tree_build, n_hint,
+    rows = materialize(attach_p(initial_working_set, p_coo))
+    # N is loop-invariant: "auto" counts once per call
+    tree_build = resolve_tree_build(tree_build, theta, n_components, rows.count)
+    common = (metric, learning_rate, theta, n_components, bh_condition, tree_build)
+    phases = (
+        (iter_init, initial_momentum, early_exaggeration),
+        (iter_exag, final_momentum, early_exaggeration),
+        (iter_plain, final_momentum, 1.0),
     )
-    if iter_exag > 0:
-        ws = iteration_computation(
-            iter_exag, final_momentum, ws, exaggerated,
-            metric, learning_rate, theta, n_components, iter_init, loss_sink,
-            bh_condition, tree_build, n_hint,
-        )
-    if iter_plain > 0:
-        ws = iteration_computation(
-            iter_plain, final_momentum, ws, plain,
-            metric, learning_rate, theta, n_components,
-            iter_init + iter_exag, loss_sink, bh_condition, tree_build, n_hint,
-        )
-    exaggerated.unpersist()
-    plain.unpersist()
-    return ws.select("id", "y")
+    done = 0
+    for count, momentum, exaggeration in phases:
+        if count > 0:
+            rows = _descend(
+                rows, count, momentum, exaggeration, done > 0, done,
+                loss_sink, *common,
+            )
+            done += count
+    return _centred(rows, n_components).select("id", "y")

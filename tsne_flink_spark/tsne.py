@@ -42,7 +42,7 @@ class TSNE:
     # "reference" replicates quirk Q2 (summary vs SQUARED distance — exact
     # O(N^2) on compressed embeddings); "scaled" is canonical Barnes-Hut
     bh_condition: str = "reference"
-    # "auto" (default): full executor-built tree below a 64 MB broadcast
+    # "auto" (default): full driver-built tree below a 64 MB broadcast
     # budget (reference parity), far-field summary above it (O(1)-in-N
     # broadcast — the 100-TB path, BASELINE.md B14); "distributed"/"driver"/
     # "summary" force a path
@@ -128,22 +128,24 @@ class TSNE:
 
         The reference's ``--executionPlan`` dumps the lazily assembled Flink
         job graph without executing it (Tsne.scala:89-95); the Spark analogue
-        is the physical plan of one kNN -> affinities -> joint -> gradient ->
-        update -> center step.  The driver loop's per-iteration
-        ``materialize()`` is deliberately absent, and the Barnes-Hut stage is
-        planned against a stub broadcast tree, so nothing here triggers an
-        action.  With ``dimension`` set, plan construction runs ZERO Spark
-        jobs for every knn_method: ``"project"`` is planned in stub mode
-        (placeholder quantization bounds and a lazy placeholder rank column
-        standing in for the real global rank, whose materialized range
-        shuffle and partition-count collect are inherently eager and so
-        cannot appear in an unexecuted plan).
+        is the physical plan of one kNN -> affinities -> joint -> P attach
+        -> fused gradient pass -> update step.  The driver loop's
+        per-iteration ``materialize()`` is deliberately absent, the loop's
+        driver-side values (sumQ, the centring mean) are placeholders, and
+        the fused pass is planned against a stub broadcast tree, so
+        nothing here triggers an action.  With ``dimension`` set, plan
+        construction runs ZERO Spark jobs for every knn_method:
+        ``"project"`` is planned in stub mode (placeholder quantization
+        bounds and a lazy placeholder rank column standing in for the real
+        global rank, whose materialized range shuffle and partition-count
+        collect are inherently eager and so cannot appear in an unexecuted
+        plan).
         """
-        from tsne_flink_spark.operators.gradient import gradient
-        from tsne_flink_spark.operators.embedding import (
-            center_embedding,
-            update_embedding,
-        )
+        from pyspark.sql import functions as F
+
+        from tsne_flink_spark.operators.embedding import update_step
+        from tsne_flink_spark.operators.gradient import attach_p, dy, fused_pass
+        from tsne_flink_spark.operators.optimize import MIN_GAIN
 
         if (points is None) == (distances is None):
             raise ValueError("provide exactly one of points= or distances=")
@@ -169,19 +171,17 @@ class TSNE:
         ws = init_working_set(
             ids.select("id"), self.n_components, self.random_state
         )
-        dy, _ = gradient(
-            p_joint,
-            ws.select("id", "y"),
-            metric=self.metric,
-            theta=self.theta,
-            n_components=self.n_components,
+        kern, _ = fused_pass(
+            attach_p(ws, p_joint),
+            self.theta,
+            self.n_components,
+            self.metric,
+            exaggeration=self.early_exaggeration,
             bh_condition=self.bh_condition,
-            tree_build="stub" if self.theta > 0 else self.tree_build,
+            tree_build="stub",
         )
-        updated = update_embedding(
-            dy, ws, momentum=self.initial_momentum,
-            learning_rate=self.learning_rate,
+        step = update_step(
+            dy(F.lit(1.0)), ["id"], MIN_GAIN, self.initial_momentum,
+            self.learning_rate,
         )
-        return center_embedding(updated, n_components=self.n_components).select(
-            "id", "y"
-        )
+        return step(kern).select("id", "y")
