@@ -19,3 +19,26 @@ def spark():
     )
     yield s
     s.stop()
+
+
+@pytest.fixture(scope="session")
+def query_frame(spark):
+    """``query_frame(name, sf_dir)``: the registered query's DataFrame over
+    the test data in ``sf_dir``, built on first use and reused for the rest
+    of the session.  Building a plan runs real driver actions for the
+    iterative queries, so the two whole-registry sweeps
+    (tests/test_plans.py, tests/test_registry.py) share one build per query
+    instead of paying for two."""
+    import sys
+
+    sys.path.insert(0, ".")
+    import __spark_entry__ as m
+
+    queries, built = m.queries(), {}
+
+    def get(name, sf_dir):
+        if (name, sf_dir) not in built:
+            built[name, sf_dir] = queries[name](spark, sf_dir)
+        return built[name, sf_dir]
+
+    return get

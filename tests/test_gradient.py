@@ -56,7 +56,7 @@ def test_gradient_theta0_goldens(spark):
 
 
 def test_gradient_barnes_hut_theta0_equals_exact(spark):
-    """theta=0 through the quadtree path must equal the exact path — the
+    """theta=0 through the tree path must equal the exact path — the
     reference's own regression trick (TsneHelpersTestSuite.scala:187)."""
     p = coo_from_rows(spark, DENSE_JOINT_PROBABILITIES)
     y = _embedding_df(spark, INITIAL_EMBEDDING)
@@ -171,10 +171,10 @@ def test_row_without_p_keeps_zero_attraction(spark):
 def _replay(y0, edges, metric, iterations, theta, condition, learning_rate,
             momentum):
     """NumPy replay of ``iteration_computation`` from y0: per step the
-    engine's QuadTree for repulsion, attraction over the P edges with q from
+    engine's tree for repulsion, attraction over the P edges with q from
     the kNN metric, the momentum/gain update, and centring after each
     update.  Returns (y, {iteration: KL loss by the direct formula})."""
-    from tsne_flink_spark.operators.quadtree import build_quadtree
+    from tsne_flink_spark.operators.ndtree import build_ndtree
 
     pi, pj, v = edges
     y = y0.copy()
@@ -182,7 +182,7 @@ def _replay(y0, edges, metric, iterations, theta, condition, learning_rate,
     gains = np.ones_like(y)
     losses = {}
     for it in range(1, iterations + 1):
-        forces, sumq = build_quadtree(y).repulsive_forces(
+        forces, sumq = build_ndtree(y).repulsive_forces(
             y, theta, condition=condition
         )
         yi, yj = y[pi], y[pj]

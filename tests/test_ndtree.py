@@ -1,17 +1,29 @@
-"""d-dimensional Barnes-Hut tree (operators/ndtree.py) — the octree path
-that serves --nComponents != 2 (beyond reference parity: QuadTree.scala is
-2-D only while the reference CLI accepts --nComponents).
+"""The d-generic Barnes-Hut tree (operators/ndtree.py): the reference's
+quadtree at d=2 (QuadTree.scala:50-63 insert/subdivide, 123-152 force
+evaluation), an octree at d=3.
+
+Each behaviour is one ``check_*`` body taking the dimension.  This module
+runs the d != 2 cases; the d=2 cases run under their original names in
+tests/test_quadtree_distributed.py and tests/test_properties.py.
 
 Oracles: exact brute-force repulsion in numpy (theta -> 0 must match to
 float precision; theta = 0.5 must sit in the same accuracy band as the 2-D
-tree), and sequential-vs-merged build equivalence."""
+tree), sequential-insert vs bulk vs merged vs distributed build equivalence
+(the capacity-1 tree's structure depends only on the point SET, so the
+builds must agree node-for-node, with sums equal up to FP summation
+order)."""
 
 import numpy as np
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from tsne_flink_spark.operators.ndtree import (
+    _MAX_DEPTH,
     NDTree,
+    _bulk_build,
     build_ndtree,
+    build_ndtree_distributed,
     merge_ndtrees,
 )
 
@@ -25,18 +37,292 @@ def _exact_rep(Y: np.ndarray, q: np.ndarray) -> tuple[np.ndarray, float]:
     return (w[mask, None] ** 2 * d[mask]).sum(axis=0), float(w[mask].sum())
 
 
-@pytest.mark.parametrize("dim", [3, 4])
-def test_ndtree_theta_zero_matches_exact(dim):
-    rng = np.random.default_rng(3)
-    Y = rng.normal(0, 5.0, (400, dim))
+def _tree_of(points, half: float) -> NDTree:
+    """Sequential insert of ``points`` under a root at the origin."""
+    points = np.asarray(points, dtype=np.float64)
+    t = NDTree(np.zeros(points.shape[1]), half)
+    for row in points:
+        t.insert(row)
+    return t
+
+
+def _canonical(tree: NDTree) -> dict:
+    """(cell centre, depth) -> (cum, sums, point): order-independent."""
+    out = {}
+    for n in range(tree.n_nodes):
+        if tree.cum[n] == 0 and not tree.has_point[n]:
+            continue
+        key = (tuple(tree.c[:, n]), int(tree.depth[n]))
+        pt = tuple(tree.p[:, n]) if tree.has_point[n] else None
+        out[key] = (int(tree.cum[n]), tree.s[:, n].copy(), pt)
+    return out
+
+
+def _assert_equivalent(a: NDTree, b: NDTree, tol: float = 1e-9) -> None:
+    ca, cb = _canonical(a), _canonical(b)
+    assert set(ca) == set(cb)
+    for key in ca:
+        cum_a, s_a, pt_a = ca[key]
+        cum_b, s_b, pt_b = cb[key]
+        assert cum_a == cum_b
+        np.testing.assert_allclose(s_a, s_b, rtol=0, atol=tol)
+        assert pt_a == pt_b
+
+
+def _leaf_cums(tree: NDTree) -> list[int]:
+    return sorted(
+        int(tree.cum[n])
+        for n in range(tree.n_nodes)
+        if tree.children[n, 0] == -1 and tree.has_point[n]
+    )
+
+
+def _emb(spark, Y):
+    return spark.createDataFrame(
+        [(i, [float(v) for v in row]) for i, row in enumerate(Y)],
+        "id int, y array<double>",
+    )
+
+
+# -- check bodies (one per behaviour, d-generic) ------------------------------
+
+def check_theta0_matches_bruteforce(
+    d: int, n: int = 60, scale: float = 1.0, seed: int = 4
+) -> None:
+    """Near-zero theta makes the tree's forces equal the O(N^2) pairwise
+    formula for every query, under both summary conditions."""
+    rng = np.random.default_rng(seed)
+    Y = rng.normal(0, scale, (n, d))
     Y -= Y.mean(axis=0)
     tree = build_ndtree(Y)
-    assert tree.cum[0] == 400
-    forces, sumq = tree.repulsive_forces(Y, theta=1e-12, condition="scaled")
-    for i in rng.choice(400, 40, replace=False):
-        want_f, want_s = _exact_rep(Y, Y[i])
-        assert np.allclose(forces[i], want_f, atol=1e-9), i
-        assert abs(sumq[i] - want_s) < 1e-9
+    assert tree.cum[0] == n
+    diff = Y[:, None, :] - Y[None, :, :]
+    Q = 1.0 / (1.0 + (diff * diff).sum(-1))
+    np.fill_diagonal(Q, 0.0)
+    exp_forces = np.einsum("ij,ijk->ik", Q * Q, diff)
+    for theta, condition in [(1e-300, "reference"), (1e-12, "scaled")]:
+        forces, sumq = tree.repulsive_forces(Y, theta, condition=condition)
+        np.testing.assert_allclose(sumq, Q.sum(axis=1), atol=1e-9)
+        np.testing.assert_allclose(forces, exp_forces, atol=1e-9)
+
+
+def check_coincident_points(d: int) -> None:
+    """Coincident points accumulate in one leaf (QuadTree.scala:50-52); a
+    bit-equal query point gets nothing from its own leaf
+    (QuadTree.scala:128); a later split re-seats the FULL leaf weight (the
+    documented divergence from QuadTree.scala:59); a point outside the root
+    cell is dropped."""
+    Y = np.array([np.zeros(d), np.zeros(d), np.ones(d)])
+    tree = build_ndtree(Y)
+    forces, sumq = tree.repulsive_forces(Y, theta=1e-300)
+    q = 1.0 / (1.0 + d)
+    # query 0: its own leaf is skipped — only the far point contributes
+    assert sumq[0] == pytest.approx(q)
+    # query 2: the origin leaf contributes BOTH coincident copies (cum 2 —
+    # the reference would have dropped one at subdivision)
+    assert sumq[2] == pytest.approx(2 * q)
+
+    p, other = np.full(d, 0.1), np.r_[-0.5, np.full(d - 1, 0.2)]
+    t = NDTree(np.zeros(d), 1.0)
+    assert t.insert(p)
+    assert t.insert(p)  # coincident accumulates
+    assert t.insert(other)
+    assert not t.insert(np.r_[5.0, np.zeros(d - 1)])  # outside root: dropped
+    assert t.cum[0] == 3
+    f, s = t.repulsive_forces(p[None, :], 1e-12, "scaled")
+    # only the one distinct other point repels; the 2 coincident copies don't
+    want_f, want_s = _exact_rep(np.array([p, p, other]), p)
+    assert np.allclose(f[0], want_f, atol=1e-12)
+    assert abs(s[0] - want_s) < 1e-12
+
+
+def check_merge_equals_sequential(d: int) -> None:
+    """Partition trees merged pairwise equal the sequential build node for
+    node (coincident points included) and evaluate identically at exact and
+    approximate theta."""
+    rng = np.random.default_rng(7)
+    Y = rng.normal(0, 3, (400, d))
+    Y[50] = Y[51] = Y[10]  # the weighted re-seat rule must hold
+    half = float((Y.max(axis=0) - Y.min(axis=0)).max())
+    seq = build_ndtree(Y)
+    # 7 uneven blocks, each built over the SAME root cell, then merged
+    parts = [_tree_of(blk, half) for blk in np.array_split(Y, 7)]
+    merged = parts[0]
+    for t in parts[1:]:
+        merged = merge_ndtrees(merged, t)
+    assert merged.cum[0] == seq.cum[0] == len(Y)
+    _assert_equivalent(merged, seq)
+    for theta, cond in [(1e-300, "reference"), (0.5, "scaled")]:
+        f_seq, q_seq = seq.repulsive_forces(Y, theta, condition=cond)
+        f_mrg, q_mrg = merged.repulsive_forces(Y, theta, condition=cond)
+        np.testing.assert_allclose(f_mrg, f_seq, rtol=1e-9, atol=1e-12)
+        np.testing.assert_allclose(q_mrg, q_seq, rtol=1e-9, atol=1e-12)
+
+
+def check_merge_with_coincident_points(d: int) -> None:
+    """Coincident points accumulate in one leaf across partitions too, and a
+    later split re-seats the full leaf weight."""
+    rng = np.random.default_rng(d)
+    base = rng.uniform(-2, 2, (3, d))
+    Y = np.concatenate([base, base, base])  # every point x3
+    half = float((Y.max(axis=0) - Y.min(axis=0)).max())
+    merged = merge_ndtrees(_tree_of(Y[:4], half), _tree_of(Y[4:], half))
+    assert merged.cum[0] == 9
+    # leaves holding each distinct point carry multiplicity 3
+    assert _leaf_cums(merged) == [3, 3, 3]
+
+
+def check_split_reseats_full_coincident_weight(d: int) -> None:
+    """Insert p, a bit-equal copy of p, THEN a near point r: the split below
+    must carry BOTH copies of p (cum 2), matching the structural merge's
+    weighting."""
+    p = np.full(d, 0.25)
+    r = p.copy()
+    r[0] += 1e-9
+    seq = _tree_of([p, p, r], 1.0)
+    merged = merge_ndtrees(_tree_of([p, p], 1.0), _tree_of([r], 1.0))
+    _assert_equivalent(seq, merged, tol=1e-12)
+    for tree in (seq, merged):
+        assert _leaf_cums(tree) == [1, 2]
+    Y = np.array([p, p, r])
+    f1, q1 = seq.repulsive_forces(Y, 0.5, condition="scaled")
+    f2, q2 = merged.repulsive_forces(Y, 0.5, condition="scaled")
+    np.testing.assert_allclose(f1, f2, rtol=1e-12)
+    np.testing.assert_allclose(q1, q2, rtol=1e-12)
+
+
+def check_merge_property(d: int, n: int, dup_every: int, n_blocks: int,
+                         seed: int) -> None:
+    """For ANY point set (bit-equal duplicates and coincident splits
+    included) and ANY partitioning, merged partition trees equal the
+    sequential build: same cells, same integer masses, same points."""
+    rng = np.random.default_rng(seed)
+    Y = rng.normal(0, 2, (n, d))
+    Y[::dup_every] = Y[0]  # inject coincident copies
+    perm = rng.permutation(n)
+    half = float((Y.max(axis=0) - Y.min(axis=0)).max()) or 1.0
+    seq = _tree_of(Y, half)
+    parts = [_tree_of(Y[blk], half)
+             for blk in np.array_split(perm, min(n_blocks, n))]
+    merged = parts[0]
+    for t in parts[1:]:
+        merged = merge_ndtrees(merged, t)
+    assert merged.cum[0] == seq.cum[0]
+    _assert_equivalent(merged, seq, tol=1e-9)
+
+
+def check_distributed_build_matches_driver(spark, d: int) -> None:
+    rng = np.random.default_rng(3)
+    Y = rng.normal(0, 2, (300, d))
+    dist = build_ndtree_distributed(_emb(spark, Y).repartition(9), d)
+    seq = build_ndtree(Y)
+    assert dist.cum[0] == seq.cum[0] == len(Y)
+    _assert_equivalent(dist, seq)
+
+
+def check_distributed_build_empty(spark, d: int) -> None:
+    emb = spark.createDataFrame([], "id int, y array<double>")
+    t = build_ndtree_distributed(emb, d)
+    assert t.cum[0] == 0
+    f, q = t.repulsive_forces(np.zeros((2, d)), 0.5)
+    assert (f == 0).all() and (q == 0).all()
+
+
+def check_bulk_build_equals_insert(d: int, seed: int) -> None:
+    """The vectorized level-synchronous build produces a tree structurally
+    identical to per-point insert() on adversarial data: exact duplicates,
+    points on the root split planes, out-of-root drops."""
+    rng = np.random.default_rng(seed)
+    base = rng.normal(0, 5.0, (400, d))
+    dup = np.repeat(base[:25], 3, axis=0)        # coincident clusters
+    onplane = base[:15].copy()
+    onplane[:, 0] = 0.0                           # on the axis-0 split plane
+    onaxis = base[15:30].copy()
+    onaxis[:, -1] = 0.0                           # on the last axis' plane
+    outside = rng.normal(0, 5.0, (10, d)) + 100   # dropped by containment
+    Y = np.concatenate([base, dup, onplane, onaxis, outside])
+    Y = Y[rng.permutation(len(Y))]
+
+    half = float((Y.max(axis=0) - Y.min(axis=0)).max())
+    seq = _tree_of(Y, half).trim()
+    bulk = _bulk_build(NDTree(np.zeros(d), half), Y).trim()
+    assert bulk.cum[0] == seq.cum[0]
+
+    def node_map(t):
+        # same mass distribution: canonical path-keyed node maps
+        out = {}
+        stack = [(0, ())]
+        while stack:
+            n, path = stack.pop()
+            out[path] = (
+                int(t.cum[n]), tuple(np.round(t.s[:, n], 9)),
+                bool(t.has_point[n]),
+                tuple(t.p[:, n]) if t.has_point[n] else None,
+            )
+            if t.children[n, 0] != -1:
+                for c in range(t.nc):
+                    stack.append((int(t.children[n, c]), path + (c,)))
+        return out
+
+    assert node_map(seq) == node_map(bulk), f"d={d}: tree mismatch"
+    # query results agree to float-sum reassociation (np.add.at
+    # accumulates s in a different order than sequential insert)
+    Q = rng.normal(0, 5.0, (64, d))
+    fs, ss = seq.repulsive_forces(Q, 0.5, condition="scaled")
+    fb, sb = bulk.repulsive_forces(Q, 0.5, condition="scaled")
+    assert np.allclose(fs, fb, rtol=1e-12, atol=1e-12)
+    assert np.allclose(ss, sb, rtol=1e-12, atol=1e-12)
+
+
+def check_depth_exhaustion(d: int) -> None:
+    """Points separated only below _MAX_DEPTH levels land in ONE terminal
+    accumulate-only leaf (no massless last-level subdivide — that shape
+    loses the cluster's mass in force queries, which expand internal nodes
+    and drop empty children).  Sequential insert (lex order), bulk build and
+    the structural merge agree, and exact evaluation sees all the mass."""
+    # Coordinates chosen exactly representable, strictly interior to every
+    # cell through depth 63 (the 2^-80 guard bit keeps them off all split
+    # planes, dodging the documented 1-ulp boundary-drop edge), separated
+    # by 2^-70 < root_extent * 2^-63 so they share a cell at every level.
+    base = 2.0**-34 + 2.0**-80
+    p1 = np.full(d, base)
+    p2 = p1.copy()
+    p2[0] += 2.0**-70
+    far = np.full(d, 0.51)
+    Y = np.array([p1, p2, far])
+
+    seq = _tree_of(Y, 1.0).trim()
+    bulk = _bulk_build(NDTree(np.zeros(d), 1.0), Y).trim()
+    # merge path: one tree holding the near pair, one holding the far point
+    merged = merge_ndtrees(_tree_of([p1, p2], 1.0), _tree_of([far], 1.0)).trim()
+
+    for t in (seq, bulk, merged):
+        assert t.cum[0] == 3
+        assert int(t.depth[: t.n_nodes].max()) <= _MAX_DEPTH - 1
+        md = int(t.depth[: t.n_nodes].max())
+        occupied = np.flatnonzero(
+            (t.depth[: t.n_nodes] == md) & (t.cum[: t.n_nodes] > 0)
+        )
+        assert len(occupied) == 1  # one terminal leaf holds the pair
+        deepest = int(occupied[0])
+        assert t.children[deepest, 0] == -1  # terminal LEAF, not internal
+        assert t.cum[deepest] == 2           # both near-coincident points
+        assert t.has_point[deepest]
+        assert np.array_equal(t.p[:, deepest], p1)
+
+    Q = np.array([far + 0.25])
+    brute = sum(1.0 / (1.0 + ((Q[0] - p) ** 2).sum()) for p in Y)
+    for t in (seq, bulk, merged):
+        _, sq = t.repulsive_forces(Q, 0.0)
+        assert np.isclose(sq[0], brute, rtol=1e-9)
+
+
+# -- d != 2 cases ---------------------------------------------------------------
+
+@pytest.mark.parametrize("dim", [3, 4])
+def test_ndtree_theta_zero_matches_exact(dim):
+    # a deeper tree than the 2-D case: 400 centred points at scale 5
+    check_theta0_matches_bruteforce(dim, n=400, scale=5.0, seed=3)
 
 
 def test_ndtree_theta_half_accuracy_band_3d():
@@ -52,7 +338,6 @@ def test_ndtree_theta_half_accuracy_band_3d():
     tree = build_ndtree(Y)
     forces, sumq = tree.repulsive_forces(Y, theta=0.5, condition="scaled")
     errs = []
-    tot_exact = 0.0
     for i in rng.choice(len(Y), 60, replace=False):
         want_f, _ = _exact_rep(Y, Y[i])
         scale = max(np.linalg.norm(want_f), 1e-12)
@@ -66,66 +351,65 @@ def test_ndtree_theta_half_accuracy_band_3d():
 
 
 def test_ndtree_merge_equivalence():
-    """Per-chunk trees merged pairwise must produce the same evaluation as
-    one sequential build (structure is point-set-determined; sums agree up
-    to FP summation order)."""
-    rng = np.random.default_rng(7)
-    Y = rng.normal(0, 10.0, (600, 3))
-    # include coincident points: the weighted re-seat rule must hold in d=3
-    Y[50] = Y[10]
-    Y[51] = Y[10]
-    Y -= Y.mean(axis=0)
+    check_merge_equals_sequential(3)
 
-    seq = build_ndtree(Y)
-    center = np.zeros(3)
-    half = float((Y.max(axis=0) - Y.min(axis=0)).max())
-    chunks = []
-    for part in np.array_split(Y, 4):
-        t = NDTree(center, half, capacity_hint=8 * len(part))
-        for row in part:
-            t.insert(row)
-        chunks.append(t.trim())
-    merged = chunks[0]
-    for t in chunks[1:]:
-        merged = merge_ndtrees(merged, t)
 
-    assert merged.cum[0] == seq.cum[0] == 600
-    f1, s1 = seq.repulsive_forces(Y, theta=0.5, condition="scaled")
-    f2, s2 = merged.repulsive_forces(Y, theta=0.5, condition="scaled")
-    assert np.allclose(f1, f2, atol=1e-9)
-    assert np.allclose(s1, s2, atol=1e-9)
+def test_ndtree_merge_with_coincident_points():
+    check_merge_with_coincident_points(3)
+
+
+def test_ndtree_split_reseats_full_coincident_weight():
+    check_split_reseats_full_coincident_weight(3)
+
+
+@settings(max_examples=20, deadline=None)
+@given(
+    n=st.integers(min_value=1, max_value=120),
+    dup_every=st.integers(min_value=2, max_value=6),
+    n_blocks=st.integers(min_value=1, max_value=9),
+    seed=st.integers(min_value=0, max_value=10_000),
+)
+def test_ndtree_merge_equivalence_property(n, dup_every, n_blocks, seed):
+    check_merge_property(3, n, dup_every, n_blocks, seed)
 
 
 def test_ndtree_coincident_and_outside_points():
-    t = NDTree(np.zeros(3), 1.0)
-    assert t.insert([0.1, 0.1, 0.1])
-    assert t.insert([0.1, 0.1, 0.1])  # coincident accumulates
-    assert t.insert([-0.5, 0.2, 0.3])
-    assert not t.insert([5.0, 0.0, 0.0])  # outside root: dropped
-    assert t.cum[0] == 3
-    f, s = t.repulsive_forces(np.array([[0.1, 0.1, 0.1]]), 1e-12, "scaled")
-    # only the one distinct other point repels; the 2 coincident copies don't
-    want_f, want_s = _exact_rep(
-        np.array([[0.1, 0.1, 0.1], [0.1, 0.1, 0.1], [-0.5, 0.2, 0.3]]),
-        np.array([0.1, 0.1, 0.1]),
-    )
-    assert np.allclose(f[0], want_f, atol=1e-12)
-    assert abs(s[0] - want_s) < 1e-12
+    check_coincident_points(3)
+
+
+def test_ndtree_distributed_build_matches_driver(spark):
+    check_distributed_build_matches_driver(spark, 3)
+
+
+def test_ndtree_distributed_build_empty(spark):
+    check_distributed_build_empty(spark, 3)
+
+
+def test_bulk_build_equals_sequential_insert():
+    for d in (1, 3, 4):
+        check_bulk_build_equals_insert(d, seed=31 + d)
+
+
+def test_depth_exhaustion_terminal_leaf():
+    check_depth_exhaustion(3)
+
+
+def test_build_rejects_zero_dimensions():
+    with pytest.raises(ValueError, match="at least one embedding dimension"):
+        build_ndtree(np.zeros((5, 0)))
 
 
 def test_gradient_3d_barnes_hut_matches_exact(spark):
     """End-to-end through the Spark gradient: n_components=3 with theta>0
-    (NDTree path, distributed build) must agree with the exact theta=0
-    gradient within the 2-D tolerance band."""
+    (distributed build) must agree with the exact theta=0 gradient within
+    the 2-D tolerance band."""
     from tsne_flink_spark.operators.gradient import gradient
 
     rng = np.random.default_rng(13)
     n = 300
     Y = rng.normal(0, 8.0, (n, 3))
     Y -= Y.mean(axis=0)
-    emb = spark.createDataFrame(
-        [(int(i), Y[i].tolist()) for i in range(n)], "id int, y array<double>"
-    )
+    emb = _emb(spark, Y)
     # small ring-sparse P
     p_rows = [(i, (i + 1) % n, 1.0 / n) for i in range(n)]
     p = spark.createDataFrame(p_rows, "i int, j int, v double")
@@ -173,106 +457,3 @@ def test_optimize_3d_full_loop(spark):
     assert Y.shape == (n, 3)
     assert np.isfinite(Y).all()
     assert np.abs(Y.mean(axis=0)).max() < 1e-6  # ends with center_embedding
-
-
-def test_bulk_build_equals_sequential_insert():
-    """The vectorized level-synchronous build must produce a tree
-    structurally identical to per-point insert() on adversarial data:
-    exact duplicates, points on split planes, out-of-root drops."""
-    from tsne_flink_spark.operators.ndtree import NDTree, _bulk_build
-
-    rng = np.random.default_rng(31)
-    for d in (1, 2, 3, 4):
-        base = rng.normal(0, 5.0, (300, d))
-        dup = np.repeat(base[:20], 3, axis=0)       # coincident clusters
-        onplane = base[:15].copy()
-        onplane[:, 0] = 0.0                          # on the root split plane
-        outside = rng.normal(0, 5.0, (10, d)) + 100  # dropped by containment
-        Y = np.concatenate([base, dup, onplane, outside])
-        Y = Y[rng.permutation(len(Y))]
-
-        center = np.zeros(d)
-        half = float((Y.max(axis=0) - Y.min(axis=0)).max())
-        seq = NDTree(center, half)
-        for row in Y:
-            seq.insert(row)
-        seq.trim()
-        bulk = _bulk_build(NDTree(center, half), Y).trim()
-
-        assert bulk.cum[0] == seq.cum[0]
-        # same mass distribution: compare canonical (path-keyed) node maps
-        def node_map(t):
-            out = {}
-            stack = [(0, ())]
-            while stack:
-                n, path = stack.pop()
-                out[path] = (
-                    int(t.cum[n]), tuple(np.round(t.s[n], 9)),
-                    bool(t.has_point[n]),
-                    tuple(t.p[n]) if t.has_point[n] else None,
-                )
-                if t.children[n, 0] != -1:
-                    for c in range(t.nc):
-                        stack.append((int(t.children[n, c]), path + (c,)))
-            return out
-
-        ms, mb = node_map(seq), node_map(bulk)
-        assert ms == mb, f"d={d}: tree mismatch"
-
-        # query results agree to float-sum reassociation (np.add.at
-        # accumulates s in a different order than sequential insert)
-        Q = rng.normal(0, 5.0, (64, d))
-        fs, ss = seq.repulsive_forces(Q, 0.5, condition="scaled")
-        fb, sb = bulk.repulsive_forces(Q, 0.5, condition="scaled")
-        assert np.allclose(fs, fb, rtol=1e-12, atol=1e-12)
-        assert np.allclose(ss, sb, rtol=1e-12, atol=1e-12)
-
-
-def test_depth_exhaustion_terminal_leaf():
-    """Points separated only below _MAX_DEPTH levels must land in ONE
-    terminal accumulate-only leaf (no massless last-level subdivide — that
-    shape loses the cluster's mass in force queries, which expand internal
-    nodes and drop empty children).  Sequential insert (lex order) and bulk
-    build agree, and exact evaluation sees all the mass."""
-    from tsne_flink_spark.operators.ndtree import (
-        _MAX_DEPTH,
-        NDTree,
-        _bulk_build,
-    )
-
-    d = 2
-    # Coordinates chosen exactly representable, strictly interior to every
-    # cell through depth 63 (the 2^-80 guard bit keeps them off all split
-    # planes, dodging the documented 1-ulp boundary-drop edge), separated
-    # by 2^-70 < root_extent * 2^-63 so they share a cell at every level.
-    base = 2.0**-34 + 2.0**-80
-    p1 = np.array([base, base])
-    p2 = np.array([base + 2.0**-70, base])
-    far = np.full(d, 0.51)
-    Y = np.array([p1, p2, far])
-
-    seq = NDTree(np.zeros(d), 1.0)
-    for row in Y:
-        assert seq.insert(row)
-    seq.trim()
-    bulk = _bulk_build(NDTree(np.zeros(d), 1.0), Y).trim()
-
-    for t in (seq, bulk):
-        assert t.cum[0] == 3
-        assert int(t.depth[: t.n_nodes].max()) <= _MAX_DEPTH - 1
-        md = int(t.depth[: t.n_nodes].max())
-        occupied = np.flatnonzero(
-            (t.depth[: t.n_nodes] == md) & (t.cum[: t.n_nodes] > 0)
-        )
-        assert len(occupied) == 1  # one terminal leaf holds the pair
-        deepest = int(occupied[0])
-        assert t.children[deepest, 0] == -1  # terminal LEAF, not internal
-        assert t.cum[deepest] == 2           # both near-coincident points
-        assert t.has_point[deepest] and np.array_equal(t.p[deepest], p1)
-
-    # exact (theta=0) evaluation accounts for every point's mass
-    Q = np.array([far + 0.25])
-    brute = sum(1.0 / (1.0 + ((Q[0] - p) ** 2).sum()) for p in Y)
-    for t in (seq, bulk):
-        _, sq = t.repulsive_forces(Q, 0.0)
-        assert np.isclose(sq[0], brute, rtol=1e-9)

@@ -213,7 +213,7 @@ def _has_global_window(plan: str) -> bool:
     return False
 
 
-def test_plan_sweep_no_cartesian_no_row_udfs(spark):
+def test_plan_sweep_no_cartesian_no_row_udfs(query_frame):
     """ONE pass over every registered query plan (plan construction runs
     real driver actions for the iterative queries, so sweep once):
 
@@ -228,8 +228,8 @@ def test_plan_sweep_no_cartesian_no_row_udfs(spark):
     """
     m = _entry()
     cartesian, row_udfs, global_windows = [], [], []
-    for name, fn in m.queries().items():
-        plan = _plan(fn(spark, SF_DIR))
+    for name in m.queries():
+        plan = _plan(query_frame(name, SF_DIR))
         if "CartesianProduct" in plan and name not in NLJ_ALLOWED:
             cartesian.append(name)
         if "BatchEvalPython" in plan:

@@ -44,31 +44,19 @@ def test_affinities_hit_target_perplexity(spark):
 
 
 def test_quadtree_theta0_equals_bruteforce():
-    """Pure-numpy check: near-zero theta makes the tree's forces equal the
-    O(N^2) pairwise formula."""
-    from tsne_flink_spark.operators.quadtree import build_quadtree
+    """Near-zero theta makes the 2-D tree's forces equal the O(N^2) pairwise
+    formula (body shared with the d != 2 cases in tests/test_ndtree.py)."""
+    from tests.test_ndtree import check_theta0_matches_bruteforce
 
-    rng = np.random.default_rng(4)
-    Y = rng.normal(0, 1, (60, 2))
-    tree = build_quadtree(Y)
-    forces, sumq = tree.repulsive_forces(Y, theta=1e-300)
-
-    # brute force
-    D = ((Y[:, None, :] - Y[None, :, :]) ** 2).sum(-1)
-    Q = 1.0 / (1.0 + D)
-    np.fill_diagonal(Q, 0.0)
-    exp_sumq = Q.sum(axis=1)
-    exp_forces = np.einsum("ij,ijk->ik", Q * Q, Y[:, None, :] - Y[None, :, :])
-    np.testing.assert_allclose(sumq, exp_sumq, atol=1e-9)
-    np.testing.assert_allclose(forces, exp_forces, atol=1e-9)
+    check_theta0_matches_bruteforce(2)
 
 
 def test_quadtree_barnes_hut_close_to_exact():
-    from tsne_flink_spark.operators.quadtree import build_quadtree
+    from tsne_flink_spark.operators.ndtree import build_ndtree
 
     rng = np.random.default_rng(9)
     Y = rng.normal(0, 2, (200, 2))
-    tree = build_quadtree(Y)
+    tree = build_ndtree(Y)
     f_exact, s_exact = tree.repulsive_forces(Y, theta=1e-300)
     f_bh, s_bh = tree.repulsive_forces(Y, theta=0.25)
     # the reference's summary condition divides by the SQUARED distance
@@ -81,30 +69,16 @@ def test_quadtree_barnes_hut_close_to_exact():
 
 
 def test_quadtree_coincident_points():
-    """Coincident points accumulate in one leaf (QuadTree.scala:50-52), and a
-    bit-equal query point contributes nothing from its own leaf
-    (QuadTree.scala:128).
+    """Coincident points accumulate in one leaf (QuadTree.scala:50-52), a
+    bit-equal query point gets nothing from its own leaf
+    (QuadTree.scala:128), and a later split re-seats the FULL leaf weight —
+    the documented divergence from QuadTree.scala:59, whose
+    insertion-ORDER-dependent mass drop no order-independent distributed
+    build can reproduce (operators/ndtree.py).  Body shared with the d != 2
+    cases in tests/test_ndtree.py."""
+    from tests.test_ndtree import check_coincident_points
 
-    DOCUMENTED DIVERGENCE (round 2): when a coincident leaf is later
-    subdivided, the reference re-seats its point ONCE
-    (insertIntoSubTree(leafPoint), QuadTree.scala:59), silently dropping the
-    duplicates' mass from the subtree — an insertion-ORDER-dependent data
-    loss that no order-independent distributed build can reproduce (whether
-    mass is lost would depend on how points were partitioned).  The engine
-    instead re-seats the full accumulated weight, so sequential, merged, and
-    distributed builds agree exactly and no mass is lost.
-    """
-    from tsne_flink_spark.operators.quadtree import build_quadtree
-
-    Y = np.array([[0.0, 0.0], [0.0, 0.0], [1.0, 1.0]])
-    tree = build_quadtree(Y)
-    forces, sumq = tree.repulsive_forces(Y, theta=1e-300)
-    # query (0,0): its own leaf is skipped — only (1,1) contributes
-    q = 1.0 / (1.0 + 2.0)
-    assert sumq[0] == pytest.approx(q)
-    # query (1,1): the (0,0) leaf contributes BOTH coincident copies
-    # (cumSize 2 — the reference would have dropped one at subdivision)
-    assert sumq[2] == pytest.approx(2 * q)
+    check_coincident_points(2)
 
 
 def test_morton_key_orders_like_zorder():
@@ -176,38 +150,30 @@ def test_farfield_pyramid_mass_conservation_random():
     from tsne_flink_spark.operators import farfield
 
     rng = np.random.default_rng(13)
-    for trial in range(10):
-        depth = int(rng.integers(4, 8))
+    for trial in range(15):
+        d = 2 if trial < 10 else 3
+        depth = int(rng.integers(4, 8 if d == 2 else 6))
         plan = farfield.plan_summary(
-            10**6, 1.0, 0.5, "scaled", summary_depth=depth
+            10**6, d, 1.0, 0.5, "scaled", summary_depth=depth
         )
         grid = plan.grid
-        k = int(rng.integers(1, min(grid * grid, 2000)))
-        cells = rng.choice(grid * grid, size=k, replace=False).astype(np.int64)
+        k = int(rng.integers(1, min(grid**d, 2000)))
+        cells = rng.choice(grid**d, size=k, replace=False).astype(np.int64)
         cum = rng.integers(1, 100, k)
-        sx = rng.normal(0, 1, k)
-        sy = rng.normal(0, 1, k)
-        levels = farfield.build_pyramid(cells, cum, sx, sy, plan)
+        s = rng.normal(0, 1, (k, d))
+        levels = farfield.build_pyramid(cells, cum, s, plan)
         for lvl in levels:
             assert lvl["cum"].sum() == cum.sum()
         block = 1 << plan.block_bits
-        bpa = plan.blocks_per_axis
-        bx, by = int(rng.integers(0, bpa)), int(rng.integers(0, bpa))
-        halo = (
-            bx * block - plan.rc, bx * block + block - 1 + plan.rc,
-            by * block - plan.rc, by * block + block - 1 + plan.rc,
-        )
-        w = plan.cellw
-        qbbox = (
-            -1.0 + (halo[0] + plan.rc) * w, -1.0 + (halo[1] + 1 - plan.rc) * w,
-            -1.0 + (halo[2] + plan.rc) * w, -1.0 + (halo[3] + 1 - plan.rc) * w,
-        )
-        fw, _, _ = farfield.far_masses(levels, plan, halo, qbbox)
-        ix, iy = cells // grid, cells % grid
-        in_halo = (
-            (ix >= halo[0]) & (ix <= halo[1]) & (iy >= halo[2]) & (iy <= halo[3])
-        )
-        assert fw.sum() + cum[in_halo].sum() == cum.sum(), (trial, depth)
+        bidx = rng.integers(0, plan.blocks_per_axis, d)
+        halo_lo = bidx * block - plan.rc
+        halo_hi = bidx * block + block - 1 + plan.rc
+        q_lo = -1.0 + (bidx * block) * plan.cellw
+        q_hi = -1.0 + (bidx * block + block) * plan.cellw
+        fw, _ = farfield.far_masses(levels, plan, halo_lo, halo_hi, q_lo, q_hi)
+        idx = np.stack([(cells // grid**a) % grid for a in range(d)], axis=1)
+        in_halo = np.all((idx >= halo_lo) & (idx <= halo_hi), axis=1)
+        assert fw.sum() + cum[in_halo].sum() == cum.sum(), (trial, d, depth)
 
 
 def test_netpbm_roundtrip_random_images():

@@ -25,12 +25,12 @@ def test_morton_nd_roundtrip_property(args):
 
     d, depth, idx_rows = args
     idx = np.asarray(idx_rows, dtype=np.int64) % (1 << depth)
-    code = farfield.morton_encode_nd(idx, depth)
-    assert (farfield.morton_decode_nd(code, depth, d) == idx).all()
+    code = farfield.morton_encode(idx, depth)
+    assert (farfield.morton_decode(code, depth, d) == idx).all()
     if depth > 1:
         # parent-prefix property at every level
         assert (
-            farfield.morton_encode_nd(idx >> 1, depth - 1) == code >> d
+            farfield.morton_encode(idx >> 1, depth - 1) == code >> d
         ).all()
 
 
@@ -88,13 +88,13 @@ def test_bpe_encode_roundtrip_property(word_freqs, probe_word, n_merges):
 @given(st.integers(0, 2**31 - 1), st.integers(1, 6), st.integers(2, 40))
 def test_eval_far_nd_property(seed, d, n_masses):
     """The chunked d-dim kernel equals the dense einsum formulation."""
-    from tsne_flink_spark.operators.farfield import eval_far_nd
+    from tsne_flink_spark.operators.farfield import eval_far
 
     rng = np.random.default_rng(seed)
     Qp = rng.normal(0, 2, (17, d))
     w = rng.integers(1, 9, n_masses).astype(np.float64)
     com = rng.normal(0, 2, (n_masses, d))
-    forces, sumq = eval_far_nd(Qp, w, com, chunk=5)
+    forces, sumq = eval_far(Qp, w, com, chunk=5)
     dx = Qp[:, None, :] - com[None, :, :]
     q = 1.0 / (1.0 + (dx * dx).sum(axis=2))
     wq = w[None, :] * q

@@ -1,301 +1,63 @@
-"""Distributed quadtree build: structural merge equivalence.
+"""The d=2 cases of the Barnes-Hut tree's build-equivalence checks: the
+reference's quadtree (QuadTree.scala:50-63 insert/subdivide) is NDTree at
+d=2.  The bodies live in tests/test_ndtree.py, which runs the same checks
+at d=3; these keep the 2-D cases under their original names.
 
-The capacity-1 PR quadtree's structure depends only on the point SET, so
-partition-wise builds merged via ``merge_quadtrees`` must reproduce the
-sequentially built tree (node-for-node), with aggregate sums equal up to FP
-summation order.  Reference semantics under test: QuadTree.scala:50-63
-(insert/subdivide), 123-152 (force evaluation).
+The capacity-1 tree's structure depends only on the point SET, so
+partition-wise builds merged via ``merge_ndtrees`` (and the distributed
+build that uses it) must reproduce the sequentially built tree node for
+node, with aggregate sums equal up to FP summation order.
 """
 
-import numpy as np
-import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
-from tsne_flink_spark.operators.quadtree import (
-    QuadTree,
-    build_quadtree,
-    build_quadtree_distributed,
-    merge_quadtrees,
-    merge_quadtrees_scalar,
+from tests.test_ndtree import (
+    check_bulk_build_equals_insert,
+    check_depth_exhaustion,
+    check_distributed_build_empty,
+    check_distributed_build_matches_driver,
+    check_merge_equals_sequential,
+    check_merge_property,
+    check_merge_with_coincident_points,
+    check_split_reseats_full_coincident_weight,
 )
 
 
-def _canonical(tree):
-    """(cell-box -> (cum, sx, sy, point)) map, order-independent."""
-    out = {}
-    for n in range(tree.n_nodes):
-        if tree.cum[n] == 0 and not tree.has_point[n]:
-            continue
-        key = (tree.cx[n], tree.cy[n], tree.half, int(tree.depth[n]))
-        pt = (tree.px[n], tree.py[n]) if tree.has_point[n] else None
-        out[key] = (int(tree.cum[n]), tree.sx[n], tree.sy[n], pt)
-    return out
-
-
-def _assert_equivalent(a, b, tol=1e-9):
-    ca, cb = _canonical(a), _canonical(b)
-    assert set(ca) == set(cb)
-    for key in ca:
-        cum_a, sx_a, sy_a, pt_a = ca[key]
-        cum_b, sx_b, sy_b, pt_b = cb[key]
-        assert cum_a == cum_b
-        assert sx_a == pytest.approx(sx_b, abs=tol)
-        assert sy_a == pytest.approx(sy_b, abs=tol)
-        assert pt_a == pt_b
-
-
 def test_merge_equals_sequential_random():
-    rng = np.random.default_rng(7)
-    Y = rng.normal(0, 3, (400, 2))
-    seq = build_quadtree(Y)
-    # split into 7 uneven blocks, build each over the SAME root cell, merge
-    blocks = np.array_split(Y, 7)
-    half = max(Y[:, 0].ptp(), Y[:, 1].ptp())
-    parts = []
-    for blk in blocks:
-        t = QuadTree(0.0, 0.0, half)
-        for x, y in blk:
-            t.insert(float(x), float(y))
-        parts.append(t)
-    import copy
-
-    parts_scalar = copy.deepcopy(parts)
-    merged = parts[0]
-    for t in parts[1:]:
-        merged = merge_quadtrees(merged, t)
-    assert merged.cum[0] == seq.cum[0] == len(Y)
-    _assert_equivalent(merged, seq)
-    # the vectorized merge must match the scalar reference merge too
-    merged_s = parts_scalar[0]
-    for t in parts_scalar[1:]:
-        merged_s = merge_quadtrees_scalar(merged_s, t)
-    _assert_equivalent(merged, merged_s)
-    # identical forces for both trees at exact and approximate theta
-    for theta, cond in [(1e-300, "reference"), (0.5, "scaled")]:
-        f_seq, q_seq = seq.repulsive_forces(Y, theta, condition=cond)
-        f_mrg, q_mrg = merged.repulsive_forces(Y, theta, condition=cond)
-        np.testing.assert_allclose(f_mrg, f_seq, rtol=1e-9, atol=1e-12)
-        np.testing.assert_allclose(q_mrg, q_seq, rtol=1e-9, atol=1e-12)
+    check_merge_equals_sequential(2)
 
 
 def test_merge_with_coincident_points():
-    """Coincident points accumulate in one leaf across partitions too, and a
-    later split re-seats the full leaf weight."""
-    base = np.array([[1.0, 1.0], [-2.0, 0.5], [0.25, -1.75]])
-    Y = np.concatenate([base, base, base])  # every point x3
-    half = max(Y[:, 0].ptp(), Y[:, 1].ptp())
-
-    def tree_of(block):
-        t = QuadTree(0.0, 0.0, half)
-        for x, y in block:
-            t.insert(float(x), float(y))
-        return t
-
-    merged = merge_quadtrees(tree_of(Y[:4]), tree_of(Y[4:]))
-    assert merged.cum[0] == 9
-    # leaves holding each distinct point must carry multiplicity 3
-    leaf_cums = sorted(
-        int(merged.cum[n])
-        for n in range(merged.n_nodes)
-        if merged.children[n, 0] == -1 and merged.has_point[n]
-    )
-    assert leaf_cums == [3, 3, 3]
+    check_merge_with_coincident_points(2)
 
 
 def test_sequential_split_reseats_full_coincident_weight():
-    """Regression: insert p, a bit-equal copy of p, THEN a near point r —
-    the split below must carry BOTH copies of p (cum=2), matching the
-    structural merge's weighting (found by round-2 review: the old insert
-    re-seated weight 1, undercounting cum/sx/sy along the split chain)."""
-    p = (0.25, 0.25)
-    r = (0.25 + 1e-9, 0.25)
-    seq = QuadTree(0.0, 0.0, 1.0)
-    for x, y in [p, p, r]:
-        assert seq.insert(x, y)
-    # merged variant: copies of p in one tree, r in another
-    t1 = QuadTree(0.0, 0.0, 1.0)
-    t1.insert(*p); t1.insert(*p)
-    t2 = QuadTree(0.0, 0.0, 1.0)
-    t2.insert(*r)
-    merged = merge_quadtrees(t1, t2)
-    _assert_equivalent(seq, merged, tol=1e-12)
-    # p's leaf carries both copies in BOTH trees
-    for tree in (seq, merged):
-        leaf_cums = sorted(
-            int(tree.cum[n])
-            for n in range(tree.n_nodes)
-            if tree.children[n, 0] == -1 and tree.has_point[n]
-        )
-        assert leaf_cums == [1, 2]
-    # forces agree between sequential and merged trees on this data
-    Y = np.array([p, p, r])
-    f1, q1 = seq.repulsive_forces(Y, 0.5, condition="scaled")
-    f2, q2 = merged.repulsive_forces(Y, 0.5, condition="scaled")
-    np.testing.assert_allclose(f1, f2, rtol=1e-12)
-    np.testing.assert_allclose(q1, q2, rtol=1e-12)
+    check_split_reseats_full_coincident_weight(2)
 
 
-try:
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    @settings(max_examples=40, deadline=None)
-    @given(
-        n=st.integers(min_value=1, max_value=120),
-        dup_every=st.integers(min_value=2, max_value=6),
-        n_blocks=st.integers(min_value=1, max_value=9),
-        seed=st.integers(min_value=0, max_value=10_000),
-    )
-    def test_merge_equivalence_property(n, dup_every, n_blocks, seed):
-        """For ANY point set (including bit-equal duplicates and coincident
-        splits) and ANY partitioning, merged partition trees must equal the
-        sequential build: same cells, same integer masses, same points."""
-        rng = np.random.default_rng(seed)
-        Y = rng.normal(0, 2, (n, 2))
-        Y[::dup_every] = Y[0]  # inject coincident copies
-        perm = rng.permutation(n)
-        half = max(Y[:, 0].ptp(), Y[:, 1].ptp()) or 1.0
-        seq = QuadTree(0.0, 0.0, half)
-        for x, y in Y:
-            seq.insert(float(x), float(y))
-        parts = []
-        for blk in np.array_split(perm, min(n_blocks, n)):
-            t = QuadTree(0.0, 0.0, half)
-            for i in blk:
-                t.insert(float(Y[i, 0]), float(Y[i, 1]))
-            parts.append(t)
-        merged = parts[0]
-        for t in parts[1:]:
-            merged = merge_quadtrees(merged, t)
-        assert merged.cum[0] == seq.cum[0]
-        _assert_equivalent(merged, seq, tol=1e-9)
-except ImportError:  # pragma: no cover - hypothesis is in the container
-    pass
+@settings(max_examples=40, deadline=None)
+@given(
+    n=st.integers(min_value=1, max_value=120),
+    dup_every=st.integers(min_value=2, max_value=6),
+    n_blocks=st.integers(min_value=1, max_value=9),
+    seed=st.integers(min_value=0, max_value=10_000),
+)
+def test_merge_equivalence_property(n, dup_every, n_blocks, seed):
+    check_merge_property(2, n, dup_every, n_blocks, seed)
 
 
 def test_distributed_build_matches_driver(spark):
-    rng = np.random.default_rng(3)
-    Y = rng.normal(0, 2, (300, 2))
-    emb = spark.createDataFrame(
-        [(i, [float(a), float(b)]) for i, (a, b) in enumerate(Y)],
-        "id int, y array<double>",
-    ).repartition(9)
-    dist = build_quadtree_distributed(emb)
-    seq = build_quadtree(Y)
-    assert dist.cum[0] == seq.cum[0] == len(Y)
-    _assert_equivalent(dist, seq)
+    check_distributed_build_matches_driver(spark, 2)
 
 
 def test_distributed_build_empty(spark):
-    emb = spark.createDataFrame([], "id int, y array<double>")
-    t = build_quadtree_distributed(emb)
-    assert t.cum[0] == 0
-    f, q = t.repulsive_forces(np.zeros((2, 2)), 0.5)
-    assert (f == 0).all() and (q == 0).all()
+    check_distributed_build_empty(spark, 2)
 
 
 def test_bulk_build_equals_sequential_insert():
-    """The vectorized level-synchronous 2-D build must produce a tree
-    structurally identical to per-point insert() on adversarial data:
-    exact duplicates, points on split planes, out-of-root drops."""
-    import numpy as np
-
-    from tsne_flink_spark.operators.quadtree import QuadTree, _bulk_build
-
-    rng = np.random.default_rng(37)
-    base = rng.normal(0, 5.0, (400, 2))
-    dup = np.repeat(base[:25], 3, axis=0)
-    onplane = base[:15].copy()
-    onplane[:, 0] = 0.0
-    onaxis = base[15:30].copy()
-    onaxis[:, 1] = 0.0
-    outside = rng.normal(0, 5.0, (10, 2)) + 100
-    Y = np.concatenate([base, dup, onplane, onaxis, outside])
-    Y = Y[rng.permutation(len(Y))]
-
-    half = max(
-        float(Y[:, 0].max() - Y[:, 0].min()),
-        float(Y[:, 1].max() - Y[:, 1].min()),
-    )
-    seq = QuadTree(0.0, 0.0, half)
-    for x, y in Y:
-        seq.insert(float(x), float(y))
-    seq.trim()
-    bulk = _bulk_build(QuadTree(0.0, 0.0, half), Y).trim()
-
-    assert bulk.cum[0] == seq.cum[0]
-
-    def node_map(t):
-        out = {}
-        stack = [(0, ())]
-        while stack:
-            n, path = stack.pop()
-            out[path] = (
-                int(t.cum[n]),
-                (round(float(t.sx[n]), 9), round(float(t.sy[n]), 9)),
-                bool(t.has_point[n]),
-                (t.px[n], t.py[n]) if t.has_point[n] else None,
-            )
-            if t.children[n, 0] != -1:
-                for c in range(4):
-                    stack.append((int(t.children[n, c]), path + (c,)))
-        return out
-
-    assert node_map(seq) == node_map(bulk)
-
-    Q = rng.normal(0, 5.0, (64, 2))
-    fs, ss = seq.repulsive_forces(Q, 0.5, condition="scaled")
-    fb, sb = bulk.repulsive_forces(Q, 0.5, condition="scaled")
-    assert np.allclose(fs, fb, rtol=1e-12, atol=1e-12)
-    assert np.allclose(ss, sb, rtol=1e-12, atol=1e-12)
+    check_bulk_build_equals_insert(2, seed=37)
 
 
 def test_depth_exhaustion_terminal_leaf():
-    """2-D counterpart of ndtree's depth-exhaustion case: near-coincident
-    points (separation below the root extent * 2^-64) aggregate in one
-    terminal leaf; insert, bulk build, and the structural merge all agree
-    and no mass is stranded in massless last-level children."""
-    from tsne_flink_spark.operators.quadtree import _MAX_DEPTH, _bulk_build
-
-    # exactly-representable coordinates strictly interior to every cell
-    # through depth 63 (see the ndtree counterpart for the construction)
-    base = 2.0**-34 + 2.0**-80
-    p1 = (base, base)
-    p2 = (base + 2.0**-70, base)
-    far = (0.51, 0.51)
-    pts = [p1, p2, far]
-
-    seq = QuadTree(0.0, 0.0, 1.0)
-    for x, y in pts:
-        assert seq.insert(x, y)
-    seq.trim()
-    bulk = _bulk_build(QuadTree(0.0, 0.0, 1.0), np.array(pts)).trim()
-
-    # merge path: one tree holding the near pair, one holding the far point
-    a = QuadTree(0.0, 0.0, 1.0)
-    a.insert(*p1)
-    a.insert(*p2)
-    b = QuadTree(0.0, 0.0, 1.0)
-    b.insert(*far)
-    merged = merge_quadtrees(a, b).trim()
-
-    for t in (seq, bulk, merged):
-        assert t.cum[0] == 3
-        assert int(t.depth[: t.n_nodes].max()) <= _MAX_DEPTH - 1
-        md = int(t.depth[: t.n_nodes].max())
-        occupied = np.flatnonzero(
-            (t.depth[: t.n_nodes] == md) & (t.cum[: t.n_nodes] > 0)
-        )
-        assert len(occupied) == 1  # one terminal leaf holds the pair
-        deepest = int(occupied[0])
-        assert t.children[deepest, 0] == -1
-        assert t.cum[deepest] == 2
-        assert t.has_point[deepest]
-        assert (t.px[deepest], t.py[deepest]) == p1
-
-    Q = np.array([[0.75, 0.75]])
-    brute = sum(
-        1.0 / (1.0 + (Q[0, 0] - x) ** 2 + (Q[0, 1] - y) ** 2) for x, y in pts
-    )
-    for t in (seq, bulk, merged):
-        _, sq = t.repulsive_forces(Q, 0.0)
-        assert np.isclose(sq[0], brute, rtol=1e-9)
+    check_depth_exhaustion(2)

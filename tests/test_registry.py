@@ -36,7 +36,7 @@ def test_every_bench_headliner_is_registered():
     assert bench.HEADLINE[0] == "tsne_embedding"
 
 
-def test_no_complex_types_in_query_output_schemas(spark):
+def test_no_complex_types_in_query_output_schemas(query_frame):
     """The driver's DuckDB-compare canonicalizer pandas-sorts every output
     column; ArrayType/MapType/StructType cells are unhashable there (the
     r6 audio_features red row).  Ban complex types in every queries()
@@ -46,8 +46,8 @@ def test_no_complex_types_in_query_output_schemas(spark):
     m = _entry()
     sf_dir = "/root/testdata/sf0.001"
     offenders = []
-    for name, fn in m.queries().items():
-        schema = fn(spark, sf_dir).schema
+    for name in m.queries():
+        schema = query_frame(name, sf_dir).schema
         for field in schema.fields:
             if isinstance(field.dataType, (ArrayType, MapType, StructType)):
                 offenders.append(f"{name}.{field.name}: {field.dataType}")

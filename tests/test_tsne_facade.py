@@ -51,6 +51,28 @@ def test_fit_requires_exactly_one_input(spark):
         model.fit()
 
 
+@pytest.mark.parametrize("n_components", [0, -1])
+def test_fit_rejects_nonpositive_n_components(spark, n_components):
+    """Rejected at construction, so fit, plan and any later entry point
+    never see it (a zero-width embedding would fail deep in the tree)."""
+    df = points_from_rows(spark, [(i, [float(i), 0.0]) for i in range(5)])
+    with pytest.raises(ValueError, match="n_components must be >= 1"):
+        TSNE(n_components=n_components).fit(points=df)
+    with pytest.raises(ValueError, match="n_components must be >= 1"):
+        TSNE(n_components=n_components, dimension=2).plan(points=df)
+
+
+def test_cli_rejects_nonpositive_n_components(capsys):
+    from tsne_flink_spark.cli import build_parser
+
+    argv = ["--input", "in.csv", "--output", "out", "--dimension", "2"]
+    assert build_parser().parse_args(argv + ["--nComponents", "3"]).nComponents == 3
+    with pytest.raises(SystemExit) as exc:
+        build_parser().parse_args(argv + ["--nComponents", "0"])
+    assert exc.value.code == 2
+    assert "--nComponents: must be >= 1" in capsys.readouterr().err
+
+
 def test_execution_plan_runs_no_job(spark, tmp_path):
     """--executionPlan must dump the plan WITHOUT executing the pipeline
     (Tsne.scala:89-95): plan file written, no output produced, zero Spark

@@ -21,6 +21,13 @@ from tsne_flink_spark.sources.writers import (
 from tsne_flink_spark.tsne import TSNE
 
 
+def _positive_int(text: str) -> int:
+    value = int(text)
+    if value < 1:
+        raise argparse.ArgumentTypeError(f"must be >= 1, got {value}")
+    return value
+
+
 def build_parser() -> argparse.ArgumentParser:
     p = argparse.ArgumentParser(prog="tsne_flink_spark")
     p.add_argument("--input", required=True)
@@ -34,7 +41,7 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--metric", default="sqeuclidean",
                    choices=["sqeuclidean", "euclidean", "cosine"])
     p.add_argument("--perplexity", type=float, default=30.0)
-    p.add_argument("--nComponents", type=int, default=2)
+    p.add_argument("--nComponents", type=_positive_int, default=2)
     p.add_argument("--earlyExaggeration", type=float, default=4.0)
     p.add_argument("--learningRate", type=float, default=1000.0)
     p.add_argument("--iterations", type=int, default=300)
@@ -51,7 +58,8 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--treeBuild",
                    choices=["auto", "distributed", "driver", "summary"],
                    default="auto",
-                   help="Barnes-Hut quadtree build: 'auto' (default) uses the "
+                   help="Barnes-Hut tree build (any --nComponents; the "
+                        "reference's quadtree at 2): 'auto' (default) uses the "
                         "driver-built full tree below a 64 MB broadcast "
                         "budget and the far-field summary above it; "
                         "'distributed' merges per-partition subtrees "

@@ -125,8 +125,9 @@ def metric_expr(name: str, a: Column, b: Column, dim: int | None = None) -> Colu
 
 
 # ---------------------------------------------------------------------------
-# numpy twins — used inside blocked kNN / quadtree pandas UDFs, where a whole
-# block-vs-block distance matrix is computed at once.
+# numpy twins — used inside blocked kNN pandas UDFs, where a whole
+# block-vs-block distance matrix is computed at once, and (row-paired) in the
+# fused t-SNE kernel's attraction.
 # ---------------------------------------------------------------------------
 
 

@@ -1,21 +1,21 @@
 """Scale path for Barnes-Hut repulsion: depth-capped far-field summary +
-local essential near field (BASELINE.md B11).
+local essential near field (BASELINE.md B11), for any embedding dimension d.
 
-The full-tree modes ("driver"/"distributed") broadcast the ENTIRE quadtree
+The full-tree modes ("driver"/"distributed") broadcast the ENTIRE tree
 every iteration — O(N) bytes to every executor (213 MB pickled at N=1M,
-~20 GB at 10^8 points).  This module replaces that with:
+d=2; ~20 GB at 10^8 points).  This module replaces that with:
 
-- a broadcast **cell-aggregate pyramid**: per-cell (count, sum_x, sum_y) at a
-  capped depth D (<= 4^D cells, CONSTANT in N) plus all coarser levels —
-  the "depth-capped far-field summary";
-- a **near-field shuffle**: each point's coordinates are shipped only to the
-  spatial query blocks within a theta-derived halo (the "local essential
-  tree" set) — an O(N)-row shuffle with a small constant replication factor
-  ((1 + 2*Rc/8)^2, typically 1.5-4x), instead of O(N)-bytes x n_executors
-  broadcast traffic.
+- a broadcast **cell-aggregate pyramid**: per-cell (count, per-axis sums)
+  at a capped depth D (<= 2^(d*D) <= 2^20 cells, CONSTANT in N) plus all
+  coarser levels — the "depth-capped far-field summary";
+- a **near-field shuffle**: each point's coordinates are shipped only to
+  the spatial query blocks within a theta-derived chebyshev halo (the
+  "local essential tree" set) — an O(N)-row shuffle with a small constant
+  replication factor ((1 + 2*Rc/block)^d, typically 1.5-4x at d=2),
+  instead of O(N)-bytes x n_executors broadcast traffic.
 
-Per query block (8x8 cells of the depth-D grid), evaluation splits exactly
-at the cell boundary:
+Per query block (~64 cells of the depth-D grid: 8x8 at d=2), evaluation
+splits exactly at the cell boundary:
 
 - **far field**: the pyramid is coarsened top-down into the LARGEST dyadic
   cells guaranteed to satisfy the Barnes-Hut opening criterion from
@@ -24,7 +24,7 @@ at the cell boundary:
   center-of-mass from below).  Each emitted cell contributes as a point
   mass at its center of mass — a dense vectorized numpy kernel, no tree.
 - **near field**: the real points of the halo cells (shipped via the
-  shuffle) are assembled into a local quadtree (`build_quadtree`) and
+  shuffle) are assembled into a local tree (``ndtree.build_ndtree``) and
   evaluated with the standard traversal, so close-range interactions keep
   full leaf-level accuracy including the coincident-point and
   self-exclusion semantics (QuadTree.scala:123-152).
@@ -52,288 +52,7 @@ from dataclasses import dataclass
 import numpy as np
 
 
-# -- Morton codes (numpy, 16-bit per axis -> 32-bit code) --------------------
-
-def _spread_bits(v: np.ndarray) -> np.ndarray:
-    v = v.astype(np.int64)
-    v = (v | (v << 8)) & 0x00FF00FF
-    v = (v | (v << 4)) & 0x0F0F0F0F
-    v = (v | (v << 2)) & 0x33333333
-    v = (v | (v << 1)) & 0x55555555
-    return v
-
-
-def _compact_bits(v: np.ndarray) -> np.ndarray:
-    v = v & 0x55555555
-    v = (v | (v >> 1)) & 0x33333333
-    v = (v | (v >> 2)) & 0x0F0F0F0F
-    v = (v | (v >> 4)) & 0x00FF00FF
-    v = (v | (v >> 8)) & 0x0000FFFF
-    return v
-
-
-def morton_encode(ix: np.ndarray, iy: np.ndarray) -> np.ndarray:
-    return (_spread_bits(ix) << 1) | _spread_bits(iy)
-
-
-def morton_decode(code: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    return _compact_bits(code >> 1), _compact_bits(code)
-
-
-# -- plan ---------------------------------------------------------------------
-
-@dataclass
-class SummaryPlan:
-    mx: float          # root center (reference quirk Q1: (0,0) by default)
-    my: float
-    half: float        # root half-extent (= max axis span, reference rule)
-    depth: int         # summary depth D; grid = 2^D cells per axis
-    rc: int            # halo radius in depth-D cells (chebyshev)
-    theta: float
-    condition: str     # "reference" (extent/dist^2) or "scaled" (extent/dist)
-    block_bits: int    # queries grouped by (ix >> block_bits, iy >> block_bits)
-
-    @property
-    def grid(self) -> int:
-        return 1 << self.depth
-
-    @property
-    def cellw(self) -> float:
-        return 2.0 * self.half / self.grid
-
-    @property
-    def blocks_per_axis(self) -> int:
-        return max(1, self.grid >> self.block_bits)
-
-
-def plan_summary(
-    n: int,
-    half: float,
-    theta: float,
-    condition: str,
-    mx: float = 0.0,
-    my: float = 0.0,
-    summary_depth: int | None = None,
-    block_bits: int = 3,
-) -> SummaryPlan | None:
-    """Size the summary grid, or return None when the full-tree path should
-    be used instead (degenerate geometry, tiny N, or a halo radius so large
-    that blocking would replicate more than it saves)."""
-    if theta <= 0.0 or half <= 0.0:
-        return None
-    if summary_depth is None:
-        if n < 4096:  # blocking overhead not worth it (auto mode only)
-            return None
-        # ~64 points per depth-D cell on average, capped at 4^10 cells
-        summary_depth = min(10, max(3, math.ceil(math.log(max(n, 1) / 64, 4))))
-    depth = summary_depth
-    grid = 1 << depth
-    extent_d = half * 2.0 ** -depth     # half-extent of a depth-D cell
-    cellw = 2.0 * extent_d
-    # A depth-D cell is guaranteed-accepted by every query at center-of-mass
-    # distance >= thr; chebyshev cell distance > rc implies min distance
-    # >= rc * cellw >= thr.
-    if condition == "scaled":
-        thr = extent_d / theta
-    else:  # reference: accept iff extent / dist^2 < theta
-        thr = math.sqrt(extent_d / theta)
-    rc = max(1, math.ceil(thr / cellw))
-    block = 1 << block_bits
-    if block + 2 * rc >= grid:
-        # halo covers (most of) the grid: near field degenerates toward
-        # all-pairs — the full-tree path handles this regime
-        return None
-    return SummaryPlan(mx, my, half, depth, rc, theta, condition, block_bits)
-
-
-# -- driver-side pyramid ------------------------------------------------------
-
-def build_pyramid(
-    cells: np.ndarray, cum: np.ndarray, sx: np.ndarray, sy: np.ndarray,
-    plan: SummaryPlan,
-) -> list[dict]:
-    """From depth-D cell aggregates (``cells`` = ix * grid + iy) build the
-    per-level aggregate tables for levels 0..D.  Each level is sorted by
-    Morton code so children of code m occupy the contiguous code range
-    [m << 2, (m << 2) + 4).  Size: sum_l min(4^l, occupied) — bounded by
-    ~(4/3) * 4^D regardless of N."""
-    grid = plan.grid
-    ix = (cells // grid).astype(np.int64)
-    iy = (cells % grid).astype(np.int64)
-    code = morton_encode(ix, iy)
-    order = np.argsort(code)
-    levels = [None] * (plan.depth + 1)
-    c, w, x, y = code[order], cum[order].astype(np.int64), sx[order], sy[order]
-    levels[plan.depth] = {"code": c, "cum": w, "sx": x, "sy": y}
-    for lvl in range(plan.depth - 1, -1, -1):
-        parent = c >> 2
-        uniq, start = np.unique(parent, return_index=True)
-        w = np.add.reduceat(w, start)
-        x = np.add.reduceat(x, start)
-        y = np.add.reduceat(y, start)
-        c = uniq
-        levels[lvl] = {"code": c, "cum": w, "sx": x, "sy": y}
-    return levels
-
-
-def merge_pyramids(a: list[dict], b: list[dict]) -> list[dict]:
-    """Merge two per-level pyramids (same plan) by summing coincident codes.
-
-    Per-partition pyramids are built over DISJOINT depth-D cells (the cell
-    aggregation shuffles each cell to exactly one partition), but their
-    coarser levels overlap; the merge is a sorted-code groupby-sum per level.
-    Executor-side associative op for ``treeReduce`` — the driver never sees
-    row-level data, only the finished pyramid it must hold to broadcast.
-    """
-    out: list[dict] = []
-    for la, lb in zip(a, b):
-        if not len(lb["code"]):
-            out.append(la)
-            continue
-        if not len(la["code"]):
-            out.append(lb)
-            continue
-        code = np.concatenate([la["code"], lb["code"]])
-        cum = np.concatenate([la["cum"], lb["cum"]])
-        sx = np.concatenate([la["sx"], lb["sx"]])
-        sy = np.concatenate([la["sy"], lb["sy"]])
-        order = np.argsort(code, kind="stable")
-        code, cum, sx, sy = code[order], cum[order], sx[order], sy[order]
-        uniq, start = np.unique(code, return_index=True)
-        out.append(
-            {
-                "code": uniq,
-                "cum": np.add.reduceat(cum, start),
-                "sx": np.add.reduceat(sx, start),
-                "sy": np.add.reduceat(sy, start),
-            }
-        )
-    return out
-
-
-# -- per-block far-field coarsening ------------------------------------------
-
-def far_masses(
-    levels: list[dict],
-    plan: SummaryPlan,
-    halo: tuple[int, int, int, int],
-    qbbox: tuple[float, float, float, float],
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Coarsen the pyramid into the largest cells guaranteed-accepted from
-    everywhere in ``qbbox``, excluding the halo rectangle (depth-D index
-    space, inclusive) whose real points are evaluated locally.
-
-    Returns (cum, com_x, com_y) arrays of emitted point masses.
-    """
-    if not len(levels[0]["code"]):  # no contained mass at all
-        return (np.zeros(0), np.zeros(0), np.zeros(0))
-    d = plan.depth
-    hx0, hx1, hy0, hy1 = halo
-    qx0, qx1, qy0, qy1 = qbbox
-    x_origin = plan.mx - plan.half
-    y_origin = plan.my - plan.half
-    out_w: list[np.ndarray] = []
-    out_x: list[np.ndarray] = []
-    out_y: list[np.ndarray] = []
-    cand = np.zeros(1, dtype=np.int64)  # indices into level-0 table
-    for lvl in range(0, d + 1):
-        tab = levels[lvl]
-        if not len(cand):
-            break
-        code = tab["code"][cand]
-        cum = tab["cum"][cand]
-        ix, iy = morton_decode(code)
-        w_l = 2.0 * plan.half / (1 << lvl)      # cell width at this level
-        extent = plan.half * 2.0 ** -lvl        # cell half-extent
-        cx0 = x_origin + ix * w_l
-        cy0 = y_origin + iy * w_l
-        # min distance between the block's query bbox and the cell bbox
-        # (lower-bounds every query's distance to the cell's COM)
-        dx = np.maximum(0.0, np.maximum(cx0 - qx1, qx0 - (cx0 + w_l)))
-        dy = np.maximum(0.0, np.maximum(cy0 - qy1, qy0 - (cy0 + w_l)))
-        if plan.condition == "scaled":
-            denom = np.sqrt(dx * dx + dy * dy)
-        else:
-            denom = dx * dx + dy * dy
-        with np.errstate(divide="ignore"):
-            guaranteed = (denom > 0.0) & (extent / denom < plan.theta)
-        # does the cell's depth-D index range intersect the halo rectangle?
-        shift = d - lvl
-        gx0, gx1 = ix << shift, ((ix + 1) << shift) - 1
-        gy0, gy1 = iy << shift, ((iy + 1) << shift) - 1
-        overlaps = (gx0 <= hx1) & (gx1 >= hx0) & (gy0 <= hy1) & (gy1 >= hy0)
-        if lvl == d:
-            # halo cells: covered by shipped real points.  Non-halo cells
-            # are guaranteed-accepted by construction (chebyshev > rc =>
-            # min distance >= rc*cellw >= thr); emit them all.
-            emit = ~overlaps
-        else:
-            emit = guaranteed & ~overlaps
-        if emit.any():
-            e = np.flatnonzero(emit)
-            out_w.append(cum[e].astype(np.float64))
-            out_x.append(tab["sx"][cand[e]] / cum[e])
-            out_y.append(tab["sy"][cand[e]] / cum[e])
-        if lvl == d:
-            break
-        expand = np.flatnonzero(~emit & (cum > 0))
-        if not len(expand):
-            break
-        pcodes = code[expand] << 2
-        child = levels[lvl + 1]["code"]
-        lo = np.searchsorted(child, pcodes, side="left")
-        hi = np.searchsorted(child, pcodes + 4, side="left")
-        counts = hi - lo
-        # flatten the [lo, hi) ranges into one index array
-        cand = np.repeat(lo, counts) + (
-            np.arange(counts.sum()) - np.repeat(np.cumsum(counts) - counts, counts)
-        )
-    if not out_w:
-        return (np.zeros(0), np.zeros(0), np.zeros(0))
-    return (
-        np.concatenate(out_w),
-        np.concatenate(out_x),
-        np.concatenate(out_y),
-    )
-
-
-def eval_far(
-    qx: np.ndarray, qy: np.ndarray,
-    w: np.ndarray, comx: np.ndarray, comy: np.ndarray,
-    chunk: int = 2048,
-) -> tuple[np.ndarray, np.ndarray]:
-    """Dense point-mass kernel: forces_i = sum_c w_c * q^2 * (y_i - com_c),
-    sumq_i = sum_c w_c * q with q = 1/(1 + ||y_i - com_c||^2).  Chunked over
-    queries to bound the (chunk x F) temporaries."""
-    m = len(qx)
-    forces = np.zeros((m, 2))
-    sumq = np.zeros(m)
-    if m == 0 or len(w) == 0:
-        return forces, sumq
-    for s in range(0, m, chunk):
-        e = min(s + chunk, m)
-        dx = qx[s:e, None] - comx[None, :]
-        dy = qy[s:e, None] - comy[None, :]
-        q = 1.0 / (1.0 + dx * dx + dy * dy)
-        wq = w[None, :] * q
-        sumq[s:e] = wq.sum(axis=1)
-        wq2 = wq * q
-        forces[s:e, 0] = (wq2 * dx).sum(axis=1)
-        forces[s:e, 1] = (wq2 * dy).sum(axis=1)
-    return forces, sumq
-
-
-# ============================================================================
-# d-dimensional generalization (2^d-ary grid; octree-grid at d=3)
-# ============================================================================
-#
-# The 2-D path above is the reference-parity surface (QuadTree.scala is the
-# reference's only BH structure); everything below generalizes the same
-# decomposition to n_components != 2 so a d-dim run above the broadcast
-# budget is O(2^(d*D))-broadcast instead of the O(N) NDTree broadcast.
-
-
-def morton_encode_nd(idx: np.ndarray, depth: int) -> np.ndarray:
+def morton_encode(idx: np.ndarray, depth: int) -> np.ndarray:
     """Interleave ``idx`` (n, d) per-axis cell indices (each < 2^depth) into
     one morton code, axis 0 in the most significant interleave position.
     depth * d must fit in 63 bits (guaranteed by the plan's depth cap)."""
@@ -345,8 +64,8 @@ def morton_encode_nd(idx: np.ndarray, depth: int) -> np.ndarray:
     return code
 
 
-def morton_decode_nd(code: np.ndarray, depth: int, d: int) -> np.ndarray:
-    """Inverse of :func:`morton_encode_nd`; returns (n, d) indices."""
+def morton_decode(code: np.ndarray, depth: int, d: int) -> np.ndarray:
+    """Inverse of :func:`morton_encode`; returns (n, d) indices."""
     idx = np.zeros((len(code), d), dtype=np.int64)
     shift = 0
     for b in range(depth):
@@ -357,7 +76,7 @@ def morton_decode_nd(code: np.ndarray, depth: int, d: int) -> np.ndarray:
 
 
 @dataclass
-class SummaryPlanND:
+class SummaryPlan:
     center: tuple          # root center, d floats (quirk Q1: origin default)
     half: float            # root half-extent (= max axis span)
     depth: int             # per-axis depth D; grid = 2^D cells per axis
@@ -380,7 +99,7 @@ class SummaryPlanND:
         return max(1, self.grid >> self.block_bits)
 
 
-def plan_summary_nd(
+def plan_summary(
     n: int,
     d: int,
     half: float,
@@ -389,11 +108,14 @@ def plan_summary_nd(
     center: tuple | None = None,
     summary_depth: int | None = None,
     block_bits: int | None = None,
-) -> SummaryPlanND | None:
-    """Size the d-dim summary grid, or None for the full-tree path.
+) -> SummaryPlan | None:
+    """Size the summary grid, or return None when the full-tree path should
+    be used instead (degenerate geometry, tiny N, or a halo radius so large
+    that blocking would replicate more than it saves).
 
-    Depth cap: total cells 2^(d*D) <= 2^20 (the same ~1M-cell budget the
-    2-D path's 4^10 cap encodes), targeting ~64 points per occupied cell.
+    Auto depth targets ~64 points per depth-D cell, capped at 2^(d*D) <=
+    2^20 cells (4^10 at d=2) and floored at ``block_bits + 1`` so the grid
+    spans at least two query blocks per axis.
     """
     if theta <= 0.0 or half <= 0.0 or d < 1:
         return None
@@ -401,34 +123,42 @@ def plan_summary_nd(
         # ~64 cells per query block regardless of d (2^(d*bb) ~ 64)
         block_bits = max(1, int(round(6.0 / d)))
     if summary_depth is None:
-        if n < 4096:
+        if n < 4096:  # blocking overhead not worth it (auto mode only)
             return None
         want = math.ceil(math.log2(max(n, 2) / 64.0) / d)
         summary_depth = min(20 // d, max(block_bits + 1, want))
     depth = summary_depth
     grid = 1 << depth
-    extent_d = half * 2.0 ** -depth
+    extent_d = half * 2.0 ** -depth     # half-extent of a depth-D cell
     cellw = 2.0 * extent_d
+    # A depth-D cell is guaranteed-accepted by every query at center-of-mass
+    # distance >= thr; chebyshev cell distance > rc implies min distance
+    # >= rc * cellw >= thr.
     if condition == "scaled":
         thr = extent_d / theta
-    else:
+    else:  # reference: accept iff extent / dist^2 < theta
         thr = math.sqrt(extent_d / theta)
     rc = max(1, math.ceil(thr / cellw))
     block = 1 << block_bits
     if block + 2 * rc >= grid:
+        # halo covers (most of) the grid: near field degenerates toward
+        # all-pairs — the full-tree path handles this regime
         return None
     c = tuple(center) if center is not None else tuple([0.0] * d)
-    return SummaryPlanND(c, half, depth, rc, theta, condition, block_bits, d)
+    return SummaryPlan(c, half, depth, rc, theta, condition, block_bits, d)
 
 
-def build_pyramid_nd(
-    cells: np.ndarray, cum: np.ndarray, s: np.ndarray, plan: SummaryPlanND,
+def build_pyramid(
+    cells: np.ndarray, cum: np.ndarray, s: np.ndarray, plan: SummaryPlan,
 ) -> list[dict]:
-    """From depth-D cell aggregates build per-level tables for levels 0..D.
+    """From depth-D cell aggregates build the per-level aggregate tables
+    for levels 0..D.
 
     ``cells`` is the LINEAR index sum_k i_k * grid^k; ``s`` is (k, d) sums.
-    Each level is morton-sorted so children of code m occupy
-    [m << d, (m << d) + 2^d)."""
+    Each level is sorted by Morton code so children of code m occupy the
+    contiguous code range [m << d, (m << d) + 2^d).  Size: sum_l
+    min(2^(d*l), occupied) — bounded by the depth-D cell cap regardless of
+    N."""
     grid, d = plan.grid, plan.d
     k = len(cells)
     idx = np.zeros((k, d), dtype=np.int64)
@@ -436,7 +166,7 @@ def build_pyramid_nd(
     for a in range(d):
         idx[:, a] = rem % grid
         rem = rem // grid
-    code = morton_encode_nd(idx, plan.depth)
+    code = morton_encode(idx, plan.depth)
     order = np.argsort(code)
     levels = [None] * (plan.depth + 1)
     c = code[order]
@@ -453,8 +183,15 @@ def build_pyramid_nd(
     return levels
 
 
-def merge_pyramids_nd(a: list[dict], b: list[dict]) -> list[dict]:
-    """Associative per-level sorted-code groupby-sum merge (treeReduce op)."""
+def merge_pyramids(a: list[dict], b: list[dict]) -> list[dict]:
+    """Merge two per-level pyramids (same plan) by summing coincident codes.
+
+    Per-partition pyramids are built over DISJOINT depth-D cells (the cell
+    aggregation shuffles each cell to exactly one partition), but their
+    coarser levels overlap; the merge is a sorted-code groupby-sum per level.
+    Executor-side associative op for ``treeReduce`` — the driver never sees
+    row-level data, only the finished pyramid it must hold to broadcast.
+    """
     out: list[dict] = []
     for la, lb in zip(a, b):
         if not len(lb["code"]):
@@ -479,19 +216,20 @@ def merge_pyramids_nd(a: list[dict], b: list[dict]) -> list[dict]:
     return out
 
 
-def far_masses_nd(
+def far_masses(
     levels: list[dict],
-    plan: SummaryPlanND,
+    plan: SummaryPlan,
     halo_lo: np.ndarray,
     halo_hi: np.ndarray,
     q_lo: np.ndarray,
     q_hi: np.ndarray,
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Coarsen the d-dim pyramid into the largest cells guaranteed-accepted
-    from everywhere in the query bbox [q_lo, q_hi], excluding the halo box
-    [halo_lo, halo_hi] (depth-D index space, inclusive, per-axis arrays).
+    """Coarsen the pyramid into the largest cells guaranteed-accepted from
+    everywhere in the query bbox [q_lo, q_hi], excluding the halo box
+    [halo_lo, halo_hi] (depth-D index space, inclusive, per-axis arrays)
+    whose real points are evaluated locally.
 
-    Returns (cum, com) with com of shape (C, d)."""
+    Returns (cum, com) of the emitted point masses, com of shape (C, d)."""
     d = plan.d
     if not len(levels[0]["code"]):
         return np.zeros(0), np.zeros((0, d))
@@ -506,7 +244,7 @@ def far_masses_nd(
             break
         code = tab["code"][cand]
         cum = tab["cum"][cand]
-        idx = morton_decode_nd(code, lvl, d)  # (k, d)
+        idx = morton_decode(code, lvl, d)  # (k, d)
         w_l = 2.0 * plan.half / (1 << lvl)
         extent = plan.half * 2.0 ** -lvl
         c0 = origin[None, :] + idx * w_l      # cell lower corner (k, d)
@@ -525,6 +263,9 @@ def far_masses_nd(
             (g0 <= halo_hi[None, :]) & (g1 >= halo_lo[None, :]), axis=1
         )
         if lvl == D:
+            # halo cells: covered by shipped real points.  Non-halo cells
+            # are guaranteed-accepted by construction (chebyshev > rc =>
+            # min distance >= rc*cellw >= thr); emit them all.
             emit = ~overlaps
         else:
             emit = guaranteed & ~overlaps
@@ -543,6 +284,7 @@ def far_masses_nd(
         lo = np.searchsorted(child, pcodes, side="left")
         hi = np.searchsorted(child, pcodes + nc, side="left")
         counts = hi - lo
+        # flatten the [lo, hi) ranges into one index array
         cand = np.repeat(lo, counts) + (
             np.arange(counts.sum()) - np.repeat(np.cumsum(counts) - counts, counts)
         )
@@ -551,11 +293,13 @@ def far_masses_nd(
     return np.concatenate(out_w), np.concatenate(out_c, axis=0)
 
 
-def eval_far_nd(
+def eval_far(
     Qp: np.ndarray, w: np.ndarray, com: np.ndarray, chunk: int = 2048,
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Dense d-dim point-mass kernel (per-axis temporaries, so peak memory
-    matches the 2-D kernel's chunk x C arrays regardless of d)."""
+    """Dense point-mass kernel: forces_i = sum_c w_c * q^2 * (y_i - com_c),
+    sumq_i = sum_c w_c * q with q = 1/(1 + ||y_i - com_c||^2).  Chunked over
+    queries with per-axis temporaries, so peak memory is a few chunk x C
+    arrays regardless of d."""
     m, d = Qp.shape
     forces = np.zeros((m, d))
     sumq = np.zeros(m)

@@ -27,7 +27,8 @@ keep Y off the driver, as they exist to: a bounds aggregate gives the mean,
 and each row's neighbour coordinates are gathered by a join on the P edges
 (:func:`_gather_neighbours`) instead of broadcast.
 
-Repulsion sources (``tree_build``); d=2 uses QuadTree, other d NDTree:
+Repulsion sources (``tree_build``), all on the d-generic NDTree (the
+reference's quadtree at d=2):
 
 - theta == 0: the tree built on the driver and evaluated at theta 0, which
   is exact (no cell is ever summarized); the root sits at the mean so no
@@ -62,11 +63,6 @@ from tsne_flink_spark.operators.ndtree import (
     build_ndtree,
     build_ndtree_distributed,
 )
-from tsne_flink_spark.operators.quadtree import (
-    QuadTree,
-    build_quadtree,
-    build_quadtree_distributed,
-)
 
 _TREE_BUILDS = ("auto", "driver", "stub", "distributed", "summary")
 
@@ -79,7 +75,7 @@ _KERNEL_FIELDS = [
     StructField("pv", DoubleType()),  # sum_j v over the row's P
 ]
 
-# Auto-mode policy constants (BASELINE.md B14): the pickled full quadtree
+# Auto-mode policy constants (BASELINE.md B14): the pickled full d=2 tree
 # measured 213 MB at N=1M, ~220 bytes/point with headroom; above a 64 MB
 # per-iteration broadcast budget the summary far-field path is selected.
 # Per-point tree bytes are dominated by the 2^d-wide child table: 55 * 2^d
@@ -126,195 +122,9 @@ def resolve_tree_build(
     return tree_build
 
 
-def _bounds_with_count(embedding: DataFrame):
-    """7-value bounds/mean/count aggregate, for summary callers that pass no
-    bounds."""
-    return embedding.agg(
-        F.min(F.col("y")[0]).alias("x0"),
-        F.max(F.col("y")[0]).alias("x1"),
-        F.min(F.col("y")[1]).alias("y0"),
-        F.max(F.col("y")[1]).alias("y1"),
-        F.avg(F.col("y")[0]).alias("mx"),
-        F.avg(F.col("y")[1]).alias("my"),
-        F.count(F.lit(1)).alias("n"),
-    ).first()
-
-
-def _repulsive_summary(
-    embedding: DataFrame,
-    theta: float,
-    fix_bounds_mean: bool,
-    bh_condition: str,
-    summary_depth: int | None = None,
-    bounds=None,
-) -> DataFrame | None:
-    """Barnes-Hut repulsion WITHOUT the per-iteration O(N) tree broadcast
-    (BASELINE.md B11): broadcast a depth-capped cell-aggregate pyramid
-    (O(4^D) bytes, constant in N) and shuffle each point only to the query
-    blocks within a theta-derived halo.  See operators/farfield.py for the
-    decomposition and its accuracy argument.
-
-    Returns None when the regime calls for the full-tree path instead
-    (degenerate extent, tiny N, or halo ~ grid — e.g. the reference's
-    non-scale-invariant condition on a compressed embedding, which
-    degenerates to exact evaluation by design).
-    """
-    from tsne_flink_spark.operators import farfield
-
-    spark = embedding.sparkSession
-    b = bounds if bounds is not None else _bounds_with_count(embedding)
-    if b is None or b["x0"] is None:
-        return None
-    mx, my = (float(b["mx"]), float(b["my"])) if fix_bounds_mean else (0.0, 0.0)
-    half = max(float(b["x1"] - b["x0"]), float(b["y1"] - b["y0"]))
-    plan = farfield.plan_summary(
-        int(b["n"]), half, theta, bh_condition, mx, my,
-        summary_depth=summary_depth,
-    )
-    if plan is None:
-        return None
-
-    grid, cellw, rc = plan.grid, plan.cellw, plan.rc
-    block, bpa = 1 << plan.block_bits, plan.blocks_per_axis
-    x_origin, y_origin = mx - half, my - half
-
-    def cell_ix(col: str, origin: float):
-        return F.least(
-            F.greatest(F.floor((F.col(col) - F.lit(origin)) / F.lit(cellw)),
-                       F.lit(0)),
-            F.lit(grid - 1),
-        ).cast("long")
-
-    pts = embedding.select(
-        "id", F.col("y")[0].alias("px"), F.col("y")[1].alias("py")
-    ).withColumn("ix", cell_ix("px", x_origin)).withColumn(
-        "iy", cell_ix("py", y_origin)
-    )
-
-    # mass side: replicate the full-tree root containment (insert drops
-    # points outside the root cell — reference behavior)
-    mass = pts.where(
-        (F.abs(F.col("px") - F.lit(mx)) <= F.lit(half))
-        & (F.abs(F.col("py") - F.lit(my)) <= F.lit(half))
-    )
-
-    # depth-D cell aggregates (map-side combined, <= 4^D rows shuffled) ->
-    # per-partition partial pyramids -> executor-side treeReduce merge.  The
-    # driver receives only the FINISHED pyramid (O(4^D), the object it must
-    # hold to broadcast anyway) — no per-iteration row collect and no
-    # driver-side pyramid build (was a .toPandas() of up to 4^D rows).
-    agg = mass.groupBy((F.col("ix") * grid + F.col("iy")).alias("cell")).agg(
-        F.count(F.lit(1)).alias("cum"),
-        F.sum("px").alias("sx"),
-        F.sum("py").alias("sy"),
-    )
-
-    def part_pyramid(rows):
-        cells, cums, sxs, sys = [], [], [], []
-        for r in rows:
-            cells.append(r["cell"])
-            cums.append(r["cum"])
-            sxs.append(r["sx"])
-            sys.append(r["sy"])
-        yield farfield.build_pyramid(
-            np.asarray(cells, dtype=np.int64),
-            np.asarray(cums, dtype=np.int64),
-            np.asarray(sxs, dtype=np.float64),
-            np.asarray(sys, dtype=np.float64),
-            plan,
-        )
-
-    parts = agg.rdd.mapPartitions(part_pyramid)
-    if parts.getNumPartitions() == 0:
-        # all points outside the root cell (reference drop semantics): AQE
-        # collapses the empty aggregate to a zero-partition RDD treeReduce
-        # cannot reduce — the pyramid is simply empty
-        z = np.zeros(0, dtype=np.int64)
-        levels = farfield.build_pyramid(z, z, z.astype(float), z.astype(float), plan)
-    else:
-        levels = parts.treeReduce(farfield.merge_pyramids, depth=2)
-    bc = spark.sparkContext.broadcast(levels)
-
-    # Explicitly repartition both cogroup sides on the block key: the
-    # cogroup's own exchange gets AQE-coalesced by SIZE (a few bytes/row),
-    # which serialized the CPU-heavy eval_block Python stage onto ~14 tasks
-    # at N=1M; an explicit repartition is exempt from coalescing and
-    # Catalyst elides the redundant second exchange.
-    n_eval = spark.sparkContext.defaultParallelism * 2
-    qdf = pts.withColumn(
-        "bkey",
-        (F.shiftright(F.col("ix"), plan.block_bits) * bpa
-         + F.shiftright(F.col("iy"), plan.block_bits)),
-    ).select("id", "px", "py", "bkey").repartition(n_eval, "bkey")
-
-    # near-field shipping: a point in cell (ix, iy) is essential for every
-    # block whose halo rectangle [block*b - rc, block*b + block-1 + rc]
-    # contains the cell — a 1-4 block range per axis for typical rc
-    def block_range(col: str):
-        lo = F.greatest(
-            F.floor((F.col(col) - F.lit(rc)) / F.lit(float(block))), F.lit(0)
-        ).cast("long")
-        hi = F.least(
-            F.floor((F.col(col) + F.lit(rc)) / F.lit(float(block))),
-            F.lit(bpa - 1),
-        ).cast("long")
-        return F.sequence(lo, hi)
-
-    # NOTE: the point side shares lineage with qdf; same-name attributes on
-    # both cogroup sides get silently deduplicated away (observed: the right
-    # side arrives with only the grouping key), so alias to distinct names
-    pmass = (
-        mass.withColumn("bx", F.explode(block_range("ix")))
-        .withColumn("by", F.explode(block_range("iy")))
-        .select(
-            F.col("px").alias("nx"),
-            F.col("py").alias("ny"),
-            (F.col("bx") * bpa + F.col("by")).alias("nbkey"),
-        )
-        .repartition(n_eval, "nbkey")
-    )
-
-    def eval_block(key, qpdf: pd.DataFrame, ppdf: pd.DataFrame):
-        if not len(qpdf):
-            return pd.DataFrame(
-                {"id": pd.Series([], dtype="int64"),
-                 "rep": pd.Series([], dtype=object),
-                 "sumq": pd.Series([], dtype="float64")}
-            )
-        bx, by = divmod(int(key[0]), bpa)
-        qx = qpdf["px"].to_numpy(np.float64)
-        qy = qpdf["py"].to_numpy(np.float64)
-        halo = (
-            bx * block - rc, bx * block + block - 1 + rc,
-            by * block - rc, by * block + block - 1 + rc,
-        )
-        qbbox = (qx.min(), qx.max(), qy.min(), qy.max())
-        w, comx, comy = farfield.far_masses(bc.value, plan, halo, qbbox)
-        forces, sumq = farfield.eval_far(qx, qy, w, comx, comy)
-        if len(ppdf):
-            P = np.stack(
-                [ppdf["nx"].to_numpy(np.float64), ppdf["ny"].to_numpy(np.float64)],
-                axis=1,
-            )
-            ltree = build_quadtree(P, fix_bounds_mean=True)
-            Q = np.stack([qx, qy], axis=1)
-            nf, ns = ltree.repulsive_forces(Q, theta, condition=bh_condition)
-            forces += nf
-            sumq += ns
-        return pd.DataFrame(
-            {"id": qpdf["id"].to_numpy(), "rep": list(forces), "sumq": sumq}
-        )
-
-    return (
-        qdf.groupby("bkey")
-        .cogroup(pmass.groupby("nbkey"))
-        .applyInPandas(eval_block, schema="id int, rep array<double>, sumq double")
-    )
-
-
-def _bounds_with_count_nd(embedding: DataFrame, d: int):
-    """d-dim bounds/mean/count aggregate (min_k / max_k / mean_k / n), for
-    the executor-side regimes of the fused pass and for summary callers that
+def _bounds_with_count(embedding: DataFrame, d: int):
+    """Bounds/mean/count aggregate (min_k / max_k / mean_k / n), for the
+    executor-side regimes of the fused pass and for summary callers that
     pass no bounds.  Row shape matches build_ndtree_distributed's ``bounds``
     parameter."""
     aggs = []
@@ -328,7 +138,7 @@ def _bounds_with_count_nd(embedding: DataFrame, d: int):
     return embedding.agg(*aggs).first()
 
 
-def _repulsive_summary_nd(
+def _repulsive_summary(
     embedding: DataFrame,
     theta: float,
     d: int,
@@ -337,18 +147,24 @@ def _repulsive_summary_nd(
     summary_depth: int | None = None,
     bounds=None,
 ) -> DataFrame | None:
-    """d-dimensional far-field summary repulsion — the 100-TB path for
-    n_components != 2 (generalizes :func:`_repulsive_summary`, which remains
-    the tuned 2-D surface): broadcast a depth-capped 2^d-ary cell-aggregate
+    """Barnes-Hut repulsion WITHOUT the per-iteration O(N) tree broadcast
+    (BASELINE.md B11): broadcast a depth-capped 2^d-ary cell-aggregate
     pyramid (O(2^(d*D)) bytes, constant in N) and shuffle each point only to
     the query blocks within a theta-derived chebyshev halo.  Near field is
     evaluated with a local NDTree per block (full leaf-level accuracy incl.
     coincident-point semantics); far field as guaranteed-accepted cell
-    masses.  Returns None in regimes the full-tree path should handle."""
+    masses.  See operators/farfield.py for the decomposition and its
+    accuracy argument.
+
+    Returns None when the regime calls for the full-tree path instead
+    (degenerate extent, tiny N, or halo ~ grid — e.g. the reference's
+    non-scale-invariant condition on a compressed embedding, which
+    degenerates to exact evaluation by design).
+    """
     from tsne_flink_spark.operators import farfield
 
     spark = embedding.sparkSession
-    b = bounds if bounds is not None else _bounds_with_count_nd(embedding, d)
+    b = bounds if bounds is not None else _bounds_with_count(embedding, d)
     if b is None or b["min_0"] is None:
         return None
     center = np.array(
@@ -357,7 +173,7 @@ def _repulsive_summary_nd(
         else [0.0] * d
     )
     half = max(float(b[f"max_{k}"] - b[f"min_{k}"]) for k in range(d))
-    plan = farfield.plan_summary_nd(
+    plan = farfield.plan_summary(
         int(b["n"]), d, half, theta, bh_condition, center=tuple(center),
         summary_depth=summary_depth,
     )
@@ -390,8 +206,10 @@ def _repulsive_summary_nd(
         )
     mass = pts.where(contained)
 
-    # depth-D cell aggregates -> per-partition partial pyramids ->
-    # executor-side treeReduce merge (same protocol as the 2-D path)
+    # depth-D cell aggregates (map-side combined, <= 2^(d*D) rows shuffled)
+    # -> per-partition partial pyramids -> executor-side treeReduce merge.
+    # The driver receives only the FINISHED pyramid (the object it must hold
+    # to broadcast anyway) — no row collect and no driver-side build.
     cell_expr = F.lit(0).cast("long")
     for k in range(d):
         cell_expr = cell_expr + F.col(f"i{k}") * F.lit(grid ** k)
@@ -406,7 +224,7 @@ def _repulsive_summary_nd(
             cells.append(r["cell"])
             cums.append(r["cum"])
             svals.append([r[f"s{k}"] for k in range(d)])
-        yield farfield.build_pyramid_nd(
+        yield farfield.build_pyramid(
             np.asarray(cells, dtype=np.int64),
             np.asarray(cums, dtype=np.int64),
             np.asarray(svals, dtype=np.float64).reshape(len(cells), d),
@@ -415,16 +233,20 @@ def _repulsive_summary_nd(
 
     parts = agg.rdd.mapPartitions(part_pyramid)
     if parts.getNumPartitions() == 0:
+        # all points outside the root cell (reference drop semantics): AQE
+        # collapses the empty aggregate to a zero-partition RDD treeReduce
+        # cannot reduce — the pyramid is simply empty
         z = np.zeros(0, dtype=np.int64)
-        levels = farfield.build_pyramid_nd(
-            z, z, np.zeros((0, d)), plan
-        )
+        levels = farfield.build_pyramid(z, z, np.zeros((0, d)), plan)
     else:
-        levels = parts.treeReduce(farfield.merge_pyramids_nd, depth=2)
+        levels = parts.treeReduce(farfield.merge_pyramids, depth=2)
     bc = spark.sparkContext.broadcast(levels)
 
-    # explicit block-key repartition on both cogroup sides (AQE coalesces
-    # by bytes and would serialize the CPU-heavy Python stage — B14)
+    # Explicitly repartition both cogroup sides on the block key: the
+    # cogroup's own exchange gets AQE-coalesced by SIZE (a few bytes/row),
+    # which serialized the CPU-heavy eval_block Python stage onto ~14 tasks
+    # at N=1M (B14); an explicit repartition is exempt from coalescing and
+    # Catalyst elides the redundant second exchange.
     n_eval = spark.sparkContext.defaultParallelism * 2
     bkey_expr = F.lit(0).cast("long")
     for k in range(d):
@@ -451,8 +273,9 @@ def _repulsive_summary_nd(
     nbkey_expr = F.lit(0).cast("long")
     for k in range(d):
         nbkey_expr = nbkey_expr + F.col(f"b{k}") * F.lit(bpa ** k)
-    # alias to distinct names: same-name attributes on both cogroup sides
-    # get silently deduplicated away (see the 2-D path's note)
+    # the point side shares lineage with qdf; same-name attributes on both
+    # cogroup sides get silently deduplicated away (observed: the right side
+    # arrives with only the grouping key), so alias to distinct names
     pmass = pm.select(
         *[F.col(f"p{k}").alias(f"n{k}") for k in range(d)],
         nbkey_expr.alias("nbkey"),
@@ -479,10 +302,10 @@ def _repulsive_summary_nd(
         halo_lo = bidx * block + halo_lo_off
         halo_hi = bidx * block + halo_hi_off
         q_lo, q_hi = Qp.min(axis=0), Qp.max(axis=0)
-        w, com = farfield.far_masses_nd(
+        w, com = farfield.far_masses(
             bc.value, plan, halo_lo, halo_hi, q_lo, q_hi
         )
-        forces, sumq = farfield.eval_far_nd(Qp, w, com)
+        forces, sumq = farfield.eval_far(Qp, w, com)
         if len(ppdf):
             P = np.stack(
                 [ppdf[f"n{k}"].to_numpy(np.float64) for k in range(d)], axis=1
@@ -539,23 +362,11 @@ def shifted_y(mean: np.ndarray) -> Column:
 
 
 def _bounds_dict(n: int, lo, hi, mean) -> dict:
-    """A bounds row in the shape of both ``_bounds_with_count`` (d=2 keys)
-    and ``_bounds_with_count_nd`` (min_k/max_k/mean_k)."""
+    """A bounds row in the shape of ``_bounds_with_count``."""
     b = {"n": n}
     for k in range(len(lo)):
         b[f"min_{k}"], b[f"max_{k}"], b[f"mean_{k}"] = lo[k], hi[k], mean[k]
-    if len(lo) == 2:
-        b.update(x0=lo[0], x1=hi[0], y0=lo[1], y1=hi[1], mx=mean[0], my=mean[1])
     return b
-
-
-def _build_tree(Y: np.ndarray, fix_bounds_mean: bool):
-    build = build_quadtree if Y.shape[1] == 2 else build_ndtree
-    return build(Y, fix_bounds_mean=fix_bounds_mean)
-
-
-def _empty_tree(d: int):
-    return QuadTree(0.0, 0.0, 1.0) if d == 2 else NDTree(np.zeros(d), 1.0)
 
 
 def _executor_repulsion(
@@ -571,9 +382,9 @@ def _executor_repulsion(
     with Y kept off the driver: one bounds aggregate, then ``(tree, None)``
     from the distributed build or ``(None, rep)`` with materialized (id,
     rep, sumq) rows from the summary path."""
-    b = _bounds_with_count_nd(rows, d)
+    b = _bounds_with_count(rows, d)
     if b is None or not b["n"]:
-        return np.zeros(d), _empty_tree(d), None
+        return np.zeros(d), NDTree(np.zeros(d), 1.0), None
     lo, hi, mn = (
         np.array([float(b[f"{s}_{k}"]) for k in range(d)])
         for s in ("min", "max", "mean")
@@ -583,14 +394,9 @@ def _executor_repulsion(
     bounds = _bounds_dict(int(b["n"]), lo - mean, hi - mean, mn - mean)
     centred = rows.select("id", shifted_y(mean).alias("y"))
     if tree_build == "summary":
-        if d == 2:
-            rep = _repulsive_summary(
-                centred, theta, fix_bounds_mean, bh_condition, bounds=bounds
-            )
-        else:
-            rep = _repulsive_summary_nd(
-                centred, theta, d, fix_bounds_mean, bh_condition, bounds=bounds
-            )
+        rep = _repulsive_summary(
+            centred, theta, d, fix_bounds_mean, bh_condition, bounds=bounds
+        )
         if rep is not None:
             # the cogroup pipeline (near-field shuffle + per-block Python
             # evaluation) must run once: the kernel reads rep and sumq from
@@ -599,10 +405,7 @@ def _executor_repulsion(
 
             return mean, None, materialize(rep)
         # degenerate regime: full-tree fallback
-    if d == 2:
-        tree = build_quadtree_distributed(centred, fix_bounds_mean, bounds=bounds)
-    else:
-        tree = build_ndtree_distributed(centred, d, fix_bounds_mean, bounds=bounds)
+    tree = build_ndtree_distributed(centred, d, fix_bounds_mean, bounds=bounds)
     return mean, tree, None
 
 
@@ -778,13 +581,13 @@ def fused_pass(
     else:
         if tree_build == "stub":
             ids, Y = np.zeros(0, dtype=np.int64), np.zeros((0, d))
-            tree = _empty_tree(d)
+            tree = NDTree(np.zeros(d), 1.0)
         else:
             ids, Y = collect_y(rows, d)
         mean = Y.mean(axis=0) if centre and len(Y) else np.zeros(d)
         Yc = Y - mean
         if tree_build == "driver":
-            tree = _build_tree(Yc, fix_bounds_mean or theta == 0.0)
+            tree = build_ndtree(Yc, fix_bounds_mean or theta == 0.0)
         src = rows
     out_cols = [
         c for c in src.columns if c not in ("rep", "sumq", "__gv", "__gy")

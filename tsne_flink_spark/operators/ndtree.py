@@ -1,32 +1,47 @@
-"""Barnes-Hut tree for arbitrary dimensionality (octree at d=3), the
-d-dimensional generalization of the 2-D flat-array quadtree
-(operators/quadtree.py).
+"""Barnes-Hut tree for any dimensionality: the quadtree at d=2 (the
+reference's only structure, QuadTree.scala / Cell.scala), an octree at d=3,
+2^d children per node in general.  Array-backed numpy implementation.
 
-The reference implements only a 2-D quadtree (QuadTree.scala — its CLI still
-accepts --nComponents, which its BH path then cannot serve); this module
-closes that surface for d != 2 with the SAME semantics the 2-D tree
-replicates:
+Semantics replicate the reference, including its quirks, so that theta=0
+degenerates to the exact gradient and golden tests match:
 
-- node capacity 1; coincident (bit-equal) points accumulate in one leaf,
-  re-seated with full accumulated weight on split (order-independent — the
-  documented divergence from QuadTree.scala:59 that makes distributed builds
-  merge-equivalent);
-- cubic cells: every child is sized by half the parent's half-extent on ALL
-  axes (QuadTree.scala:80-81 generalized), so per-node extents are
-  (root half) * 2^-depth exactly;
-- root centered at the origin (reference quirk Q1 — the "mean" is zero by
-  construction) or at the true mean, half-extent = max per-axis span
-  (TsneHelpers.scala:246-248);
+- node capacity 1; coincident (bit-equal) points accumulate in one leaf
+  (QuadTree.scala:50-63).  DOCUMENTED DIVERGENCE: when such a leaf later
+  splits, the reference re-seats its point once (QuadTree.scala:59),
+  dropping the duplicates' mass insertion-ORDER-dependently — behaviour no
+  order-independent distributed build can reproduce.  This engine re-seats
+  the full accumulated weight, so sequential, merged and distributed builds
+  agree exactly and no mass is lost
+  (tests/test_properties.py::test_quadtree_coincident_points).
+- ``subDivide`` sizes every child by the parent's half-WIDTH on all axes
+  (QuadTree.scala:80-81) — safe because the root is square (cubic), so
+  per-node extents are (root half) * 2^-depth exactly and a uint8 depth
+  replaces per-node extent arrays (~35% smaller pickled tree, BASELINE.md
+  B11; half * 2^-depth is exact in IEEE-754).
 - summary condition ``extent / D < theta`` with D the SQUARED distance
-  ("reference", QuadTree.scala:133-134 quirk Q2) or ``extent / sqrt(D) <
-  theta`` ("scaled", canonical Barnes-Hut);
-- a leaf bit-equal to the query contributes nothing (QuadTree.scala:128).
+  ("reference", QuadTree.scala:133-134, quirk Q2 — not scale-invariant: on
+  a compressed early-iteration embedding 1/D dwarfs theta and the
+  evaluation degenerates to exact, as the reference does), or
+  ``extent / sqrt(D) < theta`` ("scaled", canonical van der Maaten 2014
+  Barnes-Hut).  theta=0 means exact under both.
+- a leaf whose point bit-equals the query contributes nothing
+  (QuadTree.scala:128).
+- root cell: centred at the embedding mean — which the reference computes
+  as the zero vector by construction (quirk Q1, TsneHelpers.scala:228-229) —
+  with half-extent the largest per-axis span (TsneHelpers.scala:246-248).
+- children are scanned in the reference's NW, NE, SW, SE order at d=2
+  (axis 0 ascending, the other axes descending; child ``c`` lies on the
+  positive side of axis 0 iff bit 0 of ``c`` is set and on the positive side
+  of axis k >= 1 iff bit k is clear); a point on a split plane goes to the
+  first child whose closed cell contains it (Cell.scala's inclusive
+  ``contains``).
 
-Layout matches the quadtree's compact form (coordinates as (n, d) arrays,
-uint8 depth instead of extents, int32 children) so the per-iteration
-broadcast stays small; the batched frontier evaluation and the
-level-synchronous vectorized merge are direct generalizations of the 2-D
-code paths, with 2^d children per node.
+Layout: per-node coordinates are stored axis-major — ``c``, ``s`` and ``p``
+are (d, n) arrays — so every vectorized step works on contiguous 1-D axis
+rows, and node topology is an int32 (n, 2^d) child table.  Construction is
+level-synchronous and force evaluation expands a frontier of (node, query)
+pairs level by level, both entirely in numpy with no per-point Python
+recursion.
 """
 
 from __future__ import annotations
@@ -34,6 +49,15 @@ from __future__ import annotations
 import numpy as np
 
 _MAX_DEPTH = 64  # guard against pathological near-coincident points
+
+
+def _child_signs(d: int) -> np.ndarray:
+    """(d, 2^d) offset sign of child c on axis k (see the module docstring
+    for the order)."""
+    c = np.arange(1 << d)
+    bits = np.array([(c >> k) & 1 for k in range(d)], dtype=bool)
+    bits[1:] = ~bits[1:]
+    return np.where(bits, 1.0, -1.0)
 
 
 class NDTree:
@@ -44,21 +68,17 @@ class NDTree:
         d = len(center)
         self.d = d
         self.nc = 1 << d  # children per node
-        # child c offset sign on axis k: +1 if bit k of c is set else -1
-        self._offs = np.array(
-            [[1.0 if (c >> k) & 1 else -1.0 for k in range(d)]
-             for c in range(self.nc)]
-        )
+        self._offs = _child_signs(d)
         n = max(capacity_hint, 16)
-        self.c = np.zeros((n, d))
-        self.c[0] = center
-        self.half = float(half_extent)
+        self.c = np.zeros((d, n))
+        self.c[:, 0] = center
+        self.half = float(half_extent)  # root half-extent
         self.depth = np.zeros(n, dtype=np.uint8)
         self.cum = np.zeros(n, dtype=np.int64)
-        self.s = np.zeros((n, d))  # running sum of inserted points
+        self.s = np.zeros((d, n))  # running sum of inserted points
         self.children = np.full((n, self.nc), -1, dtype=np.int32)
         self.has_point = np.zeros(n, dtype=bool)
-        self.p = np.zeros((n, d))
+        self.p = np.zeros((d, n))
         self.n_nodes = 1
 
     def _half_of(self, node: int) -> float:
@@ -67,41 +87,25 @@ class NDTree:
     # -- construction -------------------------------------------------------
 
     def _grow(self, need: int) -> None:
-        cap = len(self.c)
+        cap = len(self.cum)
         if self.n_nodes + need <= cap:
             return
         new = max(cap * 2, self.n_nodes + need)
-
-        def grow2d(arr, fill=0.0):
-            out = np.full((new,) + arr.shape[1:], fill, dtype=arr.dtype)
-            out[: len(arr)] = arr
-            return out
-
-        self.c = grow2d(self.c)
-        self.s = grow2d(self.s)
-        self.p = grow2d(self.p)
+        for name in ("c", "s", "p"):
+            arr = np.zeros((self.d, new))
+            arr[:, :cap] = getattr(self, name)
+            setattr(self, name, arr)
         self.depth = np.resize(self.depth, new)
         self.cum = np.resize(self.cum, new)
-        self.has_point = grow2d(self.has_point, fill=False)
-        self.children = grow2d(self.children, fill=-1)
+        self.has_point = np.resize(self.has_point, new)
+        ch = np.full((new, self.nc), -1, dtype=np.int32)
+        ch[:cap] = self.children
+        self.children = ch
 
     def _contains(self, node: int, x: np.ndarray) -> bool:
         h = self._half_of(node)
-        return bool(np.all(np.abs(x - self.c[node]) <= h))
-
-    def _subdivide(self, node: int) -> None:
-        nw = 0.5 * self._half_of(node)
-        base = self.n_nodes
-        self._grow(self.nc)
-        idx = base + np.arange(self.nc)
-        self.c[idx] = self.c[node] + nw * self._offs
-        self.depth[idx] = self.depth[node] + 1
-        self.cum[idx] = 0
-        self.s[idx] = 0.0
-        self.children[idx] = -1
-        self.has_point[idx] = False
-        self.children[node] = idx.astype(np.int32)
-        self.n_nodes += self.nc
+        c = self.c[:, node]
+        return bool(np.all((c - h <= x) & (x <= c + h)))
 
     def _child_for(self, node: int, x: np.ndarray) -> int:
         for ch in self.children[node]:
@@ -110,19 +114,21 @@ class NDTree:
         return -1
 
     def insert(self, x) -> bool:
+        """Insert one point; False if it lies outside the root cell (the
+        reference drops it)."""
         x = np.asarray(x, dtype=np.float64)
         if not self._contains(0, x):
             return False
         node = 0
         for _ in range(_MAX_DEPTH):
-            self.s[node] += x
+            self.s[:, node] += x
             self.cum[node] += 1
             if self.children[node, 0] == -1:  # leaf
                 if not self.has_point[node]:
                     self.has_point[node] = True
-                    self.p[node] = x
+                    self.p[:, node] = x
                     return True
-                if np.array_equal(self.p[node], x):
+                if np.array_equal(self.p[:, node], x):
                     return True  # coincident: accumulate in this leaf
                 if self.depth[node] >= _MAX_DEPTH - 1:
                     # terminal depth: treat the distinct point as coincident
@@ -131,18 +137,19 @@ class NDTree:
                     # repulsive_forces expands into and drops as empty)
                     return True
                 # re-seat the old point one level down with its FULL
-                # accumulated weight (same rule as QuadTree.insert)
-                ox = self.p[node].copy()
+                # accumulated weight: the leaf may hold w >= 2 bit-equal
+                # copies (cum/s exclude the new point added above)
+                ox = self.p[:, node].copy()
                 ow = int(self.cum[node]) - 1
-                osum = self.s[node] - x
-                self._subdivide(node)
+                osum = self.s[:, node] - x
+                _bulk_subdivide(self, np.array([node]))
                 self.has_point[node] = False
                 oc = self._child_for(node, ox)
-                if oc >= 0:
-                    self.s[oc] += osum
+                if oc >= 0:  # 1-ulp FP edge: skip re-seat, keep aggregates
+                    self.s[:, oc] += osum
                     self.cum[oc] += ow
                     self.has_point[oc] = True
-                    self.p[oc] = ox
+                    self.p[:, oc] = ox
             nxt = self._child_for(node, x)
             if nxt == -1:
                 return False
@@ -150,12 +157,17 @@ class NDTree:
         return True  # depth guard: treat as coincident with leaf reached
 
     def __getstate__(self):
+        # serialize compact: _grow leaves up to 2x slack capacity, which
+        # would otherwise ship in every treeReduce hop and tree broadcast
         self.trim()
         return self.__dict__
 
     def trim(self) -> "NDTree":
+        """Shrink backing arrays to ``n_nodes`` (before serialization)."""
         n = self.n_nodes
-        for name in ("c", "s", "p", "depth", "cum", "has_point", "children"):
+        for name in ("c", "s", "p"):
+            setattr(self, name, getattr(self, name)[:, :n].copy())
+        for name in ("depth", "cum", "has_point", "children"):
             setattr(self, name, getattr(self, name)[:n].copy())
         return self
 
@@ -164,30 +176,39 @@ class NDTree:
     def repulsive_forces(
         self, Q: np.ndarray, theta: float, condition: str = "reference"
     ) -> tuple[np.ndarray, np.ndarray]:
-        """Batched Barnes-Hut evaluation for query points Q (m, d); returns
-        (forces (m, d), sum_q (m,)).  Same frontier expansion as
-        QuadTree.repulsive_forces with 2^d-way splits."""
+        """Batched Barnes-Hut evaluation for query points Q (m, d).
+
+        Returns (forces (m, d), sum_q (m,)).  A frontier of (node, query)
+        pairs is expanded breadth-first; at each step every pair is either
+        accumulated (leaf, or the summary ``condition`` holds — see the
+        module docstring) or expanded to its 2^d children.
+        """
         m = len(Q)
         forces = np.zeros((m, self.d))
         sumq = np.zeros(m)
         if m == 0 or self.cum[0] == 0:
             return forces, sumq
+        axes = range(self.d)
+        Qa = [np.ascontiguousarray(Q[:, k], dtype=np.float64) for k in axes]
 
         nodes = np.zeros(m, dtype=np.int64)
         queries = np.arange(m, dtype=np.int64)
 
         while len(nodes):
             leaf = self.children[nodes, 0] == -1
-            empty = leaf & (self.cum[nodes] == 0)
-            q_pts = Q[queries]  # (k, d)
-            self_leaf = leaf & self.has_point[nodes] & np.all(
-                self.p[nodes] == q_pts, axis=1
-            )
+            cum = self.cum[nodes]
+            empty = leaf & (cum == 0)
+            qs = [Qa[k][queries] for k in axes]
+            self_leaf = leaf & self.has_point[nodes]
+            for k in axes:
+                self_leaf &= self.p[k][nodes] == qs[k]
             drop = empty | self_leaf
 
-            com = self.s[nodes] / np.maximum(self.cum[nodes], 1)[:, None]
-            delta = q_pts - com  # (k, d)
-            D = (delta * delta).sum(axis=1)
+            w = np.maximum(cum, 1)
+            delta = [qs[k] - self.s[k][nodes] / w for k in axes]
+            D = delta[0] * delta[0]
+            for k in axes[1:]:
+                D += delta[k] * delta[k]
             denom = np.sqrt(D) if condition == "scaled" else D
             extent = self.half * np.exp2(-self.depth[nodes].astype(np.float64))
             with np.errstate(divide="ignore", invalid="ignore"):
@@ -197,19 +218,19 @@ class NDTree:
             if accept.any():
                 a = np.flatnonzero(accept)
                 q = 1.0 / (1.0 + D[a])
-                mult = self.cum[nodes[a]] * q
+                mult = cum[a] * q
                 qa = queries[a]
                 sumq += np.bincount(qa, weights=mult, minlength=m)
                 mq = mult * q
-                for k in range(self.d):
+                for k in axes:
                     forces[:, k] += np.bincount(
-                        qa, weights=mq * delta[a, k], minlength=m
+                        qa, weights=mq * delta[k][a], minlength=m
                     )
 
             expand = ~drop & ~accept
             if expand.any():
                 e = np.flatnonzero(expand)
-                nodes = self.children[nodes[e]].astype(np.int64).ravel()
+                nodes = self.children[nodes[e]].ravel()
                 queries = np.repeat(queries[e], self.nc)
             else:
                 break
@@ -220,21 +241,32 @@ def _bulk_build(tree: NDTree, Y: np.ndarray) -> NDTree:
     """Vectorized level-synchronous construction into a FRESH (root-only)
     tree — equivalent to inserting every row of ``Y`` sequentially (same
     structure: a node subdivides iff >= 2 distinct points fall in it; same
-    cum/s totals; coincident rows accumulate in one leaf), but each descent
-    level is one batch of numpy ops instead of a per-point Python loop.
+    cum/s totals up to float-sum reassociation; coincident rows accumulate
+    in one leaf), but each descent level is one batch of numpy ops instead
+    of a per-point Python loop.
 
     Equivalence argument: insertion order only ever mattered through the
-    re-seat-with-full-weight rule, which this module already makes
-    order-independent (see class docstring); the per-node mass totals are
-    order-free sums, and the child of a point is a pure function of the
-    point and the cell (tie on a split plane -> negative side, matching
-    ``_child_for``'s first-containing-child scan).  Gated by
+    re-seat-with-full-weight rule, which this module makes order-independent
+    (see the module docstring); the per-node mass totals are order-free
+    sums, and the child of a point is a pure function of the point and the
+    cell (``_children_for`` replicates ``_child_for``'s first-containing-
+    child scan, including the 1-ulp no-containing-child drop edge, where the
+    mass stays in the ancestors exactly like insert returning False
+    mid-descent).  Gated by
     tests/test_ndtree.py::test_bulk_build_equals_sequential_insert.
+
+    Depth guard (shared with insert/_bulk_insert_weighted): a leaf at depth
+    _MAX_DEPTH-1 never subdivides; still-distinct survivors accumulate there
+    as a terminal leaf seated with the lexicographically first point (insert
+    seats whichever arrived first, so the two agree under lex-ordered
+    insertion; see test_depth_exhaustion_terminal_leaf).
     """
     d = tree.d
     if not len(Y):
         return tree
-    inside = np.all(np.abs(Y - tree.c[0]) <= tree.half, axis=1)
+    inside = np.ones(len(Y), dtype=bool)
+    for k in range(d):
+        inside &= np.abs(Y[:, k] - tree.c[k, 0]) <= tree.half
     X = Y[inside]
     if not len(X):
         return tree
@@ -242,19 +274,21 @@ def _bulk_build(tree: NDTree, Y: np.ndarray) -> NDTree:
     # rule); they would never separate however deep the descent goes
     pts, counts = np.unique(X, axis=0, return_counts=True)
     w = counts.astype(np.int64)
-    ws = pts * counts[:, None]
+    ws = pts.T * counts  # (d, m) weighted sums
     cur = np.zeros(len(pts), dtype=np.int64)
+    lo = 0  # the current level's nodes are the contiguous range [lo, ...)
     for lvl in range(_MAX_DEPTH):
         np.add.at(tree.cum, cur, w)
-        np.add.at(tree.s, cur, ws)
-        uniq, inv, cnt = np.unique(cur, return_inverse=True, return_counts=True)
-        alone = cnt[inv] == 1
+        for k in range(d):
+            np.add.at(tree.s[k], cur, ws[k])
+        cnt = np.bincount(cur - lo)
+        alone = cnt[cur - lo] == 1
         if alone.any():
             sn = cur[alone]
             tree.has_point[sn] = True
-            tree.p[sn] = pts[alone]
+            tree.p[:, sn] = pts[alone].T
         keep = ~alone
-        cur, pts, w, ws = cur[keep], pts[keep], w[keep], ws[keep]
+        cur, pts, w, ws = cur[keep], pts[keep], w[keep], ws[:, keep]
         if not len(cur):
             break
         if lvl == _MAX_DEPTH - 1:
@@ -267,29 +301,35 @@ def _bulk_build(tree: NDTree, Y: np.ndarray) -> NDTree:
             sc, sp = cur[order], pts[order]
             first = np.r_[True, sc[1:] != sc[:-1]]
             tree.has_point[sc[first]] = True
-            tree.p[sc[first]] = sp[first]
+            tree.p[:, sc[first]] = sp[first].T
             break
         # all remaining nodes hold >= 2 distinct points: split and descend.
         # They are fresh same-depth leaves (level-synchronous invariant).
-        # _children_for replicates insert's first-containing-child scan
-        # exactly, including the 1-ulp no-containing-child drop edge.
-        _bulk_subdivide(tree, np.unique(cur))
-        nxt = _children_for(tree, cur, pts)
+        lo_next = tree.n_nodes
+        _bulk_subdivide(tree, np.flatnonzero(cnt > 1) + lo)
+        lo = lo_next
+        nxt = _children_for(tree, cur, pts.T)
         v = nxt >= 0
-        cur, pts, w, ws = nxt[v], pts[v], w[v], ws[v]
+        cur, pts, w, ws = nxt[v], pts[v], w[v], ws[:, v]
     return tree
 
 
 def build_ndtree(Y: np.ndarray, fix_bounds_mean: bool = False) -> NDTree:
-    """Build the tree for an N x d embedding (root-cell construction as
-    TsneHelpers.scala:228-248, generalized to d axes); vectorized bulk
-    construction, insert-equivalent (see :func:`_bulk_build`)."""
+    """Build the tree for an N x d embedding, replicating the reference's
+    root-cell construction (TsneHelpers.scala:228-248, every axis).
+
+    With ``fix_bounds_mean=False`` (reference parity) the root is centred at
+    the origin — the reference's "mean" is a zero vector by construction
+    (Q1).  With True, the actual mean is used.
+    """
     Y = np.asarray(Y, dtype=np.float64)
     if Y.ndim != 2:
         raise ValueError(f"expected (n, d) array, got shape {Y.shape}")
     d = Y.shape[1]
+    if d < 1:
+        raise ValueError("expected at least one embedding dimension")
     if fix_bounds_mean and len(Y):
-        center = Y.mean(axis=0)
+        center = np.array([Y[:, k].mean() for k in range(d)])
     else:
         center = np.zeros(d)
     half = float((Y.max(axis=0) - Y.min(axis=0)).max()) if len(Y) else 1.0
@@ -297,45 +337,59 @@ def build_ndtree(Y: np.ndarray, fix_bounds_mean: bool = False) -> NDTree:
     return _bulk_build(tree, Y)
 
 
-# -- vectorized merge machinery (generalizes quadtree.py's 2-D versions) ----
+# -- vectorized subdivide / descent / merge ---------------------------------
 
 def _bulk_subdivide(tree: NDTree, nodes: np.ndarray) -> None:
+    """Subdivide many (unique) leaf nodes at once; cell geometry is exact
+    (half * 2^-(depth+1) equals repeated halving in IEEE-754)."""
     k = len(nodes)
     if k == 0:
         return
+    nc = tree.nc
     base = tree.n_nodes
-    tree._grow(tree.nc * k)
+    tree._grow(nc * k)
     nw = tree.half * np.exp2(-(tree.depth[nodes].astype(np.float64) + 1.0))
-    child_idx = (
-        base
-        + tree.nc * np.arange(k, dtype=np.int64)[:, None]
-        + np.arange(tree.nc)[None, :]
-    )
+    child_idx = base + nc * np.arange(k, dtype=np.int64)[:, None] + np.arange(nc)
     flat = child_idx.ravel()
-    # (k, nc, d) = parent center + nw * offset sign
-    tree.c[flat] = (
-        tree.c[nodes][:, None, :] + nw[:, None, None] * tree._offs[None, :, :]
-    ).reshape(-1, tree.d)
-    tree.depth[flat] = np.repeat(tree.depth[nodes] + 1, tree.nc)
+    for a in range(tree.d):
+        tree.c[a][flat] = (
+            tree.c[a][nodes][:, None] + nw[:, None] * tree._offs[a]
+        ).ravel()
+    tree.depth[flat] = np.repeat(tree.depth[nodes] + 1, nc)
     tree.cum[flat] = 0
-    tree.s[flat] = 0.0
+    tree.s[:, flat] = 0.0
     tree.has_point[flat] = False
     tree.children[flat] = -1
     tree.children[nodes] = child_idx.astype(np.int32)
-    tree.n_nodes += tree.nc * k
+    tree.n_nodes += nc * k
 
 
-def _children_for(tree: NDTree, nodes: np.ndarray, X: np.ndarray) -> np.ndarray:
-    """Vectorized first-containing-child lookup; ``nodes`` all internal."""
-    ch = tree.children[nodes].astype(np.int64)  # (k, nc)
-    h = tree.half * np.exp2(-tree.depth[ch[:, 0]].astype(np.float64))  # (k,)
-    centers = tree.c[ch]  # (k, nc, d)
-    cont = np.all(
-        np.abs(X[:, None, :] - centers) <= h[:, None, None], axis=2
-    )  # (k, nc)
-    first = np.argmax(cont, axis=1)
-    rows = np.arange(len(nodes))
-    return np.where(cont[rows, first], ch[rows, first], -1)
+def _children_for(tree: NDTree, nodes: np.ndarray, X) -> np.ndarray:
+    """Vectorized ``_child_for``: the first child (in child order) whose
+    closed cell contains the point, -1 if none.  ``nodes`` must all be
+    internal; ``X[a]`` holds axis a of the points, one per node.
+
+    Containment factorizes per axis and the child order is lexicographic
+    in the per-axis bits, so the first containing child takes, on every
+    axis, the bit-0 side if that side's closed interval holds the point and
+    the bit-1 side otherwise.  Each side's centre is recomputed as parent
+    centre -/+ child half-extent, the exact value ``_bulk_subdivide``
+    stored, so the comparisons (ties on shared boundaries, the 1-ulp
+    no-containing-child edge) match the scan bit for bit."""
+    h = tree.half * np.exp2(-(tree.depth[nodes].astype(np.float64) + 1.0))
+    slot = np.zeros(len(nodes), dtype=np.int64)
+    found = np.ones(len(nodes), dtype=bool)
+    for a in range(tree.d):
+        ca, xa = tree.c[a][nodes], X[a]
+        lo, hi = ca - h, ca + h  # centres of the negative / positive child
+        neg = (lo - h <= xa) & (xa <= lo + h)
+        pos = (hi - h <= xa) & (xa <= hi + h)
+        first, second = (neg, pos) if a == 0 else (pos, neg)
+        slot |= (~first).astype(np.int64) << a
+        found &= first | second
+    out = tree.children[nodes, slot].astype(np.int64)
+    out[~found] = -1
+    return out
 
 
 def _bulk_insert_weighted(
@@ -345,13 +399,18 @@ def _bulk_insert_weighted(
     ws: np.ndarray,
     wsums: np.ndarray,
 ) -> None:
-    """Batched weighted descents; callers guarantee disjoint subtrees."""
+    """Batched weighted descents: point ``X[:, i]`` (axis-major) carrying
+    ``ws[i]`` coincident copies with sums ``wsums[:, i]``, from node
+    ``starts[i]``.  When an occupied leaf must split, the OLD point is
+    re-seated with its full accumulated weight (insert's rule).  Safe
+    because the caller guarantees the start nodes root DISJOINT subtrees
+    (merge pairs are geometry-aligned, so no two descents touch a node)."""
     cur = starts.astype(np.int64).copy()
     for _ in range(_MAX_DEPTH):
         if not len(cur):
             return
         tree.cum[cur] += ws
-        tree.s[cur] += wsums
+        tree.s[:, cur] += wsums
         leaf = tree.children[cur, 0] == -1
         done = np.zeros(len(cur), dtype=bool)
         if leaf.any():
@@ -361,11 +420,11 @@ def _bulk_insert_weighted(
             seat = l[no_pt]
             sn = cur[seat]
             tree.has_point[sn] = True
-            tree.p[sn] = X[seat]
+            tree.p[:, sn] = X[:, seat]
             done[seat] = True
             occ = l[~no_pt]
             on = cur[occ]
-            coinc = np.all(tree.p[on] == X[occ], axis=1)
+            coinc = np.all(tree.p[:, on] == X[:, occ], axis=0)
             done[occ[coinc]] = True
             split = occ[~coinc]
             if len(split):
@@ -377,29 +436,48 @@ def _bulk_insert_weighted(
             if len(split):
                 snodes = cur[split]
                 ow = tree.cum[snodes] - ws[split]
-                osum = tree.s[snodes] - wsums[split]
-                op = tree.p[snodes].copy()
+                osum = tree.s[:, snodes] - wsums[:, split]
+                op = tree.p[:, snodes]
                 _bulk_subdivide(tree, snodes)
                 tree.has_point[snodes] = False
-                oc = _children_for(tree, snodes, op)
-                v = oc >= 0
-                ocv = oc[v]
-                tree.cum[ocv] += ow[v]
-                tree.s[ocv] += osum[v]
-                tree.has_point[ocv] = True
-                tree.p[ocv] = op[v]
+                _reseat(tree, snodes, op, ow, osum)
         keep = ~done
-        cur, X, ws, wsums = cur[keep], X[keep], ws[keep], wsums[keep]
+        cur, X, ws, wsums = cur[keep], X[:, keep], ws[keep], wsums[:, keep]
         if not len(cur):
             return
         nxt = _children_for(tree, cur, X)
         v = nxt >= 0
-        cur, X, ws, wsums = nxt[v], X[v], ws[v], wsums[v]
+        cur, X, ws, wsums = nxt[v], X[:, v], ws[v], wsums[:, v]
+    # depth guard: remaining descents treated as coincident (as insert does)
+
+
+def _reseat(tree: NDTree, nodes, op, ow, osum) -> None:
+    """Move the points ``op`` (axis-major) with weights ``ow`` and sums
+    ``osum`` from the freshly subdivided ``nodes`` into their children."""
+    oc = _children_for(tree, nodes, op)
+    v = oc >= 0  # 1-ulp FP edge: skip re-seat, keep aggregates
+    ocv = oc[v]
+    tree.cum[ocv] += ow[v]
+    tree.s[:, ocv] += osum[:, v]
+    tree.has_point[ocv] = True
+    tree.p[:, ocv] = op[:, v]
 
 
 def merge_ndtrees(a: NDTree, b: NDTree) -> NDTree:
-    """Structurally merge ``b`` into ``a`` — the d-dimensional counterpart
-    of quadtree.merge_quadtrees (level-synchronous vectorized frontier)."""
+    """Structurally merge ``b`` into ``a`` (both over the same root cell).
+
+    The capacity-1 tree's STRUCTURE is determined by the point set alone (a
+    cell subdivides iff it holds >= 2 distinct points), not the insertion
+    order, so per-partition trees merged pairwise reproduce the tree a
+    sequential build over all points would, with sums equal up to
+    floating-point summation order.  Cell geometry is position-determined,
+    so child slots correspond index-for-index.
+
+    Level-synchronous frontier traversal: frontier pairs are geometry-
+    aligned and unique per level, so the fancy-indexed scatter-adds hit
+    distinct nodes; deferred weighted inserts (b-leaf cases) root disjoint
+    subtrees, so the batched descent is race-free.
+    """
     if b.cum[0] == 0:
         return a
     if a.cum[0] == 0:
@@ -418,42 +496,33 @@ def merge_ndtrees(a: NDTree, b: NDTree) -> NDTree:
         c3 = bleaf & b.has_point[nb]
         if c3.any():
             i = np.flatnonzero(c3)
-            ins.append(
-                (na[i], b.p[nb[i]].copy(), b.cum[nb[i]].copy(), b.s[nb[i]].copy())
-            )
+            ins.append((na[i], b.p[:, nb[i]], b.cum[nb[i]], b.s[:, nb[i]]))
         rest = ~bleaf
         na, nb = na[rest], nb[rest]
         if not len(na):
             break
         aleaf = a.children[na, 0] == -1
         if aleaf.any():
+            # a leaf, b internal: open a up, re-seating its point
             ln = na[aleaf]
-            cum0 = a.cum[ln].copy()
-            s0 = a.s[ln].copy()
-            haspt = a.has_point[ln].copy()
-            op = a.p[ln].copy()
+            hn = ln[a.has_point[ln]]
+            ow, osum, op = a.cum[hn], a.s[:, hn], a.p[:, hn]
             _bulk_subdivide(a, ln)
-            hn = ln[haspt]
             if len(hn):
                 a.has_point[hn] = False
-                oc = _children_for(a, hn, op[haspt])
-                v = oc >= 0
-                ocv = oc[v]
-                a.cum[ocv] += cum0[haspt][v]
-                a.s[ocv] += s0[haspt][v]
-                a.has_point[ocv] = True
-                a.p[ocv] = op[haspt][v]
+                _reseat(a, hn, op, ow, osum)
+        # all a-side internal now: fold stats, pair children index-for-index
         a.cum[na] += b.cum[nb]
-        a.s[na] += b.s[nb]
+        a.s[:, na] += b.s[:, nb]
         na = a.children[na].astype(np.int64).ravel()
         nb = b.children[nb].astype(np.int64).ravel()
     if ins:
         _bulk_insert_weighted(
             a,
             np.concatenate([t[0] for t in ins]),
-            np.concatenate([t[1] for t in ins]),
+            np.concatenate([t[1] for t in ins], axis=1),
             np.concatenate([t[2] for t in ins]),
-            np.concatenate([t[3] for t in ins]),
+            np.concatenate([t[3] for t in ins], axis=1),
         )
     return a
 
@@ -461,11 +530,20 @@ def merge_ndtrees(a: NDTree, b: NDTree) -> NDTree:
 def build_ndtree_distributed(embedding, n_components: int,
                              fix_bounds_mean: bool = False,
                              bounds=None) -> NDTree:
-    """Cluster-side build: per-partition subtrees + treeReduce merge (the
-    pattern of quadtree.build_quadtree_distributed, d-dimensional).
+    """Cluster-side build: per-partition subtrees + treeReduce merge.
 
-    ``bounds``: optional precomputed row with per-axis mins/maxs/means as
-    produced by the aggregate below (keys min_k / max_k / mean_k).
+    Replaces a driver-side collect + build (at 10^8 points a ~1.6 GB
+    per-iteration collect at d=2).  Only a bounds/mean aggregate touches the
+    driver; partitions build local trees over the GLOBAL root cell in
+    parallel and ``treeReduce`` merges them on executors, so the driver
+    receives one finished tree to broadcast.  With the default
+    ``fix_bounds_mean=False`` the root cell matches ``build_ndtree``'s
+    bit-for-bit (DataFrame min/max equal NumPy's exactly).
+
+    ``embedding``: DataFrame with a ``y ARRAY<DOUBLE>`` column.
+    ``bounds``: optional precomputed row with per-axis mins/maxs/means
+    (keys min_k / max_k / mean_k), so callers that already ran the bounds
+    aggregate don't pay a second job.
     """
     import pyspark.sql.functions as F
 

@@ -1,708 +1,8 @@
-"""Barnes-Hut quadtree (2-D), array-backed numpy implementation.
+"""The 2-D Barnes-Hut quadtree is :class:`~tsne_flink_spark.operators.ndtree.NDTree`
+at d=2 (the reference's QuadTree.scala semantics and quirks are recorded in
+operators/ndtree.py).  ``build_quadtree`` remains as an alias of
+``build_ndtree`` for callers that still import it by this name."""
 
-Semantics replicate the reference exactly (QuadTree.scala, Cell.scala),
-including its quirks, so that theta=0 degenerates to the exact gradient and
-golden tests match:
+from tsne_flink_spark.operators.ndtree import build_ndtree as build_quadtree
 
-- node capacity 1; coincident (bit-equal) points accumulate in one leaf
-  (QuadTree.scala:50-63).  DOCUMENTED DIVERGENCE: when such a leaf later
-  splits, the reference re-seats its point once (QuadTree.scala:59),
-  dropping the duplicates' mass insertion-ORDER-dependently — behavior no
-  order-independent distributed build can reproduce.  This engine re-seats
-  the full accumulated weight, so sequential, merged, and distributed
-  builds agree exactly and no mass is lost
-  (tests/test_properties.py::test_quadtree_coincident_points).
-- ``subDivide`` uses hWidth for BOTH child half-dimensions
-  (QuadTree.scala:80-81) — safe because the root is square (quirk Q2).
-- summary condition ``max(hHeight, hWidth) / D < theta`` with D the *squared*
-  distance (QuadTree.scala:133-134), vs. the paper's r_cell/||y_i-y_cell||
-  (quirk Q2).
-- a leaf whose point bit-equals the query point contributes nothing
-  (QuadTree.scala:128).
-- root cell: centered at the embedding mean — which the reference computes as
-  (0,0) by construction (quirk Q1, TsneHelpers.scala:228-229) — with
-  half-extent max(maxX-minX, maxY-minY) (TsneHelpers.scala:246-248).
-
-The tree is built once per iteration on the driver from the collected N x 2
-embedding (tiny: 16 bytes/point) and broadcast; force evaluation is batched —
-a frontier of (node, query) pairs expanded level-by-level entirely in numpy,
-no per-point Python recursion.
-"""
-
-from __future__ import annotations
-
-import numpy as np
-
-_MAX_DEPTH = 64  # guard against pathological near-coincident points
-
-
-class QuadTree:
-    """Flat-array quadtree over 2-D points."""
-
-    def __init__(self, cx: float, cy: float, half_extent: float, capacity_hint: int = 64):
-        n = max(capacity_hint, 16)
-        self.cx = np.zeros(n)
-        self.cy = np.zeros(n)
-        # Cells are all square and halve per level (the reference sizes both
-        # child dimensions by hWidth, QuadTree.scala:80-81, and the root is
-        # square — quirk Q2), so per-node extents are fully determined by
-        # (root half-extent, depth).  Storing a uint8 depth instead of two
-        # float64 extent arrays cuts the serialized tree ~35% — this is the
-        # per-iteration broadcast at scale (303 MB at N=1M before, see
-        # BASELINE.md B11).  half * 2^-depth is exact in IEEE-754, so cell
-        # geometry is bit-identical to the old repeated-halving arrays.
-        self.half = float(half_extent)  # root half-extent
-        self.depth = np.zeros(n, dtype=np.uint8)
-        self.cum = np.zeros(n, dtype=np.int64)
-        self.sx = np.zeros(n)  # running sum of inserted points
-        self.sy = np.zeros(n)
-        self.children = np.full((n, 4), -1, dtype=np.int32)  # NW NE SW SE
-        self.has_point = np.zeros(n, dtype=bool)
-        self.px = np.zeros(n)
-        self.py = np.zeros(n)
-        self.n_nodes = 1
-        self.cx[0], self.cy[0] = cx, cy
-
-    def _half_of(self, node: int) -> float:
-        return self.half / (1 << int(self.depth[node]))
-
-    # -- construction -------------------------------------------------------
-
-    def _grow(self, need: int) -> None:
-        cap = len(self.cx)
-        if self.n_nodes + need <= cap:
-            return
-        new = max(cap * 2, self.n_nodes + need)
-        for name in ("cx", "cy", "sx", "sy", "px", "py"):
-            arr = getattr(self, name)
-            setattr(self, name, np.resize(arr, new))
-        self.depth = np.resize(self.depth, new)
-        self.cum = np.resize(self.cum, new)
-        self.has_point = np.resize(self.has_point, new)
-        ch = np.full((new, 4), -1, dtype=np.int32)
-        ch[: len(self.children)] = self.children
-        self.children = ch
-
-    def _contains(self, node: int, x: float, y: float) -> bool:
-        h = self._half_of(node)
-        return (
-            self.cx[node] - h <= x <= self.cx[node] + h
-            and self.cy[node] - h <= y <= self.cy[node] + h
-        )
-
-    def _subdivide(self, node: int) -> None:
-        # Children sized by hWidth on both axes, as the reference does.
-        nw = 0.5 * self._half_of(node)
-        base = self.n_nodes
-        self._grow(4)
-        offs = ((-nw, nw), (nw, nw), (-nw, -nw), (nw, -nw))  # NW NE SW SE
-        for c, (dx, dy) in enumerate(offs):
-            idx = base + c
-            self.cx[idx] = self.cx[node] + dx
-            self.cy[idx] = self.cy[node] + dy
-            self.depth[idx] = self.depth[node] + 1
-            self.cum[idx] = 0
-            self.sx[idx] = self.sy[idx] = 0.0
-            self.children[idx] = -1
-            self.has_point[idx] = False
-            self.children[node, c] = idx
-        self.n_nodes += 4
-
-    def _child_for(self, node: int, x: float, y: float) -> int:
-        for c in self.children[node]:
-            if c >= 0 and self._contains(c, x, y):
-                return int(c)
-        return -1
-
-    def insert(self, x: float, y: float) -> bool:
-        if not self._contains(0, x, y):
-            return False
-        node = 0
-        for _ in range(_MAX_DEPTH):
-            self.sx[node] += x
-            self.sy[node] += y
-            self.cum[node] += 1
-            if self.children[node, 0] == -1:  # leaf
-                if not self.has_point[node]:
-                    self.has_point[node] = True
-                    self.px[node], self.py[node] = x, y
-                    return True
-                if self.px[node] == x and self.py[node] == y:
-                    return True  # coincident: accumulate in this leaf
-                if self.depth[node] >= _MAX_DEPTH - 1:
-                    # terminal depth: treat the distinct point as coincident
-                    # (accumulate only, keep the seated point, NO subdivide —
-                    # a last-level split would strand mass in children that
-                    # repulsive_forces expands into and drops as empty)
-                    return True
-                # re-seat the old leaf point one level down with its FULL
-                # accumulated weight: the leaf may hold w >= 2 bit-equal
-                # copies (cum/sx/sy below exclude the new point added at
-                # the top of this loop iteration).  Re-seating weight 1
-                # here undercounted cum/sx/sy along the split chain for
-                # coincident-point data, making sequentially built trees
-                # disagree with the (correct-weight) structural merge.
-                ox, oy = self.px[node], self.py[node]
-                ow = int(self.cum[node]) - 1
-                osx = self.sx[node] - x
-                osy = self.sy[node] - y
-                self._subdivide(node)
-                self.has_point[node] = False
-                oc = self._child_for(node, ox, oy)
-                if oc >= 0:  # 1-ulp FP edge: skip re-seat, keep aggregates
-                    self.sx[oc] += osx
-                    self.sy[oc] += osy
-                    self.cum[oc] += ow
-                    self.has_point[oc] = True
-                    self.px[oc], self.py[oc] = ox, oy
-            nxt = self._child_for(node, x, y)
-            if nxt == -1:
-                return False
-            node = nxt
-        # depth guard: treat as coincident with the leaf reached
-        return True
-
-    def __getstate__(self):
-        # serialize compact: _grow leaves up to 2x slack capacity, which
-        # would otherwise ship in every treeReduce hop and tree broadcast
-        self.trim()
-        return self.__dict__
-
-    def trim(self) -> "QuadTree":
-        """Shrink backing arrays to ``n_nodes`` (before serialization)."""
-        n = self.n_nodes
-        for name in ("cx", "cy", "sx", "sy", "px", "py"):
-            setattr(self, name, getattr(self, name)[:n].copy())
-        self.depth = self.depth[:n].copy()
-        self.cum = self.cum[:n].copy()
-        self.has_point = self.has_point[:n].copy()
-        self.children = self.children[:n].copy()
-        return self
-
-    def _insert_weighted(
-        self, x: float, y: float, w: int, wsx: float, wsy: float, start: int = 0
-    ) -> None:
-        """Insert ``w`` coincident copies of (x, y) (aggregate sums
-        ``wsx, wsy``) descending from ``start``.
-
-        Used by the structural merge: a leaf of the other tree may hold
-        multiple bit-equal points, carried here as one weighted insert.  When
-        an occupied leaf must split, the OLD point is re-seated with its full
-        accumulated leaf weight — the same rule the sequential ``insert``
-        applies (a leaf can hold w >= 2 coincident copies before a distinct
-        point arrives and splits it).
-        """
-        node = start
-        for _ in range(_MAX_DEPTH):
-            self.sx[node] += wsx
-            self.sy[node] += wsy
-            self.cum[node] += w
-            if self.children[node, 0] == -1:  # leaf
-                if not self.has_point[node]:
-                    self.has_point[node] = True
-                    self.px[node], self.py[node] = x, y
-                    return
-                if self.px[node] == x and self.py[node] == y:
-                    return  # coincident: accumulate in this leaf
-                if self.depth[node] >= _MAX_DEPTH - 1:
-                    return  # terminal depth: accumulate only (see insert)
-                ow = int(self.cum[node]) - w
-                osx = self.sx[node] - wsx
-                osy = self.sy[node] - wsy
-                ox, oy = self.px[node], self.py[node]
-                self._subdivide(node)
-                self.has_point[node] = False
-                oc = self._child_for(node, ox, oy)
-                if oc >= 0:  # mirror the vectorized `oc >= 0` guard
-                    self.sx[oc] += osx
-                    self.sy[oc] += osy
-                    self.cum[oc] += ow
-                    self.has_point[oc] = True
-                    self.px[oc], self.py[oc] = ox, oy
-            nxt = self._child_for(node, x, y)
-            if nxt == -1:
-                return
-            node = nxt
-        # depth guard: treat as coincident with the leaf reached
-
-    # -- query --------------------------------------------------------------
-
-    def repulsive_forces(
-        self, Q: np.ndarray, theta: float, condition: str = "reference"
-    ) -> tuple[np.ndarray, np.ndarray]:
-        """Batched Barnes-Hut evaluation for query points Q (m, 2).
-
-        Returns (forces (m, 2), sum_q (m,)).  A frontier of (node, query)
-        pairs is expanded breadth-first; at each step every pair is either
-        accumulated (leaf or summary condition) or expanded to 4 children —
-        all in vectorized numpy.
-
-        ``condition``:
-        - "reference": ``max(hH, hW) / D < theta`` with D the SQUARED
-          distance (QuadTree.scala:133-134, quirk Q2).  NOT scale-invariant:
-          on a compressed embedding (early t-SNE iterations, init scale 1e-4)
-          1/D ~ 1e6 dwarfs theta and the evaluation degenerates to exact
-          O(N^2) — exactly what the reference does.
-        - "scaled": ``max(hH, hW) / sqrt(D) < theta`` — the canonical
-          (van der Maaten 2014) scale-invariant criterion; O(N log N) at
-          every scale.  Divergence from the reference is intentional and
-          documented; theta=0 still means exact under both.
-        """
-        m = len(Q)
-        forces = np.zeros((m, 2))
-        sumq = np.zeros(m)
-        if m == 0 or self.cum[0] == 0:
-            return forces, sumq
-
-        nodes = np.zeros(m, dtype=np.int64)
-        queries = np.arange(m, dtype=np.int64)
-
-        while len(nodes):
-            leaf = self.children[nodes, 0] == -1
-            empty = leaf & (self.cum[nodes] == 0)
-            qx, qy = Q[queries, 0], Q[queries, 1]
-            self_leaf = leaf & self.has_point[nodes] & (
-                (self.px[nodes] == qx) & (self.py[nodes] == qy)
-            )
-            drop = empty | self_leaf
-
-            com_x = self.sx[nodes] / np.maximum(self.cum[nodes], 1)
-            com_y = self.sy[nodes] / np.maximum(self.cum[nodes], 1)
-            dx = qx - com_x
-            dy = qy - com_y
-            D = dx * dx + dy * dy
-            denom = np.sqrt(D) if condition == "scaled" else D
-            # cell extent = half * 2^-depth (exact), max(hH, hW) == extent
-            # since every cell is square
-            extent = self.half * np.exp2(-self.depth[nodes].astype(np.float64))
-            with np.errstate(divide="ignore", invalid="ignore"):
-                summary = extent / denom < theta
-            accept = ~drop & (leaf | summary)
-
-            if accept.any():
-                a = np.flatnonzero(accept)
-                q = 1.0 / (1.0 + D[a])
-                mult = self.cum[nodes[a]] * q
-                qa = queries[a]
-                sumq += np.bincount(qa, weights=mult, minlength=m)
-                forces[:, 0] += np.bincount(qa, weights=mult * q * dx[a], minlength=m)
-                forces[:, 1] += np.bincount(qa, weights=mult * q * dy[a], minlength=m)
-
-            expand = ~drop & ~accept
-            if expand.any():
-                e = np.flatnonzero(expand)
-                child_nodes = self.children[nodes[e]]  # (k, 4)
-                nodes = child_nodes.ravel()
-                queries = np.repeat(queries[e], 4)
-            else:
-                break
-        return forces, sumq
-
-
-def build_quadtree(
-    Y: np.ndarray, fix_bounds_mean: bool = False
-) -> QuadTree:
-    """Build the tree for an N x 2 embedding, replicating the reference's
-    root-cell construction (TsneHelpers.scala:228-248).
-
-    With ``fix_bounds_mean=False`` (reference parity) the root is centered at
-    (0, 0) — the reference's "mean" is a zero vector by construction (Q1).
-    With True, the actual mean is used.
-    """
-    if fix_bounds_mean and len(Y):
-        mx, my = float(Y[:, 0].mean()), float(Y[:, 1].mean())
-    else:
-        mx, my = 0.0, 0.0
-    if len(Y):
-        half = max(
-            float(Y[:, 0].max() - Y[:, 0].min()),
-            float(Y[:, 1].max() - Y[:, 1].min()),
-        )
-    else:
-        half = 1.0
-    tree = QuadTree(mx, my, half, capacity_hint=4 * max(len(Y), 16))
-    return _bulk_build(tree, np.asarray(Y, dtype=np.float64).reshape(-1, 2))
-
-
-def _bulk_build(tree: QuadTree, P: np.ndarray) -> QuadTree:
-    """Vectorized level-synchronous construction into a FRESH (root-only)
-    tree — equivalent to inserting every row of ``P`` sequentially (same
-    structure: a node subdivides iff >= 2 distinct points fall in it; same
-    cum/sx/sy totals up to float-sum reassociation; coincident rows
-    accumulate in one leaf via the full-weight re-seat rule this class
-    already makes order-independent).  Each descent level is one batch of
-    numpy ops instead of a per-point Python loop — the same rewrite as
-    ndtree._bulk_build, gated by
-    tests/test_quadtree_distributed.py::test_bulk_build_equals_sequential_insert.
-
-    Depth-guard semantics (shared with insert/_insert_weighted): a leaf at
-    depth _MAX_DEPTH-1 never subdivides; still-distinct survivors
-    accumulate there as a terminal leaf seated with the lexicographically
-    first point (insert seats whichever arrived first, so the two agree
-    under lex-ordered insertion; see test_depth_exhaustion_terminal_leaf).
-    """
-    if not len(P):
-        return tree
-    inside = (np.abs(P[:, 0] - tree.cx[0]) <= tree.half) & (
-        np.abs(P[:, 1] - tree.cy[0]) <= tree.half
-    )
-    X = P[inside]
-    if not len(X):
-        return tree
-    pts, counts = np.unique(X, axis=0, return_counts=True)
-    w = counts.astype(np.int64)
-    wsx = pts[:, 0] * counts
-    wsy = pts[:, 1] * counts
-    cur = np.zeros(len(pts), dtype=np.int64)
-    for lvl in range(_MAX_DEPTH):
-        np.add.at(tree.cum, cur, w)
-        np.add.at(tree.sx, cur, wsx)
-        np.add.at(tree.sy, cur, wsy)
-        uniq, inv, cnt = np.unique(cur, return_inverse=True, return_counts=True)
-        alone = cnt[inv] == 1
-        if alone.any():
-            sn = cur[alone]
-            tree.has_point[sn] = True
-            tree.px[sn] = pts[alone, 0]
-            tree.py[sn] = pts[alone, 1]
-        keep = ~alone
-        cur, pts = cur[keep], pts[keep]
-        w, wsx, wsy = w[keep], wsx[keep], wsy[keep]
-        if not len(cur):
-            break
-        if lvl == _MAX_DEPTH - 1:
-            # terminal depth: accumulate-only leaves (matching insert's
-            # terminal rule — no massless last-level subdivide).  Seat the
-            # lexicographically-first point of each survivor group, the
-            # order-independent counterpart of insert seating whichever
-            # point arrived first.
-            order = np.lexsort((pts[:, 1], pts[:, 0], cur))
-            sc, sp = cur[order], pts[order]
-            first = np.r_[True, sc[1:] != sc[:-1]]
-            tree.has_point[sc[first]] = True
-            tree.px[sc[first]] = sp[first, 0]
-            tree.py[sc[first]] = sp[first, 1]
-            break
-        # remaining nodes hold >= 2 distinct points: split and descend.
-        # _children_for replicates insert's first-containing-child scan,
-        # including the 1-ulp no-containing-child drop edge (mass stays in
-        # the ancestors, exactly like insert returning False mid-descent).
-        _bulk_subdivide(tree, np.unique(cur))
-        nxt = _children_for(tree, cur, pts[:, 0], pts[:, 1])
-        v = nxt >= 0
-        cur, pts = nxt[v], pts[v]
-        w, wsx, wsy = w[v], wsx[v], wsy[v]
-    return tree
-
-
-def _bulk_subdivide(tree: QuadTree, nodes: np.ndarray) -> None:
-    """Subdivide many (unique) leaf nodes at once — the vectorized
-    counterpart of ``_subdivide``, bit-identical cell geometry
-    (half * 2^-(depth+1) equals repeated halving exactly in IEEE-754)."""
-    k = len(nodes)
-    if k == 0:
-        return
-    base = tree.n_nodes
-    tree._grow(4 * k)
-    nw = tree.half * np.exp2(-(tree.depth[nodes].astype(np.float64) + 1.0))
-    child_idx = base + 4 * np.arange(k, dtype=np.int64)[:, None] + np.arange(4)[None, :]
-    offs_x = np.array([-1.0, 1.0, -1.0, 1.0])  # NW NE SW SE
-    offs_y = np.array([1.0, 1.0, -1.0, -1.0])
-    flat = child_idx.ravel()
-    tree.cx[flat] = (tree.cx[nodes][:, None] + nw[:, None] * offs_x[None, :]).ravel()
-    tree.cy[flat] = (tree.cy[nodes][:, None] + nw[:, None] * offs_y[None, :]).ravel()
-    tree.depth[flat] = np.repeat(tree.depth[nodes] + 1, 4)
-    tree.cum[flat] = 0
-    tree.sx[flat] = 0.0
-    tree.sy[flat] = 0.0
-    tree.has_point[flat] = False
-    tree.children[flat] = -1
-    tree.children[nodes] = child_idx.astype(np.int32)
-    tree.n_nodes += 4 * k
-
-
-def _children_for(tree: QuadTree, nodes: np.ndarray, x: np.ndarray, y: np.ndarray) -> np.ndarray:
-    """Vectorized ``_child_for``: first containing child in NW,NE,SW,SE
-    order (ties on shared cell boundaries resolve identically), -1 if none.
-    ``nodes`` must all be internal."""
-    ch = tree.children[nodes].astype(np.int64)  # (k, 4)
-    h = tree.half * np.exp2(-tree.depth[ch[:, 0]].astype(np.float64))  # child half
-    cxs, cys = tree.cx[ch], tree.cy[ch]
-    hcol = h[:, None]
-    cont = (
-        (cxs - hcol <= x[:, None])
-        & (x[:, None] <= cxs + hcol)
-        & (cys - hcol <= y[:, None])
-        & (y[:, None] <= cys + hcol)
-    )
-    first = np.argmax(cont, axis=1)
-    rows = np.arange(len(nodes))
-    return np.where(cont[rows, first], ch[rows, first], -1)
-
-
-def _bulk_insert_weighted(
-    tree: QuadTree,
-    starts: np.ndarray,
-    xs: np.ndarray,
-    ys: np.ndarray,
-    ws: np.ndarray,
-    wsxs: np.ndarray,
-    wsys: np.ndarray,
-) -> None:
-    """Vectorized batch of ``_insert_weighted`` descents.  Safe because the
-    caller guarantees the start nodes root DISJOINT subtrees (merge pairs
-    are geometry-aligned, so no two descents ever touch the same node)."""
-    cur = starts.astype(np.int64).copy()
-    for _ in range(_MAX_DEPTH):
-        if not len(cur):
-            return
-        tree.cum[cur] += ws
-        tree.sx[cur] += wsxs
-        tree.sy[cur] += wsys
-        leaf = tree.children[cur, 0] == -1
-        done = np.zeros(len(cur), dtype=bool)
-        if leaf.any():
-            l = np.flatnonzero(leaf)
-            ln = cur[l]
-            no_pt = ~tree.has_point[ln]
-            seat = l[no_pt]
-            sn = cur[seat]
-            tree.has_point[sn] = True
-            tree.px[sn] = xs[seat]
-            tree.py[sn] = ys[seat]
-            done[seat] = True
-            occ = l[~no_pt]
-            on = cur[occ]
-            coinc = (tree.px[on] == xs[occ]) & (tree.py[on] == ys[occ])
-            done[occ[coinc]] = True
-            split = occ[~coinc]
-            if len(split):
-                # terminal depth: accumulate only, never subdivide (same
-                # rule as insert/_insert_weighted/_bulk_build)
-                term = tree.depth[cur[split]] >= _MAX_DEPTH - 1
-                done[split[term]] = True
-                split = split[~term]
-            if len(split):
-                snodes = cur[split]
-                ow = tree.cum[snodes] - ws[split]
-                osx = tree.sx[snodes] - wsxs[split]
-                osy = tree.sy[snodes] - wsys[split]
-                opx = tree.px[snodes].copy()
-                opy = tree.py[snodes].copy()
-                _bulk_subdivide(tree, snodes)
-                tree.has_point[snodes] = False
-                oc = _children_for(tree, snodes, opx, opy)
-                v = oc >= 0
-                ocv = oc[v]
-                tree.cum[ocv] += ow[v]
-                tree.sx[ocv] += osx[v]
-                tree.sy[ocv] += osy[v]
-                tree.has_point[ocv] = True
-                tree.px[ocv] = opx[v]
-                tree.py[ocv] = opy[v]
-        keep = ~done
-        cur, xs, ys, ws, wsxs, wsys = (
-            cur[keep], xs[keep], ys[keep], ws[keep], wsxs[keep], wsys[keep]
-        )
-        if not len(cur):
-            return
-        nxt = _children_for(tree, cur, xs, ys)
-        v = nxt >= 0
-        cur, xs, ys, ws, wsxs, wsys = (
-            nxt[v], xs[v], ys[v], ws[v], wsxs[v], wsys[v]
-        )
-    # depth guard: remaining descents treated as coincident (as scalar does)
-
-
-def merge_quadtrees(a: QuadTree, b: QuadTree) -> QuadTree:
-    """Structurally merge ``b`` into ``a`` — vectorized level-synchronous
-    frontier traversal (same semantics as ``merge_quadtrees_scalar``; the
-    per-node-pair Python loop was the distributed build's bottleneck at
-    N=1M: ~10 s per big merge, 62 s for the whole reduce chain measured).
-
-    Frontier pairs are geometry-aligned and unique per level, so all the
-    fancy-indexed scatter-adds hit distinct nodes; deferred weighted
-    inserts (b-leaf cases) root disjoint subtrees, so the batched descent
-    is race-free.  FP sums may differ from the scalar merge in summation
-    order only.
-    """
-    if b.cum[0] == 0:
-        return a
-    if a.cum[0] == 0:
-        return b
-    if a.n_nodes < b.n_nodes:
-        a, b = b, a
-    na = np.zeros(1, dtype=np.int64)
-    nb = np.zeros(1, dtype=np.int64)
-    ins: list[tuple[np.ndarray, ...]] = []
-    while len(na):
-        live = b.cum[nb] > 0
-        na, nb = na[live], nb[live]
-        if not len(na):
-            break
-        bleaf = b.children[nb, 0] == -1
-        c3 = bleaf & b.has_point[nb]
-        if c3.any():
-            i = np.flatnonzero(c3)
-            ins.append(
-                (
-                    na[i],
-                    b.px[nb[i]].copy(),
-                    b.py[nb[i]].copy(),
-                    b.cum[nb[i]].copy(),
-                    b.sx[nb[i]].copy(),
-                    b.sy[nb[i]].copy(),
-                )
-            )
-        rest = ~bleaf
-        na, nb = na[rest], nb[rest]
-        if not len(na):
-            break
-        aleaf = a.children[na, 0] == -1
-        if aleaf.any():
-            ln = na[aleaf]
-            cum0 = a.cum[ln].copy()
-            sx0 = a.sx[ln].copy()
-            sy0 = a.sy[ln].copy()
-            haspt = a.has_point[ln].copy()
-            opx = a.px[ln].copy()
-            opy = a.py[ln].copy()
-            _bulk_subdivide(a, ln)
-            hn = ln[haspt]
-            if len(hn):
-                a.has_point[hn] = False
-                oc = _children_for(a, hn, opx[haspt], opy[haspt])
-                v = oc >= 0
-                ocv = oc[v]
-                a.cum[ocv] += cum0[haspt][v]
-                a.sx[ocv] += sx0[haspt][v]
-                a.sy[ocv] += sy0[haspt][v]
-                a.has_point[ocv] = True
-                a.px[ocv] = opx[haspt][v]
-                a.py[ocv] = opy[haspt][v]
-        # all a-side internal now: fold stats, pair children index-for-index
-        a.cum[na] += b.cum[nb]
-        a.sx[na] += b.sx[nb]
-        a.sy[na] += b.sy[nb]
-        na = a.children[na].astype(np.int64).ravel()
-        nb = b.children[nb].astype(np.int64).ravel()
-    if ins:
-        _bulk_insert_weighted(
-            a,
-            np.concatenate([t[0] for t in ins]),
-            np.concatenate([t[1] for t in ins]),
-            np.concatenate([t[2] for t in ins]),
-            np.concatenate([t[3] for t in ins]),
-            np.concatenate([t[4] for t in ins]),
-            np.concatenate([t[5] for t in ins]),
-        )
-    return a
-
-
-def merge_quadtrees_scalar(a: QuadTree, b: QuadTree) -> QuadTree:
-    """Reference scalar merge (kept for equivalence testing).
-
-    The capacity-1 PR quadtree's STRUCTURE is determined by the point set
-    alone (a cell subdivides iff it contains >= 2 distinct points), not the
-    insertion order — so per-partition trees merged pairwise produce the
-    same tree a sequential build over all points would, with aggregate sums
-    (cum/sx/sy) equal up to floating-point summation order.  Cell geometry
-    is position-determined (identical root => identical child coordinates in
-    every tree), so child slots correspond index-for-index.
-
-    Cost: O(nodes of the smaller tree) pair visits, each O(1) plus at most
-    one subdivision chain bounded by the other tree's depth.
-    """
-    if b.cum[0] == 0:
-        return a
-    if a.cum[0] == 0:
-        return b
-    if a.n_nodes < b.n_nodes:
-        a, b = b, a
-    stack: list[tuple[int, int]] = [(0, 0)]
-    while stack:
-        na, nb = stack.pop()
-        if b.cum[nb] == 0:
-            continue
-        if b.children[nb, 0] == -1:  # b leaf (with >= 1 point)
-            if b.has_point[nb]:
-                a._insert_weighted(
-                    float(b.px[nb]),
-                    float(b.py[nb]),
-                    int(b.cum[nb]),
-                    float(b.sx[nb]),
-                    float(b.sy[nb]),
-                    start=na,
-                )
-            continue
-        if a.children[na, 0] == -1:  # a leaf, b internal: open a up
-            cum, sx, sy = int(a.cum[na]), float(a.sx[na]), float(a.sy[na])
-            a._subdivide(na)
-            if a.has_point[na]:
-                ox, oy = float(a.px[na]), float(a.py[na])
-                a.has_point[na] = False
-                oc = a._child_for(na, ox, oy)
-                if oc >= 0:  # mirror the vectorized `oc >= 0` guard
-                    a.sx[oc] += sx
-                    a.sy[oc] += sy
-                    a.cum[oc] += cum
-                    a.has_point[oc] = True
-                    a.px[oc], a.py[oc] = ox, oy
-            stack.append((na, nb))
-            continue
-        # both internal: fold b's subtree stats in, pair up children
-        a.cum[na] += b.cum[nb]
-        a.sx[na] += b.sx[nb]
-        a.sy[na] += b.sy[nb]
-        for c in range(4):
-            stack.append((int(a.children[na, c]), int(b.children[nb, c])))
-    return a
-
-
-def build_quadtree_distributed(
-    embedding, fix_bounds_mean: bool = False, bounds=None
-) -> QuadTree:
-    """Cluster-side quadtree build: per-partition subtrees + treeReduce merge.
-
-    Replaces the driver-side ``collect()`` + sequential Python insert loop
-    (the flagship query's scale ceiling — at 10^8 points that is a ~1.6 GB
-    per-iteration driver collect plus a single-threaded build, x300
-    iterations).  Here only a 6-value bounds/mean aggregate touches the
-    driver; partitions build local trees over the GLOBAL root cell in
-    parallel and ``treeReduce`` merges them on executors, so the driver
-    receives one finished tree to broadcast.
-
-    Root-cell construction matches ``build_quadtree`` bit-for-bit with the
-    default ``fix_bounds_mean=False`` (center (0,0), half-extent from global
-    min/max — DataFrame min/max equals numpy min/max exactly).
-
-    ``embedding``: DataFrame with a ``y ARRAY<DOUBLE>`` column (2-D).
-    ``bounds``: optional precomputed bounds row (any mapping with keys
-    x0/x1/y0/y1/mx/my) so callers that already ran the bounds aggregate
-    this iteration (the auto/summary dispatch) don't pay a second job.
-    """
-    import pyspark.sql.functions as F
-
-    b = bounds if bounds is not None else embedding.agg(
-        F.min(F.col("y")[0]).alias("x0"),
-        F.max(F.col("y")[0]).alias("x1"),
-        F.min(F.col("y")[1]).alias("y0"),
-        F.max(F.col("y")[1]).alias("y1"),
-        F.avg(F.col("y")[0]).alias("mx"),
-        F.avg(F.col("y")[1]).alias("my"),
-    ).first()
-    if b is None or b["x0"] is None:  # empty input
-        return QuadTree(0.0, 0.0, 1.0)
-    mx, my = (float(b["mx"]), float(b["my"])) if fix_bounds_mean else (0.0, 0.0)
-    half = max(float(b["x1"] - b["x0"]), float(b["y1"] - b["y0"]))
-
-    def build_part(rows):
-        pts = [r["y"] for r in rows]
-        if not pts:
-            return
-        t = QuadTree(mx, my, half, capacity_hint=4 * max(len(pts), 16))
-        _bulk_build(t, np.asarray(pts, dtype=np.float64).reshape(-1, 2))
-        yield t.trim()
-
-    trees = embedding.select("y").rdd.mapPartitions(build_part)
-    return trees.treeReduce(merge_quadtrees, depth=2)
+__all__ = ["build_quadtree"]

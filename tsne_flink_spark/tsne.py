@@ -59,6 +59,12 @@ class TSNE:
     dimension: int | None = None
     loss_records: list = field(default_factory=list)
 
+    def __post_init__(self) -> None:
+        if self.n_components < 1:
+            raise ValueError(
+                f"n_components must be >= 1, got {self.n_components}"
+            )
+
     @property
     def _k(self) -> int:
         return self.neighbors if self.neighbors is not None else 3 * int(self.perplexity)
