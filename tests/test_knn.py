@@ -33,21 +33,69 @@ def test_partition_knn_equals_bruteforce(spark, knn_points):
     assert result == set(KNN_RESULTS)
 
 
-def test_partition_knn_matches_bruteforce_larger(spark):
+@pytest.mark.parametrize(
+    "metric, d, blocks, coincident",
+    [
+        pytest.param("sqeuclidean", 16, 4, False, id="sqeuclidean-d16"),
+        pytest.param("sqeuclidean", 9, 4, True, id="sqeuclidean-d9-coincident"),
+        # above _UNROLL_MAX_DIM the Column side is the flat HOF fold
+        pytest.param("euclidean", 300, 4, False, id="euclidean-d300"),
+        pytest.param("cosine", 16, 4, False, id="cosine-d16"),
+        pytest.param("sqeuclidean", 16, 7, False, id="sqeuclidean-d16-blocks7"),
+    ],
+)
+def test_partition_knn_matches_bruteforce_larger(spark, metric, d, blocks, coincident):
     import numpy as np
 
     rng = np.random.default_rng(42)
-    pts = [(i, rng.uniform(0, 1, 16).tolist()) for i in range(120)]
-    df = points_from_rows(spark, pts)
+    X = rng.uniform(0, 1, (120, d))
+    if coincident:
+        X[10:16] = X[9]  # 7 coincident points: ties at the k-th distance (Q6)
+    df = points_from_rows(spark, [(i, X[i].tolist()) for i in range(120)])
     brute = {
         (r["i"], r["j"], r["v"])
-        for r in k_nearest_neighbors(df, 5).collect()
+        for r in k_nearest_neighbors(df, 5, metric).collect()
     }
     blocked = {
         (r["i"], r["j"], r["v"])
-        for r in partition_knn(df, 5, blocks=4).collect()
+        for r in partition_knn(df, 5, metric, blocks=blocks).collect()
     }
     assert blocked == brute  # bit-for-bit, including distances
+
+
+def test_partition_knn_one_block_per_task_no_window(spark):
+    """Counter guard that host noise cannot move: no Window in the plan,
+    one output partition per block, and each block's points computed in a
+    partition of their own (a single Python task owns a block and merges
+    its top-k over all blocks)."""
+    import numpy as np
+
+    rng = np.random.default_rng(3)
+    blocks = 5
+    df = points_from_rows(
+        spark, [(i, rng.normal(0, 1, 4).tolist()) for i in range(60)]
+    )
+    out = partition_knn(df, 3, blocks=blocks)
+    assert "Window" not in out._jdf.queryExecution().executedPlan().toString()
+    assert out.rdd.getNumPartitions() == blocks
+    placed = (
+        out.select(F.spark_partition_id().alias("p"), F.pmod("i", F.lit(blocks)).alias("b"))
+        .distinct()
+        .collect()
+    )
+    assert len(placed) == blocks
+    assert len({r["p"] for r in placed}) == len({r["b"] for r in placed}) == blocks
+
+
+def test_partition_knn_rejects_non_finite_features(spark):
+    import numpy as np
+
+    rng = np.random.default_rng(11)
+    X = rng.normal(0, 1, (40, 3))
+    X[17, 1] = np.nan
+    df = points_from_rows(spark, [(i, X[i].tolist()) for i in range(40)])
+    with pytest.raises(Exception, match="point id 17 has a non-finite feature"):
+        partition_knn(df, 5, blocks=4).collect()
 
 
 def test_project_knn_recall(spark):
@@ -218,3 +266,99 @@ def test_hilbert_transform_3d_bijection():
     walk = coords[order].astype(np.int64)
     steps = np.abs(np.diff(walk, axis=0)).sum(axis=1)
     assert (steps == 1).all()
+
+
+# ---------------------------------------------------------------------------
+# partition_knn's NumPy helpers (no Spark)
+# ---------------------------------------------------------------------------
+
+
+def _chunked_fold(d, term):
+    """The Column expressions' association, one whole term per dimension:
+    left fold within chunks of 8, chunk sums added left to right; a flat
+    left fold above 256 dimensions (the HOF ``aggregate`` fallback)."""
+    csize = 8 if d <= 256 else d
+    total = None
+    for start in range(0, d, csize):
+        acc = term(start).copy()
+        for k in range(start + 1, min(start + csize, d)):
+            acc += term(k)
+        total = acc if total is None else total + acc
+    return total
+
+
+def _fold_reference(metric, A, B):
+    """Distances folded by ``_chunked_fold`` over the last axis; A and B
+    broadcast: (n,1,d) x (1,m,d) for all pairs, (n,d) x (n,d) row-paired."""
+    import numpy as np
+
+    d = A.shape[-1]
+    if metric == "cosine":
+        def norm(X):
+            return np.sqrt(_chunked_fold(d, lambda k: X[..., k] * X[..., k]))
+
+        dot = _chunked_fold(d, lambda k: A[..., k] * B[..., k])
+        return 1.0 - dot / (norm(A) * norm(B))
+
+    def term(k):
+        t = A[..., k] - B[..., k]
+        return t * t
+
+    sq = _chunked_fold(d, term)
+    return np.sqrt(sq) if metric == "euclidean" else sq
+
+
+@pytest.mark.parametrize("metric", ["sqeuclidean", "euclidean", "cosine"])
+@pytest.mark.parametrize("d", [1, 8, 9, 17, 32, 257])
+def test_numpy_metric_folds_are_bit_identical(monkeypatch, metric, d):
+    import numpy as np
+
+    from tsne_flink_spark.functions import metrics
+
+    rng = np.random.default_rng(d)
+    fn = metrics.numpy_metric(metric)
+    for n, m, tile in ((1, 1, None), (37, 53, None), (37, 53, 5 * 53 + 3)):
+        if tile is not None:  # several row tiles, the last one partial
+            monkeypatch.setattr(metrics, "_TILE_ELEMS", tile)
+        A, B = rng.normal(size=(n, d)), rng.normal(size=(m, d))
+        got, want = fn(A, B), _fold_reference(metric, A[:, None], B[None])
+        assert got.shape == (n, m)
+        assert got.tobytes() == want.tobytes()
+    A, B = rng.normal(size=(41, d)), rng.normal(size=(41, d))
+    got = metrics.numpy_row_metric(metric)(A, B)
+    assert got.tobytes() == _fold_reference(metric, A, B).tobytes()
+
+
+def test_block_kernel_tiles_match_bruteforce(monkeypatch):
+    """The block kernel on hand-built Arrow batches (two placed blocks in
+    one task, several row tiles) against a NumPy brute force."""
+    import numpy as np
+    import pyarrow as pa
+
+    from tsne_flink_spark.operators import knn
+
+    rng = np.random.default_rng(8)
+    n, d, k, nb = 30, 3, 4, 3
+    X = rng.normal(size=(n, d))
+    X[5] = X[8]  # a coincident pair stays neighbours
+    ids = np.arange(n)
+    blocks = {b: ids[ids % nb == b] for b in range(nb)}
+    rows = [(a, b) for a in (0, 2) for b in range(nb)]
+    batch = pa.RecordBatch.from_pydict({
+        "block_a": [a for a, _ in rows],
+        "block": [b for _, b in rows],
+        "ids": [blocks[b].tolist() for _, b in rows],
+        "mat": [X[blocks[b]].ravel().tolist() for _, b in rows],
+    })
+    monkeypatch.setattr(knn, "_BLOCK_TILE_ELEMS", 4 * n)
+    out = pa.Table.from_batches(list(knn._block_kernel(k, "sqeuclidean")([batch])))
+    got = set(zip(*(out.column(c).to_pylist() for c in "ijv")))
+
+    want = set()
+    for i in np.concatenate([blocks[0], blocks[2]]):
+        D = ((X[i] - X) ** 2).sum(axis=1)
+        D[i] = np.inf
+        order = np.lexsort((ids, D))[:k]
+        want |= {(int(i), int(j), float(D[j])) for j in order}
+    assert {(i, j) for i, j, _ in got} == {(i, j) for i, j, _ in want}
+    assert np.allclose(sorted(v for *_, v in got), sorted(v for *_, v in want))

@@ -36,6 +36,8 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument(
         "--knnMethod", choices=["bruteforce", "partition", "project"],
         default="bruteforce",
+        help="'partition' broadcasts all features (8*N*d bytes held by the "
+             "driver and each executor); 'project' is the path for scale",
     )
     p.add_argument("--inputDistanceMatrix", action="store_true")
     p.add_argument("--metric", default="sqeuclidean",

@@ -1,6 +1,5 @@
 from tsne_flink_spark.functions.metrics import (
     METRICS,
-    NUMPY_METRICS,
     cosine,
     euclidean,
     metric_expr,
@@ -10,7 +9,6 @@ from tsne_flink_spark.functions.metrics import (
 
 __all__ = [
     "METRICS",
-    "NUMPY_METRICS",
     "cosine",
     "euclidean",
     "metric_expr",

@@ -1,5 +1,5 @@
 """Distance metrics as native Column expressions (JVM-side, codegen-friendly)
-plus vectorized numpy twins for the pandas-UDF paths.
+plus vectorized numpy twins for the Arrow-batched Python kernels.
 
 Reference: Tsne.scala:161-168 (``getMetric``: sqeuclidean | euclidean |
 cosine).  The Column variants keep the distance math inside whole-stage
@@ -118,89 +118,101 @@ def metric_expr(name: str, a: Column, b: Column, dim: int | None = None) -> Colu
     form (identical FP results)."""
     if dim is not None and 0 < dim <= _UNROLL_MAX_DIM and name in UNROLLED_METRICS:
         return UNROLLED_METRICS[name](a, b, dim)
-    try:
-        return METRICS[name](a, b)
-    except KeyError:
-        raise ValueError(f"unknown metric {name!r}; expected one of {sorted(METRICS)}")
+    return _lookup(METRICS, name)(a, b)
 
 
 # ---------------------------------------------------------------------------
-# numpy twins — used inside blocked kNN pandas UDFs, where a whole
-# block-vs-block distance matrix is computed at once, and (row-paired) in the
-# fused t-SNE kernel's attraction.
+# numpy twins, bit-identical to ``metric_expr(name, a, b, dim=d)``: all-pairs
+# inside the blocked kNN kernel, row-paired in the fused t-SNE kernel's
+# attraction (one distance per P edge).
 # ---------------------------------------------------------------------------
+
+
+def _fold_into(a_cols, b_cols, term, out: np.ndarray) -> np.ndarray:
+    """``out`` = the sum over dims k of ``term(a_cols[k], b_cols[k])``, with
+    the SAME association as the Column expressions: left fold within chunks
+    of ``_CSE_CHUNK``, chunk sums added left to right — ``_chunked_sum``
+    bit-for-bit for d <= _UNROLL_MAX_DIM, and a flat left fold beyond (where
+    the Column path falls back to the flat HOF ``aggregate``).  In place:
+    ``term(a, b, dst)`` writes into ``dst``, and chunk 0 folds straight into
+    ``out``."""
+    d = len(a_cols)
+    csize = _CSE_CHUNK if d <= _UNROLL_MAX_DIM else d
+    tmp = np.empty_like(out)
+    acc = np.empty_like(out) if d > csize else None
+    for start in range(0, d, csize):
+        dst = out if start == 0 else acc
+        term(a_cols[start], b_cols[start], dst)
+        for k in range(start + 1, min(start + csize, d)):
+            term(a_cols[k], b_cols[k], tmp)
+            dst += tmp
+        if start:
+            out += acc
+    return out
+
+
+def _sq_diff(a, b, out):
+    np.subtract(a, b, out=out)
+    np.multiply(out, out, out=out)
+
+
+def _product(a, b, out):
+    np.multiply(a, b, out=out)
+
+
+# Row tile of the all-pairs fold: 2^15 doubles (256 KB) of accumulator
+# stay in L2.
+_TILE_ELEMS = 1 << 15
+
+
+def _pairwise(A: np.ndarray, B: np.ndarray, term) -> np.ndarray:
+    """(n,d) x (m,d) -> (n,m), folded over row tiles of A."""
+    AT, BT = np.ascontiguousarray(A.T), np.ascontiguousarray(B.T)
+    out = np.empty((len(A), len(B)))
+    step = max(1, _TILE_ELEMS // max(len(B), 1))
+    for r0 in range(0, len(A), step):
+        _fold_into(AT[:, r0:r0 + step, None], BT, term, out[r0:r0 + step])
+    return out
+
+
+def _rows(A: np.ndarray, B: np.ndarray, term) -> np.ndarray:
+    """(n,d) x (n,d) -> (n,): row r of A against row r of B."""
+    return _fold_into(A.T, B.T, term, np.empty(len(A)))
+
+
+def _norms(X: np.ndarray) -> np.ndarray:
+    return np.sqrt(_rows(X, X, _product))
 
 
 def np_sqeuclidean(A: np.ndarray, B: np.ndarray) -> np.ndarray:
-    """All-pairs squared Euclidean distances: (n,d) x (m,d) -> (n,m)."""
-    aa = np.sum(A * A, axis=1)[:, None]
-    bb = np.sum(B * B, axis=1)[None, :]
-    d = aa + bb - 2.0 * (A @ B.T)
-    np.maximum(d, 0.0, out=d)
-    return d
-
-
-def _np_chunked_fold(d: int, term):
-    """Accumulate ``term(k)`` over dims with the SAME association as the
-    Column expressions: left fold within chunks of ``_CSE_CHUNK``, chunk sums
-    added left-to-right — matching ``_chunked_sum`` bit-for-bit for
-    d <= _UNROLL_MAX_DIM, and flat left fold beyond that (where the Column
-    path falls back to the flat HOF ``aggregate``)."""
-    csize = _CSE_CHUNK if d <= _UNROLL_MAX_DIM else d
-    total = None
-    for start in range(0, d, csize):
-        acc = term(start).copy()
-        for k in range(start + 1, min(start + csize, d)):
-            acc += term(k)
-        total = acc if total is None else total + acc
-    return total
-
-
-def np_sqeuclidean_seq(A: np.ndarray, B: np.ndarray) -> np.ndarray:
-    """All-pairs squared Euclidean with the Column expressions' accumulation
-    order (chunked fold — see ``_np_chunked_fold``/``_chunked_sum``).
-
-    Bit-identical to ``sqeuclidean_unrolled`` (dim <= _UNROLL_MAX_DIM) and
-    the ``sqeuclidean`` HOF fold (beyond), unlike the GEMM formulation which
-    rounds differently.  Used by ``partition_knn`` so blocked evaluation
-    equals brute force exactly (the reference's own guarantee:
-    TsneHelpers.scala:61-91 is blocked evaluation, not approximation).
-    """
-
-    def term(k):
-        d = A[:, k][:, None] - B[:, k][None, :]
-        return d * d
-
-    return _np_chunked_fold(A.shape[1], term)
+    """All-pairs squared Euclidean distances.  Used by ``partition_knn`` so
+    blocked evaluation equals brute force exactly (the reference's own
+    guarantee: TsneHelpers.scala:61-91 is blocked evaluation, not
+    approximation); a GEMM formulation rounds differently."""
+    return _pairwise(A, B, _sq_diff)
 
 
 def np_euclidean(A: np.ndarray, B: np.ndarray) -> np.ndarray:
-    return np.sqrt(np_sqeuclidean(A, B))
+    D = np_sqeuclidean(A, B)
+    return np.sqrt(D, out=D)
 
 
 def np_cosine(A: np.ndarray, B: np.ndarray) -> np.ndarray:
-    na = np.linalg.norm(A, axis=1)[:, None]
-    nb = np.linalg.norm(B, axis=1)[None, :]
-    return 1.0 - (A @ B.T) / (na * nb)
+    D = _pairwise(A, B, _product)
+    np.divide(D, _norms(A)[:, None] * _norms(B)[None, :], out=D)
+    return np.subtract(1.0, D, out=D)
 
 
-def np_euclidean_seq(A: np.ndarray, B: np.ndarray) -> np.ndarray:
-    return np.sqrt(np_sqeuclidean_seq(A, B))
+def np_sqeuclidean_rows(A: np.ndarray, B: np.ndarray) -> np.ndarray:
+    return _rows(A, B, _sq_diff)
 
 
-def _dot_seq(A: np.ndarray, B: np.ndarray) -> np.ndarray:
-    return _np_chunked_fold(
-        A.shape[1], lambda k: A[:, k][:, None] * B[:, k][None, :]
-    )
+def np_euclidean_rows(A: np.ndarray, B: np.ndarray) -> np.ndarray:
+    return np.sqrt(np_sqeuclidean_rows(A, B))
 
 
-def np_cosine_seq(A: np.ndarray, B: np.ndarray) -> np.ndarray:
-    def self_dot(X):
-        return _np_chunked_fold(X.shape[1], lambda k: X[:, k] * X[:, k])
-
-    na = np.sqrt(self_dot(A))[:, None]
-    nb = np.sqrt(self_dot(B))[None, :]
-    return 1.0 - _dot_seq(A, B) / (na * nb)
+def np_cosine_rows(A: np.ndarray, B: np.ndarray) -> np.ndarray:
+    return 1.0 - _rows(A, B, _product) / (_norms(A) * _norms(B))
 
 
 NUMPY_METRICS = {
@@ -209,47 +221,6 @@ NUMPY_METRICS = {
     "cosine": np_cosine,
 }
 
-# Order-exact twins: same FP rounding as the Column expressions.
-NUMPY_METRICS_SEQ = {
-    "sqeuclidean": np_sqeuclidean_seq,
-    "euclidean": np_euclidean_seq,
-    "cosine": np_cosine_seq,
-}
-
-
-def numpy_metric(name: str, exact_order: bool = False):
-    table = NUMPY_METRICS_SEQ if exact_order else NUMPY_METRICS
-    try:
-        return table[name]
-    except KeyError:
-        raise ValueError(f"unknown metric {name!r}; expected one of {sorted(table)}")
-
-
-# Row-paired twins: distance between A[r] and B[r] for every row r,
-# (n,d) x (n,d) -> (n,), with the Column expressions' accumulation order
-# (bit-identical to ``metric_expr(name, a, b, dim=d)``).  Used by the fused
-# t-SNE kernel, which evaluates one distance per P edge.
-
-
-def np_sqeuclidean_rows(A: np.ndarray, B: np.ndarray) -> np.ndarray:
-    def term(k):
-        d = A[:, k] - B[:, k]
-        return d * d
-
-    return _np_chunked_fold(A.shape[1], term)
-
-
-def np_euclidean_rows(A: np.ndarray, B: np.ndarray) -> np.ndarray:
-    return np.sqrt(np_sqeuclidean_rows(A, B))
-
-
-def np_cosine_rows(A: np.ndarray, B: np.ndarray) -> np.ndarray:
-    def dot(X, Z):
-        return _np_chunked_fold(X.shape[1], lambda k: X[:, k] * Z[:, k])
-
-    return 1.0 - dot(A, B) / (np.sqrt(dot(A, A)) * np.sqrt(dot(B, B)))
-
-
 NUMPY_ROW_METRICS = {
     "sqeuclidean": np_sqeuclidean_rows,
     "euclidean": np_euclidean_rows,
@@ -257,10 +228,16 @@ NUMPY_ROW_METRICS = {
 }
 
 
-def numpy_row_metric(name: str):
+def _lookup(table: dict, name: str):
     try:
-        return NUMPY_ROW_METRICS[name]
+        return table[name]
     except KeyError:
-        raise ValueError(
-            f"unknown metric {name!r}; expected one of {sorted(NUMPY_ROW_METRICS)}"
-        )
+        raise ValueError(f"unknown metric {name!r}; expected one of {sorted(table)}")
+
+
+def numpy_metric(name: str):
+    return _lookup(NUMPY_METRICS, name)
+
+
+def numpy_row_metric(name: str):
+    return _lookup(NUMPY_ROW_METRICS, name)

@@ -98,10 +98,11 @@ def pairwise_affinities(knn: DataFrame, perplexity: float) -> DataFrame:
 
     Edges are shuffled once by ``i``; each partition is processed in a single
     vectorized bisection.  Safe because a hash partition contains every edge
-    of each of its groups.
+    of each of its groups.  The shuffle has no fixed width, so AQE sizes the
+    Python stage by bytes: each Python task costs ~0.2-0.4 s before its UDF
+    starts (BASELINE.md B94), and N·k edges are a few MB.
     """
     target_h = float(np.log(perplexity))
-    num_parts = knn.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
 
     def per_partition(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # A group's edges may span Arrow batches within the partition —
@@ -121,7 +122,7 @@ def pairwise_affinities(knn: DataFrame, perplexity: float) -> DataFrame:
         yield pd.DataFrame({"i": i_arr, "j": pdf["j"].to_numpy(), "v": p})
 
     return (
-        knn.repartition(int(num_parts), "i")
+        knn.repartition("i")
         .mapInPandas(per_partition, schema="i int, j int, v double")
     )
 

@@ -5,9 +5,9 @@ Three variants, mirroring the reference's surface (SURVEY §2.3/§2.5):
 - ``k_nearest_neighbors`` — brute force: crossJoin + Column-expression
   distance + per-group window top-k.  Reference: TsneHelpers.scala:41-59.
 - ``partition_knn``       — blocked cross: points bucketed into B blocks,
-  block x block crossJoin, vectorized numpy distance inside each block pair.
-  Exactly equal to brute force (blocked evaluation, not approximation).
-  Reference: TsneHelpers.scala:61-91.
+  one Python task per block computes its numpy distances to every point and
+  its top-k.  Exactly equal to brute force (blocked evaluation, not
+  approximation).  Reference: TsneHelpers.scala:61-91.
 - ``project_knn``         — approximate: Morton/z-order sort (original +
   randomly shifted copies), +-k rank-neighbors as candidates, true-distance
   top-k over the candidate union.  Reference: TsneHelpers.scala:93-160,
@@ -16,9 +16,9 @@ Three variants, mirroring the reference's surface (SURVEY §2.3/§2.5):
   rank-neighborhood is a bucketed equi-join — fully parallel.
 
 Scale notes (100 TB stance): brute force is O(N^2) by definition and exists
-for parity + small N; ``partition_knn`` bounds memory at O((N/B)^2) per task
-and keeps the inner loop in BLAS-ish numpy; ``project_knn`` is the scale path
-at O(I * N log N) shuffle volume with no all-pairs stage.
+for parity + small N; ``partition_knn`` broadcasts all features (8·N·d bytes
+per executor); ``project_knn`` is the scale path at O(I * N log N) shuffle
+volume with no all-pairs stage.
 """
 
 from __future__ import annotations
@@ -27,6 +27,7 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -77,78 +78,86 @@ def k_nearest_neighbors(
     return _top_k_per_group(edges, k)
 
 
+# Distances a block task holds at a time: 2^22 doubles (32 MB).
+_BLOCK_TILE_ELEMS = 1 << 22
+
+
+def _block_kernel(k: int, metric: str):
+    """``partition_knn``'s per-task kernel.  In: the task's placed block id
+    crossed with every block.  Out: each placed point's k nearest (i, j, v)
+    edges over all points, in (v, j) order, self-pairs excluded by id (quirk
+    Q6: coincident points stay neighbours), non-finite distances dropped."""
+    dist = numpy_metric(metric)
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        placed, blocks = set(), {}
+        for batch in batches:
+            placed.update(batch.column("block_a").to_pylist())
+            for r, b in enumerate(batch.column("block").to_pylist()):
+                blocks[b] = [batch.column(c)[r].values.to_numpy(zero_copy_only=False)
+                             for c in ("ids", "mat")]
+        if not blocks:
+            return
+        ids = np.concatenate([i for i, _ in blocks.values()])
+        lab = np.repeat(list(blocks), [len(i) for i, _ in blocks.values()])
+        X = np.concatenate([x for _, x in blocks.values()]).reshape(len(ids), -1)
+        order = np.argsort(ids, kind="stable")
+        ids, lab, X = ids[order], lab[order], X[order].astype(np.float64, copy=False)
+        bad = ~np.isfinite(X).all(axis=1)
+        if bad.any():
+            raise ValueError(
+                f"partition_knn: point id {ids[bad][0]} has a non-finite feature"
+            )
+        step = max(1, _BLOCK_TILE_ELEMS // len(ids))
+        for a in placed:
+            rows = np.flatnonzero(lab == a)
+            for r in (rows[s:s + step] for s in range(0, len(rows), step)):
+                D, ia = dist(X[r], X), ids[r]
+                D[ia[:, None] == ids[None, :]] = np.inf
+                idx = np.argsort(D, axis=1, kind="stable")[:, :k]
+                v = np.take_along_axis(D, idx, 1).ravel()
+                keep = np.isfinite(v)
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(np.repeat(ia, idx.shape[1])[keep], pa.int32()),
+                     pa.array(ids[idx].ravel()[keep], pa.int32()),
+                     pa.array(v[keep])],
+                    names=["i", "j", "v"],
+                )
+
+    return run
+
+
 def partition_knn(
     points: DataFrame, k: int, metric: str = "sqeuclidean", blocks: int | None = None
 ) -> DataFrame:
     """Blocked-cross kNN, result identical to ``k_nearest_neighbors``.
 
     Points are bucketed by ``id % blocks`` (the reference's
-    ModuloKeyPartitioner, TsneHelpers.scala:65-66), each block collected into
-    one row as an id vector + feature matrix, blocks cross-joined, and each
-    block pair's full distance sub-matrix computed in one vectorized numpy
-    call (order-exact accumulation so results match the Column-expression
-    brute force bit-for-bit).
+    ModuloKeyPartitioner, TsneHelpers.scala:65-66); the JVM collects each
+    block into one row of ids and flattened features.  Each block id sits
+    alone in a partition of a ``range`` (no shuffle, nothing for AQE to
+    coalesce), crossed with a broadcast of all blocks, so one Python task
+    per block computes its distances to every point in the Column
+    expressions' accumulation order (bit-identical to brute force) and
+    merges the top-k over all blocks itself: no Window, no edge shuffle.
+
+    Memory contract: the broadcast holds all features, 8·N·d bytes on the
+    driver and on every executor (0.5 MB at N=2000, d=32), and a task
+    ``_BLOCK_TILE_ELEMS`` distances at a time.  ``project_knn`` is the path
+    for scale.  A non-finite feature fails the job with an error naming its
+    point's id.
     """
     spark = points.sparkSession
     if blocks is None:
         blocks = spark.sparkContext.defaultParallelism
-
-    dist_fn = numpy_metric(metric, exact_order=True)
-
-    blocked = (
-        points.repartition(blocks, F.pmod(F.col("id"), F.lit(blocks)))
-        .groupBy(F.pmod(F.col("id"), F.lit(blocks)).alias("block"))
-        .agg(
-            F.collect_list("id").alias("ids"),
-            F.collect_list("features").alias("mat"),
-        )
+    all_blocks = points.groupBy(F.pmod("id", F.lit(blocks)).alias("block")).agg(
+        F.collect_list("id").alias("ids"),
+        F.flatten(F.collect_list("features")).alias("mat"),
     )
-
-    pair_schema = "i int, j int, v double"
-
-    def emit_block_pairs(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # Per block pair, emit only each i's k nearest within the pair — a
-        # map-side combine that cuts the shuffle into the global top-k from
-        # O(N^2) rows to O(N*k*B) (the union of per-pair top-ks contains
-        # every global winner).  Ties keep the reference-deterministic
-        # (v, j)-lexicographic order: columns sorted by j, stable argsort.
-        for pdf in it:
-            for row in pdf.itertuples(index=False):
-                ids_a = np.asarray(row.ids_a, dtype=np.int64)
-                ids_b = np.asarray(row.ids_b, dtype=np.int64)
-                A = np.array([np.asarray(v, dtype=np.float64) for v in row.mat_a])
-                B = np.array([np.asarray(v, dtype=np.float64) for v in row.mat_b])
-                order_b = np.argsort(ids_b)
-                ids_b = ids_b[order_b]
-                D = dist_fn(A, B[order_b])
-                # self-pairs are excluded BEFORE selection (quirk Q6: filter
-                # on id, not distance — coincident points stay neighbors)
-                D[ids_a[:, None] == ids_b[None, :]] = np.inf
-                kk = min(k, D.shape[1])
-                idx = np.argsort(D, axis=1, kind="stable")[:, :kk]
-                vals = np.take_along_axis(D, idx, axis=1).ravel()
-                keep = np.isfinite(vals)
-                yield pd.DataFrame(
-                    {
-                        "i": np.repeat(ids_a, kk)[keep],
-                        "j": ids_b[idx].ravel()[keep],
-                        "v": vals[keep],
-                    }
-                )
-
-    left = blocked.select(
-        F.col("block").alias("block_a"),
-        F.col("ids").alias("ids_a"),
-        F.col("mat").alias("mat_a"),
+    placed = spark.range(0, blocks, 1, blocks).select(F.col("id").alias("block_a"))
+    return placed.crossJoin(F.broadcast(all_blocks)).mapInArrow(
+        _block_kernel(k, metric), schema="i int, j int, v double"
     )
-    right = blocked.select(
-        F.col("block").alias("block_b"),
-        F.col("ids").alias("ids_b"),
-        F.col("mat").alias("mat_b"),
-    )
-    pairs = left.crossJoin(right)
-    edges = pairs.mapInPandas(emit_block_pairs, schema=pair_schema)
-    return _top_k_per_group(edges, k)
 
 
 # ---------------------------------------------------------------------------
