@@ -20,7 +20,7 @@ from tests.test_farfield_nd import (
     check_summary_optimize_loop,
     check_uncentred_mass_dropped,
 )
-from tsne_flink_spark.operators.gradient import _repulsive_barnes_hut
+from tests.fixtures import repulsive_barnes_hut
 
 
 def test_morton_roundtrip():
@@ -67,14 +67,14 @@ def test_summary_large_n_spark_path(spark):
     Y = rng.normal(0, 30.0, (8192, 2))
     Y = Y - Y.mean(axis=0)
     emb = _emb(spark, Y)
-    res, used = _repulsive_barnes_hut(
+    res, used = repulsive_barnes_hut(
         emb, 0.5, 2, bh_condition="scaled", tree_build="summary"
     )
     assert used
     rep, sumq = _collect_rep(res)
     assert len(rep) == 8192
 
-    full, _used = _repulsive_barnes_hut(
+    full, _used = repulsive_barnes_hut(
         emb, 0.5, 2, bh_condition="scaled", tree_build="distributed"
     )
     full_rep, _ = _collect_rep(full)

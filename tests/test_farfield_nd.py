@@ -21,12 +21,9 @@ Gates:
 import numpy as np
 import pytest
 
-from tests.fixtures import exact_repulsion
+from tests.fixtures import exact_repulsion, repulsive_barnes_hut
 from tsne_flink_spark.operators import farfield
-from tsne_flink_spark.operators.gradient import (
-    _repulsive_barnes_hut,
-    _repulsive_summary,
-)
+from tsne_flink_spark.operators.gradient import _repulsive_summary
 
 
 def _emb(spark, Y):
@@ -146,7 +143,7 @@ def check_summary_accuracy_class(spark, Y, depth: int, condition: str) -> None:
     theta = 0.5
     exact_rep, exact_sumq = exact_repulsion(Y)
 
-    full, used = _repulsive_barnes_hut(
+    full, used = repulsive_barnes_hut(
         emb, theta, d, bh_condition=condition, tree_build="distributed"
     )
     assert not used
@@ -180,10 +177,10 @@ def check_summary_fallback(spark, d: int) -> None:
     Y = rng.normal(0, 10.0, (120, d))
     Y = Y - Y.mean(axis=0)
     emb = _emb(spark, Y)
-    via_summary, used_s = _repulsive_barnes_hut(
+    via_summary, used_s = repulsive_barnes_hut(
         emb, 0.5, d, bh_condition="scaled", tree_build="summary"
     )
-    via_full, used_f = _repulsive_barnes_hut(
+    via_full, used_f = repulsive_barnes_hut(
         emb, 0.5, d, bh_condition="scaled", tree_build="distributed"
     )
     assert not used_s and not used_f  # summary declined -> full-tree fallback
@@ -222,13 +219,13 @@ def check_auto_mode(spark, monkeypatch, d: int) -> None:
     emb = _emb(spark, Y)
 
     monkeypatch.setattr(G, "_AUTO_BROADCAST_BUDGET", 1024)
-    df_s, used_s = G._repulsive_barnes_hut(
+    df_s, used_s = repulsive_barnes_hut(
         emb, 0.5, d, bh_condition="scaled", tree_build="auto"
     )
     assert used_s, "auto should select summary above the budget"
 
     monkeypatch.setattr(G, "_AUTO_BROADCAST_BUDGET", 1 << 40)
-    df_f, used_f = G._repulsive_barnes_hut(
+    df_f, used_f = repulsive_barnes_hut(
         emb, 0.5, d, bh_condition="scaled", tree_build="auto"
     )
     assert not used_f, "auto should keep the full tree below the budget"

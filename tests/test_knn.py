@@ -329,16 +329,17 @@ def test_numpy_metric_folds_are_bit_identical(monkeypatch, metric, d):
     assert got.tobytes() == _fold_reference(metric, A, B).tobytes()
 
 
-def test_block_kernel_tiles_match_bruteforce(monkeypatch):
-    """The block kernel on hand-built Arrow batches (two placed blocks in
-    one task, several row tiles) against a NumPy brute force."""
+def _placed_blocks_batch(monkeypatch):
+    """Hand-built kernel input: 30 points in 3 blocks, blocks 0 and 2
+    placed in one task, row tiles of 4 rows.  Returns (X, the placed ids,
+    the batch)."""
     import numpy as np
     import pyarrow as pa
 
     from tsne_flink_spark.operators import knn
 
     rng = np.random.default_rng(8)
-    n, d, k, nb = 30, 3, 4, 3
+    n, d, nb = 30, 3, 3
     X = rng.normal(size=(n, d))
     X[5] = X[8]  # a coincident pair stays neighbours
     ids = np.arange(n)
@@ -351,14 +352,131 @@ def test_block_kernel_tiles_match_bruteforce(monkeypatch):
         "mat": [X[blocks[b]].ravel().tolist() for _, b in rows],
     })
     monkeypatch.setattr(knn, "_BLOCK_TILE_ELEMS", 4 * n)
+    return X, np.concatenate([blocks[0], blocks[2]]), batch
+
+
+def _nearest(X, i, k):
+    """Point i's k nearest (ids, squared distances) by brute force, ties
+    by id."""
+    import numpy as np
+
+    D = ((X[i] - X) ** 2).sum(axis=1)
+    D[i] = np.inf
+    order = np.lexsort((np.arange(len(X)), D))[:k]
+    return order, D[order]
+
+
+def test_block_kernel_tiles_match_bruteforce(monkeypatch):
+    """The block kernel on hand-built Arrow batches (two placed blocks in
+    one task, several row tiles) against a NumPy brute force."""
+    import numpy as np
+    import pyarrow as pa
+
+    from tsne_flink_spark.operators import knn
+
+    X, placed, batch = _placed_blocks_batch(monkeypatch)
+    k = 4
     out = pa.Table.from_batches(list(knn._block_kernel(k, "sqeuclidean")([batch])))
     got = set(zip(*(out.column(c).to_pylist() for c in "ijv")))
 
     want = set()
-    for i in np.concatenate([blocks[0], blocks[2]]):
-        D = ((X[i] - X) ** 2).sum(axis=1)
-        D[i] = np.inf
-        order = np.lexsort((ids, D))[:k]
-        want |= {(int(i), int(j), float(D[j])) for j in order}
+    for i in placed:
+        nbrs, dist = _nearest(X, i, k)
+        want |= {(int(i), int(j), float(v)) for j, v in zip(nbrs, dist)}
     assert {(i, j) for i, j, _ in got} == {(i, j) for i, j, _ in want}
     assert np.allclose(sorted(v for *_, v in got), sorted(v for *_, v in want))
+
+
+def test_partition_knn_rejects_zero_norm_cosine(spark):
+    """An all-zero feature vector has no cosine distance (0/0): the block
+    kernel fails naming the point instead of silently dropping its edges."""
+    import numpy as np
+
+    rng = np.random.default_rng(12)
+    X = rng.normal(0, 1, (40, 3))
+    X[23] = 0.0
+    df = points_from_rows(spark, [(i, X[i].tolist()) for i in range(40)])
+    with pytest.raises(
+        Exception,
+        match=r'point id 23 has a zero-norm feature vector \(metric="cosine"\)',
+    ):
+        partition_knn(df, 5, "cosine", blocks=4).collect()
+    # the other metrics have a distance for it
+    assert partition_knn(df, 5, "sqeuclidean", blocks=4).count() == 40 * 5
+
+
+class _Partials:
+    """Stands in for operators.partials.Partials outside a Spark task."""
+
+    def __init__(self):
+        self.added = []
+
+    def add(self, *values):
+        self.added.append(values)
+
+
+def test_block_kernel_emits_symmetric_p(monkeypatch):
+    """Given a perplexity, the block kernel (two placed blocks, several row
+    tiles) emits every P(j|i) in both directions, bit-identical to the
+    bisection of that point's own j-sorted k distances, and adds its
+    normalizing total and point count once."""
+    import numpy as np
+    import pyarrow as pa
+
+    from tsne_flink_spark.operators import knn
+    from tsne_flink_spark.operators.affinities import _bisect_betas
+
+    X, placed, batch = _placed_blocks_batch(monkeypatch)
+    k, perplexity = 4, 2.0
+    partials = _Partials()
+    out = pa.Table.from_batches(list(
+        knn._block_kernel(k, "sqeuclidean", perplexity, partials)([batch])
+    ))
+    got = list(zip(*(out.column(c).to_pylist() for c in "ijv")))
+
+    want = []
+    for i in placed:
+        nbrs, dist = _nearest(X, i, k)
+        by_j = np.argsort(nbrs)  # the coincident pair gives a zero distance
+        p = _bisect_betas(dist[by_j], np.array([0]), np.array([k]), np.log(perplexity))
+        want += [(int(i), int(j), float(v)) for j, v in zip(nbrs[by_j], p)]
+    assert sorted(got) == sorted(want + [(j, i, v) for i, j, v in want])
+    forward = out.column("v").to_numpy()[:len(want)]
+    assert partials.added == [(2.0 * float(np.sum(forward)), len(placed))]
+
+
+@pytest.mark.parametrize(
+    "metric, d, blocks, coincident",
+    [
+        pytest.param("sqeuclidean", 16, 4, False, id="sqeuclidean-d16"),
+        pytest.param("sqeuclidean", 9, 4, True, id="sqeuclidean-d9-coincident"),
+        pytest.param("euclidean", 300, 4, False, id="euclidean-d300"),
+        pytest.param("cosine", 16, 4, False, id="cosine-d16"),
+        pytest.param("sqeuclidean", 16, 7, False, id="sqeuclidean-d16-blocks7"),
+    ],
+)
+def test_partition_knn_p_matches_pairwise_affinities(
+    spark, metric, d, blocks, coincident
+):
+    """The block kernel's P(j|i) is bit-identical to pairwise_affinities
+    over partition_knn's edges, emitted in both directions; its partials
+    are the joint total and N."""
+    import numpy as np
+
+    from tsne_flink_spark.operators.affinities import pairwise_affinities
+    from tsne_flink_spark.operators.partials import Partials
+
+    rng = np.random.default_rng(42)
+    X = rng.uniform(0, 1, (120, d))
+    if coincident:
+        X[10:16] = X[9]
+    df = points_from_rows(spark, [(i, X[i].tolist()) for i in range(120)])
+    want = [tuple(r) for r in pairwise_affinities(
+        partition_knn(df, 5, metric, blocks=blocks), 3.0).collect()]
+    partials = Partials(spark.sparkContext, 2)
+    got = [tuple(r) for r in partition_knn(
+        df, 5, metric, blocks=blocks, perplexity=3.0, partials=partials).collect()]
+    assert sorted(got) == sorted(want + [(j, i, v) for i, j, v in want])
+    total, n = partials.totals()
+    assert n == 120
+    assert total == pytest.approx(2.0 * sum(v for *_, v in want), rel=1e-14)

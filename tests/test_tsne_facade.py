@@ -183,3 +183,32 @@ def test_embedding_quality_knn_preservation(spark):
     # chance: purity 1/8 = 0.125, preservation 10/319 = 0.031
     assert purity >= 0.75, f"cluster purity {purity:.3f}"
     assert preservation >= 0.08, f"10-NN preservation {preservation:.3f}"
+
+
+@pytest.mark.parametrize("source", ["partition", "distances"])
+def test_plan_is_fit_shape_without_jobs(spark, source):
+    """TSNE.plan() plans the shape fit runs — the P kernel emitting the
+    symmetric edges, one exchange into the P rows, the fused pass — and
+    runs no job: one Python pass before the fused kernel, no joint-P
+    total aggregate."""
+    rng = np.random.default_rng(2)
+    X = rng.normal(0, 1, (12, 4))
+    tracker = spark.sparkContext.statusTracker()
+    jobs_before = len(tracker.getJobIdsForGroup(None))
+    if source == "partition":
+        df = points_from_rows(spark, [(i, X[i].tolist()) for i in range(12)])
+        planned = TSNE(perplexity=3.0, neighbors=5, knn_method="partition",
+                       dimension=4).plan(points=df)
+        python_stages = ("MapInArrow", 2)
+    else:
+        dist = coo_from_rows(spark, [
+            (i, j, float(((X[i] - X[j]) ** 2).sum()))
+            for i in range(12) for j in range(12) if i != j
+        ])
+        planned = TSNE(perplexity=3.0).plan(distances=dist)
+        python_stages = ("MapInPandas", 1)
+    text = planned._jdf.queryExecution().executedPlan().toString()
+    assert len(tracker.getJobIdsForGroup(None)) == jobs_before
+    name, count = python_stages
+    assert text.count(name) == count, text
+    assert "__sum_p" not in text

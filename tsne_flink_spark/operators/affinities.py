@@ -12,10 +12,12 @@ Reference semantics:
 
 Spark-first design: the bisection is the one genuinely per-group algorithm in
 the engine.  Instead of ``applyInPandas`` (one Python call per group — death
-by overhead at millions of groups), edges are hash-partitioned by ``i`` and
-each partition's groups are bisected *simultaneously* in one vectorized numpy
-loop (segment sums via ``np.add.reduceat``).  50 iterations over all groups in
-a partition = 50 numpy passes total, not 50 x n_groups Python calls.
+by overhead at millions of groups), :func:`conditional_p` bisects all the
+groups a kernel holds *simultaneously* in one vectorized numpy loop: 50
+numpy passes, not 50 x n_groups Python calls.  ``TSNE.fit`` skips
+``joint_distribution``: its P kernel emits each P(j|i) in both directions
+and a share of their total (operators/partials.py), ``attach_p`` sums the
+pairs (:func:`joint_sums`), and the gradient kernel divides by the total.
 """
 
 from __future__ import annotations
@@ -26,6 +28,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from tsne_flink_spark.operators.partials import Partials
 
 # Smallest positive IEEE-754 double.  The reference floors with Scala's
 # Double.MinValue (TsneHelpers.scala:191,194) which is the *most negative*
@@ -55,7 +59,6 @@ def _bisect_betas(
     done = np.zeros(g, dtype=bool)
     # segment ids per edge for bincount-based segment sums
     seg = np.repeat(np.arange(g), counts)
-    ends = starts + counts
 
     def seg_sum(x: np.ndarray) -> np.ndarray:
         return np.add.reduceat(x, starts)
@@ -93,8 +96,31 @@ def _bisect_betas(
     return p / sum_p[seg]
 
 
-def pairwise_affinities(knn: DataFrame, perplexity: float) -> DataFrame:
-    """(i, j, distance) kNN edges -> (i, j, P(j|i)).
+def conditional_p(
+    i: np.ndarray, j: np.ndarray, d: np.ndarray, target_h: float
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(i, j, P(j|i)) of (i, j, distance) edges holding whole groups,
+    sorted by (i, j) — the same bits whichever kernel or batch runs it."""
+    order = np.lexsort((j, i))
+    i, j, d = i[order], j[order], d[order]
+    if not len(i):
+        return i, j, d
+    starts = np.flatnonzero(np.r_[True, i[1:] != i[:-1]])
+    counts = np.diff(np.r_[starts, len(i)])
+    return i, j, _bisect_betas(d, starts, counts, target_h)
+
+
+def symmetric_edges(i: np.ndarray, j: np.ndarray, p: np.ndarray):
+    """Each P(j|i) as (i, j, p) and (j, i, p), summing to 2 * sum(p)."""
+    return np.r_[i, j], np.r_[j, i], np.r_[p, p]
+
+
+def pairwise_affinities(
+    knn: DataFrame, perplexity: float, partials: Partials | None = None
+) -> DataFrame:
+    """(i, j, distance) kNN edges -> (i, j, P(j|i)); with ``partials``,
+    the :func:`symmetric_edges`, each task adding its share of the total
+    and its number of source points.
 
     Edges are shuffled once by ``i``; each partition is processed in a single
     vectorized bisection.  Safe because a hash partition contains every edge
@@ -112,36 +138,39 @@ def pairwise_affinities(knn: DataFrame, perplexity: float) -> DataFrame:
         if not parts:
             return
         pdf = pd.concat(parts, ignore_index=True) if len(parts) > 1 else parts[0]
-        pdf = pdf.sort_values(["i", "j"], kind="stable", ignore_index=True)
-        i_arr = pdf["i"].to_numpy()
-        d = pdf["v"].to_numpy(dtype=np.float64)
-        change = np.flatnonzero(np.diff(i_arr)) + 1
-        starts = np.concatenate([[0], change])
-        counts = np.diff(np.concatenate([starts, [len(i_arr)]]))
-        p = _bisect_betas(d, starts, counts, target_h)
-        yield pd.DataFrame({"i": i_arr, "j": pdf["j"].to_numpy(), "v": p})
+        edges = conditional_p(
+            pdf["i"].to_numpy(), pdf["j"].to_numpy(),
+            pdf["v"].to_numpy(dtype=np.float64), target_h,
+        )
+        if partials is not None:
+            partials.add(2.0 * float(edges[2].sum()), int(pdf["i"].nunique()))
+            edges = symmetric_edges(*edges)
+        yield pd.DataFrame(dict(zip("ijv", edges)))
 
-    return (
-        knn.repartition("i")
-        .mapInPandas(per_partition, schema="i int, j int, v double")
+    return knn.repartition("i").mapInPandas(
+        per_partition, schema="i int, j int, v double"
     )
+
+
+def joint_sums(edges: DataFrame) -> DataFrame:
+    """One (i, j, sum v) row per pair, behind one exchange: hashing on i
+    also clusters (i, j), so neither the sum nor a later group by i
+    shuffles again."""
+    return edges.repartition("i").groupBy("i", "j").agg(F.sum("v").alias("v"))
 
 
 def joint_distribution(affinities: DataFrame) -> DataFrame:
     """Symmetrize and normalize: P(ij) = (P(j|i) + P(i|j)) / sum_all.
 
-    Pure DataFrame ops: transpose-project, bag union, group-sum, then a
-    broadcast of the 1-row global sum (the reference's mapWithBcVariable,
-    TsneHelpers.scala:191-195).
+    Both directions from one projection (the input runs once), then
+    :func:`joint_sums` and a broadcast of the 1-row global sum (the
+    reference's mapWithBcVariable, TsneHelpers.scala:191-195).
     """
-    transposed = affinities.select(
-        F.col("j").alias("i"), F.col("i").alias("j"), F.col("v")
-    )
-    joint = (
-        affinities.unionByName(transposed)
-        .groupBy("i", "j")
-        .agg(F.sum("v").alias("v"))
-    )
+    both = affinities.select(F.explode(F.array(
+        F.struct("i", "j", "v"),
+        F.struct(F.col("j").alias("i"), F.col("i").alias("j"), "v"),
+    )).alias("e")).select("e.*")
+    joint = joint_sums(both)
     total = joint.agg(
         F.greatest(F.sum("v"), F.lit(_EPS_FLOOR)).alias("__sum_p")
     )

@@ -13,10 +13,11 @@ working-set rows once, as ``js``/``vs`` arrays.  :func:`fused_pass` then
 1. takes the centring mean and builds the repulsion source (below);
 2. runs ONE ``mapInArrow`` kernel that centres its own rows and computes,
    per row, the repulsion, the attraction (q from the kNN metric's NumPy
-   twin), ``sumq`` and the KL partials.
+   twin) and ``sumq``, and adds its sumQ and KL partials to a
+   partition-keyed accumulator (operators/partials.py).
 
-:func:`pass_totals` reduces a pass to sumQ and the loss in one job, and the
-update is a narrow projection with sumQ as a literal
+sumQ and the loss come from those partials, with no job of their own, and
+the update is a narrow projection with sumQ as a literal
 (``embedding.update_step``).
 
 Where the driver builds the tree, it holds Y anyway: the pass collects Y
@@ -58,11 +59,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
 
 from tsne_flink_spark.functions.metrics import numpy_row_metric
+from tsne_flink_spark.operators.affinities import _EPS_FLOOR, joint_sums
 from tsne_flink_spark.operators.ndtree import (
     NDTree,
     build_ndtree,
     build_ndtree_distributed,
 )
+from tsne_flink_spark.operators.partials import Partials
 
 _TREE_BUILDS = ("auto", "driver", "stub", "distributed", "summary")
 
@@ -71,8 +74,6 @@ _KERNEL_FIELDS = [
     StructField("attr", ArrayType(DoubleType())),
     StructField("rep", ArrayType(DoubleType())),
     StructField("sumq", DoubleType()),
-    StructField("kl", DoubleType()),  # sum_j v*log(v/q) over the row's P
-    StructField("pv", DoubleType()),  # sum_j v over the row's P
 ]
 
 # Auto-mode policy constants (BASELINE.md B14): the pickled full d=2 tree
@@ -328,13 +329,15 @@ def _repulsive_summary(
 def attach_p(working_set: DataFrame, p_coo: DataFrame) -> DataFrame:
     """The working-set rows with their P rows attached as ``js``/``vs``
     arrays, sorted by j so the attraction sums in a layout-independent
-    order.  A row without P entries gets empty arrays — zero attraction —
-    and is kept; P entries whose i is not a row are dropped."""
-    p_rows = p_coo.groupBy(F.col("i").alias("__i")).agg(
+    order.  Entries of one (i, j) pair are summed (``p_coo`` may be a joint
+    P or the P kernels' symmetric edges), behind one exchange on i.  A row
+    without P entries gets empty arrays — zero attraction — and is kept;
+    P entries whose i is not a row are dropped."""
+    p_rows = joint_sums(p_coo).groupBy("i").agg(
         F.sort_array(F.collect_list(F.struct("j", "v"))).alias("__p")
     )
     joined = working_set.join(
-        p_rows, working_set["id"] == p_rows["__i"], "left"
+        p_rows, working_set["id"] == p_rows["i"], "left"
     )
     js = F.transform("__p", lambda e: e["j"])
     vs = F.transform("__p", lambda e: e["v"])
@@ -469,18 +472,24 @@ def _list_column(rows: np.ndarray) -> pa.Array:
     return pa.ListArray.from_arrays(offsets, pa.array(rows.ravel()))
 
 
-def _kernel(bc, d, mean, theta, condition, metric, exaggeration, want_loss,
-            has_rep, gathered, out_cols):
+def _kernel(bc, d, mean, theta, condition, metric, p_total, exaggeration,
+            has_rep, gathered, out_cols, partials):
     """The fused per-partition kernel (see the module docstring), on Arrow
     batches: columns are read and written as flat buffers, and the
     pass-through columns are handed back untouched.  Neighbours come from
     the broadcast (ids, centred Y), or from the row's gathered
-    ``__gv``/``__gy`` when ``gathered``."""
+    ``__gv``/``__gy`` when ``gathered``.  The task adds its sumQ and KL
+    partials once, at its end."""
     row_metric = numpy_row_metric(metric)
+    p_total = max(p_total, _EPS_FLOOR)
+
+    def scaled(v: np.ndarray) -> np.ndarray:
+        return np.maximum(v / p_total, _EPS_FLOOR) * exaggeration
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         tree, ids, Yc = bc.value
         n = 0 if ids is None else len(ids)
+        sum_q = kl = pv = 0.0
         for batch in batches:
             m = batch.num_rows
             if not m:
@@ -496,14 +505,14 @@ def _kernel(bc, d, mean, theta, condition, metric, exaggeration, want_loss,
                 gv = batch.column("__gv")
                 lens = gv.value_lengths().to_numpy(zero_copy_only=False)
                 src = np.repeat(np.arange(m), lens)
-                v = _values(gv) * exaggeration
+                v = scaled(_values(gv))
                 yj = _values(batch.column("__gy")).reshape(-1, d) - mean
             else:
                 js_col = batch.column("js")
                 lens = js_col.value_lengths().to_numpy(zero_copy_only=False)
                 src = np.repeat(np.arange(m), lens)
                 js = _values(js_col).astype(np.int64)
-                v = _values(batch.column("vs")) * exaggeration
+                v = scaled(_values(batch.column("vs")))
                 # neighbours missing from the rows contribute nothing
                 pos = np.minimum(np.searchsorted(ids, js), max(len(ids) - 1, 0))
                 found = ids[pos] == js if len(ids) else np.zeros(len(js), dtype=bool)
@@ -516,20 +525,18 @@ def _kernel(bc, d, mean, theta, condition, metric, exaggeration, want_loss,
             attr = np.column_stack(
                 [_row_sums(src, w * diff[:, c], m) for c in range(d)]
             )
-            if want_loss:
-                kl = _row_sums(src, v * np.log(v / q), m)
-                pv = _row_sums(src, v, m)
-            else:
-                kl = pv = np.zeros(m)
+            sum_q += float(np.sum(sumq))
+            kl += float(np.sum(v * np.log(v / q)))
+            pv += float(np.sum(v))
 
             cols = {c: batch.column(c) for c in out_cols}
             cols["y"] = _list_column(y)
             cols.update(
                 attr=_list_column(attr), rep=_list_column(rep),
-                sumq=pa.array(sumq, pa.float64()), kl=pa.array(kl),
-                pv=pa.array(pv),
+                sumq=pa.array(sumq, pa.float64()),
             )
             yield pa.RecordBatch.from_arrays(list(cols.values()), names=list(cols))
+        partials.add(sum_q, kl, pv)
 
     return run
 
@@ -541,27 +548,24 @@ def fused_pass(
     metric: str = "sqeuclidean",
     exaggeration: float = 1.0,
     centre: bool = False,
-    want_loss: bool = False,
     fix_bounds_mean: bool = False,
     bh_condition: str = "reference",
     tree_build: str = "auto",
-) -> tuple[DataFrame, bool]:
+    p_total: float = 1.0,
+) -> tuple[DataFrame, bool, Partials]:
     """One gradient evaluation over rows carrying (id, y, js, vs, ...).
 
-    Returns ``(kernel rows, used_summary)``: the input rows (``y`` centred
-    when ``centre``) plus attr, rep, sumq and the KL partials kl/pv, lazily
-    — callers materialize.  ``exaggeration`` scales every P value inside the
-    kernel, so early exaggeration shares the plain P layout; the loss
-    partials use the scaled P, as the reference does.  Attraction uses the
-    kNN ``metric`` (as the reference, TsneHelpers.scala:287-295), repulsion
-    always squared Euclidean (QuadTree.scala:133).
-
-    ``tree_build`` picks the repulsion source (module docstring); "auto"
-    counts the rows and decides by N (:func:`resolve_tree_build` — loops
-    resolve once and pass the result): the full tree costs ~55 * 2^d bytes
-    per point per iteration (213 MB measured at N=1M, d=2, B14), and above
-    ``_AUTO_BROADCAST_BUDGET`` the O(1)-broadcast far-field summary path is
-    selected.
+    Returns ``(kernel rows, used_summary, partials)``: the input rows (``y``
+    centred when ``centre``) plus attr, rep and sumq, lazily — callers
+    materialize, then read :func:`sum_q_and_loss` from ``partials``.  The
+    kernel uses each P value as max(v / ``p_total``, smallest double) *
+    ``exaggeration``, so unnormalized P and early exaggeration share one P
+    layout; the loss partials use the scaled P, as the reference does.
+    Attraction uses the kNN ``metric`` (as the reference,
+    TsneHelpers.scala:287-295), repulsion always squared Euclidean
+    (QuadTree.scala:133).  ``tree_build`` picks the repulsion source (module
+    docstring); "auto" counts the rows and decides by N
+    (:func:`resolve_tree_build`; loops resolve once and pass the result).
     """
     d = n_components
     tree_build = resolve_tree_build(tree_build, theta, d, rows.count)
@@ -595,23 +599,21 @@ def fused_pass(
     schema = StructType(
         [f for f in src.schema.fields if f.name in out_cols] + _KERNEL_FIELDS
     )
-    bc = rows.sparkSession.sparkContext.broadcast((tree, ids, Yc))
+    sc = rows.sparkSession.sparkContext
+    bc = sc.broadcast((tree, ids, Yc))
+    partials = Partials(sc, 3)
     kernel = _kernel(
-        bc, d, mean, theta, bh_condition, metric, exaggeration, want_loss,
-        rep is not None, gathered, out_cols,
+        bc, d, mean, theta, bh_condition, metric, p_total, exaggeration,
+        rep is not None, gathered, out_cols, partials,
     )
-    return src.mapInArrow(kernel, schema=schema), rep is not None
+    return src.mapInArrow(kernel, schema=schema), rep is not None, partials
 
 
-def pass_totals(kern: DataFrame) -> tuple[float, float]:
-    """(sumQ, loss) of a materialized pass.  One job: a single-partition
-    aggregate has no exchange, and it sums in a fixed order.  The loss is
-    the KL divergence sum v*log(v / (q/sumQ)) (TsneHelpers.scala:297-300),
-    built as sum v*log(v/q) + (sum v)*log(sumQ); it is 0 unless the pass
-    computed the partials (``want_loss``)."""
-    sum_q, kl, pv = kern.coalesce(1).agg(
-        F.sum("sumq"), F.sum("kl"), F.sum("pv")
-    ).first()
+def sum_q_and_loss(partials: Partials) -> tuple[float, float]:
+    """(sumQ, loss) of a materialized pass, from its kernel's partials.  The
+    loss is the KL divergence sum v*log(v / (q/sumQ))
+    (TsneHelpers.scala:297-300), built as sum v*log(v/q) + (sum v)*log(sumQ)."""
+    sum_q, kl, pv = partials.totals()
     with np.errstate(divide="ignore", invalid="ignore"):
         loss = float(kl + pv * np.log(sum_q)) if pv else 0.0
     return sum_q, loss
@@ -624,29 +626,6 @@ def dy(sum_q: Column) -> Column:
         F.transform(F.col("rep"), lambda r: r / sum_q),
         lambda a, r: a - r,
     )
-
-
-def _repulsive_barnes_hut(
-    embedding: DataFrame,
-    theta: float,
-    n_components: int,
-    fix_bounds_mean: bool = False,
-    bh_condition: str = "reference",
-    tree_build: str = "auto",
-) -> tuple[DataFrame, bool]:
-    """Repulsion alone: the fused pass over (id, y) rows without P.
-    Returns ``((id, rep, sumq), used_summary)``."""
-    rows = embedding.select(
-        "id",
-        "y",
-        F.array().cast("array<int>").alias("js"),
-        F.array().cast("array<double>").alias("vs"),
-    )
-    kern, used = fused_pass(
-        rows, theta, n_components, fix_bounds_mean=fix_bounds_mean,
-        bh_condition=bh_condition, tree_build=tree_build,
-    )
-    return kern.select("id", "rep", "sumq"), used
 
 
 def gradient(
@@ -664,20 +643,19 @@ def gradient(
 
     Returns ``(grad, loss)``: grad is (id, dy ARRAY<DOUBLE>), one row per
     embedding row; loss is a 1-row (loss DOUBLE) DataFrame when
-    ``compute_loss`` (KL divergence, see :func:`pass_totals`) else None.
+    ``compute_loss`` (KL divergence, see :func:`sum_q_and_loss`) else None.
     Runs the loop's pass (materialized kernel, sumQ); ``grad`` is a
     projection over it.
     """
     from tsne_flink_spark.operators.optimize import materialize
 
     rows = attach_p(embedding.select("id", "y"), p_coo)
-    kern, _ = fused_pass(
-        rows, theta, n_components, metric, want_loss=compute_loss,
-        fix_bounds_mean=fix_bounds_mean, bh_condition=bh_condition,
-        tree_build=tree_build,
+    kern, _, partials = fused_pass(
+        rows, theta, n_components, metric, fix_bounds_mean=fix_bounds_mean,
+        bh_condition=bh_condition, tree_build=tree_build,
     )
     kern = materialize(kern)
-    sum_q, loss = pass_totals(kern)
+    sum_q, loss = sum_q_and_loss(partials)
     grad = kern.select("id", dy(F.lit(sum_q)).alias("dy"))
     if not compute_loss:
         return grad, None

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from tsne_flink_spark.functions.metrics import metric_expr, numpy_metric
+from tsne_flink_spark.operators.affinities import conditional_p, symmetric_edges
 
 
 def _top_k_per_group(edges: DataFrame, k: int) -> DataFrame:
@@ -82,11 +83,12 @@ def k_nearest_neighbors(
 _BLOCK_TILE_ELEMS = 1 << 22
 
 
-def _block_kernel(k: int, metric: str):
+def _block_kernel(k: int, metric: str, perplexity=None, partials=None):
     """``partition_knn``'s per-task kernel.  In: the task's placed block id
     crossed with every block.  Out: each placed point's k nearest (i, j, v)
-    edges over all points, in (v, j) order, self-pairs excluded by id (quirk
-    Q6: coincident points stay neighbours), non-finite distances dropped."""
+    edges over all points, self-pairs excluded by id (quirk Q6: coincident
+    points stay neighbours), non-finite distances dropped — or, given a
+    ``perplexity``, their symmetric P(j|i) edges (see partition_knn)."""
     dist = numpy_metric(metric)
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -108,27 +110,40 @@ def _block_kernel(k: int, metric: str):
             raise ValueError(
                 f"partition_knn: point id {ids[bad][0]} has a non-finite feature"
             )
+        if metric == "cosine" and not (X * X).any(axis=1).all():
+            raise ValueError(
+                f"partition_knn: point id {ids[~(X * X).any(axis=1)][0]} has a "
+                f'zero-norm feature vector (metric="cosine")'
+            )
         step = max(1, _BLOCK_TILE_ELEMS // len(ids))
-        for a in placed:
-            rows = np.flatnonzero(lab == a)
-            for r in (rows[s:s + step] for s in range(0, len(rows), step)):
-                D, ia = dist(X[r], X), ids[r]
-                D[ia[:, None] == ids[None, :]] = np.inf
-                idx = np.argsort(D, axis=1, kind="stable")[:, :k]
-                v = np.take_along_axis(D, idx, 1).ravel()
-                keep = np.isfinite(v)
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(np.repeat(ia, idx.shape[1])[keep], pa.int32()),
-                     pa.array(ids[idx].ravel()[keep], pa.int32()),
-                     pa.array(v[keep])],
-                    names=["i", "j", "v"],
-                )
+        rows = np.flatnonzero(np.isin(lab, list(placed)))
+        edges = []
+        for r in (rows[s:s + step] for s in range(0, len(rows), step)):
+            D, ia = dist(X[r], X), ids[r]
+            D[ia[:, None] == ids[None, :]] = np.inf
+            idx = np.argsort(D, axis=1, kind="stable")[:, :k]
+            v = np.take_along_axis(D, idx, 1).ravel()
+            keep = np.isfinite(v)
+            i_rep = np.repeat(ia, idx.shape[1])
+            edges.append((i_rep[keep], ids[idx].ravel()[keep], v[keep]))
+        if not edges:
+            return
+        i, j, v = (np.concatenate(c) for c in zip(*edges))
+        if perplexity is not None:
+            i, j, v = conditional_p(i, j, v, float(np.log(perplexity)))
+            partials.add(2.0 * float(v.sum()), len(rows))
+            i, j, v = symmetric_edges(i, j, v)
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(i, pa.int32()), pa.array(j, pa.int32()), pa.array(v)],
+            names=["i", "j", "v"],
+        )
 
     return run
 
 
 def partition_knn(
-    points: DataFrame, k: int, metric: str = "sqeuclidean", blocks: int | None = None
+    points: DataFrame, k: int, metric: str = "sqeuclidean", blocks: int | None = None,
+    perplexity=None, partials=None,
 ) -> DataFrame:
     """Blocked-cross kNN, result identical to ``k_nearest_neighbors``.
 
@@ -144,8 +159,12 @@ def partition_knn(
     Memory contract: the broadcast holds all features, 8·N·d bytes on the
     driver and on every executor (0.5 MB at N=2000, d=32), and a task
     ``_BLOCK_TILE_ELEMS`` distances at a time.  ``project_knn`` is the path
-    for scale.  A non-finite feature fails the job with an error naming its
-    point's id.
+    for scale.  A non-finite feature, or with ``metric="cosine"`` an
+    all-zero feature vector, fails the job with an error naming its point's
+    id.  Given ``perplexity`` and ``partials``, the block task also bisects
+    its points' distances and emits the symmetric P(j|i) edges, adding its
+    share of P's total and its point count (``TSNE.fit``: points to P in
+    one Python pass).
     """
     spark = points.sparkSession
     if blocks is None:
@@ -156,7 +175,7 @@ def partition_knn(
     )
     placed = spark.range(0, blocks, 1, blocks).select(F.col("id").alias("block_a"))
     return placed.crossJoin(F.broadcast(all_blocks)).mapInArrow(
-        _block_kernel(k, metric), schema="i int, j int, v double"
+        _block_kernel(k, metric, perplexity, partials), "i int, j int, v double"
     )
 
 

@@ -4,9 +4,9 @@ Flink iterates inside the cluster with superstep barriers
 (TsneHelpers.scala:371-394); Spark's idiom is a driver-side loop with
 per-iteration materialization.  ``localCheckpoint(eager=True)`` after each
 step truncates lineage (without it the plan doubles per iteration) and plays
-the role of the feedback edge.  Loss is a deterministic per-iteration
-aggregate, replacing the reference's MapAccumulator side-channel
-(MapAccumulator.java:27-77; accumulators double-count on task retry).
+the role of the feedback edge.  sumQ and the loss travel in an accumulator,
+as the reference's loss does (MapAccumulator.java:27-77), keyed by partition
+id so a retried task cannot count twice (operators/partials.py).
 
 One iteration shape for every ``tree_build`` (operators/gradient.py):
 
@@ -17,12 +17,12 @@ One iteration shape for every ``tree_build`` (operators/gradient.py):
    and take the mean from a bounds aggregate;
 2. one ``mapInArrow`` pass that centres its own rows and computes
    repulsion, attraction (each row carries its P row, attached once per
-   call), ``sumq`` and the KL partials — materialized;
-3. one job for sumQ and the loss;
-4. the momentum/gain update as a narrow projection with sumQ as a literal,
+   call) and ``sumq`` — materialized; its tasks' partials give sumQ and
+   the loss without another job;
+3. the momentum/gain update as a narrow projection with sumQ as a literal,
    left lazy: the next iteration's pass reads through it.
 
-With the driver-built tree that is three Spark jobs, no join and no
+With the driver-built tree that is two Spark jobs, no join and no
 shuffle.  The executor-side regimes add their tree build or cogroup and
 gather each row's neighbour coordinates by a join on the P edges instead
 of a Y broadcast.  Centring happens at the start of the next iteration,
@@ -49,10 +49,11 @@ from tsne_flink_spark.operators.gradient import (
     attach_p,
     dy,
     fused_pass,
-    pass_totals,
     resolve_tree_build,
     shifted_y,
+    sum_q_and_loss,
 )
+from tsne_flink_spark.operators.partials import Partials
 
 MIN_GAIN = 0.01
 LOSS_EVERY = 10
@@ -82,11 +83,9 @@ def materialize(df: DataFrame) -> DataFrame:
 
 
 def _descend(
-    rows: DataFrame,
-    iterations: int,
-    momentum: float,
-    exaggeration: float,
-    centre_first: bool,
+    working_set: DataFrame,
+    p_coo: DataFrame,
+    phases: list,
     iter_offset: int,
     loss_sink: list | None,
     metric: str,
@@ -95,42 +94,44 @@ def _descend(
     n_components: int,
     bh_condition: str,
     tree_build: str,
+    n: int | None,
+    p_partials: Partials | None = None,
 ) -> DataFrame:
-    """``iterations`` fused steps over rows carrying their P rows; returns
-    the updated rows, not yet centred, as a projection over the last
-    materialized pass."""
-    update = update_step(
-        dy(F.col("__sum_q")), ["id", "js", "vs"], MIN_GAIN, momentum,
-        learning_rate,
+    """P attached to the rows once, then (count, momentum, exaggeration)
+    ``phases`` of fused steps; returns the rows centred.  N (``n``, or
+    ``p_partials``') picks "auto"'s repulsion source, counted if unknown."""
+    rows = materialize(attach_p(working_set, p_coo))
+    p_total, n = (1.0, n) if p_partials is None else p_partials.totals()
+    tree_build = resolve_tree_build(
+        tree_build, theta, n_components, rows.count if n is None else lambda: n
     )
-    for step in range(1, iterations + 1):
-        it = iter_offset + step
-        want_loss = loss_sink is not None and it % LOSS_EVERY == 0
-        kern, _ = fused_pass(
-            rows, theta, n_components, metric,
-            exaggeration=exaggeration,
-            centre=centre_first or step > 1,
-            want_loss=want_loss,
-            bh_condition=bh_condition,
-            tree_build=tree_build,
+    it = iter_offset
+    for count, momentum, exaggeration in [ph for ph in phases if ph[0] > 0]:
+        update = update_step(
+            dy(F.col("__sum_q")), ["id", "js", "vs"], MIN_GAIN, momentum,
+            learning_rate,
         )
-        # materialize + truncate lineage and stats: the kernel runs once,
-        # and the next iteration reads cached partitions
-        kern = materialize(kern)
-        sum_q, loss = pass_totals(kern)
-        # the update stays a lazy projection over the materialized pass:
-        # the next iteration's pass reads through it
-        rows = update(kern.withColumn("__sum_q", F.lit(sum_q)))
-        if want_loss:
-            loss_sink.append((it, loss))
-    return rows
-
-
-def _centred(rows: DataFrame, n_components: int) -> DataFrame:
-    """(id, y, grad, gains) with y centred by its mean (one aggregate)."""
-    means = rows.agg(
-        *[F.avg(F.col("y")[k]) for k in range(n_components)]
-    ).first()
+        for _ in range(count):
+            it += 1
+            kern, _, partials = fused_pass(
+                rows, theta, n_components, metric,
+                exaggeration=exaggeration,
+                centre=it > iter_offset + 1,
+                bh_condition=bh_condition,
+                tree_build=tree_build,
+                p_total=p_total,
+            )
+            # materialize + truncate lineage and stats: the kernel runs once,
+            # and the next iteration reads cached partitions
+            kern = materialize(kern)
+            sum_q, loss = sum_q_and_loss(partials)
+            # the update stays a lazy projection over the materialized pass:
+            # the next iteration's pass reads through it
+            rows = update(kern.withColumn("__sum_q", F.lit(sum_q)))
+            if loss_sink is not None and it % LOSS_EVERY == 0:
+                loss_sink.append((it, loss))
+    # centred by the mean of the last update (one aggregate)
+    means = rows.agg(*[F.avg(F.col("y")[k]) for k in range(n_components)]).first()
     mean = np.array([0.0 if m is None else m for m in means])
     return rows.select("id", shifted_y(mean).alias("y"), "grad", "gains")
 
@@ -156,23 +157,15 @@ def iteration_computation(
     Mirrors TsneHelpers.iterationComputation (TsneHelpers.scala:371-394);
     the superstep number is 1-based, so global iteration = iter_offset + step.
     Appends (iteration, loss) tuples to ``loss_sink`` every 10th iteration.
-    ``p_coo`` is attached to the rows once per call.
-
-    ``n_hint`` is the row count, when the caller knows it: "auto" picks
-    the repulsion source by N, and counts the rows once without it.
+    ``n_hint`` is the row count, if known ("auto" counts it otherwise).
     """
     if iterations <= 0:
         return working_set
-    rows = materialize(attach_p(working_set, p_coo))
-    tree_build = resolve_tree_build(
-        tree_build, theta, n_components,
-        lambda: rows.count() if n_hint is None else n_hint,
+    return _descend(
+        working_set, p_coo, [(iterations, momentum, 1.0)], iter_offset,
+        loss_sink, metric, learning_rate, theta, n_components, bh_condition,
+        tree_build, n_hint,
     )
-    rows = _descend(
-        rows, iterations, momentum, 1.0, False, iter_offset, loss_sink,
-        metric, learning_rate, theta, n_components, bh_condition, tree_build,
-    )
-    return _centred(rows, n_components)
 
 
 def optimize(
@@ -189,29 +182,22 @@ def optimize(
     loss_sink: list | None = None,
     bh_condition: str = "reference",
     tree_build: str = "auto",
+    p_partials: Partials | None = None,
 ) -> DataFrame:
-    """Full three-phase optimization; returns the final (id, y) embedding."""
+    """Full three-phase optimization; returns the final (id, y) embedding.
+    ``p_coo`` is a joint P, or the symmetric edges of P kernels that fed
+    ``p_partials`` (P's total and N, read once the rows materialize)."""
     if iterations <= 0:
         return initial_working_set.select("id", "y")
     iter_init = min(iterations, 20)
     iter_exag = min(iterations - iter_init, 101 - 20)
-    iter_plain = iterations - iter_exag - iter_init
-
-    rows = materialize(attach_p(initial_working_set, p_coo))
-    # N is loop-invariant: "auto" counts once per call
-    tree_build = resolve_tree_build(tree_build, theta, n_components, rows.count)
-    common = (metric, learning_rate, theta, n_components, bh_condition, tree_build)
-    phases = (
+    phases = [
         (iter_init, initial_momentum, early_exaggeration),
         (iter_exag, final_momentum, early_exaggeration),
-        (iter_plain, final_momentum, 1.0),
-    )
-    done = 0
-    for count, momentum, exaggeration in phases:
-        if count > 0:
-            rows = _descend(
-                rows, count, momentum, exaggeration, done > 0, done,
-                loss_sink, *common,
-            )
-            done += count
-    return _centred(rows, n_components).select("id", "y")
+        (iterations - iter_exag - iter_init, final_momentum, 1.0),
+    ]
+    return _descend(
+        initial_working_set, p_coo, phases, 0, loss_sink, metric,
+        learning_rate, theta, n_components, bh_condition, tree_build, None,
+        p_partials,
+    ).select("id", "y")

@@ -95,28 +95,6 @@ def brute_force_top_k(
     )
 
 
-def _proj_expr(vec: Column, w: np.ndarray) -> Column:
-    """Dot product against a constant vector, unrolled per index so it stays
-    in whole-stage codegen (the HOF form is evaluated interpreted), CSE-
-    chunked so the generated method stays JIT-compilable (see
-    metrics._chunked_sum)."""
-    from tsne_flink_spark.functions.metrics import _chunked_sum
-
-    return _chunked_sum([vec[k] * float(w[k]) for k in range(len(w))])
-
-
-def _hyperplane_bucket(vec: Column, planes: np.ndarray) -> Column:
-    """The base sign-bucket: one bit per plane, packed into a LONG.
-
-    Column form for ad-hoc use; bulk paths use ``_hyperplane_assign`` (one
-    GEMM per Arrow batch — no per-plane generated code to compile)."""
-    bucket = F.lit(0).cast("long")
-    for p in range(len(planes)):
-        proj = _proj_expr(vec, planes[p])
-        bucket = bucket + (proj > 0).cast("long") * F.lit(2**p)
-    return bucket
-
-
 def _hyperplane_assign(
     df, alias: str, id_type: str, planes: np.ndarray, probe_flips: int
 ):

@@ -11,12 +11,9 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
-from pyspark.storagelevel import StorageLevel
+from pyspark.sql import functions as F
 
-from tsne_flink_spark.operators.affinities import (
-    joint_distribution,
-    pairwise_affinities,
-)
+from tsne_flink_spark.operators.affinities import pairwise_affinities
 from tsne_flink_spark.operators.embedding import init_working_set
 from tsne_flink_spark.operators.knn import (
     k_nearest_neighbors,
@@ -24,6 +21,7 @@ from tsne_flink_spark.operators.knn import (
     project_knn,
 )
 from tsne_flink_spark.operators.optimize import optimize
+from tsne_flink_spark.operators.partials import Partials
 
 
 @dataclass
@@ -69,23 +67,38 @@ class TSNE:
     def _k(self) -> int:
         return self.neighbors if self.neighbors is not None else 3 * int(self.perplexity)
 
-    def _knn(self, points: DataFrame) -> DataFrame:
-        if self.knn_method == "bruteforce":
-            return k_nearest_neighbors(
-                points, self._k, self.metric, dim=self.dimension
+    def _p_edges(
+        self, points: DataFrame | None, distances: DataFrame | None, plan=False
+    ) -> tuple[DataFrame, Partials]:
+        """The symmetric P(j|i) edges, and the ``Partials`` their kernel's
+        tasks add P's total and their point count to: the kNN block kernel
+        for ``"partition"``, else ``pairwise_affinities`` over the kNN."""
+        if (points is None) == (distances is None):
+            raise ValueError("provide exactly one of points= or distances=")
+        source = points if points is not None else distances
+        partials = Partials(source.sparkSession.sparkContext, 2)
+        k, metric = self._k, self.metric
+        if distances is not None:
+            knn = distances
+        elif self.knn_method == "partition":
+            return partition_knn(points, k, metric, self.knn_blocks,
+                                 self.perplexity, partials), partials
+        elif self.knn_method == "bruteforce":
+            knn = k_nearest_neighbors(points, k, metric, dim=self.dimension)
+        elif self.knn_method == "project":
+            knn = project_knn(
+                points, k, metric, dimension=self.dimension,
+                iterations=self.knn_iterations, seed=self.random_state,
+                _plan_stub=plan,
             )
-        if self.knn_method == "partition":
-            return partition_knn(points, self._k, self.metric, self.knn_blocks)
-        if self.knn_method == "project":
-            return project_knn(
-                points,
-                self._k,
-                self.metric,
-                dimension=self.dimension,
-                iterations=self.knn_iterations,
-                seed=self.random_state,
-            )
-        raise ValueError(f"unknown knn_method {self.knn_method!r}")
+        else:
+            raise ValueError(f"unknown knn_method {self.knn_method!r}")
+        return pairwise_affinities(knn, self.perplexity, partials), partials
+
+    def _working_set(self, points, distances) -> DataFrame:
+        ids = points if points is not None else distances.select(
+            F.explode(F.array("i", "j")).alias("id")).distinct()
+        return init_working_set(ids.select("id"), self.n_components, self.random_state)
 
     def fit(
         self, points: DataFrame | None = None, distances: DataFrame | None = None
@@ -93,25 +106,14 @@ class TSNE:
         """Run the pipeline; returns the final (id, y ARRAY<DOUBLE>) embedding.
 
         Exactly one of ``points`` (id, features) / ``distances`` (i, j, v COO)
-        must be given.
+        must be given.  The input reaches the loop's P rows through one P
+        kernel pass and one exchange; P's total and N come from its tasks.
         """
-        if (points is None) == (distances is None):
-            raise ValueError("provide exactly one of points= or distances=")
-
-        knn = distances if distances is not None else self._knn(points)
-        p_cond = pairwise_affinities(knn, self.perplexity)
-        p_joint = joint_distribution(p_cond).persist(StorageLevel.MEMORY_AND_DISK)
-
-        ids = (points if points is not None else p_joint.select(
-            p_joint["i"].alias("id")).distinct())
-        working_set = init_working_set(
-            ids.select("id"), self.n_components, self.random_state
-        )
-
+        p_edges, partials = self._p_edges(points, distances)
         self.loss_records.clear()
-        embedding = optimize(
-            p_joint,
-            working_set,
+        return optimize(
+            p_edges,
+            self._working_set(points, distances),
             learning_rate=self.learning_rate,
             iterations=self.iterations,
             metric=self.metric,
@@ -123,9 +125,8 @@ class TSNE:
             loss_sink=self.loss_records,
             bh_condition=self.bh_condition,
             tree_build=self.tree_build,
+            p_partials=partials,
         )
-        p_joint.unpersist()
-        return embedding
 
     def plan(
         self, points: DataFrame | None = None, distances: DataFrame | None = None
@@ -134,51 +135,21 @@ class TSNE:
 
         The reference's ``--executionPlan`` dumps the lazily assembled Flink
         job graph without executing it (Tsne.scala:89-95); the Spark analogue
-        is the physical plan of one kNN -> affinities -> joint -> P attach
-        -> fused gradient pass -> update step.  The driver loop's
-        per-iteration ``materialize()`` is deliberately absent, the loop's
-        driver-side values (sumQ, the centring mean) are placeholders, and
-        the fused pass is planned against a stub broadcast tree, so
-        nothing here triggers an action.  With ``dimension`` set, plan
-        construction runs ZERO Spark jobs for every knn_method:
-        ``"project"`` is planned in stub mode (placeholder quantization
-        bounds and a lazy placeholder rank column standing in for the real
-        global rank, whose materialized range shuffle and partition-count
-        collect are inherently eager and so cannot appear in an unexecuted
-        plan).
+        is the physical plan of ``fit``'s shape: P kernel -> P attach ->
+        fused gradient pass (against a stub broadcast tree) -> update step,
+        with the loop's driver-side values (P's total, sumQ, the centring
+        mean) as placeholders and no ``materialize()``.  With ``dimension``
+        set, that runs ZERO Spark jobs for every knn_method: ``"project"``
+        is planned in stub mode (placeholder quantization bounds and a lazy
+        placeholder rank, as its real global rank is inherently eager).
         """
-        from pyspark.sql import functions as F
-
         from tsne_flink_spark.operators.embedding import update_step
         from tsne_flink_spark.operators.gradient import attach_p, dy, fused_pass
         from tsne_flink_spark.operators.optimize import MIN_GAIN
 
-        if (points is None) == (distances is None):
-            raise ValueError("provide exactly one of points= or distances=")
-
-        if distances is not None:
-            knn = distances
-        elif self.knn_method == "project":
-            knn = project_knn(
-                points,
-                self._k,
-                self.metric,
-                dimension=self.dimension,
-                iterations=self.knn_iterations,
-                seed=self.random_state,
-                _plan_stub=True,
-            )
-        else:
-            knn = self._knn(points)
-        p_cond = pairwise_affinities(knn, self.perplexity)
-        p_joint = joint_distribution(p_cond)
-        ids = (points if points is not None else p_joint.select(
-            p_joint["i"].alias("id")).distinct())
-        ws = init_working_set(
-            ids.select("id"), self.n_components, self.random_state
-        )
-        kern, _ = fused_pass(
-            attach_p(ws, p_joint),
+        p_edges, _ = self._p_edges(points, distances, plan=True)
+        kern, _, _ = fused_pass(
+            attach_p(self._working_set(points, distances), p_edges),
             self.theta,
             self.n_components,
             self.metric,
