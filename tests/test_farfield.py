@@ -75,7 +75,7 @@ def test_summary_large_n_spark_path(spark):
     assert len(rep) == 8192
 
     full, _used = repulsive_barnes_hut(
-        emb, 0.5, 2, bh_condition="scaled", tree_build="distributed"
+        emb, 0.5, 2, bh_condition="scaled", tree_build="driver"
     )
     full_rep, _ = _collect_rep(full)
 

@@ -14,8 +14,8 @@ Gates:
   against the EXACT (theta=0) gradient — error no worse than ~1.5x the
   full-tree error on random data;
 - degenerate regimes (tiny N, zero extent, halo ~ grid) fall back to the
-  full-tree path and produce its exact result; auto selects summary above
-  the broadcast budget.
+  driver-built full tree and produce its exact result; auto selects summary
+  above the broadcast budget.
 """
 
 import numpy as np
@@ -144,7 +144,7 @@ def check_summary_accuracy_class(spark, Y, depth: int, condition: str) -> None:
     exact_rep, exact_sumq = exact_repulsion(Y)
 
     full, used = repulsive_barnes_hut(
-        emb, theta, d, bh_condition=condition, tree_build="distributed"
+        emb, theta, d, bh_condition=condition, tree_build="driver"
     )
     assert not used
     full_rep, full_sumq = _collect_rep(full)
@@ -171,24 +171,37 @@ def check_summary_accuracy_class(spark, Y, depth: int, condition: str) -> None:
 
 
 def check_summary_fallback(spark, d: int) -> None:
-    """Below the N threshold plan_summary declines and tree_build='summary'
-    falls back to the distributed full tree — results must be IDENTICAL."""
+    """Below ``MIN_SUMMARY_N`` plan_summary declines, and
+    tree_build='summary' takes the driver build unchanged: attr, rep,
+    per-row sumq and the loss equal tree_build='driver' bit for bit
+    (centred, so the fallback must use the NumPy mean, not the bounds
+    aggregate's)."""
+    from tsne_flink_spark.operators.gradient import (
+        attach_p,
+        fused_pass,
+        sum_q_and_loss,
+    )
+    from tsne_flink_spark.operators.optimize import materialize
+    from tsne_flink_spark.sources.readers import coo_from_rows
+
     rng = np.random.default_rng(11)
-    Y = rng.normal(0, 10.0, (120, d))
-    Y = Y - Y.mean(axis=0)
-    emb = _emb(spark, Y)
-    via_summary, used_s = repulsive_barnes_hut(
-        emb, 0.5, d, bh_condition="scaled", tree_build="summary"
-    )
-    via_full, used_f = repulsive_barnes_hut(
-        emb, 0.5, d, bh_condition="scaled", tree_build="distributed"
-    )
-    assert not used_s and not used_f  # summary declined -> full-tree fallback
-    s_rep, s_sq = _collect_rep(via_summary)
-    f_rep, f_sq = _collect_rep(via_full)
-    for i in f_rep:
-        assert np.allclose(s_rep[i], f_rep[i], rtol=0, atol=0)
-        assert s_sq[i] == f_sq[i]
+    n = 120
+    Y = rng.normal(0, 10.0, (n, d))
+    edges = [(i, (i + k) % n, float(rng.uniform(0.1, 1.0)))
+             for i in range(n) for k in (1, 7)]
+    rows = materialize(attach_p(_emb(spark, Y), coo_from_rows(spark, edges)))
+    got = {}
+    for tree_build in ("summary", "driver"):
+        kern, used, partials = fused_pass(
+            rows, 0.5, d, centre=True, bh_condition="scaled",
+            tree_build=tree_build,
+        )
+        assert not used  # summary declined -> driver-build fallback
+        out = {r["id"]: (r["attr"], r["rep"], r["sumq"])
+               for r in materialize(kern).collect()}
+        got[tree_build] = out, sum_q_and_loss(partials)
+    assert len(got["driver"][0]) == n
+    assert got["summary"] == got["driver"]
 
 
 def check_uncentred_mass_dropped(spark, d: int, depth: int) -> None:

@@ -1,6 +1,8 @@
 """Gradient / update / centering / iteration golden tests —
 mirrors TsneHelpersTestSuite.scala:139-327."""
 
+from contextlib import contextmanager
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -137,8 +139,8 @@ def test_loss_decreases(spark):
 
 
 def test_tree_build_validation(spark):
-    """Unknown tree_build strings error instead of silently falling back to
-    the distributed build (the CLI is choice-restricted; the API is not)."""
+    """Unknown tree_build strings error instead of silently picking a
+    repulsion source (the CLI is choice-restricted; the API is not)."""
     import pytest
 
     from tests.fixtures import repulsive_barnes_hut
@@ -260,27 +262,80 @@ def test_fused_loop_matches_numpy_replay(spark, metric):
     assert loss == pytest.approx(want, rel=1e-12, abs=0)
 
 
+@contextmanager
+def _one_shuffle_partition(spark):
+    """Every shuffle in one partition, so the summary pass's joins keep a
+    one-partition, id-ordered input in one task and in id order, as the
+    driver path reads it: the kernel's partials then sum in the same
+    order."""
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "1")
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+
+
+def _attr_and_kl(rows, d, metric, tree_build):
+    """One fused pass: ({id: attr}, (sum v*log(v/q), sum v) partials)."""
+    from tsne_flink_spark.operators.gradient import fused_pass
+
+    kern, used, partials = fused_pass(
+        rows, 0.5, d, metric, bh_condition="scaled", tree_build=tree_build
+    )
+    assert used == (tree_build == "summary")
+    attr = {r["id"]: r["attr"] for r in materialize(kern).collect()}
+    return attr, partials.totals()[1:]
+
+
 def test_executor_regimes_keep_y_off_driver(spark, monkeypatch):
-    """The executor-side build never collects Y on the driver: with the
-    collect disabled, a fit still matches the NumPy replay (neighbour
-    coordinates come from the P-edge gather, the mean from a bounds
-    aggregate).  The summary regime's guard is
+    """The summary regime never collects Y on the driver: with the collect
+    disabled and the plan forced at N=120, a 10-iteration fit runs every
+    pass on the summary path (neighbour coordinates from the P-edge
+    gather, the mean from a bounds aggregate) and ends with every row,
+    centred.  The large-N loop guard is
     tests/test_farfield.py::test_summary_mode_full_optimize_loop."""
+    from tsne_flink_spark.operators import farfield
     from tsne_flink_spark.operators import gradient as G
+
+    y0, _, p, ws = _replay_case(spark)
+    passes = []
+    summary_repulsion = G._summary_repulsion
+
+    def counting(*args):
+        got = summary_repulsion(*args)
+        passes.append(got is not None)
+        return got
 
     def no_collect(*args, **kwargs):
         raise AssertionError("Y collected on the driver")
 
+    monkeypatch.setattr(farfield, "MIN_SUMMARY_N", 0)
+    monkeypatch.setattr(G, "_summary_repulsion", counting)
     monkeypatch.setattr(G, "collect_y", no_collect)
-    loss, want = _fit_vs_replay(spark, "cosine", "distributed")
-    assert loss == pytest.approx(want, rel=1e-12, abs=0)
+    sink = []
+    out = iteration_computation(
+        10, 0.5, ws, p, metric="cosine", learning_rate=50.0, theta=0.5,
+        n_components=2, loss_sink=sink, bh_condition="scaled",
+        tree_build="summary",
+    ).collect()
+    assert passes == [True] * 10
+    assert sorted(r["id"] for r in out) == list(range(len(y0)))
+    y = np.array([r["y"] for r in out])
+    assert np.isfinite(y).all() and np.abs(y.mean(axis=0)).max() < 1e-9
+    assert [it for it, _ in sink] == [10] and np.isfinite(sink[0][1])
 
 
 @pytest.mark.parametrize("d, metric", [(2, "cosine"), (3, "euclidean")])
-def test_gathered_attraction_matches_broadcast(spark, d, metric):
-    """The attraction gathered by a P-edge join (distributed build) equals
-    the broadcast-Y lookup (driver build): the same neighbours in the same
-    order, including a row without P and a P entry whose j is not a row."""
+def test_gathered_attraction_matches_broadcast(spark, monkeypatch, d, metric):
+    """The attraction the summary regime gathers by a P-edge join equals
+    the driver build's broadcast-Y lookup bit for bit — the kernel's attr
+    column and its sum v*log(v/q) and sum v partials — with the summary
+    plan forced at N=200: the same neighbours in the same order, including
+    a row without P and a P entry whose j is not a row."""
+    from tsne_flink_spark.operators import farfield
+    from tsne_flink_spark.operators.gradient import attach_p
+
     rng = np.random.default_rng(5)
     n = 200
     Y = rng.normal(0.0, 5.0, (n, d))
@@ -294,21 +349,17 @@ def test_gathered_attraction_matches_broadcast(spark, d, metric):
     ]
     edges.append((0, n + 7, 0.5))  # a neighbour that is not a row
     p = coo_from_rows(spark, edges)
-    got = {}
-    for tree_build in ("driver", "distributed"):
-        grad, loss = gradient(
-            p, emb, metric=metric, theta=0.5, n_components=d,
-            compute_loss=True, bh_condition="scaled", tree_build=tree_build,
+    monkeypatch.setattr(farfield, "MIN_SUMMARY_N", 0)
+    with _one_shuffle_partition(spark):
+        rows = materialize(
+            attach_p(emb, p).repartition(1).sortWithinPartitions("id")
         )
-        got[tree_build] = (
-            {r["id"]: np.array(r["dy"]) for r in grad.collect()},
-            loss.first()["loss"],
-        )
-    (want, want_loss), (dy, loss) = got["driver"], got["distributed"]
-    assert sorted(dy) == list(range(n))
-    for i in range(n):
-        assert np.allclose(dy[i], want[i], rtol=1e-12, atol=1e-15)
-    assert loss == pytest.approx(want_loss, rel=1e-12, abs=0)
+        want_attr, want_kl = _attr_and_kl(rows, d, metric, "driver")
+        attr, kl = _attr_and_kl(rows, d, metric, "summary")
+    assert sorted(attr) == list(range(n))
+    assert want_attr[n - 1] == [0.0] * d  # the row without P
+    assert attr == want_attr
+    assert kl == want_kl
 
 
 def test_loop_jobs_per_iteration(spark):

@@ -8,23 +8,18 @@ tests/test_quadtree_distributed.py and tests/test_properties.py.
 
 Oracles: exact brute-force repulsion in numpy (theta -> 0 must match to
 float precision; theta = 0.5 must sit in the same accuracy band as the 2-D
-tree), sequential-insert vs bulk vs merged vs distributed build equivalence
-(the capacity-1 tree's structure depends only on the point SET, so the
-builds must agree node-for-node, with sums equal up to FP summation
-order)."""
+tree), sequential-insert vs bulk build equivalence (the capacity-1 tree's
+structure depends only on the point SET, so the builds must agree
+node-for-node, with sums equal up to FP summation order)."""
 
 import numpy as np
 import pytest
-from hypothesis import given, settings
-from hypothesis import strategies as st
 
 from tsne_flink_spark.operators.ndtree import (
     _MAX_DEPTH,
     NDTree,
     _bulk_build,
     build_ndtree,
-    build_ndtree_distributed,
-    merge_ndtrees,
 )
 
 
@@ -136,96 +131,23 @@ def check_coincident_points(d: int) -> None:
     assert abs(s[0] - want_s) < 1e-12
 
 
-def check_merge_equals_sequential(d: int) -> None:
-    """Partition trees merged pairwise equal the sequential build node for
-    node (coincident points included) and evaluate identically at exact and
-    approximate theta."""
-    rng = np.random.default_rng(7)
-    Y = rng.normal(0, 3, (400, d))
-    Y[50] = Y[51] = Y[10]  # the weighted re-seat rule must hold
-    half = float((Y.max(axis=0) - Y.min(axis=0)).max())
-    seq = build_ndtree(Y)
-    # 7 uneven blocks, each built over the SAME root cell, then merged
-    parts = [_tree_of(blk, half) for blk in np.array_split(Y, 7)]
-    merged = parts[0]
-    for t in parts[1:]:
-        merged = merge_ndtrees(merged, t)
-    assert merged.cum[0] == seq.cum[0] == len(Y)
-    _assert_equivalent(merged, seq)
-    for theta, cond in [(1e-300, "reference"), (0.5, "scaled")]:
-        f_seq, q_seq = seq.repulsive_forces(Y, theta, condition=cond)
-        f_mrg, q_mrg = merged.repulsive_forces(Y, theta, condition=cond)
-        np.testing.assert_allclose(f_mrg, f_seq, rtol=1e-9, atol=1e-12)
-        np.testing.assert_allclose(q_mrg, q_seq, rtol=1e-9, atol=1e-12)
-
-
-def check_merge_with_coincident_points(d: int) -> None:
-    """Coincident points accumulate in one leaf across partitions too, and a
-    later split re-seats the full leaf weight."""
-    rng = np.random.default_rng(d)
-    base = rng.uniform(-2, 2, (3, d))
-    Y = np.concatenate([base, base, base])  # every point x3
-    half = float((Y.max(axis=0) - Y.min(axis=0)).max())
-    merged = merge_ndtrees(_tree_of(Y[:4], half), _tree_of(Y[4:], half))
-    assert merged.cum[0] == 9
-    # leaves holding each distinct point carry multiplicity 3
-    assert _leaf_cums(merged) == [3, 3, 3]
-
-
 def check_split_reseats_full_coincident_weight(d: int) -> None:
     """Insert p, a bit-equal copy of p, THEN a near point r: the split below
-    must carry BOTH copies of p (cum 2), matching the structural merge's
-    weighting."""
+    must carry BOTH copies of p (cum 2), matching the bulk build, which
+    collapses coincident rows into one weighted point."""
     p = np.full(d, 0.25)
     r = p.copy()
     r[0] += 1e-9
-    seq = _tree_of([p, p, r], 1.0)
-    merged = merge_ndtrees(_tree_of([p, p], 1.0), _tree_of([r], 1.0))
-    _assert_equivalent(seq, merged, tol=1e-12)
-    for tree in (seq, merged):
-        assert _leaf_cums(tree) == [1, 2]
     Y = np.array([p, p, r])
+    seq = _tree_of(Y, 1.0)
+    bulk = _bulk_build(NDTree(np.zeros(d), 1.0), Y)
+    _assert_equivalent(seq, bulk, tol=1e-12)
+    for tree in (seq, bulk):
+        assert _leaf_cums(tree) == [1, 2]
     f1, q1 = seq.repulsive_forces(Y, 0.5, condition="scaled")
-    f2, q2 = merged.repulsive_forces(Y, 0.5, condition="scaled")
+    f2, q2 = bulk.repulsive_forces(Y, 0.5, condition="scaled")
     np.testing.assert_allclose(f1, f2, rtol=1e-12)
     np.testing.assert_allclose(q1, q2, rtol=1e-12)
-
-
-def check_merge_property(d: int, n: int, dup_every: int, n_blocks: int,
-                         seed: int) -> None:
-    """For ANY point set (bit-equal duplicates and coincident splits
-    included) and ANY partitioning, merged partition trees equal the
-    sequential build: same cells, same integer masses, same points."""
-    rng = np.random.default_rng(seed)
-    Y = rng.normal(0, 2, (n, d))
-    Y[::dup_every] = Y[0]  # inject coincident copies
-    perm = rng.permutation(n)
-    half = float((Y.max(axis=0) - Y.min(axis=0)).max()) or 1.0
-    seq = _tree_of(Y, half)
-    parts = [_tree_of(Y[blk], half)
-             for blk in np.array_split(perm, min(n_blocks, n))]
-    merged = parts[0]
-    for t in parts[1:]:
-        merged = merge_ndtrees(merged, t)
-    assert merged.cum[0] == seq.cum[0]
-    _assert_equivalent(merged, seq, tol=1e-9)
-
-
-def check_distributed_build_matches_driver(spark, d: int) -> None:
-    rng = np.random.default_rng(3)
-    Y = rng.normal(0, 2, (300, d))
-    dist = build_ndtree_distributed(_emb(spark, Y).repartition(9), d)
-    seq = build_ndtree(Y)
-    assert dist.cum[0] == seq.cum[0] == len(Y)
-    _assert_equivalent(dist, seq)
-
-
-def check_distributed_build_empty(spark, d: int) -> None:
-    emb = spark.createDataFrame([], "id int, y array<double>")
-    t = build_ndtree_distributed(emb, d)
-    assert t.cum[0] == 0
-    f, q = t.repulsive_forces(np.zeros((2, d)), 0.5)
-    assert (f == 0).all() and (q == 0).all()
 
 
 def check_bulk_build_equals_insert(d: int, seed: int) -> None:
@@ -278,8 +200,8 @@ def check_depth_exhaustion(d: int) -> None:
     """Points separated only below _MAX_DEPTH levels land in ONE terminal
     accumulate-only leaf (no massless last-level subdivide — that shape
     loses the cluster's mass in force queries, which expand internal nodes
-    and drop empty children).  Sequential insert (lex order), bulk build and
-    the structural merge agree, and exact evaluation sees all the mass."""
+    and drop empty children).  Sequential insert (lex order) and the bulk
+    build agree, and exact evaluation sees all the mass."""
     # Coordinates chosen exactly representable, strictly interior to every
     # cell through depth 63 (the 2^-80 guard bit keeps them off all split
     # planes, dodging the documented 1-ulp boundary-drop edge), separated
@@ -293,10 +215,8 @@ def check_depth_exhaustion(d: int) -> None:
 
     seq = _tree_of(Y, 1.0).trim()
     bulk = _bulk_build(NDTree(np.zeros(d), 1.0), Y).trim()
-    # merge path: one tree holding the near pair, one holding the far point
-    merged = merge_ndtrees(_tree_of([p1, p2], 1.0), _tree_of([far], 1.0)).trim()
 
-    for t in (seq, bulk, merged):
+    for t in (seq, bulk):
         assert t.cum[0] == 3
         assert int(t.depth[: t.n_nodes].max()) <= _MAX_DEPTH - 1
         md = int(t.depth[: t.n_nodes].max())
@@ -312,7 +232,7 @@ def check_depth_exhaustion(d: int) -> None:
 
     Q = np.array([far + 0.25])
     brute = sum(1.0 / (1.0 + ((Q[0] - p) ** 2).sum()) for p in Y)
-    for t in (seq, bulk, merged):
+    for t in (seq, bulk):
         _, sq = t.repulsive_forces(Q, 0.0)
         assert np.isclose(sq[0], brute, rtol=1e-9)
 
@@ -350,39 +270,12 @@ def test_ndtree_theta_half_accuracy_band_3d():
     assert abs(sumq.sum() - exact_total) / exact_total < 0.05
 
 
-def test_ndtree_merge_equivalence():
-    check_merge_equals_sequential(3)
-
-
-def test_ndtree_merge_with_coincident_points():
-    check_merge_with_coincident_points(3)
-
-
 def test_ndtree_split_reseats_full_coincident_weight():
     check_split_reseats_full_coincident_weight(3)
 
 
-@settings(max_examples=20, deadline=None)
-@given(
-    n=st.integers(min_value=1, max_value=120),
-    dup_every=st.integers(min_value=2, max_value=6),
-    n_blocks=st.integers(min_value=1, max_value=9),
-    seed=st.integers(min_value=0, max_value=10_000),
-)
-def test_ndtree_merge_equivalence_property(n, dup_every, n_blocks, seed):
-    check_merge_property(3, n, dup_every, n_blocks, seed)
-
-
 def test_ndtree_coincident_and_outside_points():
     check_coincident_points(3)
-
-
-def test_ndtree_distributed_build_matches_driver(spark):
-    check_distributed_build_matches_driver(spark, 3)
-
-
-def test_ndtree_distributed_build_empty(spark):
-    check_distributed_build_empty(spark, 3)
 
 
 def test_bulk_build_equals_sequential_insert():
@@ -401,7 +294,7 @@ def test_build_rejects_zero_dimensions():
 
 def test_gradient_3d_barnes_hut_matches_exact(spark):
     """End-to-end through the Spark gradient: n_components=3 with theta>0
-    (distributed build) must agree with the exact theta=0 gradient within
+    (driver build) must agree with the exact theta=0 gradient within
     the 2-D tolerance band."""
     from tsne_flink_spark.operators.gradient import gradient
 
@@ -417,7 +310,7 @@ def test_gradient_3d_barnes_hut_matches_exact(spark):
     g_exact, _ = gradient(p, emb, theta=0.0, n_components=3)
     g_bh, _ = gradient(
         p, emb, theta=0.5, n_components=3, bh_condition="scaled",
-        tree_build="distributed",
+        tree_build="driver",
     )
     ge = {r["id"]: np.array(r["dy"]) for r in g_exact.collect()}
     gb = {r["id"]: np.array(r["dy"]) for r in g_bh.collect()}

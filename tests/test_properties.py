@@ -73,8 +73,8 @@ def test_quadtree_coincident_points():
     bit-equal query point gets nothing from its own leaf
     (QuadTree.scala:128), and a later split re-seats the FULL leaf weight —
     the documented divergence from QuadTree.scala:59, whose
-    insertion-ORDER-dependent mass drop no order-independent distributed
-    build can reproduce (operators/ndtree.py).  Body shared with the d != 2
+    insertion-ORDER-dependent mass drop the order-free bulk build cannot
+    reproduce (operators/ndtree.py).  Body shared with the d != 2
     cases in tests/test_ndtree.py."""
     from tests.test_ndtree import check_coincident_points
 

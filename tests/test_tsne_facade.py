@@ -62,6 +62,39 @@ def test_fit_rejects_nonpositive_n_components(spark, n_components):
         TSNE(n_components=n_components, dimension=2).plan(points=df)
 
 
+@pytest.mark.parametrize("tree_build", ["stub", "drivers"])
+def test_tree_build_rejected_before_any_job(spark, tree_build):
+    """A tree_build that is not "auto", "driver" or "summary" fails when
+    TSNE is constructed, and optimize, iteration_computation and gradient
+    reject it before their first job.  The plan-only "stub" (an empty tree,
+    sumQ 0) is accepted only inside plan(), which still runs no job."""
+    from tsne_flink_spark.operators.embedding import init_working_set
+    from tsne_flink_spark.operators.gradient import gradient
+    from tsne_flink_spark.operators.optimize import (
+        iteration_computation,
+        optimize,
+    )
+
+    df = points_from_rows(spark, [(i, [float(i), 0.0]) for i in range(6)])
+    p = coo_from_rows(spark, [(0, 1, 0.5), (1, 0, 0.5)])
+    ws = init_working_set(df.select("id"))
+    tracker = spark.sparkContext.statusTracker()
+    jobs_before = len(tracker.getJobIdsForGroup(None))
+    calls = [
+        lambda: TSNE(tree_build=tree_build),
+        lambda: optimize(p, ws, iterations=2, tree_build=tree_build),
+        lambda: iteration_computation(2, 0.5, ws, p, tree_build=tree_build),
+        lambda: gradient(p, ws.select("id", "y"), theta=0.5,
+                         tree_build=tree_build),
+    ]
+    for call in calls:
+        with pytest.raises(ValueError, match="tree_build"):
+            call()
+    TSNE(perplexity=2.0, neighbors=3, knn_method="partition",
+         dimension=2).plan(points=df)
+    assert len(tracker.getJobIdsForGroup(None)) == jobs_before
+
+
 def test_cli_rejects_nonpositive_n_components(capsys):
     from tsne_flink_spark.cli import build_parser
 

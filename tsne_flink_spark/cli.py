@@ -58,20 +58,19 @@ def build_parser() -> argparse.ArgumentParser:
                         "the reference's non-scale-invariant test (quirk Q2); "
                         "'scaled' is canonical scale-invariant Barnes-Hut")
     p.add_argument("--treeBuild",
-                   choices=["auto", "distributed", "driver", "summary"],
+                   choices=["auto", "driver", "summary"],
                    default="auto",
                    help="Barnes-Hut tree build (any --nComponents; the "
                         "reference's quadtree at 2): 'auto' (default) uses the "
                         "driver-built full tree below a 64 MB broadcast "
                         "budget and the far-field summary above it; "
-                        "'distributed' merges per-partition subtrees "
-                        "executor-side (no per-iteration driver collect); "
                         "'driver' collects Y and builds the tree on the "
                         "driver; "
                         "'summary' replaces the per-iteration O(N) tree "
                         "broadcast with a depth-capped far-field summary + "
                         "near-field shuffle (the 100-TB scale path; falls "
-                        "back to 'distributed' in degenerate regimes)")
+                        "back to 'driver' where its plan declines: small N, "
+                        "zero extent, or a halo covering the grid)")
     # the reference documents --lossFile but reads key "loss" (quirk Q5):
     # accept both spellings.
     p.add_argument("--lossFile", "--loss", dest="loss_file", default="loss.txt")

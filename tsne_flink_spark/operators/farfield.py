@@ -1,7 +1,7 @@
 """Scale path for Barnes-Hut repulsion: depth-capped far-field summary +
 local essential near field (BASELINE.md B11), for any embedding dimension d.
 
-The full-tree modes ("driver"/"distributed") broadcast the ENTIRE tree
+The driver-built full tree ("driver") broadcasts the ENTIRE tree
 every iteration — O(N) bytes to every executor (213 MB pickled at N=1M,
 d=2; ~20 GB at 10^8 points).  This module replaces that with:
 
@@ -34,14 +34,15 @@ far field is summarized at the same-or-finer granularity than the full-tree
 traversal would accept (a guaranteed-accepted cell is exactly a node the
 full traversal would have accepted at that level or coarser), and the near
 field is exact-leaf-level.  Results are not bit-identical to the full-tree
-modes (different summarization grouping at block boundaries); the
-reference-parity modes remain available via --treeBuild.
+mode (different summarization grouping at block boundaries); the
+reference-parity driver build remains available via --treeBuild.
 
-Degenerate inputs fall back to the full-tree path (``plan_summary`` returns
-None): all-coincident points (zero extent), theta so small the halo covers
-the grid (the reference's non-scale-invariant condition does this on
-compressed early-iteration embeddings — faithful to its exact-degeneration
-behavior), or N too small for blocking to pay.
+Degenerate inputs fall back to the driver-built full tree, unchanged
+(``plan_summary`` returns None): all-coincident points (zero extent),
+theta so small the halo covers the grid (the reference's
+non-scale-invariant condition does this on compressed early-iteration
+embeddings — faithful to its exact-degeneration behavior), or N below
+``MIN_SUMMARY_N``, where blocking does not pay.
 """
 
 from __future__ import annotations
@@ -50,6 +51,9 @@ import math
 from dataclasses import dataclass
 
 import numpy as np
+
+# Auto-depth plans decline below this N: blocking overhead is not worth it.
+MIN_SUMMARY_N = 4096
 
 
 def morton_encode(idx: np.ndarray, depth: int) -> np.ndarray:
@@ -109,9 +113,9 @@ def plan_summary(
     summary_depth: int | None = None,
     block_bits: int | None = None,
 ) -> SummaryPlan | None:
-    """Size the summary grid, or return None when the full-tree path should
-    be used instead (degenerate geometry, tiny N, or a halo radius so large
-    that blocking would replicate more than it saves).
+    """Size the summary grid, or return None when the driver-built full tree
+    should be used instead (degenerate geometry, tiny N, or a halo radius so
+    large that blocking would replicate more than it saves).
 
     Auto depth targets ~64 points per depth-D cell, capped at 2^(d*D) <=
     2^20 cells (4^10 at d=2) and floored at ``block_bits + 1`` so the grid
@@ -123,7 +127,7 @@ def plan_summary(
         # ~64 cells per query block regardless of d (2^(d*bb) ~ 64)
         block_bits = max(1, int(round(6.0 / d)))
     if summary_depth is None:
-        if n < 4096:  # blocking overhead not worth it (auto mode only)
+        if n < MIN_SUMMARY_N:
             return None
         want = math.ceil(math.log2(max(n, 2) / 64.0) / d)
         summary_depth = min(20 // d, max(block_bits + 1, want))

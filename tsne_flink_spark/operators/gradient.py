@@ -23,9 +23,9 @@ the update is a narrow projection with sumQ as a literal
 Where the driver builds the tree, it holds Y anyway: the pass collects Y
 ((8 + 8d) B/point: int64 id + d doubles), takes the mean, builds the tree
 and broadcasts (tree, ids, centred Y); the kernel looks neighbours up in
-that Y.  No join and no shuffle per iteration.  The executor-side regimes
-keep Y off the driver, as they exist to: a bounds aggregate gives the mean,
-and each row's neighbour coordinates are gathered by a join on the P edges
+that Y.  No join and no shuffle per iteration.  The summary regime keeps Y
+off the driver, as it exists to: a bounds aggregate gives the mean, and
+each row's neighbour coordinates are gathered by a join on the P edges
 (:func:`_gather_neighbours`) instead of broadcast.
 
 Repulsion sources (``tree_build``), all on the d-generic NDTree (the
@@ -37,14 +37,17 @@ reference's quadtree at d=2):
 - ``"driver"``: tree built from the collected Y.  Auto while the tree fits
   the 64 MB broadcast budget (~305k points at d=2, ~152k at d=3); Y then
   costs at most ~7 MB.
-- ``"distributed"``: per-partition subtrees merged on the executors, Y off
-  the driver (explicit only; also the summary path's fallback).
 - ``"summary"``: the 100-TB path — a depth-capped far-field pyramid plus a
   near-field cogroup (operators/farfield.py, BASELINE.md B14) instead of the
   O(N) tree broadcast; its rows are joined onto the pass by id.  Auto above
-  the budget.
-- ``"stub"``: plan-only — an empty tree and no collect, so the whole pass
-  can be explained without running a job.
+  the budget.  Where its plan declines (tiny N, zero extent, or a halo that
+  covers the grid, as the reference condition does on a compressed
+  early-iteration embedding) the pass takes the driver build unchanged,
+  after the bounds aggregate that planned it.
+
+:func:`fused_pass` also takes ``"stub"``, for ``TSNE.plan`` only: an empty
+tree and no collect, so the whole pass can be explained without running a
+job.  Every public entry point rejects it (:func:`check_tree_build`).
 """
 
 from __future__ import annotations
@@ -60,14 +63,10 @@ from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
 
 from tsne_flink_spark.functions.metrics import numpy_row_metric
 from tsne_flink_spark.operators.affinities import _EPS_FLOOR, joint_sums
-from tsne_flink_spark.operators.ndtree import (
-    NDTree,
-    build_ndtree,
-    build_ndtree_distributed,
-)
+from tsne_flink_spark.operators.ndtree import build_ndtree
 from tsne_flink_spark.operators.partials import Partials
 
-_TREE_BUILDS = ("auto", "driver", "stub", "distributed", "summary")
+_TREE_BUILDS = ("auto", "driver", "summary")
 
 # Per-row outputs of the fused kernel, appended to the input row.
 _KERNEL_FIELDS = [
@@ -85,8 +84,8 @@ _KERNEL_FIELDS = [
 _AUTO_BROADCAST_BUDGET = 64 << 20  # => auto switches to summary at N ~ 305k
 # Below the budget auto builds the tree on the driver from the Y the fused
 # pass collects: at N=250k, d=2 (4-core host) that iteration took 4.7 s
-# against 12.6 s for the executor-side build with the P-edge gather it
-# needs to keep Y off the driver (10 neighbours per point, theta 0.5).
+# against 12.6 s for a since-deleted executor-side build with a P-edge
+# gather (10 neighbours per point, theta 0.5).
 
 # theta == 0 visits every leaf, so the frontier holds (queries x points)
 # pairs; the kernel evaluates in query chunks that keep it this small.
@@ -103,19 +102,23 @@ def _auto_tree_build(n: int, d: int) -> str:
     return "driver"
 
 
+def check_tree_build(tree_build: str) -> None:
+    """Reject anything but a user-facing ``tree_build`` (the plan-only
+    "stub" included), before any job runs."""
+    if tree_build not in _TREE_BUILDS:
+        raise ValueError(
+            f"tree_build must be one of {', '.join(map(repr, _TREE_BUILDS))}; "
+            f"got {tree_build!r}"
+        )
+
+
 def resolve_tree_build(
     tree_build: str, theta: float, d: int, count: Callable[[], int]
 ) -> str:
     """The concrete repulsion source of a pass: theta 0 is exact on a
     driver-built tree, and "auto" decides by N (``count()``, called only
     for "auto").  N is loop-invariant, so loops resolve once per call."""
-    if tree_build not in _TREE_BUILDS:
-        raise ValueError(
-            f"tree_build must be one of {', '.join(map(repr, _TREE_BUILDS))}; "
-            f"got {tree_build!r}"
-        )
-    if tree_build == "stub":
-        return tree_build
+    check_tree_build(tree_build)
     if theta == 0.0:
         return "driver"
     if tree_build == "auto":
@@ -125,9 +128,8 @@ def resolve_tree_build(
 
 def _bounds_with_count(embedding: DataFrame, d: int):
     """Bounds/mean/count aggregate (min_k / max_k / mean_k / n), for the
-    executor-side regimes of the fused pass and for summary callers that
-    pass no bounds.  Row shape matches build_ndtree_distributed's ``bounds``
-    parameter."""
+    summary regime of the fused pass and for summary callers that pass no
+    bounds."""
     aggs = []
     for k in range(d):
         aggs += [
@@ -157,10 +159,10 @@ def _repulsive_summary(
     masses.  See operators/farfield.py for the decomposition and its
     accuracy argument.
 
-    Returns None when the regime calls for the full-tree path instead
-    (degenerate extent, tiny N, or halo ~ grid — e.g. the reference's
-    non-scale-invariant condition on a compressed embedding, which
-    degenerates to exact evaluation by design).
+    Returns None when the regime calls for the driver-built full tree
+    instead (degenerate extent, tiny N, or halo ~ grid — e.g. the
+    reference's non-scale-invariant condition on a compressed embedding,
+    which degenerates to exact evaluation by design).
     """
     from tsne_flink_spark.operators import farfield
 
@@ -372,22 +374,21 @@ def _bounds_dict(n: int, lo, hi, mean) -> dict:
     return b
 
 
-def _executor_repulsion(
+def _summary_repulsion(
     rows: DataFrame,
     d: int,
     centre: bool,
     theta: float,
     fix_bounds_mean: bool,
     bh_condition: str,
-    tree_build: str,
 ):
-    """The centring mean and repulsion source of the executor-side regimes,
-    with Y kept off the driver: one bounds aggregate, then ``(tree, None)``
-    from the distributed build or ``(None, rep)`` with materialized (id,
-    rep, sumq) rows from the summary path."""
+    """The summary regime's centring mean and materialized (id, rep, sumq)
+    rows, with Y kept off the driver: one bounds aggregate gives the mean
+    and plans the pass.  None where the plan declines (or there are no
+    rows): the pass then builds the full tree on the driver."""
     b = _bounds_with_count(rows, d)
     if b is None or not b["n"]:
-        return np.zeros(d), NDTree(np.zeros(d), 1.0), None
+        return None
     lo, hi, mn = (
         np.array([float(b[f"{s}_{k}"]) for k in range(d)])
         for s in ("min", "max", "mean")
@@ -396,20 +397,17 @@ def _executor_repulsion(
     # min/max commute with subtracting a constant (rounding is monotone)
     bounds = _bounds_dict(int(b["n"]), lo - mean, hi - mean, mn - mean)
     centred = rows.select("id", shifted_y(mean).alias("y"))
-    if tree_build == "summary":
-        rep = _repulsive_summary(
-            centred, theta, d, fix_bounds_mean, bh_condition, bounds=bounds
-        )
-        if rep is not None:
-            # the cogroup pipeline (near-field shuffle + per-block Python
-            # evaluation) must run once: the kernel reads rep and sumq from
-            # the same evaluation
-            from tsne_flink_spark.operators.optimize import materialize
+    rep = _repulsive_summary(
+        centred, theta, d, fix_bounds_mean, bh_condition, bounds=bounds
+    )
+    if rep is None:
+        return None
+    # the cogroup pipeline (near-field shuffle + per-block Python
+    # evaluation) must run once: the kernel reads rep and sumq from the
+    # same evaluation
+    from tsne_flink_spark.operators.optimize import materialize
 
-            return mean, None, materialize(rep)
-        # degenerate regime: full-tree fallback
-    tree = build_ndtree_distributed(centred, d, fix_bounds_mean, bounds=bounds)
-    return mean, tree, None
+    return mean, materialize(rep)
 
 
 def _gather_neighbours(rows: DataFrame) -> DataFrame:
@@ -473,13 +471,14 @@ def _list_column(rows: np.ndarray) -> pa.Array:
 
 
 def _kernel(bc, d, mean, theta, condition, metric, p_total, exaggeration,
-            has_rep, gathered, out_cols, partials):
+            summary, out_cols, partials):
     """The fused per-partition kernel (see the module docstring), on Arrow
     batches: columns are read and written as flat buffers, and the
-    pass-through columns are handed back untouched.  Neighbours come from
-    the broadcast (ids, centred Y), or from the row's gathered
-    ``__gv``/``__gy`` when ``gathered``.  The task adds its sumQ and KL
-    partials once, at its end."""
+    pass-through columns are handed back untouched.  Repulsion comes from
+    the broadcast tree and neighbours from the broadcast (ids, centred Y);
+    under ``summary``, both come from the row instead: its joined
+    ``rep``/``sumq`` and its gathered ``__gv``/``__gy``.  The task adds its
+    sumQ and KL partials once, at its end."""
     row_metric = numpy_row_metric(metric)
     p_total = max(p_total, _EPS_FLOOR)
 
@@ -487,27 +486,24 @@ def _kernel(bc, d, mean, theta, condition, metric, p_total, exaggeration,
         return np.maximum(v / p_total, _EPS_FLOOR) * exaggeration
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        tree, ids, Yc = bc.value
-        n = 0 if ids is None else len(ids)
+        if not summary:
+            tree, ids, Yc = bc.value
         sum_q = kl = pv = 0.0
         for batch in batches:
             m = batch.num_rows
             if not m:
                 continue
             y = _values(batch.column("y")).reshape(m, d) - mean
-            if has_rep:
+            if summary:
                 rep = _values(batch.column("rep")).reshape(m, d)
                 sumq = batch.column("sumq").to_numpy(zero_copy_only=False)
-            else:
-                rep, sumq = _eval_tree(tree, y, theta, condition, n)
-
-            if gathered:
                 gv = batch.column("__gv")
                 lens = gv.value_lengths().to_numpy(zero_copy_only=False)
                 src = np.repeat(np.arange(m), lens)
                 v = scaled(_values(gv))
                 yj = _values(batch.column("__gy")).reshape(-1, d) - mean
             else:
+                rep, sumq = _eval_tree(tree, y, theta, condition, len(ids))
                 js_col = batch.column("js")
                 lens = js_col.value_lengths().to_numpy(zero_copy_only=False)
                 src = np.repeat(np.arange(m), lens)
@@ -568,45 +564,45 @@ def fused_pass(
     (:func:`resolve_tree_build`; loops resolve once and pass the result).
     """
     d = n_components
-    tree_build = resolve_tree_build(tree_build, theta, d, rows.count)
-    rep = ids = Yc = None
-    gathered = tree_build in ("distributed", "summary")
-    if gathered:
-        mean, tree, rep = _executor_repulsion(
-            rows, d, centre, theta, fix_bounds_mean, bh_condition, tree_build
+    if tree_build != "stub":
+        tree_build = resolve_tree_build(tree_build, theta, d, rows.count)
+    summary = None
+    if tree_build == "summary":
+        summary = _summary_repulsion(
+            rows, d, centre, theta, fix_bounds_mean, bh_condition
         )
+    sc = rows.sparkSession.sparkContext
+    if summary is not None:
+        mean, rep = summary
         src = rows.join(_gather_neighbours(rows), "id", "left").select(
             *rows.columns,
             F.coalesce("__gv", F.array().cast("array<double>")).alias("__gv"),
             F.coalesce("__gy", F.array().cast("array<double>")).alias("__gy"),
-        )
-        if rep is not None:
-            src = src.join(rep, "id", "left")
+        ).join(rep, "id", "left")
+        bc = None
     else:
+        # the driver build, also where the summary plan declines
         if tree_build == "stub":
             ids, Y = np.zeros(0, dtype=np.int64), np.zeros((0, d))
-            tree = NDTree(np.zeros(d), 1.0)
         else:
             ids, Y = collect_y(rows, d)
         mean = Y.mean(axis=0) if centre and len(Y) else np.zeros(d)
         Yc = Y - mean
-        if tree_build == "driver":
-            tree = build_ndtree(Yc, fix_bounds_mean or theta == 0.0)
+        tree = build_ndtree(Yc, fix_bounds_mean or theta == 0.0)
         src = rows
+        bc = sc.broadcast((tree, ids, Yc))
     out_cols = [
         c for c in src.columns if c not in ("rep", "sumq", "__gv", "__gy")
     ]
     schema = StructType(
         [f for f in src.schema.fields if f.name in out_cols] + _KERNEL_FIELDS
     )
-    sc = rows.sparkSession.sparkContext
-    bc = sc.broadcast((tree, ids, Yc))
     partials = Partials(sc, 3)
     kernel = _kernel(
         bc, d, mean, theta, bh_condition, metric, p_total, exaggeration,
-        rep is not None, gathered, out_cols, partials,
+        summary is not None, out_cols, partials,
     )
-    return src.mapInArrow(kernel, schema=schema), rep is not None, partials
+    return src.mapInArrow(kernel, schema=schema), summary is not None, partials
 
 
 def sum_q_and_loss(partials: Partials) -> tuple[float, float]:
@@ -649,6 +645,7 @@ def gradient(
     """
     from tsne_flink_spark.operators.optimize import materialize
 
+    check_tree_build(tree_build)
     rows = attach_p(embedding.select("id", "y"), p_coo)
     kern, _, partials = fused_pass(
         rows, theta, n_components, metric, fix_bounds_mean=fix_bounds_mean,

@@ -8,10 +8,10 @@ degenerates to the exact gradient and golden tests match:
 - node capacity 1; coincident (bit-equal) points accumulate in one leaf
   (QuadTree.scala:50-63).  DOCUMENTED DIVERGENCE: when such a leaf later
   splits, the reference re-seats its point once (QuadTree.scala:59),
-  dropping the duplicates' mass insertion-ORDER-dependently — behaviour no
-  order-independent distributed build can reproduce.  This engine re-seats
-  the full accumulated weight, so sequential, merged and distributed builds
-  agree exactly and no mass is lost
+  dropping the duplicates' mass insertion-ORDER-dependently — behaviour the
+  order-free bulk build cannot reproduce.  This engine re-seats the full
+  accumulated weight, so sequential insert and the bulk build agree
+  exactly and no mass is lost
   (tests/test_properties.py::test_quadtree_coincident_points).
 - ``subDivide`` sizes every child by the parent's half-WIDTH on all axes
   (QuadTree.scala:80-81) — safe because the root is square (cubic), so
@@ -158,7 +158,7 @@ class NDTree:
 
     def __getstate__(self):
         # serialize compact: _grow leaves up to 2x slack capacity, which
-        # would otherwise ship in every treeReduce hop and tree broadcast
+        # would otherwise ship in every tree broadcast
         self.trim()
         return self.__dict__
 
@@ -255,7 +255,7 @@ def _bulk_build(tree: NDTree, Y: np.ndarray) -> NDTree:
     mid-descent).  Gated by
     tests/test_ndtree.py::test_bulk_build_equals_sequential_insert.
 
-    Depth guard (shared with insert/_bulk_insert_weighted): a leaf at depth
+    Depth guard (shared with insert): a leaf at depth
     _MAX_DEPTH-1 never subdivides; still-distinct survivors accumulate there
     as a terminal leaf seated with the lexicographically first point (insert
     seats whichever arrived first, so the two agree under lex-ordered
@@ -337,7 +337,7 @@ def build_ndtree(Y: np.ndarray, fix_bounds_mean: bool = False) -> NDTree:
     return _bulk_build(tree, Y)
 
 
-# -- vectorized subdivide / descent / merge ---------------------------------
+# -- vectorized subdivide / descent -----------------------------------------
 
 def _bulk_subdivide(tree: NDTree, nodes: np.ndarray) -> None:
     """Subdivide many (unique) leaf nodes at once; cell geometry is exact
@@ -390,191 +390,3 @@ def _children_for(tree: NDTree, nodes: np.ndarray, X) -> np.ndarray:
     out = tree.children[nodes, slot].astype(np.int64)
     out[~found] = -1
     return out
-
-
-def _bulk_insert_weighted(
-    tree: NDTree,
-    starts: np.ndarray,
-    X: np.ndarray,
-    ws: np.ndarray,
-    wsums: np.ndarray,
-) -> None:
-    """Batched weighted descents: point ``X[:, i]`` (axis-major) carrying
-    ``ws[i]`` coincident copies with sums ``wsums[:, i]``, from node
-    ``starts[i]``.  When an occupied leaf must split, the OLD point is
-    re-seated with its full accumulated weight (insert's rule).  Safe
-    because the caller guarantees the start nodes root DISJOINT subtrees
-    (merge pairs are geometry-aligned, so no two descents touch a node)."""
-    cur = starts.astype(np.int64).copy()
-    for _ in range(_MAX_DEPTH):
-        if not len(cur):
-            return
-        tree.cum[cur] += ws
-        tree.s[:, cur] += wsums
-        leaf = tree.children[cur, 0] == -1
-        done = np.zeros(len(cur), dtype=bool)
-        if leaf.any():
-            l = np.flatnonzero(leaf)
-            ln = cur[l]
-            no_pt = ~tree.has_point[ln]
-            seat = l[no_pt]
-            sn = cur[seat]
-            tree.has_point[sn] = True
-            tree.p[:, sn] = X[:, seat]
-            done[seat] = True
-            occ = l[~no_pt]
-            on = cur[occ]
-            coinc = np.all(tree.p[:, on] == X[:, occ], axis=0)
-            done[occ[coinc]] = True
-            split = occ[~coinc]
-            if len(split):
-                # terminal depth: accumulate only, never subdivide (same
-                # rule as insert/_bulk_build)
-                term = tree.depth[cur[split]] >= _MAX_DEPTH - 1
-                done[split[term]] = True
-                split = split[~term]
-            if len(split):
-                snodes = cur[split]
-                ow = tree.cum[snodes] - ws[split]
-                osum = tree.s[:, snodes] - wsums[:, split]
-                op = tree.p[:, snodes]
-                _bulk_subdivide(tree, snodes)
-                tree.has_point[snodes] = False
-                _reseat(tree, snodes, op, ow, osum)
-        keep = ~done
-        cur, X, ws, wsums = cur[keep], X[:, keep], ws[keep], wsums[:, keep]
-        if not len(cur):
-            return
-        nxt = _children_for(tree, cur, X)
-        v = nxt >= 0
-        cur, X, ws, wsums = nxt[v], X[:, v], ws[v], wsums[:, v]
-    # depth guard: remaining descents treated as coincident (as insert does)
-
-
-def _reseat(tree: NDTree, nodes, op, ow, osum) -> None:
-    """Move the points ``op`` (axis-major) with weights ``ow`` and sums
-    ``osum`` from the freshly subdivided ``nodes`` into their children."""
-    oc = _children_for(tree, nodes, op)
-    v = oc >= 0  # 1-ulp FP edge: skip re-seat, keep aggregates
-    ocv = oc[v]
-    tree.cum[ocv] += ow[v]
-    tree.s[:, ocv] += osum[:, v]
-    tree.has_point[ocv] = True
-    tree.p[:, ocv] = op[:, v]
-
-
-def merge_ndtrees(a: NDTree, b: NDTree) -> NDTree:
-    """Structurally merge ``b`` into ``a`` (both over the same root cell).
-
-    The capacity-1 tree's STRUCTURE is determined by the point set alone (a
-    cell subdivides iff it holds >= 2 distinct points), not the insertion
-    order, so per-partition trees merged pairwise reproduce the tree a
-    sequential build over all points would, with sums equal up to
-    floating-point summation order.  Cell geometry is position-determined,
-    so child slots correspond index-for-index.
-
-    Level-synchronous frontier traversal: frontier pairs are geometry-
-    aligned and unique per level, so the fancy-indexed scatter-adds hit
-    distinct nodes; deferred weighted inserts (b-leaf cases) root disjoint
-    subtrees, so the batched descent is race-free.
-    """
-    if b.cum[0] == 0:
-        return a
-    if a.cum[0] == 0:
-        return b
-    if a.n_nodes < b.n_nodes:
-        a, b = b, a
-    na = np.zeros(1, dtype=np.int64)
-    nb = np.zeros(1, dtype=np.int64)
-    ins: list[tuple[np.ndarray, ...]] = []
-    while len(na):
-        live = b.cum[nb] > 0
-        na, nb = na[live], nb[live]
-        if not len(na):
-            break
-        bleaf = b.children[nb, 0] == -1
-        c3 = bleaf & b.has_point[nb]
-        if c3.any():
-            i = np.flatnonzero(c3)
-            ins.append((na[i], b.p[:, nb[i]], b.cum[nb[i]], b.s[:, nb[i]]))
-        rest = ~bleaf
-        na, nb = na[rest], nb[rest]
-        if not len(na):
-            break
-        aleaf = a.children[na, 0] == -1
-        if aleaf.any():
-            # a leaf, b internal: open a up, re-seating its point
-            ln = na[aleaf]
-            hn = ln[a.has_point[ln]]
-            ow, osum, op = a.cum[hn], a.s[:, hn], a.p[:, hn]
-            _bulk_subdivide(a, ln)
-            if len(hn):
-                a.has_point[hn] = False
-                _reseat(a, hn, op, ow, osum)
-        # all a-side internal now: fold stats, pair children index-for-index
-        a.cum[na] += b.cum[nb]
-        a.s[:, na] += b.s[:, nb]
-        na = a.children[na].astype(np.int64).ravel()
-        nb = b.children[nb].astype(np.int64).ravel()
-    if ins:
-        _bulk_insert_weighted(
-            a,
-            np.concatenate([t[0] for t in ins]),
-            np.concatenate([t[1] for t in ins], axis=1),
-            np.concatenate([t[2] for t in ins]),
-            np.concatenate([t[3] for t in ins], axis=1),
-        )
-    return a
-
-
-def build_ndtree_distributed(embedding, n_components: int,
-                             fix_bounds_mean: bool = False,
-                             bounds=None) -> NDTree:
-    """Cluster-side build: per-partition subtrees + treeReduce merge.
-
-    Replaces a driver-side collect + build (at 10^8 points a ~1.6 GB
-    per-iteration collect at d=2).  Only a bounds/mean aggregate touches the
-    driver; partitions build local trees over the GLOBAL root cell in
-    parallel and ``treeReduce`` merges them on executors, so the driver
-    receives one finished tree to broadcast.  With the default
-    ``fix_bounds_mean=False`` the root cell matches ``build_ndtree``'s
-    bit-for-bit (DataFrame min/max equal NumPy's exactly).
-
-    ``embedding``: DataFrame with a ``y ARRAY<DOUBLE>`` column.
-    ``bounds``: optional precomputed row with per-axis mins/maxs/means
-    (keys min_k / max_k / mean_k), so callers that already ran the bounds
-    aggregate don't pay a second job.
-    """
-    import pyspark.sql.functions as F
-
-    d = n_components
-    if bounds is None:
-        aggs = []
-        for k in range(d):
-            aggs += [
-                F.min(F.col("y")[k]).alias(f"min_{k}"),
-                F.max(F.col("y")[k]).alias(f"max_{k}"),
-                F.avg(F.col("y")[k]).alias(f"mean_{k}"),
-            ]
-        bounds = embedding.agg(*aggs).first()
-    if bounds is None or bounds["min_0"] is None:
-        return NDTree(np.zeros(d), 1.0)
-    center = (
-        np.array([float(bounds[f"mean_{k}"]) for k in range(d)])
-        if fix_bounds_mean
-        else np.zeros(d)
-    )
-    half = max(
-        float(bounds[f"max_{k}"] - bounds[f"min_{k}"]) for k in range(d)
-    )
-
-    def build_part(rows):
-        pts = [r["y"] for r in rows]
-        if not pts:
-            return
-        t = NDTree(center, half, capacity_hint=(1 << d) * max(len(pts), 16))
-        _bulk_build(t, np.asarray(pts, dtype=np.float64).reshape(-1, d))
-        yield t.trim()
-
-    trees = embedding.select("y").rdd.mapPartitions(build_part)
-    return trees.treeReduce(merge_ndtrees, depth=2)

@@ -11,10 +11,10 @@ id so a retried task cannot count twice (operators/partials.py).
 One iteration shape for every ``tree_build`` (operators/gradient.py):
 
 1. the centring mean and the repulsion source: where the driver builds the
-   tree (auto below the summary regime, and theta 0) it collects Y,
-   centres it and broadcasts the tree with the ids and the centred Y; the
-   executor-side regimes ("distributed", "summary") keep Y off the driver
-   and take the mean from a bounds aggregate;
+   tree (auto below the summary regime, theta 0, and wherever the summary
+   plan declines) it collects Y, centres it and broadcasts the tree with
+   the ids and the centred Y; the summary regime keeps Y off the driver
+   and takes the mean from a bounds aggregate;
 2. one ``mapInArrow`` pass that centres its own rows and computes
    repulsion, attraction (each row carries its P row, attached once per
    call) and ``sumq`` — materialized; its tasks' partials give sumQ and
@@ -23,8 +23,8 @@ One iteration shape for every ``tree_build`` (operators/gradient.py):
    left lazy: the next iteration's pass reads through it.
 
 With the driver-built tree that is two Spark jobs, no join and no
-shuffle.  The executor-side regimes add their tree build or cogroup and
-gather each row's neighbour coordinates by a join on the P edges instead
+shuffle.  The summary regime adds its bounds aggregate and cogroup, and
+gathers each row's neighbour coordinates by a join on the P edges instead
 of a Y broadcast.  Centring happens at the start of the next iteration,
 and once more when a call returns, so every returned working set is
 centred; the first iteration of a call evaluates the caller's working set
@@ -47,6 +47,7 @@ from pyspark.sql import functions as F
 from tsne_flink_spark.operators.embedding import update_step
 from tsne_flink_spark.operators.gradient import (
     attach_p,
+    check_tree_build,
     dy,
     fused_pass,
     resolve_tree_build,
@@ -159,6 +160,7 @@ def iteration_computation(
     Appends (iteration, loss) tuples to ``loss_sink`` every 10th iteration.
     ``n_hint`` is the row count, if known ("auto" counts it otherwise).
     """
+    check_tree_build(tree_build)
     if iterations <= 0:
         return working_set
     return _descend(
@@ -187,6 +189,7 @@ def optimize(
     """Full three-phase optimization; returns the final (id, y) embedding.
     ``p_coo`` is a joint P, or the symmetric edges of P kernels that fed
     ``p_partials`` (P's total and N, read once the rows materialize)."""
+    check_tree_build(tree_build)
     if iterations <= 0:
         return initial_working_set.select("id", "y")
     iter_init = min(iterations, 20)

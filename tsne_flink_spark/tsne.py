@@ -15,6 +15,12 @@ from pyspark.sql import functions as F
 
 from tsne_flink_spark.operators.affinities import pairwise_affinities
 from tsne_flink_spark.operators.embedding import init_working_set
+from tsne_flink_spark.operators.gradient import (
+    attach_p,
+    check_tree_build,
+    dy,
+    fused_pass,
+)
 from tsne_flink_spark.operators.knn import (
     k_nearest_neighbors,
     partition_knn,
@@ -42,8 +48,8 @@ class TSNE:
     bh_condition: str = "reference"
     # "auto" (default): full driver-built tree below a 64 MB broadcast
     # budget (reference parity), far-field summary above it (O(1)-in-N
-    # broadcast — the 100-TB path, BASELINE.md B14); "distributed"/"driver"/
-    # "summary" force a path
+    # broadcast — the 100-TB path, BASELINE.md B14; it falls back to the
+    # driver build where its plan declines); "driver"/"summary" force a path
     tree_build: str = "auto"
     knn_method: str = "bruteforce"  # bruteforce | partition | project
     # 3 = reference parity (Tsne.scala:61 knnIterations default).  The bare
@@ -62,6 +68,7 @@ class TSNE:
             raise ValueError(
                 f"n_components must be >= 1, got {self.n_components}"
             )
+        check_tree_build(self.tree_build)
 
     @property
     def _k(self) -> int:
@@ -136,7 +143,8 @@ class TSNE:
         The reference's ``--executionPlan`` dumps the lazily assembled Flink
         job graph without executing it (Tsne.scala:89-95); the Spark analogue
         is the physical plan of ``fit``'s shape: P kernel -> P attach ->
-        fused gradient pass (against a stub broadcast tree) -> update step,
+        fused gradient pass (against a stub broadcast tree, the plan-only
+        ``tree_build="stub"`` that ``fit`` rejects) -> update step,
         with the loop's driver-side values (P's total, sumQ, the centring
         mean) as placeholders and no ``materialize()``.  With ``dimension``
         set, that runs ZERO Spark jobs for every knn_method: ``"project"``
@@ -144,7 +152,6 @@ class TSNE:
         placeholder rank, as its real global rank is inherently eager).
         """
         from tsne_flink_spark.operators.embedding import update_step
-        from tsne_flink_spark.operators.gradient import attach_p, dy, fused_pass
         from tsne_flink_spark.operators.optimize import MIN_GAIN
 
         p_edges, _ = self._p_edges(points, distances, plan=True)
