@@ -1,5 +1,6 @@
 """kNN operator tests — mirrors TsneHelpersTestSuite.scala:29-74."""
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -9,7 +10,7 @@ from tsne_flink_spark.operators.knn import (
     partition_knn,
     project_knn,
 )
-from tsne_flink_spark.sources.readers import points_from_rows
+from tsne_flink_spark.sources.readers import coo_from_rows, points_from_rows
 
 
 @pytest.fixture(scope="module")
@@ -403,6 +404,45 @@ def test_partition_knn_rejects_zero_norm_cosine(spark):
         partition_knn(df, 5, "cosine", blocks=4).collect()
     # the other metrics have a distance for it
     assert partition_knn(df, 5, "sqeuclidean", blocks=4).count() == 40 * 5
+
+
+_BAD_POINT = {
+    "nan": ("sqeuclidean", np.nan, "point id 23 has a non-finite feature"),
+    "zero_norm": (
+        "cosine", 0.0,
+        r'point id 23 has a zero-norm feature vector \(metric="cosine"\)',
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_BAD_POINT))
+@pytest.mark.parametrize("entry", ["k_nearest_neighbors", "project_knn"])
+def test_knn_entries_reject_bad_points(spark, entry, case):
+    """Brute force and project_knn fail naming the point, as partition_knn
+    does, instead of emitting NaN distances or losing its cosine edges."""
+    metric, value, message = _BAD_POINT[case]
+    rng = np.random.default_rng(13)
+    X = rng.normal(0, 1, (40, 3))
+    if case == "zero_norm":
+        X[23] = value
+    else:
+        X[23, 1] = value
+    df = points_from_rows(spark, [(i, X[i].tolist()) for i in range(40)])
+    run = {"k_nearest_neighbors": k_nearest_neighbors, "project_knn": project_knn}[entry]
+    with pytest.raises(Exception, match=f"{entry}: {message}"):
+        run(df, 5, metric).collect()
+
+
+@pytest.mark.parametrize("value", [np.nan, np.inf])
+def test_fit_distances_rejects_non_finite(spark, value):
+    from tsne_flink_spark.tsne import TSNE
+
+    dist = coo_from_rows(spark, [
+        (i, j, value if (i, j) == (5, 2) else abs(i - j))
+        for i in range(12) for j in range(12) if i != j
+    ])
+    with pytest.raises(Exception, match="TSNE.fit: point id 5 has a non-finite distance"):
+        TSNE(perplexity=3.0, iterations=2, random_state=0).fit(distances=dist).collect()
 
 
 class _Partials:

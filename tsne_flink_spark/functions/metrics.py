@@ -121,6 +121,36 @@ def metric_expr(name: str, a: Column, b: Column, dim: int | None = None) -> Colu
     return _lookup(METRICS, name)(a, b)
 
 
+def _non_finite(x: Column) -> Column:
+    return F.isnan(x) | (F.abs(x) == F.lit(float("inf")))
+
+
+def checked_point(
+    op: str, point: Column, values: Column, metric: str | None = None
+) -> Column:
+    """``values`` as they are, or a failed query naming ``point``'s id.
+
+    ``values`` is a point's ARRAY<DOUBLE> features, or (``metric=None``) one
+    DOUBLE distance of the point.  Any NaN/inf fails; so, with ``metric=
+    "cosine"``, does an all-zero feature vector (its distances are 0/0).
+    Evaluated in the projection that carries ``values``: no job of its own.
+    """
+    def fail(what: str) -> Column:
+        return F.raise_error(
+            F.concat(F.lit(f"{op}: point id "), point.cast("string"), F.lit(f" has {what}"))
+        )
+
+    if metric is None:
+        return F.when(_non_finite(values), fail("a non-finite distance")).otherwise(values)
+    out = F.when(F.exists(values, _non_finite), fail("a non-finite feature"))
+    if metric == "cosine":
+        out = out.when(
+            ~F.exists(values, lambda x: x != 0),
+            fail('a zero-norm feature vector (metric="cosine")'),
+        )
+    return out.otherwise(values)
+
+
 # ---------------------------------------------------------------------------
 # numpy twins, bit-identical to ``metric_expr(name, a, b, dim=d)``: all-pairs
 # inside the blocked kNN kernel, row-paired in the fused t-SNE kernel's

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from tsne_flink_spark.operators.partials import Partials
+from tsne_flink_spark.worker import skip_zip_rescan
 
 # Smallest positive IEEE-754 double.  The reference floors with Scala's
 # Double.MinValue (TsneHelpers.scala:191,194) which is the *most negative*
@@ -125,12 +126,14 @@ def pairwise_affinities(
     Edges are shuffled once by ``i``; each partition is processed in a single
     vectorized bisection.  Safe because a hash partition contains every edge
     of each of its groups.  The shuffle has no fixed width, so AQE sizes the
-    Python stage by bytes: each Python task costs ~0.2-0.4 s before its UDF
-    starts (BASELINE.md B94), and N·k edges are a few MB.
+    Python stage by bytes: the first task of each Python worker costs
+    ~0.2-0.4 s before its UDF starts (BASELINE.md B94), and N·k edges are
+    a few MB.
     """
     target_h = float(np.log(perplexity))
 
     def per_partition(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        skip_zip_rescan()
         # A group's edges may span Arrow batches within the partition —
         # concatenate; partition size is bounded by the shuffle, each group is
         # only ~k edges.

@@ -65,6 +65,7 @@ from tsne_flink_spark.functions.metrics import numpy_row_metric
 from tsne_flink_spark.operators.affinities import _EPS_FLOOR, joint_sums
 from tsne_flink_spark.operators.ndtree import build_ndtree
 from tsne_flink_spark.operators.partials import Partials
+from tsne_flink_spark.worker import skip_zip_rescan
 
 _TREE_BUILDS = ("auto", "driver", "summary")
 
@@ -222,6 +223,7 @@ def _repulsive_summary(
     )
 
     def part_pyramid(rows):
+        skip_zip_rescan()
         cells, cums, svals = [], [], []
         for r in rows:
             cells.append(r["cell"])
@@ -288,6 +290,7 @@ def _repulsive_summary(
     halo_hi_off = np.full(d, block - 1 + rc, dtype=np.int64)
 
     def eval_block(key, qpdf: pd.DataFrame, ppdf: pd.DataFrame):
+        skip_zip_rescan()
         if not len(qpdf):
             return pd.DataFrame(
                 {"id": pd.Series([], dtype="int64"),
@@ -486,6 +489,7 @@ def _kernel(bc, d, mean, theta, condition, metric, p_total, exaggeration,
         return np.maximum(v / p_total, _EPS_FLOOR) * exaggeration
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        skip_zip_rescan()
         if not summary:
             tree, ids, Yc = bc.value
         sum_q = kl = pv = 0.0

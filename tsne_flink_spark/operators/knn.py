@@ -31,8 +31,9 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from tsne_flink_spark.functions.metrics import metric_expr, numpy_metric
+from tsne_flink_spark.functions.metrics import checked_point, metric_expr, numpy_metric
 from tsne_flink_spark.operators.affinities import conditional_p, symmetric_edges
+from tsne_flink_spark.worker import skip_zip_rescan
 
 
 def _top_k_per_group(edges: DataFrame, k: int) -> DataFrame:
@@ -58,13 +59,18 @@ def k_nearest_neighbors(
     points: (id INT, features ARRAY<DOUBLE>) -> (i INT, j INT, v DOUBLE).
     Pass ``dim`` (or let it be probed from the first row) so the distance
     unrolls into a whole-stage-codegen expression — ~8x faster than the
-    interpreted higher-order form on all-pairs workloads.
+    interpreted higher-order form on all-pairs workloads.  A non-finite
+    feature, or with ``metric="cosine"`` an all-zero feature vector, fails
+    the query with an error naming its point's id.
     """
     if dim is None:
         head = points.select("features").head()
         dim = len(head["features"]) if head else None
-    a = points.select(F.col("id").alias("i"), F.col("features").alias("__fa"))
-    b = points.select(F.col("id").alias("j"), F.col("features").alias("__fb"))
+    # checked on both sides: a pair's distance reads both points' rows, so
+    # whichever side Spark evaluates first fails before any distance
+    checked = checked_point("k_nearest_neighbors", F.col("id"), F.col("features"), metric)
+    a = points.select(F.col("id").alias("i"), checked.alias("__fa"))
+    b = points.select(F.col("id").alias("j"), checked.alias("__fb"))
     edges = (
         a.crossJoin(b)
         # "remove distances == 0" in the reference actually filters on id
@@ -92,6 +98,7 @@ def _block_kernel(k: int, metric: str, perplexity=None, partials=None):
     dist = numpy_metric(metric)
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        skip_zip_rescan()
         placed, blocks = set(), {}
         for batch in batches:
             placed.update(batch.column("block_a").to_pylist())
@@ -222,6 +229,7 @@ def _feature_bounds(
     """
 
     def partial(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        skip_zip_rescan()
         mn = np.full(dim, np.inf)
         mx = np.full(dim, -np.inf)
         sample: list[np.ndarray] = []
@@ -339,6 +347,7 @@ def space_filling_key(
     span = np.maximum(maxs.astype(np.float64) - mins_b, 1e-300)
 
     def add_key(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        skip_zip_rescan()
         for pdf in it:
             X = np.array([np.asarray(v, dtype=np.float64) for v in pdf["features"]])
             if X.size == 0:
@@ -511,6 +520,7 @@ def _project(points: DataFrame, R: np.ndarray) -> DataFrame:
     Rmat = R.astype(np.float64)
 
     def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        skip_zip_rescan()
         for pdf in it:
             if not len(pdf):
                 continue
@@ -587,9 +597,15 @@ def project_knn(
     for projected 5-dim curves at the same candidate budget — see
     BASELINE.md B10).  For inputs already at or below ``proj_dims``
     dimensions, the original shifted-grid Morton construction is kept
-    (reference parity, ZOrder.scala:25-42).
+    (reference parity, ZOrder.scala:25-42).  A non-finite feature, or with
+    ``metric="cosine"`` an all-zero feature vector, fails the first job
+    that reads it with an error naming its point's id.
     """
     spark = points.sparkSession
+    points = points.select(
+        "id", checked_point("project_knn", F.col("id"), F.col("features"), metric)
+        .alias("features"),
+    )
     if _plan_stub:
         # plan-only mode (TSNE.plan): no data probes, no bounds jobs, lazy
         # placeholder rank — the dumped plan stands in for the executed one

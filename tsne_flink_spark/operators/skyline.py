@@ -27,6 +27,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from tsne_flink_spark.worker import skip_zip_rescan
+
 
 def _as_float(s: pd.Series) -> np.ndarray:
     """Criterion column as float64 for vectorized dominance tests.
@@ -266,6 +268,7 @@ def pareto_frontier(
 
     if by:
         def group_skyline(pdf: pd.DataFrame) -> pd.DataFrame:
+            skip_zip_rescan()
             pdf = pdf.dropna(subset=cols)
             if not len(pdf):
                 return pdf
@@ -275,6 +278,7 @@ def pareto_frontier(
         return df.groupBy(by).applyInPandas(group_skyline, schema)
 
     def local(batches):
+        skip_zip_rescan()
         # amortized geometric folding: buffer incoming Arrow batches and
         # re-run the kernel only once the buffer outgrows the running
         # frontier (>= max(|kept|, 64k) rows).  A per-batch refold is
@@ -407,6 +411,7 @@ def _range_merge(
     )
 
     def filter_block(pdf: pd.DataFrame) -> pd.DataFrame:
+        skip_zip_rescan()
         c = pdf[pdf["__is_cand"]]
         d_ = pdf[~pdf["__is_cand"]]
         if not len(c):

@@ -28,6 +28,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from tsne_flink_spark.worker import skip_zip_rescan
+
 N_BANDS = 8
 
 
@@ -124,6 +126,7 @@ def attach_audio_payload(
 
     @F.pandas_udf("binary")
     def synth_wav(texts: pd.Series) -> pd.Series:
+        skip_zip_rescan()
         return texts.map(lambda t: encode_wav(_synth_samples(t or "", seed=seed)))
 
     # spread the slim text rows before synthesizing payloads: a single-file
@@ -180,6 +183,7 @@ def extract_audio_features(
     )
 
     def per_batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        skip_zip_rescan()
         for pdf in it:
             out = []
             for rid, payload in zip(pdf[id_col], pdf[payload_col]):
@@ -202,6 +206,7 @@ def resample_audio(
     schema = f"{id_col} bigint, rate int, n_samples long, payload binary"
 
     def per_batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        skip_zip_rescan()
         for pdf in it:
             out = []
             for rid, payload in zip(pdf[id_col], pdf[payload_col]):

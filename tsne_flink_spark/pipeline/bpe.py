@@ -33,6 +33,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from tsne_flink_spark.worker import skip_zip_rescan
+
 # End-of-word marker.  The original BPE formulation uses the literal
 # '</w>', but that string CAN occur verbatim inside a whitespace-split
 # token ("foo</w>bar"), which would alias the marker during
@@ -189,6 +191,7 @@ def bpe_tokenize(
     bc = spark.sparkContext.broadcast(ranks)
 
     def tok(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        skip_zip_rescan()
         r = bc.value
         cache: dict[str, list[str]] = {}
         for pdf in it:

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from tsne_flink_spark.pipeline.text import fingerprint
+from tsne_flink_spark.worker import skip_zip_rescan
 
 _PRIME = 2038074743  # same prime family as MLlib's MinHashLSH
 
@@ -200,6 +201,7 @@ def build_fingerprint_bloom(
     nbytes = m // 8
 
     def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        skip_zip_rescan()
         bm = np.zeros(nbytes, dtype=np.uint8)
         any_rows = False
         for pdf in it:
@@ -222,9 +224,13 @@ def build_fingerprint_bloom(
             np.frombuffer(a, dtype=np.uint8) | np.frombuffer(b, dtype=np.uint8)
         ).tobytes()
 
+    def blob(r) -> bytes:
+        skip_zip_rescan()
+        return bytes(r["bm"])
+
     blobs = index.select(
         _bloom_positions(F.col(fp_col), m, bloom_k).alias("p")
-    ).mapInPandas(kernel, schema="bm binary").rdd.map(lambda r: bytes(r["bm"]))
+    ).mapInPandas(kernel, schema="bm binary").rdd.map(blob)
     # depth so the tree's final fan-in (what the driver actually ingests)
     # stays ~4 blobs at any partition count: 4^depth >= #partitions
     n_parts = max(blobs.getNumPartitions(), 1)
@@ -279,6 +285,7 @@ def incremental_dedup_annotate_bloom(
 
     @pandas_udf("boolean")
     def might_contain(pos):
+        skip_zip_rescan()
         import pandas as pd
 
         if not len(pos):
@@ -394,6 +401,7 @@ def minhash_signatures_table(
     )
 
     def sign_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        skip_zip_rescan()
         for pdf in it:
             sigs = []
             for h in pdf["__h"]:
@@ -600,6 +608,7 @@ def simhash_table(
     shifts = np.arange(64, dtype=np.uint64)
 
     def sign_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        skip_zip_rescan()
         for pdf in it:
             out = []
             for h in pdf["__h"]:
@@ -815,6 +824,7 @@ def _hyperplane_band_assign(df, alias: str, id_type: str, planes, bands: int):
     rpb = num_planes // bands
 
     def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        skip_zip_rescan()
         for pdf in it:
             if not len(pdf):
                 continue

@@ -20,6 +20,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from tsne_flink_spark.worker import skip_zip_rescan
+
 IMAGE_META_SCHEMA = (
     "doc_id bigint, width int, height int, channels int, format string"
 )
@@ -126,6 +128,7 @@ def attach_binary_payload(
 
     @F.pandas_udf("binary")
     def synth_ppm(texts: pd.Series) -> pd.Series:
+        skip_zip_rescan()
         return texts.map(lambda t: encode_ppm(_synth_pixels(t or "", seed=seed)))
 
     # spread the slim text rows before synthesizing payloads: a single-file
@@ -151,6 +154,7 @@ def extract_image_features(
     )
 
     def per_batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        skip_zip_rescan()
         for pdf in it:
             out = []
             for rid, payload in zip(pdf[id_col], pdf[payload_col]):
@@ -193,6 +197,7 @@ def resize_images(
     schema = f"{id_col} bigint, height int, width int, payload binary"
 
     def per_batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        skip_zip_rescan()
         for pdf in it:
             out = []
             for rid, payload in zip(pdf[id_col], pdf[payload_col]):
@@ -229,6 +234,7 @@ def sample_frames(
     schema = f"{id_col} bigint, frame_idx int, frame_payload binary"
 
     def per_batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        skip_zip_rescan()
         for pdf in it:
             rows = []
             for rid, payload in zip(pdf[id_col], pdf[payload_col]):

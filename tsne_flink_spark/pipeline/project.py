@@ -33,6 +33,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from tsne_flink_spark.worker import skip_zip_rescan
+
 
 def _gemm_transform(
     emb: DataFrame,
@@ -44,6 +46,7 @@ def _gemm_transform(
     out_cols = f"{id_col} long, {vec_col} array<double>"
 
     def apply(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        skip_zip_rescan()
         for pdf in it:
             if not len(pdf):
                 continue
@@ -91,6 +94,7 @@ def pca_fit(
         dim = len(emb.select(vec_col).first()[0])
 
     def part_stats(rows):
+        skip_zip_rescan()
         S = np.zeros((dim, dim))
         m = np.zeros(dim)
         n = 0

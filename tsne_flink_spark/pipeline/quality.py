@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from tsne_flink_spark.worker import skip_zip_rescan
+
 # Gopher's "at least 2 of" stop-word list (Rae et al. A1.1)
 GOPHER_STOPS = ["the", "be", "to", "of", "and", "that", "have", "with"]
 
@@ -150,6 +152,7 @@ def compression_ratio(
     import pandas as pd
 
     def comp(it: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
+        skip_zip_rescan()
         for pdf in it:
             nb, nc = [], []
             for text in pdf[text_col]:

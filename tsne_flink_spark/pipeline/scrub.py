@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from tsne_flink_spark.worker import skip_zip_rescan
+
 # Portable regexes (Java/RE2-agreed subset; ASCII classes only).
 EMAIL_RE = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
 PHONE_RE = "\\+?[0-9]{1,3}-[0-9]{3}-[0-9]{4}"
@@ -475,6 +477,7 @@ def normalize_unicode(docs: DataFrame, form: str = "NFC",
     cols = docs.columns
 
     def norm(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        skip_zip_rescan()
         for pdf in it:
             pdf = pdf.copy()
             pdf[text_col] = pdf[text_col].fillna("").str.normalize(form)

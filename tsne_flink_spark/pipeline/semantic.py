@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 
 from tsne_flink_spark.operators.graph import connected_components
 from tsne_flink_spark.pipeline.similarity import cosine_similarity_expr
+from tsne_flink_spark.worker import skip_zip_rescan
 
 
 def fit_spherical_centroids(
@@ -105,6 +106,7 @@ def assign_clusters(
     C = np.ascontiguousarray(centroids, dtype=np.float64)
 
     def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        skip_zip_rescan()
         for pdf in it:
             if not len(pdf):
                 continue

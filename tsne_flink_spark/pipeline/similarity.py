@@ -24,6 +24,8 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from tsne_flink_spark.worker import skip_zip_rescan
+
 
 def _as_double(vec: Column) -> Column:
     return F.transform(vec, lambda x: x.cast("double"))
@@ -116,6 +118,7 @@ def _hyperplane_assign(
     flips = min(probe_flips, num_planes)
 
     def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        skip_zip_rescan()
         for pdf in it:
             if not len(pdf):
                 continue
@@ -256,6 +259,7 @@ def _ivf_assign(centroids: np.ndarray, alias: str, n: int):
     import pandas as pd
 
     def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        skip_zip_rescan()
         for pdf in it:
             if not len(pdf):
                 continue
@@ -602,6 +606,7 @@ def build_pq_index(
     id_type = dict(corpus.dtypes)[id_col]
 
     def encode_kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        skip_zip_rescan()
         for pdf in it:
             if not len(pdf):
                 continue
@@ -695,6 +700,7 @@ def append_to_pq_index(
     id_type = dict(new_corpus.dtypes)[id_col]
 
     def encode_kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        skip_zip_rescan()
         for pdf in it:
             if not len(pdf):
                 continue
@@ -856,6 +862,7 @@ def pq_query_index(
     id_type = dict(queries.dtypes)[id_col]
 
     def probe_kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        skip_zip_rescan()
         n = min(n_probe, len(coarse))
         for pdf in it:
             if not len(pdf):
@@ -876,6 +883,7 @@ def pq_query_index(
             )
 
     def adc_kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        skip_zip_rescan()
         # Per-query LUT ADC (Jégou et al. §III.C): q . recon(list, code)
         # = q . coarse[list] + sum_j LUT[q][j, code_j], where LUT[q] is the
         # m x ksub table of query-subvector x codebook-entry dots.  One

@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from tsne_flink_spark.pipeline.text import tokenize
+from tsne_flink_spark.worker import skip_zip_rescan
 
 
 def _mg_compress(counts: dict, k: int) -> dict:
@@ -55,6 +56,7 @@ def mg_partition_candidates(k: int):
     term rows per partition)."""
 
     def mg(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        skip_zip_rescan()
         counts: dict = {}
         for pdf in it:
             vc = pdf["term"].value_counts()
@@ -175,6 +177,7 @@ def _kmv_partials(key_cols: list[str], k: int):
     Misra-Gries candidate generation above)."""
 
     def f(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        skip_zip_rescan()
         best: dict = {}
         for pdf in it:
             for key, grp in pdf.groupby(key_cols, sort=False):

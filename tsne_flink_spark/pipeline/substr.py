@@ -44,6 +44,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from tsne_flink_spark.worker import skip_zip_rescan
+
 # Java regex \s (what F.split uses) is the ASCII class [ \t\n\x0B\f\r]; the
 # cut stage MUST tokenize with the same rule, not Python str.split(), which
 # splits on Unicode whitespace (\xa0,  , ... — common in web text) and
@@ -152,6 +154,7 @@ def exact_substring_dedup(
     merge = merge_hit_spans
 
     def cut(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        skip_zip_rescan()
         for pdf in it:
             texts, n_spans, removed = [], [], []
             for text, hit in zip(pdf[text_col], pdf["__hits"]):

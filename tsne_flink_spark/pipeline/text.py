@@ -10,6 +10,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from tsne_flink_spark.worker import skip_zip_rescan
+
 # A small built-in stopword list per language for the n-gram/stopword
 # language-ID heuristic.
 _STOPWORDS = {
@@ -231,6 +233,7 @@ def winnow_fingerprints(
     from typing import Iterator
 
     def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        skip_zip_rescan()
         from numpy.lib.stride_tricks import sliding_window_view
 
         for pdf in it:

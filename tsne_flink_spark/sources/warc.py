@@ -29,6 +29,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tsne_flink_spark.worker import skip_zip_rescan
+
 _SCHEMA = (
     "path string, record_offset long, warc_type string, target_uri string, "
     "warc_date string, content_type string, n_bytes long, payload binary"
@@ -91,6 +93,7 @@ def read_warc(spark: SparkSession, path: str) -> DataFrame:
     files = spark.read.format("binaryFile").load(path)
 
     def records(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        skip_zip_rescan()
         for pdf in it:
             rows = {k: [] for k in (
                 "path", "record_offset", "warc_type", "target_uri",

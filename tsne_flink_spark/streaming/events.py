@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from tsne_flink_spark.worker import skip_zip_rescan
+
 
 def _maybe_watermark(events: DataFrame, ts_col: str, delay: str) -> DataFrame:
     if events.isStreaming:
@@ -222,6 +224,7 @@ def state_history_streaming(
     )
 
     def update(key, pdfs, state: GroupState):
+        skip_zip_rescan()
         # state tuple: (open state's value, valid_from epoch-µs, n_events)
         cur, vf_us, n = state.get if state.exists else (None, 0, 0)
         closed: list[tuple] = []
@@ -305,6 +308,7 @@ def running_user_totals(events: DataFrame) -> DataFrame:
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     def update(key, pdfs, state: GroupState):
+        skip_zip_rescan()
         n, s = state.get if state.exists else (0, 0.0)
         for pdf in pdfs:
             n += len(pdf)
@@ -717,6 +721,7 @@ def transition_feed(
     )
 
     def update(key, pdfs, state: GroupState):
+        skip_zip_rescan()
         # state tuple: (last event's ts epoch-µs, tie-break id, type)
         last_ts, last_id, last_type = (
             state.get if state.exists else (0, 0, None)

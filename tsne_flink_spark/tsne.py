@@ -13,6 +13,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from tsne_flink_spark.functions.metrics import checked_point
 from tsne_flink_spark.operators.affinities import pairwise_affinities
 from tsne_flink_spark.operators.embedding import init_working_set
 from tsne_flink_spark.operators.gradient import (
@@ -86,7 +87,9 @@ class TSNE:
         partials = Partials(source.sparkSession.sparkContext, 2)
         k, metric = self._k, self.metric
         if distances is not None:
-            knn = distances
+            knn = distances.select(
+                "i", "j", checked_point("TSNE.fit", F.col("i"), F.col("v")).alias("v")
+            )
         elif self.knn_method == "partition":
             return partition_knn(points, k, metric, self.knn_blocks,
                                  self.perplexity, partials), partials
