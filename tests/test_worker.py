@@ -193,13 +193,6 @@ def op(df):
     assert [u[2] for u in uncalled] == ["plus"]
 
 
-def test_helper_is_a_no_op_on_the_driver():
-    before = zipimport.zipimporter.invalidate_caches
-    skip_zip_rescan()
-    assert zipimport.zipimporter.invalidate_caches is before
-    assert before is not worker._keep_directory
-
-
 def test_patch_sticks_in_reused_workers(spark):
     """Counter host noise cannot flip: a task in a worker that already ran
     the helper spends < 10 ms in ``importlib.invalidate_caches()`` — the
@@ -293,5 +286,6 @@ def test_driver_is_never_patched_by_a_fit(spark):
     df = points_from_rows(spark, [(i, rng.normal(0, 1, 4).tolist()) for i in range(30)])
     out = TSNE(perplexity=3.0, neighbors=6, iterations=2, random_state=0).fit(points=df)
     assert out.count() == 30
+    skip_zip_rescan()  # outside a task: a no-op
     assert zipimport.zipimporter.invalidate_caches is original
     assert original is not worker._keep_directory
