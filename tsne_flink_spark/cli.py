@@ -64,8 +64,8 @@ def build_parser() -> argparse.ArgumentParser:
                         "reference's quadtree at 2): 'auto' (default) uses the "
                         "driver-built full tree below a 64 MB broadcast "
                         "budget and the far-field summary above it; "
-                        "'driver' collects Y and builds the tree on the "
-                        "driver; "
+                        "'driver' keeps Y (and the optimizer state) on the "
+                        "driver and builds the tree there; "
                         "'summary' replaces the per-iteration O(N) tree "
                         "broadcast with a depth-capped far-field summary + "
                         "near-field shuffle (the 100-TB scale path; falls "

@@ -1,7 +1,9 @@
 """Working-set lifecycle: init, momentum/gain update, centering.
 
 All math is Column-expression ``zip_with``/``transform`` chains over
-ARRAY<DOUBLE> — whole-stage codegen, no Python in the hot path.
+ARRAY<DOUBLE> — whole-stage codegen, no Python in the hot path — except
+:func:`update_arrays`, the update's NumPy twin for state the optimizer
+keeps on the driver.
 
 Reference: TsneHelpers.scala:198-218 (init), :341-368 (update),
 :320-339 (centering).
@@ -11,6 +13,7 @@ from __future__ import annotations
 
 from typing import Callable
 
+import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -112,6 +115,23 @@ def update_step(
         )
 
     return apply
+
+
+def update_arrays(
+    y: np.ndarray,
+    grad: np.ndarray,
+    gains: np.ndarray,
+    dy: np.ndarray,
+    min_gain: float,
+    momentum: float,
+    learning_rate: float,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """:func:`update_step` on NumPy arrays: the new ``(y, grad, gains)``,
+    bit-identical to the projection (same operations in the same order)."""
+    same_sign = (dy > 0.0) == (grad > 0.0)
+    gains = np.maximum(np.where(same_sign, gains * 0.8, gains + 0.2), min_gain)
+    grad = momentum * grad + -float(learning_rate) * gains * dy
+    return grad + y, grad, gains
 
 
 def _center(df: DataFrame, vec_col: str, n_components: int) -> DataFrame:

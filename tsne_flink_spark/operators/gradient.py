@@ -11,21 +11,22 @@ layout) and the embedding is broadcast into the force map every iteration
 working-set rows once, as ``js``/``vs`` arrays.  :func:`fused_pass` then
 
 1. takes the centring mean and builds the repulsion source (below);
-2. runs ONE ``mapInArrow`` kernel that centres its own rows and computes,
-   per row, the repulsion, the attraction (q from the kNN metric's NumPy
-   twin) and ``sumq``, and adds its sumQ and KL partials to a
-   partition-keyed accumulator (operators/partials.py).
+2. runs ONE ``mapInArrow`` kernel that computes, per row, the repulsion,
+   the attraction (q from the kNN metric's NumPy twin) and ``sumq``, and
+   adds its sumQ and KL partials to a partition-keyed accumulator
+   (operators/partials.py).
 
-sumQ and the loss come from those partials, with no job of their own, and
-the update is a narrow projection with sumQ as a literal
-(``embedding.update_step``).
+sumQ and the loss come from those partials, with no job of their own; the
+optimizer applies the update (operators/optimize.py).
 
-Where the driver builds the tree, it holds Y anyway: the pass collects Y
-((8 + 8d) B/point: int64 id + d doubles), takes the mean, builds the tree
-and broadcasts (tree, ids, centred Y); the kernel looks neighbours up in
-that Y.  No join and no shuffle per iteration.  The summary regime keeps Y
-off the driver, as it exists to: a bounds aggregate gives the mean, and
-each row's neighbour coordinates are gathered by a join on the P edges
+Where the driver builds the tree, it holds Y anyway: the pass takes Y
+((8 + 8d) B/point: int64 id + d doubles) from the optimizer loop, which
+keeps it on the driver, or else collects it; it takes the mean, builds
+the tree and broadcasts (tree, ids, centred Y); the kernel looks each row
+and its neighbours up in that Y.  No join and no shuffle per iteration.
+The summary regime keeps Y off the driver, as it exists to: a bounds
+aggregate gives the mean, the kernel centres the rows' own y, and each
+row's neighbour coordinates are gathered by a join on the P edges
 (:func:`_gather_neighbours`) instead of broadcast.
 
 Repulsion sources (``tree_build``), all on the d-generic NDTree (the
@@ -34,9 +35,9 @@ reference's quadtree at d=2):
 - theta == 0: the tree built on the driver and evaluated at theta 0, which
   is exact (no cell is ever summarized); the root sits at the mean so no
   point falls outside it.
-- ``"driver"``: tree built from the collected Y.  Auto while the tree fits
-  the 64 MB broadcast budget (~305k points at d=2, ~152k at d=3); Y then
-  costs at most ~7 MB.
+- ``"driver"``: tree built from the driver's Y.  Auto while the tree fits
+  the 64 MB broadcast budget (~305k points at d=2, ~152k at d=3); the
+  optimizer's state on the driver then costs at most ~17 MB.
 - ``"summary"``: the 100-TB path — a depth-capped far-field pyramid plus a
   near-field cogroup (operators/farfield.py, BASELINE.md B14) instead of the
   O(N) tree broadcast; its rows are joined onto the pass by id.  Auto above
@@ -88,8 +89,8 @@ _AUTO_BROADCAST_BUDGET = 64 << 20  # => auto switches to summary at N ~ 305k
 # against 12.6 s for a since-deleted executor-side build with a P-edge
 # gather (10 neighbours per point, theta 0.5).
 
-# theta == 0 visits every leaf, so the frontier holds (queries x points)
-# pairs; the kernel evaluates in query chunks that keep it this small.
+# An exact evaluation visits every leaf, so the frontier holds (queries x
+# points) pairs; the kernel evaluates in query chunks that keep it this small.
 _EXACT_EVAL_PAIRS = 1 << 22
 
 
@@ -353,13 +354,24 @@ def attach_p(working_set: DataFrame, p_coo: DataFrame) -> DataFrame:
     )
 
 
-def collect_y(rows: DataFrame, d: int) -> tuple[np.ndarray, np.ndarray]:
-    """(ids, Y) of every row, ordered by id — one job."""
-    got = rows.select("id", "y").collect()
-    ids = np.array([r[0] for r in got], dtype=np.int64)
-    Y = np.array([r[1] for r in got], dtype=np.float64).reshape(len(got), d)
+def collect_y(
+    rows: DataFrame, d: int, cols: tuple[str, ...] = ("y",)
+) -> tuple[np.ndarray, ...]:
+    """``(ids, *vectors)``: the id and the d-vector ``cols`` of every row,
+    ordered by id — one job, collected through Arrow (no Row objects)."""
+    return by_id(rows.select("id", *cols).toArrow(), cols, d)
+
+
+def by_id(
+    table: pa.Table, cols: tuple[str, ...], d: int
+) -> tuple[np.ndarray, ...]:
+    """``(ids, *vectors)`` of an Arrow table's rows, ordered by id."""
+    ids = table.column("id").to_numpy().astype(np.int64)
     order = np.argsort(ids, kind="stable")
-    return ids[order], Y[order]
+    return ids[order], *(
+        _values(table.column(c).combine_chunks()).reshape(len(ids), d)[order]
+        for c in cols
+    )
 
 
 def shifted_y(mean: np.ndarray) -> Column:
@@ -445,8 +457,11 @@ def _gather_neighbours(rows: DataFrame) -> DataFrame:
 
 
 def _eval_tree(tree, Q: np.ndarray, theta: float, condition: str, n: int):
-    if theta != 0.0:
-        return tree.repulsive_forces(Q, theta, condition=condition)
+    """The tree's repulsion on Q, in query chunks of at most
+    ``_EXACT_EVAL_PAIRS // n``: where no cell is summarized (theta 0, or
+    the reference condition on a compressed embedding) the frontier holds
+    (queries x points) pairs.  A query's sums do not depend on the other
+    queries in its chunk, so chunking changes no bit."""
     step = max(1, _EXACT_EVAL_PAIRS // max(n, 1))
     parts = [
         tree.repulsive_forces(Q[s:s + step], theta, condition=condition)
@@ -477,11 +492,13 @@ def _kernel(bc, d, mean, theta, condition, metric, p_total, exaggeration,
             summary, out_cols, partials):
     """The fused per-partition kernel (see the module docstring), on Arrow
     batches: columns are read and written as flat buffers, and the
-    pass-through columns are handed back untouched.  Repulsion comes from
-    the broadcast tree and neighbours from the broadcast (ids, centred Y);
-    under ``summary``, both come from the row instead: its joined
-    ``rep``/``sumq`` and its gathered ``__gv``/``__gy``.  The task adds its
-    sumQ and KL partials once, at its end."""
+    pass-through ``out_cols`` are handed back untouched, but for ``y``,
+    which comes back centred.  Each row's centred y and its neighbours'
+    are looked up in the broadcast (ids, centred Y), and repulsion comes
+    from the broadcast tree; under ``summary``, all of them come from the
+    row instead: its own y, its joined ``rep``/``sumq`` and its gathered
+    ``__gv``/``__gy``.  The task adds its sumQ and KL partials once, at
+    its end."""
     row_metric = numpy_row_metric(metric)
     p_total = max(p_total, _EPS_FLOOR)
 
@@ -497,8 +514,8 @@ def _kernel(bc, d, mean, theta, condition, metric, p_total, exaggeration,
             m = batch.num_rows
             if not m:
                 continue
-            y = _values(batch.column("y")).reshape(m, d) - mean
             if summary:
+                y = _values(batch.column("y")).reshape(m, d) - mean
                 rep = _values(batch.column("rep")).reshape(m, d)
                 sumq = batch.column("sumq").to_numpy(zero_copy_only=False)
                 gv = batch.column("__gv")
@@ -507,6 +524,9 @@ def _kernel(bc, d, mean, theta, condition, metric, p_total, exaggeration,
                 v = scaled(_values(gv))
                 yj = _values(batch.column("__gy")).reshape(-1, d) - mean
             else:
+                # the broadcast Y is the rows' y: look each row's up
+                row_ids = batch.column("id").to_numpy(zero_copy_only=False)
+                y = Yc[np.searchsorted(ids, row_ids)]
                 rep, sumq = _eval_tree(tree, y, theta, condition, len(ids))
                 js_col = batch.column("js")
                 lens = js_col.value_lengths().to_numpy(zero_copy_only=False)
@@ -530,7 +550,8 @@ def _kernel(bc, d, mean, theta, condition, metric, p_total, exaggeration,
             pv += float(np.sum(v))
 
             cols = {c: batch.column(c) for c in out_cols}
-            cols["y"] = _list_column(y)
+            if "y" in cols:
+                cols["y"] = _list_column(y)
             cols.update(
                 attr=_list_column(attr), rep=_list_column(rep),
                 sumq=pa.array(sumq, pa.float64()),
@@ -552,6 +573,7 @@ def fused_pass(
     bh_condition: str = "reference",
     tree_build: str = "auto",
     p_total: float = 1.0,
+    held: tuple[np.ndarray, np.ndarray] | None = None,
 ) -> tuple[DataFrame, bool, Partials]:
     """One gradient evaluation over rows carrying (id, y, js, vs, ...).
 
@@ -566,6 +588,11 @@ def fused_pass(
     (QuadTree.scala:133).  ``tree_build`` picks the repulsion source (module
     docstring); "auto" counts the rows and decides by N
     (:func:`resolve_tree_build`; loops resolve once and pass the result).
+
+    ``held`` is the rows' (ids, Y), ordered by id, where the caller keeps
+    them on the driver (the driver-build loop, operators/optimize.py, with
+    ``tree_build="driver"``): the driver build then collects nothing, the
+    rows need no ``y``, and the kernel returns only (id, attr, rep, sumq).
     """
     d = n_components
     if tree_build != "stub":
@@ -586,7 +613,9 @@ def fused_pass(
         bc = None
     else:
         # the driver build, also where the summary plan declines
-        if tree_build == "stub":
+        if held is not None:
+            ids, Y = held
+        elif tree_build == "stub":
             ids, Y = np.zeros(0, dtype=np.int64), np.zeros((0, d))
         else:
             ids, Y = collect_y(rows, d)
@@ -595,7 +624,7 @@ def fused_pass(
         tree = build_ndtree(Yc, fix_bounds_mean or theta == 0.0)
         src = rows
         bc = sc.broadcast((tree, ids, Yc))
-    out_cols = [
+    out_cols = ["id"] if held is not None else [
         c for c in src.columns if c not in ("rep", "sumq", "__gv", "__gy")
     ]
     schema = StructType(

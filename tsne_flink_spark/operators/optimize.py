@@ -12,23 +12,31 @@ One iteration shape for every ``tree_build`` (operators/gradient.py):
 
 1. the centring mean and the repulsion source: where the driver builds the
    tree (auto below the summary regime, theta 0, and wherever the summary
-   plan declines) it collects Y, centres it and broadcasts the tree with
-   the ids and the centred Y; the summary regime keeps Y off the driver
-   and takes the mean from a bounds aggregate;
-2. one ``mapInArrow`` pass that centres its own rows and computes
-   repulsion, attraction (each row carries its P row, attached once per
-   call) and ``sumq`` — materialized; its tasks' partials give sumQ and
-   the loss without another job;
-3. the momentum/gain update as a narrow projection with sumQ as a literal,
-   left lazy: the next iteration's pass reads through it.
+   plan declines) it centres Y and broadcasts the tree with the ids and
+   the centred Y; the summary regime keeps Y off the driver and takes the
+   mean from a bounds aggregate;
+2. one ``mapInArrow`` pass that computes repulsion, attraction (each row
+   carries its P row, attached once per call) and ``sumq``; its tasks'
+   partials give sumQ and the loss without another job;
+3. the momentum/gain update with sumQ as a scalar.
 
-With the driver-built tree that is two Spark jobs, no join and no
-shuffle.  The summary regime adds its bounds aggregate and cogroup, and
-gathers each row's neighbour coordinates by a join on the P edges instead
-of a Y broadcast.  Centring happens at the start of the next iteration,
-and once more when a call returns, so every returned working set is
-centred; the first iteration of a call evaluates the caller's working set
-as given, as the reference's gradient-update-centre order does.
+The two regimes keep the optimizer state in different places.  The driver
+build holds Y anyway, so it keeps the whole state — ids, y, grad and
+gains, (8 + 24d) B/point — as NumPy arrays, collected once per call: each
+iteration is ONE Spark job, the kernel over the checkpointed P rows,
+whose (id, attr, rep, sumq) come back through Arrow, and the update runs
+in NumPy (``embedding.update_arrays``, bit-identical to the projection).
+The call returns its state as a local (id, y, grad, gains) frame, so
+collecting it runs no job.  The summary regime keeps the state in the
+rows: each iteration materializes its pass and leaves the update a lazy
+projection (``embedding.update_step``) that the next pass reads through;
+it adds the bounds aggregate and cogroup, gathers each row's neighbour
+coordinates by a join on the P edges instead of a Y broadcast, and ends
+with one mean aggregate.  Centring happens at the start of the next
+iteration, and once more when a call returns, so every returned working
+set is centred; the first iteration of a call evaluates the caller's
+working set as given, as the reference's gradient-update-centre order
+does.
 
 Three-phase schedule replicated exactly (quirk Q8, TsneHelpers.scala:403-427):
 first min(n, 20) iterations at initial momentum with exaggerated P, next
@@ -41,12 +49,17 @@ against the exaggerated P, as the reference does.
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
-from tsne_flink_spark.operators.embedding import update_step
+from tsne_flink_spark.operators import gradient
+from tsne_flink_spark.operators.embedding import update_arrays, update_step
 from tsne_flink_spark.operators.gradient import (
+    _list_column,
     attach_p,
+    by_id,
     check_tree_build,
     dy,
     fused_pass,
@@ -106,8 +119,74 @@ def _descend(
     tree_build = resolve_tree_build(
         tree_build, theta, n_components, rows.count if n is None else lambda: n
     )
+    descend = _descend_on_driver if tree_build == "driver" else _descend_in_frame
+    return descend(
+        rows, [ph for ph in phases if ph[0] > 0], iter_offset, loss_sink,
+        learning_rate,
+        dict(theta=theta, n_components=n_components, metric=metric,
+             bh_condition=bh_condition, tree_build=tree_build,
+             p_total=p_total),
+    )
+
+
+def _descend_on_driver(
+    rows: DataFrame,
+    phases: list,
+    iter_offset: int,
+    loss_sink: list | None,
+    learning_rate: float,
+    pass_args: dict,
+) -> DataFrame:
+    """The driver build's loop.  The driver builds every tree from Y, so it
+    keeps the whole (ids, y, grad, gains) state, collected once; each step
+    is one job, the kernel over the P rows returning (id, attr, rep, sumq)
+    through Arrow, and the update runs in NumPy."""
+    d = pass_args["n_components"]
+    # through the module, where the keep-Y-off-the-driver guards patch it
+    ids, Y, grad, gains = gradient.collect_y(rows, d, ("y", "grad", "gains"))
+    p_rows = rows.select("id", "js", "vs")
     it = iter_offset
-    for count, momentum, exaggeration in [ph for ph in phases if ph[0] > 0]:
+    for count, momentum, exaggeration in phases:
+        for _ in range(count):
+            it += 1
+            if it > iter_offset + 1:
+                Y = _centred(Y)
+            kern, _, partials = fused_pass(
+                p_rows, exaggeration=exaggeration, held=(ids, Y), **pass_args
+            )
+            _, attr, rep = by_id(kern.toArrow(), ("attr", "rep"), d)
+            sum_q, loss = sum_q_and_loss(partials)
+            Y, grad, gains = update_arrays(
+                Y, grad, gains, attr - rep / sum_q, MIN_GAIN, momentum,
+                learning_rate,
+            )
+            if loss_sink is not None and it % LOSS_EVERY == 0:
+                loss_sink.append((it, loss))
+    state = pa.table({
+        "id": ids, "y": _list_column(_centred(Y)),
+        "grad": _list_column(grad), "gains": _list_column(gains),
+    })
+    schema = StructType([rows.schema[c] for c in ("id", "y", "grad", "gains")])
+    return rows.sparkSession.createDataFrame(state, schema)
+
+
+def _centred(Y: np.ndarray) -> np.ndarray:
+    return Y - Y.mean(axis=0) if len(Y) else Y
+
+
+def _descend_in_frame(
+    rows: DataFrame,
+    phases: list,
+    iter_offset: int,
+    loss_sink: list | None,
+    learning_rate: float,
+    pass_args: dict,
+) -> DataFrame:
+    """The summary regime's loop, with Y kept off the driver: the state
+    stays in the rows; each step materializes its pass, and the update is
+    a lazy projection over it."""
+    it = iter_offset
+    for count, momentum, exaggeration in phases:
         update = update_step(
             dy(F.col("__sum_q")), ["id", "js", "vs"], MIN_GAIN, momentum,
             learning_rate,
@@ -115,12 +194,8 @@ def _descend(
         for _ in range(count):
             it += 1
             kern, _, partials = fused_pass(
-                rows, theta, n_components, metric,
-                exaggeration=exaggeration,
-                centre=it > iter_offset + 1,
-                bh_condition=bh_condition,
-                tree_build=tree_build,
-                p_total=p_total,
+                rows, exaggeration=exaggeration, centre=it > iter_offset + 1,
+                **pass_args,
             )
             # materialize + truncate lineage and stats: the kernel runs once,
             # and the next iteration reads cached partitions
@@ -132,7 +207,8 @@ def _descend(
             if loss_sink is not None and it % LOSS_EVERY == 0:
                 loss_sink.append((it, loss))
     # centred by the mean of the last update (one aggregate)
-    means = rows.agg(*[F.avg(F.col("y")[k]) for k in range(n_components)]).first()
+    d = pass_args["n_components"]
+    means = rows.agg(*[F.avg(F.col("y")[k]) for k in range(d)]).first()
     mean = np.array([0.0 if m is None else m for m in means])
     return rows.select("id", shifted_y(mean).alias("y"), "grad", "gains")
 

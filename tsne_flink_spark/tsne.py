@@ -149,7 +149,11 @@ class TSNE:
         fused gradient pass (against a stub broadcast tree, the plan-only
         ``tree_build="stub"`` that ``fit`` rejects) -> update step,
         with the loop's driver-side values (P's total, sumQ, the centring
-        mean) as placeholders and no ``materialize()``.  With ``dimension``
+        mean) as placeholders and no ``materialize()``.  The update is
+        shown as the summary regime's projection; where the driver builds
+        the tree, ``fit`` runs the same update in NumPy on the state it
+        keeps on the driver, and each iteration's one job is the kernel
+        alone.  With ``dimension``
         set, that runs ZERO Spark jobs for every knn_method: ``"project"``
         is planned in stub mode (placeholder quantization bounds and a lazy
         placeholder rank, as its real global rank is inherently eager).
