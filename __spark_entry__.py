@@ -2144,7 +2144,7 @@ def q_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate join — the ~98% payload cut that matters at corpus
     scale), exact rerank of the per-query shortlist only.  Approximate,
     rows-only; q_ann_pq_check carries the verified invariants and
-    tools/probe_pq_recall.py the measured recall (ksub=256 default:
+    BASELINE.md B61/B64 the measured recall (ksub=256 default:
     0.55 @ sf0.1 p8 vs plain IVF's 0.5625 at the same probe budget —
     ADC ranking at near-IVF parity, B64).  shortlist=64 per B69: at a
     fixed candidate payload the deeper rerank shortlist beats raising

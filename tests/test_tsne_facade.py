@@ -45,6 +45,21 @@ def test_fit_distance_matrix(spark):
     assert all(len(r["y"]) == 2 for r in emb)
 
 
+@pytest.mark.parametrize("theta", [0.0, 0.5])
+@pytest.mark.parametrize("knn_method", ["partition", "bruteforce"])
+def test_fit_one_point_is_zero(spark, knn_method, theta):
+    """A one-point fit has no second point, so sumQ is 0 and so is the
+    repulsion: the gradient is zero, not rep / 0 = NaN, and the centred
+    embedding is the origin."""
+    df = points_from_rows(spark, [(0, [1.5, -2.0, 0.25])])
+    model = TSNE(perplexity=5, neighbors=15, iterations=12, theta=theta,
+                 knn_method=knn_method)
+    rows = model.fit(points=df).collect()
+    assert [(r["id"], r["y"]) for r in rows] == [(0, [0.0, 0.0])]
+    assert [it for it, _ in model.loss_records] == [10]
+    assert all(np.isfinite(loss) for _, loss in model.loss_records)
+
+
 def test_fit_requires_exactly_one_input(spark):
     model = TSNE()
     with pytest.raises(ValueError):

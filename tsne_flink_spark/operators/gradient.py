@@ -648,6 +648,14 @@ def sum_q_and_loss(partials: Partials) -> tuple[float, float]:
     return sum_q, loss
 
 
+def rep_divisor(sum_q: float) -> float:
+    """What rep is divided by in ``attr - rep/sumQ``: sumQ, or 1 where it is
+    0.  sumQ is 0 only where no row sees a second, distinct point (one
+    point, or all of them bit-equal); rep is then exactly 0, and dividing
+    by sumQ would turn a zero gradient into NaN."""
+    return sum_q if sum_q > 0 else 1.0
+
+
 def dy(sum_q: Column) -> Column:
     """The gradient ``attr - rep/sumQ`` of a pass's row."""
     return F.zip_with(
@@ -686,7 +694,7 @@ def gradient(
     )
     kern = materialize(kern)
     sum_q, loss = sum_q_and_loss(partials)
-    grad = kern.select("id", dy(F.lit(sum_q)).alias("dy"))
+    grad = kern.select("id", dy(F.lit(rep_divisor(sum_q))).alias("dy"))
     if not compute_loss:
         return grad, None
     return grad, embedding.sparkSession.createDataFrame([(loss,)], "loss double")

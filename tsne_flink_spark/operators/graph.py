@@ -365,8 +365,8 @@ def k_core(
     level per round (depth N/2 on an N-chain) and each driver round-trip
     is a whole job-submission latency at 1000-executor scale.  Within a
     batch the repeated references to the same lazy edge frame
-    deduplicate through ReuseExchange (probe: tools/probe_kcore_chain.py
-    — identical output, rounds = depth/3, and wall-clock WINS on chains;
+    deduplicate through ReuseExchange (BASELINE.md B80 — identical
+    output, rounds = depth/3, and wall-clock WINS on chains;
     typical dedup graphs converge in 1-2 driver rounds either way).
     The edge set shrinks monotonically; the per-round materialize
     truncates lineage like directed pagerank.  Engine-replayable: the
@@ -525,7 +525,7 @@ def walk_embeddings(
     wall-clock bottleneck on any real walk corpus, and the measured
     tradeoff at the derived value (8 on local[32]) is 3.77x faster
     training for a -0.014 change in the neighbor-vs-non-neighbor cosine
-    margin (tools/probe_walk_embeddings_scale.py, B89) — noise next to
+    margin (BASELINE.md B89) — noise next to
     the >= 0.2 margin the gate pins.  Pass ``num_partitions=1`` to force
     the single-stream parameter averaging when exact run-to-run
     stability matters more than wall (standard Word2Vec tradeoff; like
@@ -742,7 +742,7 @@ def triangle_stats(edges: DataFrame, orient_by_degree: bool = False) -> DataFram
     at O(√m), and the same two-hop closes x→y→z with x→z.  Each
     triangle has exactly one vertex from which both oriented edges
     leave (its minimum under the (degree, id) total order), so the
-    count is identical — `tools/probe_triangle_hub.py` measures both
+    count is identical — BASELINE.md B60 measures both
     on a 50k-edge hub graph.  The default stays id-ordered because the
     near-dup graphs this serves are degree-bounded by the dedup
     threshold itself (a doc can only be similar to so many docs at

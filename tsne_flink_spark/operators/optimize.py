@@ -63,6 +63,7 @@ from tsne_flink_spark.operators.gradient import (
     check_tree_build,
     dy,
     fused_pass,
+    rep_divisor,
     resolve_tree_build,
     shifted_y,
     sum_q_and_loss,
@@ -157,8 +158,8 @@ def _descend_on_driver(
             _, attr, rep = by_id(kern.toArrow(), ("attr", "rep"), d)
             sum_q, loss = sum_q_and_loss(partials)
             Y, grad, gains = update_arrays(
-                Y, grad, gains, attr - rep / sum_q, MIN_GAIN, momentum,
-                learning_rate,
+                Y, grad, gains, attr - rep / rep_divisor(sum_q), MIN_GAIN,
+                momentum, learning_rate,
             )
             if loss_sink is not None and it % LOSS_EVERY == 0:
                 loss_sink.append((it, loss))
@@ -203,7 +204,9 @@ def _descend_in_frame(
             sum_q, loss = sum_q_and_loss(partials)
             # the update stays a lazy projection over the materialized pass:
             # the next iteration's pass reads through it
-            rows = update(kern.withColumn("__sum_q", F.lit(sum_q)))
+            rows = update(
+                kern.withColumn("__sum_q", F.lit(rep_divisor(sum_q)))
+            )
             if loss_sink is not None and it % LOSS_EVERY == 0:
                 loss_sink.append((it, loss))
     # centred by the mean of the last update (one aggregate)

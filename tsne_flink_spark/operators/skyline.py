@@ -135,7 +135,7 @@ def _skyline_nd_blocked(pts: np.ndarray, block: int = 2048) -> np.ndarray:
     practical sub-quadratic kernel at d >= 4 when the frontier is
     anti-correlated), but executed as CHUNKED matrix dominance tests
     instead of a per-row Python loop — the probe-measured constant
-    factor is ~20-60x (tools/probe_skyline_4d.py), which is the
+    factor is ~20-60x (BASELINE.md B90), which is the
     difference between "seconds" and "minutes" on a 200k-row
     anti-correlated merge.
 
@@ -353,8 +353,7 @@ def _range_merge(
     """Distributed phase-2 merge, range-partitioned on the FIRST
     criterion — the scale path for frontiers too big for one task
     (anti-correlated criteria, where the skyline IS ~the input and the
-    single-task merge is O(n·s) on one core; probe:
-    tools/probe_skyline_4d.py).
+    single-task merge is O(n·s) on one core; BASELINE.md B90).
 
     Soundness: after range-partitioning the phase-1 survivors on the
     first criterion in its BEST direction, any dominator of a row sits

@@ -161,7 +161,7 @@ def semantic_dedup(
     and a cosine-1 edge, so the family is one group either way; the family
     min IS the rep, so group ids agree), but the within-cluster pair join
     drops from O(family^2) to O(1) per duplicate family.  On the 100k-
-    vector copy-heavy probe (tools/probe_semantic.py) this is the
+    vector copy-heavy probe (BASELINE.md B26) this is the
     difference between ~15M and ~40k compared pairs.  Spark's
     double->string cast is shortest-round-trip (injective), so the
     fingerprint only merges genuinely bit-equal vectors.

@@ -359,9 +359,9 @@ def append_to_ivf_index(
     append(A) ∪ append(B) == append(A ∪ B) == the index a full build
     would produce with those centroids — appending is exact, the only
     approximation drift is the coarse quantizer itself going stale as
-    the data distribution shifts (probe: tools/probe_ivf_append.py
-    measures recall vs a fresh rebuild after a 20% append; rebuild when
-    the measured gap crosses your recall budget).  The standard
+    the data distribution shifts (BASELINE.md B83 measures recall vs a
+    fresh rebuild after a 20% append; rebuild when the measured gap
+    crosses your recall budget).  The standard
     IVF-serving pattern (FAISS add-with-frozen-quantizer)."""
     rows = centroids_df.orderBy("list").collect()
     if not rows:
@@ -561,7 +561,7 @@ def build_pq_index(
     # every member of a tight cluster onto the SAME code word, making ADC
     # unable to rank within a cluster, which is exactly where the true
     # neighbors live (measured: recall 0.27 -> 0.75 on 64-cluster
-    # synthetic data, tools/probe_pq_recall.py).  Everything lives on the
+    # synthetic data, BASELINE.md B61).  Everything lives on the
     # unit sphere (cosine metric), so residuals are normalized-vector
     # minus unit centroid.
     sample_assign = np.argmax(Xn @ coarse.T, axis=1)
@@ -946,7 +946,7 @@ def pq_query_index(
     # row carries the WHOLE list's ids/codes/norms.  Without this, the
     # per-PAIR join rows each carried the dim-double query vector into the
     # Arrow boundary — at 40k corpus x 8 probes that is ~800 MB through
-    # Python vs ~4 MB for the grouped form (probe_pq_scale.py measured the
+    # Python vs ~4 MB for the grouped form (BASELINE.md B66 measured the
     # ungrouped ADC stage 4.7x slower than IVF's JVM dot at equal
     # candidates; the codes were already small — the QUERY VECTOR copies
     # were the transfer).  Per-list payload is ~24 B x list size and must
@@ -1055,8 +1055,8 @@ def pq_top_k(
     4. RERANK: only the per-query ADC ``shortlist`` (default
        ``max(16k, 64)``) joins back to exact vectors; reported sims are
        EXACT cosines, so ``topk_invariants`` applies unchanged and
-       recall-vs-brute is the only approximation surface (probed in
-       ``tools/probe_pq_recall.py``).
+       recall-vs-brute is the only approximation surface (measured in
+       BASELINE.md B61/B64).
 
     ``m`` is clipped to the largest divisor of the dimension; ``ksub``
     to the training-sample size and to 256 — the code word travels as

@@ -17,8 +17,8 @@ share one audited implementation.
 Scale notes: the key is computed in one Arrow-batched pass, the sort is
 one ``repartitionByRange`` shuffle (Spark samples range boundaries), and
 the write streams partition-by-partition — no driver materialization.
-``tools/probe_zorder.py`` measures the skipping effect on real parquet
-row-group statistics.
+BASELINE.md B28 measures the skipping effect on real parquet row-group
+statistics.
 """
 
 from __future__ import annotations
